@@ -1,18 +1,54 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Suite bench: every declared query at `SPARK_GRAFT_SF_DIR`, one untimed
+  * warm-up pass, then the median of `SPARK_GRAFT_BENCH_PASSES` timed
+  * passes; prints the JSON contract lines and writes the per-query spread
+  * to `SPARK_GRAFT_BENCH_JSON`.
+  *
+  * Exit codes: 0 ok, 4 some query threw (listed on stderr and in the JSON
+  * `failed` field, excluded from the timings), 3 the codegen gate tripped —
+  * both decided after every output is written. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     tools.CodegenGuard.install()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.parquet uses TIMESTAMP(NANOS): read as Long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
+    val names = select(SparkEntry.queries.keys.toSeq, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench/bench_latest.json")
+    val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
+    val failed =
+      try run(spark, sfDir, SparkEntry.queries, names, passes, basePath, force)
+      finally spark.stop()
+    // codegen health is a gate: an interpreted fallback is a silent per-row
+    // tax at scale, so a bench that logged compile failures is not a bench
+    if (tools.CodegenGuard.failureCount > 0)
+      System.err.println(s"[graft] ${tools.CodegenGuard.failureSummary}")
+    // a throwing query is a failed run, not a fast query
+    if (failed.nonEmpty) {
+      System.err.println(s"[graft] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(4)
+    }
+    if (tools.CodegenGuard.failureCount > 0) sys.exit(3)
+  }
+
+  /** The queries to bench, sorted: all of `all`, or — for targeted perf
+    * iteration, e.g. `SPARK_GRAFT_BENCH_ONLY=q203_x,q217_y` — exactly the
+    * comma-separated names in `only` (canonical runs leave it unset, so
+    * they always time the full set). */
+  def select(all: Seq[String], only: Option[String]): Seq[String] = {
+    val wanted = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    all.sorted.filter(n => wanted.forall(_.contains(n)))
+  }
+
+  /** Warm up, time `passes` sweeps over `names` and write the artifacts;
+    * returns the names of the queries that threw, sorted. */
+  def run(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame], names: Seq[String],
+      passes: Int, basePath: String, force: Boolean): Seq[String] = {
     // warm the session (first parquet read, codegen, shuffle machinery) so
     // per-query timings measure steady state, not JVM/session startup
     try {
@@ -23,8 +59,10 @@ object Bench {
       // every time-series query (the reference persists its UDF map to disk
       // the same way, server.py:249-286) — build it here so TS timings
       // measure probe work, not the one-time build
-      queries.TimeSeriesQueries.cachedIndex(spark, sfDir).df.count()
-    } catch { case _: Throwable => () }
+      graft.queries.TimeSeriesQueries.cachedIndex(spark, sfDir).df.count()
+    } catch { case e: Throwable =>
+      System.err.println(s"[graft] session warm-up failed: ${e.getMessage}")
+    }
     // pinned sorted order + one full untimed warmup pass: without these the
     // hash-map iteration order moves first-touch costs (codegen, file
     // listing, cache fill) onto a different query each run, making
@@ -36,27 +74,25 @@ object Bench {
     // pins blocks for the rest of the run, the leak class that regressed
     // q50-q53 in round 5
     def runOnce(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = queries(name)(spark, sfDir)
       try df.count() finally engine.Checkpoints.release(df)
     }
-    // optional comma-separated name-prefix filter for targeted perf
-    // iteration (e.g. SPARK_GRAFT_BENCH_ONLY=q203,q217,q249); the
-    // driver never sets it, so the canonical run is always the full set
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
-    names.foreach { name =>
+    // a query that throws (warm-up or any timed pass) is recorded once,
+    // dropped from the timings and fails the run
+    val failures = mutable.LinkedHashSet.empty[String]
+    def attempt(name: String): Unit =
       try runOnce(name)
-      catch { case _: Throwable => () }
-    }
+      catch { case e: Throwable =>
+        if (failures.add(name)) System.err.println(s"[graft] $name failed: ${e.getMessage}")
+      }
+    names.foreach(attempt)
+    val timed = names.filterNot(failures.contains)
     // median of `passes` timed runs per query: single-run timings carry
     // one-off environment spikes (GC, a co-scheduled process) that land on
     // an arbitrary query and read as a 3x regression of code that didn't
     // change; the median discards the spike while staying an honest
     // steady-state number. Passes are whole-suite sweeps (pinned order),
     // so cross-query interference is identical in every pass.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // machine-health snapshots: a degraded co-tenant window should be
     // self-labeling in the artifact (round 10 burned three re-runs proving
     // what one loadavg field would have shown). load captured before and
@@ -72,9 +108,9 @@ object Bench {
       val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
       val s = (1 to passes).map { _ =>
         val p0 = System.nanoTime()
-        val m = names.map { name =>
+        val m = timed.map { name =>
           val t0 = System.nanoTime()
-          try runOnce(name) catch { case _: Throwable => -1L }
+          attempt(name)
           name -> (System.nanoTime() - t0) / 1e9
         }.toMap
         walls += (System.nanoTime() - p0) / 1e9
@@ -122,12 +158,16 @@ object Bench {
       // scaling-contract ask: without these the driver cannot verify that
       // its low-core run took effect (suspect_cpus_ignored)
       s""""health":{"load_start":$loadStart,"load_end":$loadEnd,""" +
-        s""""ncpu":${os.getAvailableProcessors},"cpus":$cpus,""" +
+        s""""ncpu":${os.getAvailableProcessors},""" +
+        s""""cpus":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
         s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
         s""""max_heap_gb":$heapGb,"pass_walls":$walls,""" +
         s""""window":"$window","degraded":$degraded}"""
     }
-    val results = names.map { name =>
+    val ok = timed.filterNot(failures.contains)
+    val failed = failures.toSeq.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val results = ok.map { name =>
       val ts = samples.map(_(name)).sorted
       name -> ts(ts.size / 2)
     }
@@ -141,19 +181,22 @@ object Bench {
     // contended-window run is indistinguishable from a regression in a
     // median alone: a wide min–max spread says "contention" on its face
     // (an idle machine runs the three passes within a few percent).
-    val spreads = names.map { name =>
+    val spreads = ok.map { name =>
       val ts = samples.map(_(name)).sorted
       s""""$name":{"min":${ts.head},"med":${ts(ts.size / 2)},"max":${ts.last}}"""
     }.mkString("{", ",", "}")
+    // session-artifact builds, build time and hits per kind
+    val artifacts = engine.SessionArtifacts.stats.toSeq.sortBy(_._1).map { case (k, st) =>
+      s""""$k":{"builds":${st.builds},"build_ms":${st.buildMs},"hits":${st.hits}}"""
+    }.mkString("{", ",", "}")
     val fileJson =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-        s""""passes":$passes,$healthJson,"queries":$qs,"spread":$spreads}"""
+        s""""passes":$passes,$healthJson,"failed":$failedJson,"queries":$qs,""" +
+        s""""spread":$spreads,"artifacts":$artifacts}"""
     // refuse to promote a degraded window: if BOTH windows failed the health
     // gate, the artifact goes to `<path>.degraded.json` (data kept, canonical
     // promotion path untouched) unless SPARK_GRAFT_BENCH_FORCE=1 explicitly
     // overrides. stdout JSON is always printed — the driver contract.
-    val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench/bench_latest.json")
-    val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
     val outPath = java.nio.file.Paths.get(
       if (degraded && !force) {
         System.err.println(
@@ -173,23 +216,18 @@ object Bench {
     // driver's artifact must still parse AND self-label — round 14's driver
     // run ended `parsed: null` with only a raw tail because the canonical
     // numbers lived solely in the diverted file
-    println(s"""{"metric":"total","value":$total,"unit":"sec",$healthJson,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",$healthJson,""" +
+      s""""failed":$failedJson,"queries":$qs,"sf":"$sfDir"}""")
     // COMPACT trailing summary (round-15 verdict ask 1): the canonical
     // line above is ~12 KB at 245 queries and the driver's fixed-size
     // stdout-tail capture truncates its FRONT, so `parsed` came back
     // null two rounds running. The LAST line a tail capture sees must
     // be complete on its own: same totals + health, no per-query map
     // (those live in the canonical line and the bench/ file artifact).
-    val perQ = if (names.isEmpty) 0.0 else total / names.size
+    val perQ = if (ok.isEmpty) 0.0 else total / ok.size
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""n_queries":${names.size},"sec_per_query":$perQ,""" +
+      s""""n_queries":${ok.size},"n_failed":${failed.size},"sec_per_query":$perQ,""" +
       s"""$healthJson,"sf":"$sfDir","detail":"see canonical line above / bench file"}""")
-    spark.stop()
-    // codegen health is a gate: an interpreted fallback is a silent per-row
-    // tax at scale, so a bench that logged compile failures is not a bench
-    if (tools.CodegenGuard.failureCount > 0) {
-      System.err.println(s"[graft] ${tools.CodegenGuard.failureSummary}")
-      sys.exit(3)
-    }
+    failed
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries to a markdown file
   * — the plan-shape evidence (pushdown, broadcast, TakeOrderedAndProject,
   * codegen spans) in reviewable form. PlanSpec asserts the same properties
@@ -13,14 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outMd = args.lift(1).getOrElse("/tmp/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     val headline = Seq(
       "q01_scan_filter_project", "q03_agg_groupby", "q05_topk_orderby_limit",
       "q10_join_broadcast", "q13_semi_join", "q17_ts_window_avg",
@@ -197,11 +188,11 @@ object Explain {
 The refined 2-constraint query issues 4 index probe joins (one per DISTINCT
 probe position, merged by `MemoProbe`) instead of 6 (one per constraint
 window leg). A/B medians at sf0.1 local[32] are wall-clock equal within run
-noise (see `bench/probe_ab_sf0.1.txt`, `runMain graft.ProbeBench` to
-reproduce); the merged shape is kept for the cluster-scale terms: 2 fewer
-join stages and 2 fewer broadcast relations per query. A single REUSED
-index exchange across probes is not expressible against Catalyst — column
-pruning and inferred filters rewrite each broadcast child differently,
+noise (see `bench/probe_ab_sf0.1.txt`); the merged shape is kept for the
+cluster-scale terms: 2 fewer join stages and 2 fewer broadcast relations
+per query. A single REUSED index exchange across probes is not expressible
+against Catalyst — column pruning and inferred filters rewrite each
+broadcast child differently,
 which is itself the desired behavior (each probe ships only the columns
 its sharers read).
 """)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{RefinementEngine, SeriesOps}
 import graft.model.{Constraint, Domain, QuerySpec, Target}
 import graft.queries.TimeSeriesQueries
@@ -21,14 +19,7 @@ object Sweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outCsv = args.lift(1).getOrElse("/tmp/graft_sweep.csv")
     val maxIters = args.lift(2).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
 
     val series = TimeSeriesQueries.series(spark, sfDir).persist()
     val bounds = {

@@ -1,23 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/check_oracle.py`).
+  *
+  * Exit codes: 0 ok, 4 some query threw (listed on stderr), 3 the codegen
+  * gate tripped — both decided after every output is on disk. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     graft.tools.CodegenGuard.install()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet uses TIMESTAMP(NANOS): read as Long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
+    val spark = GraftSession.build()
     // dev-only subset filter (comma-joined substrings); unset = all queries
     // (the driver contract) — lets a single query iterate without a 109-query
     // session
@@ -26,7 +20,26 @@ object Verify {
       .filter(_.nonEmpty)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.contains)) }
-    selected.foreach { case (name, fn) =>
+    val failed = try dump(spark, sfDir, outDir, selected) finally spark.stop()
+    // both gates run AFTER every result parquet and the oracle json are on
+    // disk, so the DuckDB compare has its inputs even when a gate
+    // trips; the nonzero exit makes the failure un-shippable
+    if (graft.tools.CodegenGuard.failureCount > 0)
+      System.err.println(s"[verify] ${graft.tools.CodegenGuard.failureSummary}")
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(4)
+    }
+    if (graft.tools.CodegenGuard.failureCount > 0) sys.exit(3)
+  }
+
+  /** Write each query's result to `outDir/<name>` and the oracle SQL to
+    * `outDir/oracle_sql.json`; returns the names of the queries that threw,
+    * sorted. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         // release any checkpoint the query returned (q54's labels) once
@@ -35,8 +48,10 @@ object Verify {
         // checkpoints; session caches are parquet-backed, never marked)
         try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         finally graft.engine.Checkpoints.release(df)
+        None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,13 +69,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // codegen health gate — runs AFTER every result parquet and the oracle
-    // json are on disk, so the driver's DuckDB compare has its inputs even
-    // when the gate trips; the nonzero exit makes the fallback un-shippable
-    if (graft.tools.CodegenGuard.failureCount > 0) {
-      System.err.println(s"[verify] ${graft.tools.CodegenGuard.failureSummary}")
-      sys.exit(3)
-    }
+    failed.sorted
   }
 }

@@ -51,18 +51,9 @@ object Main {
     sys.exit(run(args))
   }
 
-  private def buildSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // SPARK_MASTER names a cluster deployment; unset runs local[cpus]
+  private def buildSession(): SparkSession =
+    graft.GraftSession.build(master = sys.env.get("SPARK_MASTER"))
 
   /** Interactive session — the reference's client loop (client.py:103-121):
     * numbered dataset pick from the directory's parquet tables, catalog
@@ -172,8 +163,7 @@ object Main {
       // same way, server.py:249-286): a second run of the same query loads
       // the index parquet instead of rebuilding — the timing CSV carries an
       // index_cache_hit / index_built marker row for which path ran
-      val cacheDir = sys.env.getOrElse("GRAFT_INDEX_CACHE",
-        s"${sys.props("java.io.tmpdir")}/graft_index_cache")
+      val cacheDir = graft.engine.IndexCache.DefaultDir
       val (idx, cacheHit) = tk.time("index_get_or_build") {
         graft.engine.IndexCache.getOrBuild(
           spark, cacheDir, tablePath, spec.column, series, spec)

@@ -19,10 +19,15 @@ object IndexCache {
 
   final case class Meta(tMin: Long, tMax: Long, levels: Int, srcMtime: Long)
 
+  /** Cache directory when the caller names none: `GRAFT_INDEX_CACHE`,
+    * else `$TMPDIR/graft_index_cache`. */
+  val DefaultDir: String = sys.env.getOrElse("GRAFT_INDEX_CACHE",
+    s"${sys.props("java.io.tmpdir")}/graft_index_cache")
+
   private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** md5-hex prefix for injective path keys (shared by every disk-cache
-    * path in the library — see also the IVF index memo). */
+    * path in the library — see also [[SessionArtifacts.path]]). */
   def md5Key(s: String, bytes: Int): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(bytes).map(b => f"$b%02x").mkString
@@ -94,12 +99,16 @@ object IndexCache {
       writeMeta(dir, Meta(idx.tMin, idx.tMax, idx.levels, mt))
       (idx, false)
     }
-    // same-session repeats reuse the one persisted copy (deep enough or
-    // it is dropped and re-resolved)
+    // same-session repeats reuse the one persisted copy; a stale or too
+    // shallow one is unpersisted before its successor loads — else every
+    // source change pins another copy, and a re-read of the same data path
+    // would match the superseded cache entry
     Option(memo.get(key)) match {
-      case Some((sess, cached, cachedMt)) if (sess eq spark) && cachedMt == mt &&
-          (1L << cached.levels) > needWin(cached.tMin, cached.tMax) =>
-        return (cached, true)
+      case Some((sess, cached, cachedMt)) if sess eq spark =>
+        if (cachedMt == mt && (1L << cached.levels) > needWin(cached.tMin, cached.tMax))
+          return (cached, true)
+        memo.remove(key)
+        cached.df.unpersist()
       case _ => ()
     }
     val result = readMeta(dir) match {

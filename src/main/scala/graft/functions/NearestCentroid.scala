@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * `struct(dot/·/·, -cell)` branches) blows the generated method past
   * Janino's 64 KB limit at k = 64 and silently falls back to
   * interpreted evaluation — measured 25.7 s for a 102k × 64-d × 64-cell
-  * assignment scan ([[graft.tools.LargeSemDedupBench]]); this kernel is
+  * assignment scan (`bench/large_semdedup.txt`); this kernel is
   * one primitive loop with the centroid matrix attached as a reference
   * object (the [[PqEncode]] discipline), shared verbatim by the
   * interpreted and codegen paths.

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * The composable HOF formulation (`transform` × `slice` × nested
   * `aggregate`) evaluates interpreted lambda closures and allocates an
   * intermediate array per (row × subspace × codebook entry) — measured
-  * ~67 s for 10⁶ × 64-d rows at ksub=16 ([[graft.tools.PqBench]]); this
+  * ~67 s for 10⁶ × 64-d rows at ksub=16 (`bench/large_pq_1e6_hof.txt`); this
   * expression compiles to primitive loops inside whole-stage codegen
   * with the codebooks attached as a reference object. Accumulation is
   * the same dimension-order fold, so codes are IDENTICAL to the HOF

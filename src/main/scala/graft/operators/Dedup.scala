@@ -651,7 +651,7 @@ object Dedup {
     // clamps the filter to spark.sql.optimizer.runtime.bloomFilter
     // .maxNumBits (default 2^26) — at 10^7 items that undersizes the
     // filter 4x and the real fp rate lands at ~11% regardless of the
-    // requested fpp (measured, tools.BloomBench). The sketch filter sizes
+    // requested fpp (measured, bench/bloom_bench_1e7.txt). The sketch filter sizes
     // itself from (n, fpp) with no cap; per-partition filters merge up a
     // tree, so only fused bit arrays ever move.
     val bf = distinctH.rdd.treeAggregate(
@@ -868,7 +868,7 @@ object Dedup {
     * manager; the caller must pass it to
     * [[graft.engine.Checkpoints.release]] after its final evaluation, or
     * the blocks live for the session (graft's own consumers — Bench,
-    * Verify, LargeDedupBench — all release after materializing).
+    * Verify — both release after materializing).
     */
   def connectedComponents(
       nodes: DataFrame, pairs: DataFrame, id: String,
@@ -943,8 +943,8 @@ object Dedup {
     * iterative rounds' per-stage scheduling is pure overhead). The
     * labels are IDENTICAL — min id per component — and the gate is a
     * measured count, not a core count, so a 100 TB corpus's pair graph
-    * takes the pointer-jumping loop unchanged (LargeDedupBench pins it
-    * at 5M docs via `localEdgeLimit=0`). Set 0 to force the loop. */
+    * takes the pointer-jumping loop unchanged (`bench/large_dedup_5e6.txt`
+    * measured it at 5M docs via `localEdgeLimit=0`). Set 0 to force the loop. */
   val CcLocalEdgeLimitKey = "spark.graft.cc.localEdgeLimit"
   private val CcLocalEdgeLimitDefault = 2000000L
 

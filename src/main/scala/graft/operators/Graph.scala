@@ -113,8 +113,8 @@ object Graph {
     * decision class as AQE's broadcast-join rewrite). Defaults are
     * data-size thresholds, not core counts, so the plan choice is
     * scale-adaptive: a 100 TB crawl's host graph blows past both and
-    * takes the distributed rounds unchanged (GraphBench still pins flat
-    * round walls at 10^7 edges via `localEdgeLimit=0`). Set
+    * takes the distributed rounds unchanged (`bench/large_graph.txt` shows
+    * flat round walls at 10^7 edges via `localEdgeLimit=0`). Set
     * `spark.graft.graph.localEdgeLimit=0` to force the distributed path
     * (tests pinning the distributed plan shape do). */
   val LocalEdgeLimitKey = "spark.graft.graph.localEdgeLimit"
@@ -417,7 +417,7 @@ object Graph {
     *  - each round's rank frame is an eager `localCheckpoint` and the
     *    SUPERSEDED round's blocks are released immediately — per-round
     *    lineage is one join deep, per-round cost stays flat at any depth
-    *    (GraphBench pins flat round walls at 20 rounds / 10^7 edges);
+    *    (`bench/large_graph.txt`: flat round walls at 20 rounds / 10^7 edges);
     *  - the only per-round action is the bounded 1-row delta aggregate
     *    (the convergence test reads 8 bytes, not the graph).
     *
@@ -428,7 +428,7 @@ object Graph {
     * fixed-iters family rather than a second semantics.
     *
     * `onRound(round, delta)` fires after each round's delta test — an
-    * observer for instrumentation (GraphBench times round walls with it);
+    * observer for instrumentation (e.g. timing round walls);
     * it must not evaluate the rank frames. */
   def pageRankConverged(edges: DataFrame, src: String, dst: String,
       w: String, maxIters: Int, tolScaled: Long,
@@ -443,7 +443,7 @@ object Graph {
     * fixed depth): [[personalizedPageRank]]'s seeded start/teleport
     * threaded through the same checkpointed loop — identical per-round
     * integer arithmetic, identical flat-per-round cost shape
-    * (GraphBench pins a PPR row beside the uniform one), and at
+    * (`bench/large_graph.txt` has a PPR row beside the uniform one), and at
     * `tolScaled = 0` bit-identical to `personalizedPageRank(iters =
     * rounds)` (GraphSpec pins it), so crawler frontier scoring runs to
     * its fixed point instead of a guessed depth. */
@@ -466,8 +466,8 @@ object Graph {
     // integer arithmetic) + one checkpoint, instead of per-round
     // (checkpoint job + 1-row delta collect). onRound replays the
     // recorded per-round deltas after the fact, so observers see the
-    // same sequence either way. GraphBench forces the loop via
-    // `localEdgeLimit=0` when timing per-round walls at 10^7 edges.
+    // same sequence either way. `localEdgeLimit=0` forces the loop (how
+    // `bench/large_graph.txt` timed per-round walls at 10^7 edges).
     val edgeLimit = confLong(edges, LocalEdgeLimitKey, LocalEdgeLimitDefault)
     val stringNodes = e.schema("__src").dataType ==
       org.apache.spark.sql.types.StringType

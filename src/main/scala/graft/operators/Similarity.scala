@@ -198,7 +198,7 @@ object Similarity {
     * and map-only before the top-k: the probe set is a literal `isin` over
     * the native codegen bucket column, exactly like [[annLsh]]'s single
     * bucket. Recall measured in BASELINE.md ("ANN recall",
-    * `tools.AnnRecall`). */
+    * `bench/ann_recall.txt`). */
   def annLshMultiProbe(spark: SparkSession, vecs: DataFrame, id: String,
       emb: String, query: Array[Float], k: Int, planes: Int = 16,
       hamming: Int = 1): DataFrame = {
@@ -1112,7 +1112,7 @@ object Similarity {
     * kernel: the k-branch `array_max(struct(...))` expression form
     * blows Janino's 64 KB method limit at k = 64 and falls back to
     * interpreted evaluation (measured 25.7 s → 1.9 s on a 102k × 64-d
-    * × 64-cell scan, [[graft.tools.LargeSemDedupBench]]); the kernel's
+    * × 64-cell scan, `bench/large_semdedup.txt`); the kernel's
     * arithmetic and tie rule are bit-identical (FunctionsSpec asserts
     * equality against the expression spec). */
   private def assignLitWide(vecs: DataFrame, id: String, emb: String,
@@ -1513,7 +1513,7 @@ object Similarity {
   /** The encode EXPRESSION ([[pqEncode]]'s column form — composable into
     * a wider projection, e.g. [[ivfPqBuild]]'s single build scan).
     * Native codegen kernel ([[graft.functions.PqCodec]], ~10× the HOF
-    * form's throughput on the [[graft.tools.PqBench]] corpus); codes are
+    * form's throughput on the `bench/large_pq_1e6*.txt` corpus); codes are
     * bit-identical to [[pqEncodeColHof]] (FunctionsSpec asserts it). */
   def pqEncodeCol(emb: Column, cb: PqCodebooks): Column =
     graft.functions.PqCodec.pq_encode(emb.cast("array<double>"),

@@ -22,7 +22,7 @@ object Skew {
     * runtime-filter idea made explicit, unconditional, and correctly
     * sized (the optimizer's version silently clamps its filter to
     * maxNumBits and goes useless at ~10^7 keys — measured in
-    * tools.BloomBench; the sketch-API build sizes itself from (n, fpp)
+    * `bench/bloom_bench_1e7.txt`; the sketch-API build sizes itself from (n, fpp)
     * with no cap, per-partition filters merging up a tree).
     *
     * The dimension is counted once to size the filter (an action on the

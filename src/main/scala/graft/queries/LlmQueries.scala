@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SessionArtifacts
 import graft.operators.{Dedup, Multimodal, Similarity, Sketch, TextOps}
 
 /** Training-data pipeline queries (dedup / similarity / text analysis /
@@ -533,41 +534,20 @@ object LlmQueries {
     * millions of pairs from one template bucket). */
   val IncrementalCap = 100
 
-  /** Session-scoped (dataset-dir → tmp path) memo: builds a persisted
-    * artifact once per (session, dir) under a single cleanup root,
-    * registers it for JVM-exit removal, rebuilds if the owning session
-    * changed — the one shape behind the band-index and compacted-layout
-    * caches (previously two hand-rolled copies whose md5Key args had
-    * already drifted). */
-  private final class SessionPathMemo(tag: String,
-      build: (SparkSession, String, String) => Unit) {
-    private val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
-    def apply(s: SparkSession, d: String): String =
-      memo.compute(d, (_, cur) => {
-        if (cur != null && (cur._1 eq s)) cur
-        else {
-          val p = s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
-            graft.engine.IndexCache.md5Key(d, 8)
-          graft.cli.Cleanup.deleteOnExit(p)
-          build(s, d, p)
-          (s, p)
-        }
-      })._2
-  }
-
   /** Per-directory memo of the persisted LSH band index over the
     * already-ingested corpus ([[Dedup.bandIndexWrite]], capped at
     * [[IncrementalCap]]): signed ONCE per session, queried per batch —
     * the sign-once shape that makes incremental dedup viable at corpus
     * scale. Session scratch, removed at JVM exit like the IVF dirs. */
-  private val bandIndexCache = new SessionPathMemo("bandidx", (s, d, p) => {
-    val old = docs(s, d)
-      .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
-    Dedup.bandIndexWrite(
-      Dedup.lshBands(minhashSigOf(old), "doc_id", NumHashes, Bands),
-      "doc_id", Bands, p, maxBucket = IncrementalCap)
-  })
+  private def bandIndexCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "bandidx", d) { p =>
+      val old = docs(s, d)
+        .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
+      Dedup.bandIndexWrite(
+        Dedup.lshBands(minhashSigOf(old), "doc_id", NumHashes, Bands),
+        "doc_id", Bands, p, maxBucket = IncrementalCap)
+      p
+    }
 
   private def bandIndex(s: SparkSession, d: String): DataFrame = {
     val path = bandIndexCache(s, d)
@@ -1486,12 +1466,14 @@ object LlmQueries {
     * the ingested audio corpus (the orig leg) — the same capped dHash
     * index machine, fingerprints hashed once per session, probed per
     * batch ([[Multimodal.dhashIndexWrite]] at [[AudioPairCap]]). */
-  private val spectralIndexCache = new SessionPathMemo("specidx", (s, d, p) => {
-    Multimodal.dhashIndexWrite(
-      Multimodal.audioSpectralFingerprint(Multimodal.decodeWav(
-        wavRotatedPayloads(s, d), "doc_id", "payload")),
-      "doc_id", p, maxBucket = AudioPairCap)
-  })
+  private def spectralIndexCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "specidx", d) { p =>
+      Multimodal.dhashIndexWrite(
+        Multimodal.audioSpectralFingerprint(Multimodal.decodeWav(
+          wavRotatedPayloads(s, d), "doc_id", "payload")),
+        "doc_id", p, maxBucket = AudioPairCap)
+      p
+    }
 
   /** q146 — incremental audio dedup over the SPECTRAL index
     * ([[Multimodal.dhashIncrementalPairs]]): the half-gain re-export leg
@@ -1660,13 +1642,15 @@ object LlmQueries {
     * ([[DHashIndexCap]]): over-cap band buckets live in the index's
     * `skipped` sidecar and every future batch probe is bounded by
     * construction ([[Multimodal.dhashIndexWrite]]). */
-  private val dhashIndexCache = new SessionPathMemo("dhashidx", (s, d, p) => {
-    val (orig, copy, _) = dhashCorpusLegs(s, d)
-    Multimodal.dhashIndexWrite(
-      Multimodal.imageDHash(Multimodal.decodePpm(
-        orig.unionByName(copy), "doc_id", "payload")),
-      "doc_id", p, maxBucket = DHashIndexCap)
-  })
+  private def dhashIndexCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "dhashidx", d) { p =>
+      val (orig, copy, _) = dhashCorpusLegs(s, d)
+      Multimodal.dhashIndexWrite(
+        Multimodal.imageDHash(Multimodal.decodePpm(
+          orig.unionByName(copy), "doc_id", "payload")),
+        "doc_id", p, maxBucket = DHashIndexCap)
+      p
+    }
 
   /** q131 — incremental image dedup
     * ([[Multimodal.dhashIncrementalPairs]]): the perturbed-variant leg
@@ -2070,13 +2054,14 @@ object LlmQueries {
     * videos' frame-sequence fingerprints ([[Dedup.winnowIndexWrite]]):
     * decoded, hashed, and winnowed ONCE per session — the sign-once
     * shape, now for temporal video containment. */
-  private val videoWinnowIndexCache =
-    new SessionPathMemo("vidwinnowidx", (s, d, p) => {
+  private def videoWinnowIndexCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "vidwinnowidx", d) { p =>
       Dedup.winnowIndexWrite(
         Dedup.winnowFingerprints(videoFrameSeqs(videoPayloads(s, d)),
           "fseq", "vid", k = 2, w = 2),
         "vid", p)
-    })
+      p
+    }
 
   /** q160 — INCREMENTAL temporal video containment
     * ([[Dedup.winnowIncrementalPairs]] over [[videoWinnowIndexCache]]):
@@ -2397,13 +2382,15 @@ object LlmQueries {
     * [[graft.sources.Layout.compact]] into doc_id-sorted range shards —
     * the write side exercised once per session, range-read per query.
     * Session scratch, removed at JVM exit like the IVF/band-index dirs. */
-  private val layoutCache = new SessionPathMemo("layout", (s, d, p) => {
-    docs(s, d).select("doc_id", "lang", "n_chars")
-      .repartition(17)
-      .write.mode("overwrite").parquet(s"$p/small")
-    graft.sources.Layout.compact(s, s"$p/small", s"$p/sorted", Seq("doc_id"),
-      targetRecordsPerFile = 200)
-  })
+  private def layoutCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "layout", d) { p =>
+      docs(s, d).select("doc_id", "lang", "n_chars")
+        .repartition(17)
+        .write.mode("overwrite").parquet(s"$p/small")
+      graft.sources.Layout.compact(s, s"$p/small", s"$p/sorted", Seq("doc_id"),
+        targetRecordsPerFile = 200)
+      p
+    }
 
   private def compactedDocs(s: SparkSession, d: String): String =
     s"${layoutCache(s, d)}/sorted"
@@ -2412,10 +2399,13 @@ object LlmQueries {
     * table ([[graft.sources.Layout.writeNumberedShards]], 128 rows per
     * shard in doc_id order): exported once per session, manifested per
     * query — the release-once/verify-everywhere shape. */
-  private val shardCache = new SessionPathMemo("shards", (s, d, p) =>
-    graft.sources.Layout.writeNumberedShards(
-      docs(s, d).select("doc_id", "lang", "n_chars"),
-      s"$p/export", Seq("doc_id"), rowsPerShard = 128))
+  private def shardCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "shards", d) { p =>
+      graft.sources.Layout.writeNumberedShards(
+        docs(s, d).select("doc_id", "lang", "n_chars"),
+        s"$p/export", Seq("doc_id"), rowsPerShard = 128)
+      p
+    }
 
   /** q191 — export MANIFEST ([[graft.sources.Layout.shardManifest]]
     * over a reproducible numbered-shard export): per shard, the row
@@ -2477,17 +2467,19 @@ object LlmQueries {
     * at-least-once guard is exercised IN-GATE (the q177 discipline) — a
     * replayed batch id must no-op, else the doubled cells would inflate
     * every q198 estimate and hash-fail the gate. */
-  private val cmMaintCache = new SessionPathMemo("cmsketch", (s, d, p) => {
-    val dd = docs(s, d)
-    def half(par: Int) = Sketch.countMinCells(
-      dd.where(pmod(col("doc_id"), lit(2)) === par)
-        .select(explode(TextOps.tokens(col("text"))).as("w")),
-      "w", CmDepth, CmWidth)
-    require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-    require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-    require(!Sketch.sketchAppendBatch(p, half(1), 1L),
-      "replayed batch id must no-op (a double-append would change every estimate)")
-  })
+  private def cmMaintCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "cmsketch", d) { p =>
+      val dd = docs(s, d)
+      def half(par: Int) = Sketch.countMinCells(
+        dd.where(pmod(col("doc_id"), lit(2)) === par)
+          .select(explode(TextOps.tokens(col("text"))).as("w")),
+        "w", CmDepth, CmWidth)
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      require(!Sketch.sketchAppendBatch(p, half(1), 1L),
+        "replayed batch id must no-op (a double-append would change every estimate)")
+      p
+    }
 
   /** q198 — heavy hitters from the MAINTAINED sketch: the q192 audit
     * with cells read back through [[Sketch.cmRead]] over the persisted
@@ -2503,17 +2495,19 @@ object LlmQueries {
     * protocol for the distinct-count twin: two parity ingest batches,
     * replay guard exercised in-gate (harmless for max, but the family
     * contract is uniform). */
-  private val hllMaintCache = new SessionPathMemo("hllsketch", (s, d, p) => {
-    val dd = docs(s, d)
-    def half(par: Int) = Sketch.hllRegisters(
-      dd.where(pmod(col("doc_id"), lit(2)) === par)
-        .select(explode(TextOps.tokens(col("text"))).as("w")),
-      "w", Nil)
-    require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-    require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-    require(!Sketch.sketchAppendBatch(p, half(1), 1L),
-      "replayed batch id must no-op")
-  })
+  private def hllMaintCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "hllsketch", d) { p =>
+      val dd = docs(s, d)
+      def half(par: Int) = Sketch.hllRegisters(
+        dd.where(pmod(col("doc_id"), lit(2)) === par)
+          .select(explode(TextOps.tokens(col("text"))).as("w")),
+        "w", Nil)
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      require(!Sketch.sketchAppendBatch(p, half(1), 1L),
+        "replayed batch id must no-op")
+      p
+    }
 
   /** q199 — the MAINTAINED HLL registers ([[Sketch.hllRead]] over the
     * persisted two-batch append path) against q196's directly-built
@@ -2556,18 +2550,20 @@ object LlmQueries {
     * The replay guard is exercised in-gate with extra force here: a
     * replayed NEGATIVE batch would delete twice and drive counters
     * negative. */
-  private val cmDeleteCache = new SessionPathMemo("cmdelete", (s, d, p) => {
-    val dd = docs(s, d)
-    def cells(df: DataFrame) = Sketch.countMinCells(
-      df.select(explode(TextOps.tokens(col("text"))).as("w")),
-      "w", CmDepth, CmWidth)
-    require(Sketch.sketchAppendBatch(p, cells(dd), 0L), "batch 0 must apply")
-    val neg = cells(dd.where(pmod(col("doc_id"), lit(53)) === 0))
-      .withColumn("cnt", -col("cnt"))
-    require(Sketch.sketchAppendBatch(p, neg, 1L), "delete batch must apply")
-    require(!Sketch.sketchAppendBatch(p, neg, 1L),
-      "replayed delete batch must no-op (it would delete twice)")
-  })
+  private def cmDeleteCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "cmdelete", d) { p =>
+      val dd = docs(s, d)
+      def cells(df: DataFrame) = Sketch.countMinCells(
+        df.select(explode(TextOps.tokens(col("text"))).as("w")),
+        "w", CmDepth, CmWidth)
+      require(Sketch.sketchAppendBatch(p, cells(dd), 0L), "batch 0 must apply")
+      val neg = cells(dd.where(pmod(col("doc_id"), lit(53)) === 0))
+        .withColumn("cnt", -col("cnt"))
+      require(Sketch.sketchAppendBatch(p, neg, 1L), "delete batch must apply")
+      require(!Sketch.sketchAppendBatch(p, neg, 1L),
+        "replayed delete batch must no-op (it would delete twice)")
+      p
+    }
 
   /** q230 — right-to-be-forgotten through the MAINTAINED sketch: the
     * full-corpus sketch plus one NEGATIVE partial for the delete set,
@@ -2585,11 +2581,14 @@ object LlmQueries {
   /** Per-directory memo of the SWEPT export: the q191 numbered-shard
     * release REBUILT from the kept corpus after the deletion sweep
     * (doc_id ≡ 0 mod 53 removed). */
-  private val sweptShardCache = new SessionPathMemo("shardswept", (s, d, p) =>
-    graft.sources.Layout.writeNumberedShards(
-      docs(s, d).where(pmod(col("doc_id"), lit(53)) =!= 0)
-        .select("doc_id", "lang", "n_chars"),
-      s"$p/export", Seq("doc_id"), rowsPerShard = 128))
+  private def sweptShardCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "shardswept", d) { p =>
+      graft.sources.Layout.writeNumberedShards(
+        docs(s, d).where(pmod(col("doc_id"), lit(53)) =!= 0)
+          .select("doc_id", "lang", "n_chars"),
+        s"$p/export", Seq("doc_id"), rowsPerShard = 128)
+      p
+    }
 
   /** q231 — the deletion SWEEP propagated into a persisted release:
     * the shard export rebuilt from the kept corpus, gated by the same
@@ -2914,17 +2913,19 @@ object LlmQueries {
     * appending its per-source sample replay-guarded, the no-op replay
     * required in-gate (harmless for min-k, but the family contract is
     * uniform). */
-  private val kmvMaintCache = new SessionPathMemo("kmvsketch", (s, d, p) => {
-    val dd = docs(s, d)
-    def half(par: Int) = Sketch.kmvSketch(
-      dd.where(pmod(col("doc_id"), lit(2)) === par)
-        .select(col("source"), explode(TextOps.tokens(col("text"))).as("w")),
-      "w", Seq("source"))
-    require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-    require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-    require(!Sketch.sketchAppendBatch(p, half(1), 1L),
-      "replayed batch id must no-op")
-  })
+  private def kmvMaintCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "kmvsketch", d) { p =>
+      val dd = docs(s, d)
+      def half(par: Int) = Sketch.kmvSketch(
+        dd.where(pmod(col("doc_id"), lit(2)) === par)
+          .select(col("source"), explode(TextOps.tokens(col("text"))).as("w")),
+        "w", Seq("source"))
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      require(!Sketch.sketchAppendBatch(p, half(1), 1L),
+        "replayed batch id must no-op")
+      p
+    }
 
   /** q208 — the MAINTAINED per-source KMV samples ([[Sketch.kmvRead]]
     * over the persisted two-batch append path) against q205's
@@ -2995,14 +2996,16 @@ object LlmQueries {
   private def hostLinkPartial(dd: DataFrame): DataFrame =
     hostLinkObs(dd).groupBy("src", "dst").agg(count(lit(1)).as("w"))
 
-  private val edgeMaintCache = new SessionPathMemo("pgedges", (s, d, p) => {
-    def half(par: Int): DataFrame =
-      hostLinkPartial(docs(s, d).where(pmod(col("doc_id"), lit(2)) === par))
-    require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-    require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-    require(!Sketch.sketchAppendBatch(p, half(1), 1L),
-      "replayed batch id must no-op")
-  })
+  private def edgeMaintCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "pgedges", d) { p =>
+      def half(par: Int): DataFrame =
+        hostLinkPartial(docs(s, d).where(pmod(col("doc_id"), lit(2)) === par))
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      require(!Sketch.sketchAppendBatch(p, half(1), 1L),
+        "replayed batch id must no-op")
+      p
+    }
 
   /** q217 — PageRank from the MAINTAINED edge list
     * ([[graft.streaming.StreamingOps.edgeRead]] over the persisted
@@ -3025,25 +3028,27 @@ object LlmQueries {
     * exercised in-gate: a replayed delete would subtract twice), the
     * post-forget rank materialized, and the parts physically purged
     * ([[graft.streaming.StreamingOps.edgePurge]]). */
-  private val edgeRtbfCache = new SessionPathMemo("pgedgesrtbf", (s, d, p) => {
-    import graft.streaming.StreamingOps
-    def half(par: Int): DataFrame =
-      hostLinkPartial(docs(s, d).where(pmod(col("doc_id"), lit(2)) === par))
-    require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-    require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-    val forgotten = hostLinkObs(docs(s, d)
-      .where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes))
-    require(StreamingOps.edgeForgetBatch(forgotten, "src", "dst", p, 2L),
-      "delete batch must apply")
-    require(!StreamingOps.edgeForgetBatch(forgotten, "src", "dst", p, 2L),
-      "replayed delete batch must no-op (it would delete twice)")
-    // the rank frame may own a merged-edge checkpoint (the small-graph
-    // local solve) — release it once the probe parquet is written
-    val probe = rtbfEdgeRank(s, p)
-    try probe.write.mode("overwrite").parquet(s"$p/rtbf_probe")
-    finally graft.engine.Checkpoints.release(probe)
-    StreamingOps.edgePurge(s, p)
-  })
+  private def edgeRtbfCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "pgedgesrtbf", d) { p =>
+      import graft.streaming.StreamingOps
+      def half(par: Int): DataFrame =
+        hostLinkPartial(docs(s, d).where(pmod(col("doc_id"), lit(2)) === par))
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      val forgotten = hostLinkObs(docs(s, d)
+        .where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes))
+      require(StreamingOps.edgeForgetBatch(forgotten, "src", "dst", p, 2L),
+        "delete batch must apply")
+      require(!StreamingOps.edgeForgetBatch(forgotten, "src", "dst", p, 2L),
+        "replayed delete batch must no-op (it would delete twice)")
+      // the rank frame may own a merged-edge checkpoint (the small-graph
+      // local solve) — release it once the probe parquet is written
+      val probe = rtbfEdgeRank(s, p)
+      try probe.write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      finally graft.engine.Checkpoints.release(probe)
+      StreamingOps.edgePurge(s, p)
+      p
+    }
 
   private def rtbfEdgeRank(s: SparkSession, p: String): DataFrame =
     graft.operators.Graph.pageRank(
@@ -3105,20 +3110,22 @@ object LlmQueries {
     * [[ForgetRes]] (mod [[ForgetMod]]) are tombstoned
     * ([[Dedup.bandIndexForget]]), the post-forget probe is materialized,
     * and the index is PURGED ([[Dedup.bandIndexPurge]]). */
-  private val rtbfBandCache = new SessionPathMemo("rtbfband", (s, d, p) => {
-    val old = docs(s, d)
-      .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
-    Dedup.bandIndexWrite(
-      Dedup.lshBands(minhashSigOf(old), "doc_id", NumHashes, Bands),
-      "doc_id", Bands, p, maxBucket = IncrementalCap)
-    Dedup.bandIndexForget(s, p,
-      old.where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
-        .select("doc_id"), "doc_id")
-    rtbfBandProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
-    Dedup.bandIndexPurge(s, p)
-    require(Dedup.bandIndexVerify(s, p, maxBucket = IncrementalCap)
-      .isEmpty, "purged band index must verify consistent")
-  })
+  private def rtbfBandCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "rtbfband", d) { p =>
+      val old = docs(s, d)
+        .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
+      Dedup.bandIndexWrite(
+        Dedup.lshBands(minhashSigOf(old), "doc_id", NumHashes, Bands),
+        "doc_id", Bands, p, maxBucket = IncrementalCap)
+      Dedup.bandIndexForget(s, p,
+        old.where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
+          .select("doc_id"), "doc_id")
+      rtbfBandProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      Dedup.bandIndexPurge(s, p)
+      require(Dedup.bandIndexVerify(s, p, maxBucket = IncrementalCap)
+        .isEmpty, "purged band index must verify consistent")
+      p
+    }
 
   private def rtbfBandProbe(s: SparkSession, d: String, p: String): DataFrame = {
     val batch = docs(s, d)
@@ -3145,19 +3152,21 @@ object LlmQueries {
 
   /** Per-directory memo of the RTBF WINNOW index — [[winnowIndexCache]]'s
     * build, then forget → materialized probe → purge → in-gate verify. */
-  private val rtbfWinnowCache = new SessionPathMemo("rtbfwinnow", (s, d, p) => {
-    val old = docs(s, d).where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
-    Dedup.winnowIndexWrite(
-      Dedup.winnowFingerprints(old, "text", "doc_id", k = 3, w = 4),
-      "doc_id", p)
-    Dedup.winnowForget(s, p,
-      old.where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
-        .select("doc_id"), "doc_id")
-    rtbfWinnowProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
-    Dedup.winnowPurge(s, p)
-    require(Dedup.winnowIndexVerify(s, p).isEmpty,
-      "purged winnow index must verify consistent")
-  })
+  private def rtbfWinnowCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "rtbfwinnow", d) { p =>
+      val old = docs(s, d).where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
+      Dedup.winnowIndexWrite(
+        Dedup.winnowFingerprints(old, "text", "doc_id", k = 3, w = 4),
+        "doc_id", p)
+      Dedup.winnowForget(s, p,
+        old.where(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
+          .select("doc_id"), "doc_id")
+      rtbfWinnowProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      Dedup.winnowPurge(s, p)
+      require(Dedup.winnowIndexVerify(s, p).isEmpty,
+        "purged winnow index must verify consistent")
+      p
+    }
 
   private def rtbfWinnowProbe(s: SparkSession, d: String, p: String): DataFrame = {
     val batch = docs(s, d).where(pmod(col("doc_id"), lit(NewBatchMod)) === 0)
@@ -3183,20 +3192,22 @@ object LlmQueries {
     * capped build over orig+copy, then forget the ≡ 4 (mod 10) ORIG
     * images (their +100000 re-uploads stay — a realistic partial
     * takedown) → materialized probe → purge. */
-  private val rtbfDHashCache = new SessionPathMemo("rtbfdhash", (s, d, p) => {
-    val (orig, copy, _) = dhashCorpusLegs(s, d)
-    Multimodal.dhashIndexWrite(
-      Multimodal.imageDHash(Multimodal.decodePpm(
-        orig.unionByName(copy), "doc_id", "payload")),
-      "doc_id", p, maxBucket = DHashIndexCap)
-    Multimodal.dhashForget(s, p,
-      orig.where(pmod(col("doc_id"), lit(10)) === 4).select("doc_id"),
-      "doc_id")
-    rtbfDHashProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
-    Multimodal.dhashPurge(s, p)
-    require(Multimodal.dhashIndexVerify(s, p).isEmpty,
-      "purged dhash index must verify consistent")
-  })
+  private def rtbfDHashCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "rtbfdhash", d) { p =>
+      val (orig, copy, _) = dhashCorpusLegs(s, d)
+      Multimodal.dhashIndexWrite(
+        Multimodal.imageDHash(Multimodal.decodePpm(
+          orig.unionByName(copy), "doc_id", "payload")),
+        "doc_id", p, maxBucket = DHashIndexCap)
+      Multimodal.dhashForget(s, p,
+        orig.where(pmod(col("doc_id"), lit(10)) === 4).select("doc_id"),
+        "doc_id")
+      rtbfDHashProbe(s, d, p).write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      Multimodal.dhashPurge(s, p)
+      require(Multimodal.dhashIndexVerify(s, p).isEmpty,
+        "purged dhash index must verify consistent")
+      p
+    }
 
   private def rtbfDHashProbe(s: SparkSession, d: String, p: String): DataFrame =
     Multimodal.dhashIncrementalPairs(s, p,
@@ -3222,8 +3233,8 @@ object LlmQueries {
     * shared path, but the q237 lesson is that family-specific sidecar
     * interplay is where purge bugs live — so the spectral instance
     * gets its own oracle gate (q250) instead of shared-code coverage. */
-  private val rtbfSpectralCache = new SessionPathMemo("rtbfspec",
-    (s, d, p) => {
+  private def rtbfSpectralCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "rtbfspec", d) { p =>
       Multimodal.dhashIndexWrite(
         Multimodal.audioSpectralFingerprint(Multimodal.decodeWav(
           wavRotatedPayloads(s, d), "doc_id", "payload")),
@@ -3237,7 +3248,8 @@ object LlmQueries {
       Multimodal.dhashPurge(s, p)
       require(Multimodal.dhashIndexVerify(s, p).isEmpty,
         "purged spectral index must verify consistent")
-    })
+      p
+    }
 
   private def rtbfSpectralProbe(s: SparkSession, d: String,
       p: String): DataFrame =
@@ -3266,34 +3278,36 @@ object LlmQueries {
     * against every retained doc's — one corpus pass; a hash a retained
     * doc still contributes must NOT be deleted) are tombstoned
     * ([[Sketch.kmvForgetHashes]]) → materialized sample → purge. */
-  private val rtbfKmvCache = new SessionPathMemo("rtbfkmv", (s, d, p) => {
-    val dd = docs(s, d)
-    // forgotten docs carry a planted token set no retained doc has:
-    // without it, exclusive hashes almost never land inside a bottom-16
-    // sample at test sf and the deletion path would gate vacuously
-    // (48 md5-uniform extra hashes per affected source ≈ 2 expected
-    // sample hits each — q238's short groups prove rows really left)
-    val planted = dd.select(col("doc_id"), col("source"),
-      when(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes &&
-          col("text").isNotNull,
-        concat(col("text"), lit(RtbfKmvPlant))).otherwise(col("text"))
-        .as("text"))
-    val words = planted.select(col("doc_id"), col("source"),
-      explode(TextOps.tokens(col("text"))).as("w"))
-    require(Sketch.sketchAppendBatch(p,
-      Sketch.kmvSketch(words, "w", Seq("source")), 0L), "batch must apply")
-    val forgotten = pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes
-    val exclusive = words.where(forgotten)
-      .select(Sketch.kmvHash(col("w")).as("h")).distinct()
-      .join(words.where(!forgotten)
-        .select(Sketch.kmvHash(col("w")).as("h")).distinct(),
-        Seq("h"), "left_anti")
-    Sketch.kmvForgetHashes(s, p, exclusive)
-    Sketch.kmvRead(s, p, Seq("source"))
-      .select(col("source"), col("pos").cast("long").as("pos"), col("h"))
-      .write.mode("overwrite").parquet(s"$p/rtbf_probe")
-    Sketch.kmvPurge(s, p, Seq("source"))
-  })
+  private def rtbfKmvCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "rtbfkmv", d) { p =>
+      val dd = docs(s, d)
+      // forgotten docs carry a planted token set no retained doc has:
+      // without it, exclusive hashes almost never land inside a bottom-16
+      // sample at test sf and the deletion path would gate vacuously
+      // (48 md5-uniform extra hashes per affected source ≈ 2 expected
+      // sample hits each — q238's short groups prove rows really left)
+      val planted = dd.select(col("doc_id"), col("source"),
+        when(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes &&
+            col("text").isNotNull,
+          concat(col("text"), lit(RtbfKmvPlant))).otherwise(col("text"))
+          .as("text"))
+      val words = planted.select(col("doc_id"), col("source"),
+        explode(TextOps.tokens(col("text"))).as("w"))
+      require(Sketch.sketchAppendBatch(p,
+        Sketch.kmvSketch(words, "w", Seq("source")), 0L), "batch must apply")
+      val forgotten = pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes
+      val exclusive = words.where(forgotten)
+        .select(Sketch.kmvHash(col("w")).as("h")).distinct()
+        .join(words.where(!forgotten)
+          .select(Sketch.kmvHash(col("w")).as("h")).distinct(),
+          Seq("h"), "left_anti")
+      Sketch.kmvForgetHashes(s, p, exclusive)
+      Sketch.kmvRead(s, p, Seq("source"))
+        .select(col("source"), col("pos").cast("long").as("pos"), col("h"))
+        .write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      Sketch.kmvPurge(s, p, Seq("source"))
+      p
+    }
 
   /** q238 — RTBF through the persisted KMV sample
     * ([[Sketch.kmvForgetHashes]]/[[Sketch.kmvPurge]]): the per-source
@@ -3314,8 +3328,11 @@ object LlmQueries {
   /** Per-directory memo of the synthetic WARC fixture
     * ([[graft.sources.Warc.writeSyntheticWarc]] over the ASCII
     * documents). */
-  private val warcFixtureCache = new SessionPathMemo("warcfix", (s, d, p) =>
-    graft.sources.Warc.writeSyntheticWarc(docs(s, d), s"$p/warc"))
+  private def warcFixtureCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "warcfix", d) { p =>
+      graft.sources.Warc.writeSyntheticWarc(docs(s, d), s"$p/warc")
+      p
+    }
 
   /** q239 — WARC record source end-to-end
     * ([[graft.sources.Warc.records]] → [[graft.sources.Warc
@@ -3356,12 +3373,15 @@ object LlmQueries {
     * ([[graft.sources.Warc.writeSyntheticWarcGz]] over ALL non-null
     * documents with the [[WarcGzPlant]] multi-byte suffix — no ASCII
     * restriction, the point of the byte-exact reader). */
-  private val warcGzFixtureCache = new SessionPathMemo("warcgzfix",
-    (s, d, p) => graft.sources.Warc.writeSyntheticWarcGz(
-      docs(s, d).select(col("doc_id"),
-        concat(col("text"), lit(WarcGzPlant),
-          pmod(col("doc_id"), lit(7)).cast("string")).as("text")),
-      s"$p/warc"))
+  private def warcGzFixtureCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "warcgzfix", d) { p =>
+      graft.sources.Warc.writeSyntheticWarcGz(
+        docs(s, d).select(col("doc_id"),
+          concat(col("text"), lit(WarcGzPlant),
+            pmod(col("doc_id"), lit(7)).cast("string")).as("text")),
+        s"$p/warc")
+      p
+    }
 
   /** q246 — gzip WARC source end-to-end
     * ([[graft.sources.Warc.recordsGz]] → [[graft.sources.Warc
@@ -3444,8 +3464,8 @@ object LlmQueries {
     * .recordsGzBytes]] exists for. The BMP encode is JVM work (fixture
     * generation); the record framing stays in-plan
     * ([[graft.sources.Warc.recordBinCol]]). */
-  private val warcImgFixtureCache = new SessionPathMemo("warcimgfix",
-    (s, d, p) => {
+  private def warcImgFixtureCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "warcimgfix", d) { p =>
       import s.implicits._
       val httpHdr = "HTTP/1.1 200 OK\r\nContent-Type: image/bmp\r\n\r\n"
         .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
@@ -3461,7 +3481,8 @@ object LlmQueries {
         rows.select(graft.sources.Warc.recordBinCol(lit("response"),
           col("uri"), col("payload")).as("value")),
         s"$p/warc")
-    })
+      p
+    }
 
   /** q247 — BINARY payloads through the gzip WARC source end-to-end
     * ([[graft.sources.Warc.recordsGzBytes]] →
@@ -3557,12 +3578,15 @@ object LlmQueries {
     *    the eval set; decontamination drops any survivor sharing a word
     *    3-gram with them (eval docs that reached this stage drop by
     *    their own shingles — the leak gate closing itself). */
-  private val crawlCorpusCache = new SessionPathMemo("crawlcorpus",
-    (s, d, p) => buildCrawlCorpus(s, docs(s, d), p))
+  private def crawlCorpusCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "crawlcorpus", d) { p =>
+      buildCrawlCorpus(s, docs(s, d), p)
+      p
+    }
 
   /** The q241 pipeline body over ANY `(doc_id, text)` corpus — public so
-    * LargeCurationBench drives the IDENTICAL require-gated stages at
-    * synthetic scale (the round-13 ask's wall-clock evidence runs the
+    * a synthetic-scale run drives the IDENTICAL require-gated stages
+    * (`bench/large_curation.txt`) (the round-13 ask's wall-clock evidence runs the
     * same code as the gate, not a re-implementation). */
   /** Funnel checksum: the mod-sum is additive, so per-batch partials
     * roll up with a plain SUM (the q248 incremental contract). */
@@ -3700,7 +3724,7 @@ object LlmQueries {
     // stage 7: exact near-dup — keep-min on the 60-bit content hash.
     // NOT TextOps.fingerprint: its mod-1e6 range is fine at gate scale
     // but pigeonholes >10^6 docs into forced collisions (measured: half
-    // the corpus dropped at 2M docs in LargeCurationBench); the 60-bit
+    // the corpus dropped at 2M docs, `bench/large_curation.txt`); the 60-bit
     // hash is collision-free at any corpus this engine will see.
     val fps = s6.select(col("doc_id"),
       TextOps.portableHash(col("text"), 7).as("fingerprint"))
@@ -3784,7 +3808,7 @@ object LlmQueries {
     // the connectedComponents discipline): the funnel plus the plant
     // requires evaluate ~20 bounded actions, and without the checkpoints
     // each one would re-parse the WARC files and re-run every upstream
-    // stage (measured 20x at 10^5 docs in LargeCurationBench).
+    // stage (measured 20x at 10^5 docs, `bench/large_curation.txt`).
     var owned = List.empty[DataFrame]
     def mark(df: DataFrame): DataFrame = {
       val m = graft.engine.Checkpoints.mark(df)
@@ -4075,8 +4099,11 @@ object LlmQueries {
     } finally owned.foreach(graft.engine.Checkpoints.release)
   }
 
-  private val crawlIncrCache = new SessionPathMemo("crawlincr",
-    (s, d, p) => buildCrawlIncr(s, docs(s, d), p))
+  private def crawlIncrCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "crawlincr", d) { p =>
+      buildCrawlIncr(s, docs(s, d), p)
+      p
+    }
 
   /** q248 — the INCREMENTAL crawl flagship ([[buildCrawlIncr]]): the
     * q241 crawl ingested as three container batches through the
@@ -4092,12 +4119,15 @@ object LlmQueries {
     * [[graft.sources.Layout.writeZOrdered]] on (user_id, ts_us) —
     * nanos truncated to µs FIRST so both engines bucket identical
     * values (the q41 convention). */
-  private val zorderCache = new SessionPathMemo("zorder", (s, d, p) =>
-    graft.sources.Layout.writeZOrdered(
-      TimeSeriesQueries.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("ts div 1000").as("ts_us")),
-      s"$p/z", "user_id", "ts_us", nRanges = 8))
+  private def zorderCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "zorder", d) { p =>
+      graft.sources.Layout.writeZOrdered(
+        TimeSeriesQueries.events(s, d)
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("ts div 1000").as("ts_us")),
+        s"$p/z", "user_id", "ts_us", nRanges = 8)
+      p
+    }
 
   /** q194 — Z-order layout + quadrant box read: the 2-D clustering
     * write path ([[graft.sources.Layout.zorderKey]]) gated end-to-end.
@@ -4298,15 +4328,17 @@ object LlmQueries {
   /** The q200 memo: events land as 16 UNSORTED hash-partitioned small
     * files (the incremental-ingest end state), then
     * [[graft.sources.Layout.compactZOrdered]] re-clusters them. */
-  private val zorderCompactCache = new SessionPathMemo("zordercomp", (s, d, p) => {
-    TimeSeriesQueries.events(s, d)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("ts div 1000").as("ts_us"))
-      .repartition(16)
-      .write.mode("overwrite").parquet(s"$p/raw")
-    graft.sources.Layout.compactZOrdered(s, s"$p/raw", s"$p/z",
-      "user_id", "ts_us", nRanges = 8)
-  })
+  private def zorderCompactCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "zordercomp", d) { p =>
+      TimeSeriesQueries.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          expr("ts div 1000").as("ts_us"))
+        .repartition(16)
+        .write.mode("overwrite").parquet(s"$p/raw")
+      graft.sources.Layout.compactZOrdered(s, s"$p/raw", s"$p/z",
+        "user_id", "ts_us", nRanges = 8)
+      p
+    }
 
   /** q200 — Z-order COMPACTION gated end-to-end: the q194 quadrant read
     * over a layout REBUILT from unsorted small files
@@ -4560,10 +4592,8 @@ object LlmQueries {
     * ([[TextOps.pocketPerceptronTrain]]) — the [[learnedBpe]]
     * train-once/apply-everywhere shape, so q175's weight dump and
     * q111's apply share one deterministic fit. */
-  private val pocketModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, TextOps.PocketModel]()
   private def learnedPocket(s: SparkSession, d: String): TextOps.PocketModel =
-    pocketModelMemo.computeIfAbsent(d, _ =>
+    SessionArtifacts.getOrBuild(s, "pocketmodel", d)(_ =>
       TextOps.pocketPerceptronTrain(docs(s, d), "text", "doc_id",
         pocketLabel, PocketDims, PocketRounds, PocketSeed))
 
@@ -4778,13 +4808,15 @@ object LlmQueries {
     * the already-ingested corpus ([[Dedup.winnowIndexWrite]]): winnowed
     * ONCE per session, probed per batch — the q61 sign-once shape for
     * containment screening. Session scratch, removed at JVM exit. */
-  private val winnowIndexCache = new SessionPathMemo("winnowidx", (s, d, p) => {
-    val old = graft.sources.Fanout.small(docs(s, d))
-      .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
-    Dedup.winnowIndexWrite(
-      Dedup.winnowFingerprints(old, "text", "doc_id", k = 3, w = 4),
-      "doc_id", p)
-  })
+  private def winnowIndexCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "winnowidx", d) { p =>
+      val old = graft.sources.Fanout.small(docs(s, d))
+        .where(pmod(col("doc_id"), lit(NewBatchMod)) =!= 0)
+      Dedup.winnowIndexWrite(
+        Dedup.winnowFingerprints(old, "text", "doc_id", k = 3, w = 4),
+        "doc_id", p)
+      p
+    }
 
   /** q126 — incremental containment screening
     * ([[Dedup.winnowIncrementalPairs]]): the incoming batch winnows only
@@ -4843,10 +4875,8 @@ object LlmQueries {
     * the train-once/apply-everywhere shape — so q140's apply and q151's
     * merge-table dump share one model fit. Deterministic per directory,
     * so memoization is invisible to results. */
-  private val bpeModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, TextOps.BpeModel]()
   private def learnedBpe(s: SparkSession, d: String): TextOps.BpeModel =
-    bpeModelMemo.computeIfAbsent(d, _ =>
+    SessionArtifacts.getOrBuild(s, "bpemodel", d)(_ =>
       TextOps.bpeTrainModel(docs(s, d), "text",
         BpeTrainNMerges, BpeTrainSampleWords))
 
@@ -4901,10 +4931,8 @@ object LlmQueries {
     * apply-everywhere shape as [[learnedBpe]], so q183's model dump and
     * q184's apply share one fit. Deterministic per directory, so
     * memoization is invisible to results. */
-  private val uniModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, TextOps.UnigramLmModel]()
   private def learnedUnigram(s: SparkSession, d: String): TextOps.UnigramLmModel =
-    uniModelMemo.computeIfAbsent(d, _ =>
+    SessionArtifacts.getOrBuild(s, "unimodel", d)(_ =>
       TextOps.unigramTrainModel(docs(s, d), "text",
         UniTrainMaxPieceLen, UniTrainSampleWords, UniTrainIters))
 
@@ -5057,11 +5085,9 @@ object LlmQueries {
   /** Per-directory memo of the LEARNED WordPiece tokenizer
     * ([[TextOps.wordPieceTrainModel]]) — the [[learnedBpe]]
     * train-once/apply-everywhere shape for the third training family. */
-  private val wpModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, TextOps.WordPieceModel]()
   private def learnedWordPiece(s: SparkSession,
       d: String): TextOps.WordPieceModel =
-    wpModelMemo.computeIfAbsent(d, _ =>
+    SessionArtifacts.getOrBuild(s, "wpmodel", d)(_ =>
       TextOps.wordPieceTrainModel(docs(s, d), "text",
         WpTrainNMerges, WpTrainSampleWords))
 
@@ -5942,50 +5968,44 @@ object LlmQueries {
     * language and STRICTLY greater for zh (the language the heuristic
     * structurally cannot see), else the round's claim is false and the
     * build fails loud. */
-  private val langIdModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, TextOps.LangIdModel)]()
-
   private def learnedLangId(s: SparkSession, d: String): TextOps.LangIdModel =
-    langIdModelCache.compute(d, (_, cur) => {
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val plant = langIdPlant(s, d)
-        val m = TextOps.langNaiveBayesTrain(plant, "text", "doc_id",
-          "lang", LangIdDims, LangIdSeed)
-        def diag(pred: DataFrame): Map[String, Long] =
-          plant.select(col("doc_id"), col("lang"))
-            .join(pred, "doc_id")
-            .groupBy("lang")
-            .agg(graft.operators.Graph.idiv(
-              sum(when(col("lang") === col("lang_pred"), 1L).otherwise(0L))
-                * 1000, count(lit(1))).as("m"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val h = diag(TextOps.languageId(plant, "text", "doc_id")
-          .select(col("doc_id"), col("lang_pred")))
-        // the PRODUCTION predictor carries the und floor — the diag
-        // requires then also guard against an over-aggressive floor
-        // (an und on a trained row lowers the diagonal)
-        val l = diag(TextOps.langIdPredict(plant, "text", "doc_id", m,
-          Some(LangIdUndNano)).select(col("doc_id"), col("lang_pred")))
-        m.labels.foreach { lang =>
-          require(l(lang) >= h.getOrElse(lang, 0L),
-            s"learned langid must dominate the heuristic on $lang: " +
-              s"learned ${l(lang)} < heuristic ${h.getOrElse(lang, 0L)}")
-        }
-        require(l("zh") > h.getOrElse("zh", 0L),
-          "learned langid must STRICTLY beat the heuristic on zh")
-        // the unknown-language contract: EVERY planted Cyrillic doc
-        // must fall below the floor and read `und` — forced-choice
-        // argmax misrouting an untrained language is the round-14
-        // verdict defect this floor closes
-        val ruMiss = TextOps.langIdPredict(langIdPlantRu(s, d), "text",
-            "doc_id", m, Some(LangIdUndNano))
-          .where(col("lang_pred") =!= "und")
-        require(ruMiss.isEmpty,
-          "every planted unknown-language doc must route to und")
-        (s, m)
+    SessionArtifacts.getOrBuild(s, "langidmodel", d) { _ =>
+      val plant = langIdPlant(s, d)
+      val m = TextOps.langNaiveBayesTrain(plant, "text", "doc_id",
+        "lang", LangIdDims, LangIdSeed)
+      def diag(pred: DataFrame): Map[String, Long] =
+        plant.select(col("doc_id"), col("lang"))
+          .join(pred, "doc_id")
+          .groupBy("lang")
+          .agg(graft.operators.Graph.idiv(
+            sum(when(col("lang") === col("lang_pred"), 1L).otherwise(0L))
+              * 1000, count(lit(1))).as("m"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val h = diag(TextOps.languageId(plant, "text", "doc_id")
+        .select(col("doc_id"), col("lang_pred")))
+      // the PRODUCTION predictor carries the und floor — the diag
+      // requires then also guard against an over-aggressive floor
+      // (an und on a trained row lowers the diagonal)
+      val l = diag(TextOps.langIdPredict(plant, "text", "doc_id", m,
+        Some(LangIdUndNano)).select(col("doc_id"), col("lang_pred")))
+      m.labels.foreach { lang =>
+        require(l(lang) >= h.getOrElse(lang, 0L),
+          s"learned langid must dominate the heuristic on $lang: " +
+            s"learned ${l(lang)} < heuristic ${h.getOrElse(lang, 0L)}")
       }
-    })._2
+      require(l("zh") > h.getOrElse("zh", 0L),
+        "learned langid must STRICTLY beat the heuristic on zh")
+      // the unknown-language contract: EVERY planted Cyrillic doc
+      // must fall below the floor and read `und` — forced-choice
+      // argmax misrouting an untrained language is the round-14
+      // verdict defect this floor closes
+      val ruMiss = TextOps.langIdPredict(langIdPlantRu(s, d), "text",
+          "doc_id", m, Some(LangIdUndNano))
+        .where(col("lang_pred") =!= "und")
+      require(ruMiss.isEmpty,
+        "every planted unknown-language doc must route to und")
+      m
+    }
 
   /** q240 — language-ID TRAINING ([[TextOps.langNaiveBayesTrain]]):
     * the five labels' full nano-bit weight tables — per (label, bucket)
@@ -6218,8 +6238,11 @@ object LlmQueries {
   /** Per-directory memo of the documents table exported as JSONL — the
     * write side of the q94 round-trip, exercised once per session.
     * Session scratch, removed at JVM exit like the layout/IVF dirs. */
-  private val jsonlCache = new SessionPathMemo("jsonl", (s, d, p) =>
-    graft.sources.Jsonl.write(docs(s, d), p))
+  private def jsonlCache(s: SparkSession, d: String): String =
+    SessionArtifacts.getOrBuild(s, "jsonl", d) { p =>
+      graft.sources.Jsonl.write(docs(s, d), p)
+      p
+    }
 
   /** q94 — JSONL round-trip ([[graft.sources.Jsonl]]): documents exported
     * to the LLM interchange format and read back with an EXPLICIT schema

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.MultiSeriesEngine
+import graft.engine.{MultiSeriesEngine, SessionArtifacts}
 import graft.operators.{Similarity, Skew, Temporal}
 import graft.parser.QueryParser
 
@@ -26,25 +26,16 @@ object RelationalQueries {
 
   // ---- Spark-side queries ----
 
-  /** Per-directory memo of the materialized IVF index (corpus written
-    * partitionBy("cell") to a temp dir + centroid table): built once per
-    * session, searched via partition pruning — the 100 TB path promised by
-    * [[Similarity.IvfIndex]]. Session-checked like the series-index cache. */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
+  /** Per-directory session artifact ([[SessionArtifacts]]): the
+    * materialized IVF index (corpus written partitionBy("cell") to session
+    * scratch + centroid table), built once per session, searched via
+    * partition pruning — the 100 TB path promised by
+    * [[Similarity.IvfIndex]]. */
   private def ivfIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        // injective path per dataset dir (hashCode could collide)
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_$h"
-        graft.cli.Cleanup.deleteOnExit(path) // session scratch, not a cache
-        Similarity.ivfBuild(s, t(s, d, "embeddings"), "vec_id", "embedding",
-          k = 8, path = path)
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "ivf", d) { path =>
+      Similarity.ivfBuild(s, t(s, d, "embeddings"), "vec_id", "embedding",
+        k = 8, path = path)
+    }
 
   /** Per-directory memo of the CROSS-MODAL IVF index: the image tower's
     * transformed vectors (the q152 mix transform) trained and
@@ -52,25 +43,16 @@ object RelationalQueries {
     * brute-force cross-modal retrieval (at corpus scale a caption query
     * must not scan every image vector; it probes its best cells of the
     * IMAGE index). */
-  private val ivfXmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
   private def ivfXmIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfXmCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_ivfxm_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        val imgTower = t(s, d, "embeddings").select(col("vec_id"),
-          expr("transform(sequence(1, 64), i -> " +
-            "CAST(embedding[i - 1] AS DOUBLE) + " +
-            "CAST(0.1 AS DOUBLE) * CAST(embedding[i % 64] AS DOUBLE))")
-            .as("embedding"))
-        Similarity.ivfBuild(s, imgTower, "vec_id", "embedding",
-          k = 8, path = path)
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "ivfxm", d) { path =>
+      val imgTower = t(s, d, "embeddings").select(col("vec_id"),
+        expr("transform(sequence(1, 64), i -> " +
+          "CAST(embedding[i - 1] AS DOUBLE) + " +
+          "CAST(0.1 AS DOUBLE) * CAST(embedding[i % 64] AS DOUBLE))")
+          .as("embedding"))
+      Similarity.ivfBuild(s, imgTower, "vec_id", "embedding",
+        k = 8, path = path)
+    }
 
   /** q162 — cross-modal retrieval AT SCALE
     * ([[Similarity.ivfSearchIndexedBatch]] over [[ivfXmIndex]]): q161's
@@ -105,19 +87,10 @@ object RelationalQueries {
     * ([[Similarity.bqIvfBuild]]): the 8 B packed codes re-partitioned by
     * the float index's trained cells — built once per session, probed
     * per batch. Session scratch, removed at JVM exit. */
-  private val bqIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.BqIvfIndex]()
-
   private def bqIvfIndex(s: SparkSession, d: String): Similarity.BqIvfIndex =
-    bqIvfCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_bqivf_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        Similarity.bqIvfBuild(ivfIndex(s, d), path)
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "bqivf", d) { path =>
+      Similarity.bqIvfBuild(ivfIndex(s, d), path)
+    }
 
   /** q176 — the IVF-PRUNED BQ tier ([[Similarity.bqIvfSearchBatch]]):
     * the round-12 verdict's missing production shape, composing the two
@@ -144,31 +117,20 @@ object RelationalQueries {
     * guard is exercised IN-GATE: a replay of the applied batch id must
     * no-op, else the doubled code rows would change the hamming
     * shortlist and hash-fail q177. */
-  private val bqIvfIncCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.BqIvfIndex]()
-
   private def bqIvfIncIndex(s: SparkSession, d: String): Similarity.BqIvfIndex =
-    bqIvfIncCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val flPath = s"${sys.props("java.io.tmpdir")}/graft_bqivffl_$h"
-        val path = s"${sys.props("java.io.tmpdir")}/graft_bqivfinc_$h"
-        graft.cli.Cleanup.deleteOnExit(flPath)
-        graft.cli.Cleanup.deleteOnExit(path)
-        val vecs = t(s, d, "embeddings")
-        val old = vecs.where(pmod(col("vec_id"), lit(5)) =!= 0)
-        val fl = Similarity.ivfBuild(s, old, "vec_id", "embedding",
-          k = 8, path = flPath)
-        val bq = Similarity.bqIvfBuild(fl, path)
-        val fresh = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
-        require(Similarity.bqIvfAppendBatch(bq, fresh, batchId = 1L),
-          "first append batch must apply")
-        require(!Similarity.bqIvfAppendBatch(bq, fresh, batchId = 1L),
-          "replayed batch id must no-op")
-        bq
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "bqivfinc", d) { path =>
+      val vecs = t(s, d, "embeddings")
+      val old = vecs.where(pmod(col("vec_id"), lit(5)) =!= 0)
+      val fl = Similarity.ivfBuild(s, old, "vec_id", "embedding",
+        k = 8, path = s"$path/float")
+      val bq = Similarity.bqIvfBuild(fl, s"$path/codes")
+      val fresh = vecs.where(pmod(col("vec_id"), lit(5)) === 0)
+      require(Similarity.bqIvfAppendBatch(bq, fresh, batchId = 1L),
+        "first append batch must apply")
+      require(!Similarity.bqIvfAppendBatch(bq, fresh, batchId = 1L),
+        "replayed batch id must no-op")
+      bq
+    }
 
   /** q177 — the BQ code tier UNDER INGEST ([[bqIvfIncIndex]] +
     * [[Similarity.bqIvfSearchBatch]]): the q176 search over a code
@@ -185,6 +147,12 @@ object RelationalQueries {
         nprobe = 2, shortlist = 30, k = 10)
       .orderBy("q_id", "rank")
 
+  private def rtbfBqProbe(s: SparkSession, d: String,
+      idx: Similarity.BqIvfIndex): DataFrame =
+    Similarity.bqIvfSearchBatch(idx, t(s, d, "embeddings"),
+      t(s, d, "embeddings").where(col("vec_id") < 3),
+      nprobe = 2, shortlist = 30, k = 10)
+
   /** Per-directory memo of the RTBF BQ tier: a fresh code index derived
     * from the shared float [[ivfIndex]] ([[Similarity.bqIvfBuild]]),
     * then the ≡ 3 (mod 7) vectors are tombstoned
@@ -192,32 +160,17 @@ object RelationalQueries {
     * and the index compacted — [[Similarity.bqIvfCompact]] doubles as
     * the physical purge (the round-13 verdict's ivfCompact-discipline
     * ask). */
-  private val rtbfBqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.BqIvfIndex]()
-
-  private def rtbfBqProbe(s: SparkSession, d: String,
-      idx: Similarity.BqIvfIndex): DataFrame =
-    Similarity.bqIvfSearchBatch(idx, t(s, d, "embeddings"),
-      t(s, d, "embeddings").where(col("vec_id") < 3),
-      nprobe = 2, shortlist = 30, k = 10)
-
   private def rtbfBqIndex(s: SparkSession, d: String): Similarity.BqIvfIndex =
-    rtbfBqCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_rtbfbq_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        val bq = Similarity.bqIvfBuild(ivfIndex(s, d), path)
-        Similarity.bqIvfForget(bq,
-          t(s, d, "embeddings")
-            .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
-        rtbfBqProbe(s, d, bq)
-          .write.mode("overwrite").parquet(s"$path/rtbf_probe")
-        Similarity.bqIvfCompact(bq, targetRecordsPerFile = 1L << 20)
-        bq
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "rtbfbq", d) { path =>
+      val bq = Similarity.bqIvfBuild(ivfIndex(s, d), path)
+      Similarity.bqIvfForget(bq,
+        t(s, d, "embeddings")
+          .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
+      rtbfBqProbe(s, d, bq)
+        .write.mode("overwrite").parquet(s"$path/rtbf_probe")
+      Similarity.bqIvfCompact(bq, targetRecordsPerFile = 1L << 20)
+      bq
+    }
 
   /** q237 — RTBF through the BQ code tier
     * ([[Similarity.bqIvfForget]]/[[Similarity.bqIvfCompact]]): q176's
@@ -238,6 +191,11 @@ object RelationalQueries {
     a.unionByName(b).orderBy("phase", "q_id", "rank")
   }
 
+  private def rtbfIvfProbe(s: SparkSession, d: String,
+      idx: Similarity.IvfIndex): DataFrame =
+    Similarity.ivfSearchIndexedBatch(idx,
+      t(s, d, "embeddings").where(col("vec_id") < 3), nprobe = 2, topK = 10)
+
   /** Per-directory memo of the RTBF FLOAT-IVF index (the round-14
     * verdict's uncovered path: [[Similarity.ivfForget]] shipped wired
     * but gate-less): a fresh float index on the session-trained
@@ -246,33 +204,19 @@ object RelationalQueries {
     * ≡ 3 (mod 7) vectors tombstoned, the post-forget probe
     * materialized, and [[Similarity.ivfCompact]] run as the physical
     * purge. */
-  private val rtbfIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
-  private def rtbfIvfProbe(s: SparkSession, d: String,
-      idx: Similarity.IvfIndex): DataFrame =
-    Similarity.ivfSearchIndexedBatch(idx,
-      t(s, d, "embeddings").where(col("vec_id") < 3), nprobe = 2, topK = 10)
-
   private def rtbfIvfIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    rtbfIvfCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_rtbfivf_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        val idx = Similarity.ivfBuild(s, t(s, d, "embeddings"), "vec_id",
-          "embedding", k = 8, path = path,
-          centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
-        Similarity.ivfForget(idx,
-          t(s, d, "embeddings")
-            .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
-        rtbfIvfProbe(s, d, idx)
-          .write.mode("overwrite").parquet(s"$path/rtbf_probe")
-        Similarity.ivfCompact(idx, targetRecordsPerFile = 1L << 20)
-        idx
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "rtbfivf", d) { path =>
+      val idx = Similarity.ivfBuild(s, t(s, d, "embeddings"), "vec_id",
+        "embedding", k = 8, path = path,
+        centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
+      Similarity.ivfForget(idx,
+        t(s, d, "embeddings")
+          .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
+      rtbfIvfProbe(s, d, idx)
+        .write.mode("overwrite").parquet(s"$path/rtbf_probe")
+      Similarity.ivfCompact(idx, targetRecordsPerFile = 1L << 20)
+      idx
+    }
 
   /** q242 — RTBF through the FLOAT IVF index
     * ([[Similarity.ivfForget]]/[[Similarity.ivfCompact]]): q79's
@@ -293,38 +237,29 @@ object RelationalQueries {
     a.unionByName(b).orderBy("phase", "q_id", "rank")
   }
 
-  /** Per-directory memo of the RTBF IVF-PQ index (the second uncovered
-    * round-14 path, [[Similarity.ivfPqForget]]): a fresh code index on
-    * the session centroids + codebooks, forget ≡ 3 (mod 7), probe
-    * materialized, [[Similarity.ivfPqCompact]] as the purge. */
-  private val rtbfIvfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfPqIndex]()
-
   private def rtbfIvfPqProbe(s: SparkSession, d: String,
       idx: Similarity.IvfPqIndex): DataFrame =
     Similarity.ivfPqSearchIndexedBatch(idx, pqBooks(s, d),
       t(s, d, "embeddings").where(col("vec_id") < 3), "embedding",
       nprobe = 2, topK = 10)
 
+  /** Per-directory memo of the RTBF IVF-PQ index (the second uncovered
+    * round-14 path, [[Similarity.ivfPqForget]]): a fresh code index on
+    * the session centroids + codebooks, forget ≡ 3 (mod 7), probe
+    * materialized, [[Similarity.ivfPqCompact]] as the purge. */
   private def rtbfIvfPqIndex(s: SparkSession, d: String): Similarity.IvfPqIndex =
-    rtbfIvfPqCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_rtbfivfpq_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        val idx = Similarity.ivfPqBuild(s, t(s, d, "embeddings"), "vec_id",
-          "embedding", k = 8, cb = pqBooks(s, d), path = path,
-          centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
-        Similarity.ivfPqForget(idx,
-          t(s, d, "embeddings")
-            .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
-        rtbfIvfPqProbe(s, d, idx)
-          .write.mode("overwrite").parquet(s"$path/rtbf_probe")
-        Similarity.ivfPqCompact(idx, targetRecordsPerFile = 1L << 20)
-        idx
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "rtbfivfpq", d) { path =>
+      val idx = Similarity.ivfPqBuild(s, t(s, d, "embeddings"), "vec_id",
+        "embedding", k = 8, cb = pqBooks(s, d), path = path,
+        centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
+      Similarity.ivfPqForget(idx,
+        t(s, d, "embeddings")
+          .where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
+      rtbfIvfPqProbe(s, d, idx)
+        .write.mode("overwrite").parquet(s"$path/rtbf_probe")
+      Similarity.ivfPqCompact(idx, targetRecordsPerFile = 1L << 20)
+      idx
+    }
 
   /** q243 — RTBF through the IVF-PQ code index
     * ([[Similarity.ivfPqForget]]/[[Similarity.ivfPqCompact]]): q104's
@@ -410,22 +345,13 @@ object RelationalQueries {
     * their trained cells, SAME session quantizer) — the stand-in for an
     * already-deduped materialized corpus that q116's ingest batch is
     * checked against. */
-  private val ivfPartialCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfIndex]()
-
   private def ivfPartialIndex(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfPartialCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_ivfpart_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        Similarity.ivfBuild(s,
-          t(s, d, "embeddings").where(col("vec_id") < 450), "vec_id",
-          "embedding", k = 8, path = path,
-          centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "ivfpart", d) { path =>
+      Similarity.ivfBuild(s,
+        t(s, d, "embeddings").where(col("vec_id") < 450), "vec_id",
+        "embedding", k = 8, path = path,
+        centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
+    }
 
   /** q116 — incremental SemDeDup ([[Similarity.semDedupIncremental]]):
     * vectors 450+ arrive as an ingest batch and are checked against the
@@ -456,11 +382,8 @@ object RelationalQueries {
     * [[Similarity.pqTrain]]): training runs once per session; the
     * collected codebooks (64 tiny rows) parameterize every later encode
     * and search as plan-time literals. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.PqCodebooks]()
-
   private def pqBooks(s: SparkSession, d: String): Similarity.PqCodebooks =
-    pqCache.computeIfAbsent(d, _ =>
+    SessionArtifacts.getOrBuild(s, "pqbooks", d)(_ =>
       Similarity.pqCollect(
         Similarity.pqTrain(t(s, d, "embeddings"), "vec_id", "embedding",
           m = 8, dsub = 8, ksub = 8, iters = 2),
@@ -491,21 +414,12 @@ object RelationalQueries {
     * session-trained coarse centroids as [[ivfIndex]] (one Lloyd run
     * serves both indexes — and the oracle's single `kmeansCtes` replay
     * covers both) and the same session codebooks as [[pqBooks]]. */
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.IvfPqIndex]()
-
   private def ivfPqIndex(s: SparkSession, d: String): Similarity.IvfPqIndex =
-    ivfPqCache.compute(d, (_, cur) => {
-      if (cur != null && (cur.spark eq s)) cur
-      else {
-        val h = graft.engine.IndexCache.md5Key(d, 8)
-        val path = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_$h"
-        graft.cli.Cleanup.deleteOnExit(path)
-        Similarity.ivfPqBuild(s, t(s, d, "embeddings"), "vec_id", "embedding",
-          k = 8, cb = pqBooks(s, d), path = path,
-          centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
-      }
-    })
+    SessionArtifacts.getOrBuild(s, "ivfpq", d) { path =>
+      Similarity.ivfPqBuild(s, t(s, d, "embeddings"), "vec_id", "embedding",
+        k = 8, cb = pqBooks(s, d), path = path,
+        centroids = Some(ivfIndex(s, d).centroids.drop("cnorm")))
+    }
 
   /** IVF-PQ search (q98 — IVFADC, the production composition): probe the
     * 2 best trained cells for query vec 0 by EXACT centroid cosine, then
@@ -866,29 +780,21 @@ object RelationalQueries {
     * appending its one-row typed partial
     * ([[graft.operators.Stats.columnStatsPartial]]) replay-guarded via
     * the sketch families' batch-tag protocol. */
-  private val statsMaintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String)]()
   private val StatsCols =
     Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
       "l_returnflag", "l_shipdate")
   private def statsMaintPath(s: SparkSession, d: String): String =
-    statsMaintCache.compute(d, (_, cur) => {
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val p = s"${sys.props("java.io.tmpdir")}/graft_statsmaint_" +
-          graft.engine.IndexCache.md5Key(d, 8)
-        graft.cli.Cleanup.deleteOnExit(p)
-        import graft.operators.{Sketch, Stats}
-        def half(par: Int) = Stats.columnStatsPartial(
-          t(s, d, "lineitem").where(pmod(col("l_orderkey"), lit(2)) === par),
-          StatsCols)
-        require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
-        require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
-        require(!Sketch.sketchAppendBatch(p, half(1), 1L),
-          "replayed batch id must no-op")
-        (s, p)
-      }
-    })._2
+    SessionArtifacts.getOrBuild(s, "statsmaint", d) { p =>
+      import graft.operators.{Sketch, Stats}
+      def half(par: Int) = Stats.columnStatsPartial(
+        t(s, d, "lineitem").where(pmod(col("l_orderkey"), lit(2)) === par),
+        StatsCols)
+      require(Sketch.sketchAppendBatch(p, half(0), 0L), "batch 0 must apply")
+      require(Sketch.sketchAppendBatch(p, half(1), 1L), "batch 1 must apply")
+      require(!Sketch.sketchAppendBatch(p, half(1), 1L),
+        "replayed batch id must no-op")
+      p
+    }
 
   /** q227 — column statistics from the MAINTAINED partials
     * ([[graft.operators.Stats.statsRead]] over the persisted two-batch
@@ -925,45 +831,35 @@ object RelationalQueries {
     *
     * The read must then equal q222's direct whole-corpus build bit for
     * bit — the oracle is untouched. */
-  private val histMaintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String, Long, Long)]()
-  private def histMaintState(s: SparkSession, d: String): (String, Long, Long) = {
-    val v = histMaintCache.compute(d, (_, cur) => {
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        val li = t(s, d, "lineitem").select(col("l_orderkey"))
-        val b = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
-          .collect().head
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val mid = lo + (hi - lo) / 2
-        val p = s"${sys.props("java.io.tmpdir")}/graft_histmaint_" +
-          graft.engine.IndexCache.md5Key(d, 8)
-        graft.cli.Cleanup.deleteOnExit(p)
-        import graft.operators.{Sketch, Stats}
-        val below = li.where(col("l_orderkey") <= mid)
-        val above = li.where(col("l_orderkey") > mid)
-        require(Sketch.sketchAppendBatch(p,
-          Stats.histogramPartial(below, "l_orderkey", 16, lo, mid), 0L),
-          "batch 0 must apply")
-        val threw = try {
-          Sketch.sketchAppendBatch(p,
-            Stats.histogramPartial(above, "l_orderkey", 16, lo, mid), 1L)
-          false
-        } catch { case _: Throwable => true }
-        require(threw, "out-of-span ingest must fail loud, not clamp")
-        Stats.histogramRefreeze(s, p, 16, lo, mid, lo, hi,
-          fact = Some((below, "l_orderkey")))
-        require(Sketch.sketchAppendBatch(p,
-          Stats.histogramPartial(above, "l_orderkey", 16, lo, hi), 1L),
-          "batch 1 must apply under the re-frozen bounds")
-        require(!Sketch.sketchAppendBatch(p,
-          Stats.histogramPartial(above, "l_orderkey", 16, lo, hi), 1L),
-          "replayed batch id must no-op")
-        (s, p, lo, hi)
-      }
-    })
-    (v._2, v._3, v._4)
-  }
+  private def histMaintState(s: SparkSession, d: String): (String, Long, Long) =
+    SessionArtifacts.getOrBuild(s, "histmaint", d) { p =>
+      val li = t(s, d, "lineitem").select(col("l_orderkey"))
+      val b = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
+        .collect().head
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      val mid = lo + (hi - lo) / 2
+      import graft.operators.{Sketch, Stats}
+      val below = li.where(col("l_orderkey") <= mid)
+      val above = li.where(col("l_orderkey") > mid)
+      require(Sketch.sketchAppendBatch(p,
+        Stats.histogramPartial(below, "l_orderkey", 16, lo, mid), 0L),
+        "batch 0 must apply")
+      val threw = try {
+        Sketch.sketchAppendBatch(p,
+          Stats.histogramPartial(above, "l_orderkey", 16, lo, mid), 1L)
+        false
+      } catch { case _: Throwable => true }
+      require(threw, "out-of-span ingest must fail loud, not clamp")
+      Stats.histogramRefreeze(s, p, 16, lo, mid, lo, hi,
+        fact = Some((below, "l_orderkey")))
+      require(Sketch.sketchAppendBatch(p,
+        Stats.histogramPartial(above, "l_orderkey", 16, lo, hi), 1L),
+        "batch 1 must apply under the re-frozen bounds")
+      require(!Sketch.sketchAppendBatch(p,
+        Stats.histogramPartial(above, "l_orderkey", 16, lo, hi), 1L),
+        "replayed batch id must no-op")
+      (p, lo, hi)
+    }
 
   /** Per-directory memo of the RTBF histogram (the negative-partial
     * deletion tier, [[graft.operators.Stats.histogramForget]]): the
@@ -975,36 +871,26 @@ object RelationalQueries {
     * physically purged ([[graft.operators.Stats.histogramPurge]]).
     * Bounds stay frozen across the deletion: RTBF never re-runs
     * ANALYZE (stale bounds only widen estimates). */
-  private val histRtbfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, String, Long, Long)]()
-  private def histRtbfState(s: SparkSession, d: String): (String, Long, Long) = {
-    val v = histRtbfCache.compute(d, (_, cur) => {
-      if (cur != null && (cur._1 eq s)) cur
-      else {
-        import graft.operators.{Sketch, Stats}
-        val li = t(s, d, "lineitem").select(col("l_orderkey"))
-        val b = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
-          .collect().head
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val p = s"${sys.props("java.io.tmpdir")}/graft_histrtbf_" +
-          graft.engine.IndexCache.md5Key(d, 8)
-        graft.cli.Cleanup.deleteOnExit(p)
-        require(Sketch.sketchAppendBatch(p,
-          Stats.histogramPartial(li, "l_orderkey", 16, lo, hi), 0L),
-          "batch 0 must apply")
-        val del = li.where(pmod(col("l_orderkey"), lit(53)) === 0)
-        require(Stats.histogramForget(del, "l_orderkey", 16, lo, hi, p, 1L),
-          "delete batch must apply")
-        require(!Stats.histogramForget(del, "l_orderkey", 16, lo, hi, p, 1L),
-          "replayed delete batch must no-op (it would delete twice)")
-        Stats.histogramRead(s, p, 16, lo, hi)
-          .write.mode("overwrite").parquet(s"$p/rtbf_probe")
-        Stats.histogramPurge(s, p)
-        (s, p, lo, hi)
-      }
-    })
-    (v._2, v._3, v._4)
-  }
+  private def histRtbfState(s: SparkSession, d: String): (String, Long, Long) =
+    SessionArtifacts.getOrBuild(s, "histrtbf", d) { p =>
+      import graft.operators.{Sketch, Stats}
+      val li = t(s, d, "lineitem").select(col("l_orderkey"))
+      val b = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
+        .collect().head
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      require(Sketch.sketchAppendBatch(p,
+        Stats.histogramPartial(li, "l_orderkey", 16, lo, hi), 0L),
+        "batch 0 must apply")
+      val del = li.where(pmod(col("l_orderkey"), lit(53)) === 0)
+      require(Stats.histogramForget(del, "l_orderkey", 16, lo, hi, p, 1L),
+        "delete batch must apply")
+      require(!Stats.histogramForget(del, "l_orderkey", 16, lo, hi, p, 1L),
+        "replayed delete batch must no-op (it would delete twice)")
+      Stats.histogramRead(s, p, 16, lo, hi)
+        .write.mode("overwrite").parquet(s"$p/rtbf_probe")
+      Stats.histogramPurge(s, p)
+      (p, lo, hi)
+    }
 
   /** q245 — RTBF through the MAINTAINED histogram
     * ([[graft.operators.Stats.histogramForget]]/[[graft.operators

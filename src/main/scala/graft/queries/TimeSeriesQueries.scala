@@ -45,28 +45,20 @@ object TimeSeriesQueries {
     "WITH series AS (SELECT row_number() OVER (ORDER BY event_id) AS t, " +
       "value AS y FROM events)"
 
-  /** Per-directory memo of the persisted series index (the grid queries and
-    * all three CP modes probe the same series; building the sparse table
-    * once per session instead of once per query is a ~7x cut in window
-    * passes). maxWin=64 (7 levels) covers every declared query. */
-  private val idxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SeriesOps.SeriesIndex]()
-
+  /** The persisted series index of `dir`, built once per session (the
+    * grid queries and all three CP modes probe the same series; building
+    * the sparse table once per session instead of once per query is a ~7x
+    * cut in window passes). maxWin=64 (7 levels) covers every declared
+    * query. */
   def cachedIndex(s: SparkSession, dir: String): SeriesOps.SeriesIndex =
-    idxCache.compute(dir, (_, cur) => {
-      // a cached index is only valid for the session that built it: a new
-      // session in the same JVM (Bench then Verify, test suites) must not
-      // probe a DataFrame bound to a stopped session — rebuild on mismatch.
-      if (cur != null && (cur.df.sparkSession eq s)) cur
-      else {
-        // single-pass kernel build fused with ordinal-key assignment (equal
-        // to the declarative build, see EngineSpec) — one sorted pass instead
-        // of row_number window + log2(maxWin) window stages
-        val idx = SeriesOps.indexFastFromOrdered(
-          events(s, dir), "event_id", "value", 64)
-        idx.copy(df = idx.df.persist())
-      }
-    })
+    graft.engine.SessionArtifacts.getOrBuild(s, "seriesidx", dir) { _ =>
+      // single-pass kernel build fused with ordinal-key assignment (equal
+      // to the declarative build, see EngineSpec) — one sorted pass instead
+      // of row_number window + log2(maxWin) window stages
+      val idx = SeriesOps.indexFastFromOrdered(
+        events(s, dir), "event_id", "value", 64)
+      idx.copy(df = idx.df.persist())
+    }
 
   /** The (t, y) series view of the cached persisted index — callers that
     * only need the raw series (no probes) read the in-memory index blocks

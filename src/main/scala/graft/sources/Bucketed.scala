@@ -18,30 +18,27 @@ import org.apache.spark.sql.functions._
   * probabilistic.
   *
   * Tables are registered in the session catalog with an explicit
-  * `path` (external), memoized per (session, dataset dir), and the
-  * scratch directory is cleaned up at JVM exit — a layout cache, not a
-  * data product. */
+  * `path` (external) under the session-artifact scratch root, built once
+  * per (session, dataset dir) and removed at JVM exit — a layout cache,
+  * not a data product. */
 object Bucketed {
 
   /** Ensure bucket-sorted `lineitem` and `orders` tables (bucketed on
     * their order keys) exist for dataset dir `d`; returns their
-    * catalog names. Idempotent per session: rebuilt only when the
-    * session catalog lacks them. */
+    * catalog names. Built once per session
+    * ([[graft.engine.SessionArtifacts]]). */
   def ensureOrderTables(s: SparkSession, d: String,
-      buckets: Int = 16): (String, String) = synchronized {
-    val h = graft.engine.IndexCache.md5Key(s"$d:$buckets", 8)
-    val li = s"li_bkt_$h"
-    val ord = s"ord_bkt_$h"
-    if (!s.catalog.tableExists(li) || !s.catalog.tableExists(ord)) {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$h"
-      graft.cli.Cleanup.deleteOnExit(base)
+      buckets: Int = 16): (String, String) =
+    graft.engine.SessionArtifacts.getOrBuild(s, "bucketed", s"$d:$buckets") { base =>
+      val h = graft.engine.IndexCache.md5Key(s"$d:$buckets", 8)
+      val li = s"li_bkt_$h"
+      val ord = s"ord_bkt_$h"
       writeBucketed(s, s.read.parquet(s"$d/lineitem.parquet"),
         li, s"$base/lineitem", buckets, "l_orderkey")
       writeBucketed(s, s.read.parquet(s"$d/orders.parquet"),
         ord, s"$base/orders", buckets, "o_orderkey")
+      (li, ord)
     }
-    (li, ord)
-  }
 
   /** Write `df` as a bucket-sorted external parquet table: bucketed AND
     * sorted by `key`, one file per bucket (see object doc). */

@@ -1,16 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for named queries into per-query text
   * files — the before/after plan evidence for optimization rounds
   * (`plans/r16/<query>_before.txt` / `..._after.txt`).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   *
-  * Uses the same session shape as [[graft.Bench]] (master/shuffle
-  * partitions from SPARK_GRAFT_CPUS, nanos-as-long events) so the dumped
-  * plans are the plans the bench actually runs. Frames are NOT executed:
+  * Uses the bench's session ([[graft.GraftSession]]) so the dumped plans
+  * are the plans the bench actually runs. Frames are NOT executed:
   * the formatted output is the static physical plan (AQE-final shapes are
   * PlanSpec/bench territory); checkpoint-truncated returns (q54-style
   * label frames) show the checkpoint scan, as `.explain` on the returned
@@ -22,14 +19,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Subtree-reuse accounting for any registered query's executed plan:
   * how many times the final physical plan re-derives a parquet scan vs
   * reusing an exchange — the "would this re-scan the corpus at 100 TB"
@@ -15,11 +13,7 @@ object PlanStats {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q57_dedup_capped_verified")
     val d = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     def stats(q: String, compact: Boolean): Unit = {
       val df = graft.SparkEntry.queries(q)(spark, d)
       try {

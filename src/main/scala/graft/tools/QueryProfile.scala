@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage attribution for one or more declared queries — the guide §1
   * "where is the time actually going" instrument, headless (the bench
@@ -9,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.QueryProfile <q1,q2,...> [passes]
   *
-  * Runs each query through the exact Bench session shape and action
+  * Runs each query through the Bench session ([[graft.GraftSession]]) and action
   * (count + checkpoint release), one untimed warmup, then `passes`
   * profiled runs; prints per-stage rows (tasks, wall, executor cpu sum,
   * shuffle read/write bytes, input bytes) sorted by wall, plus totals —
@@ -22,14 +21,7 @@ object QueryProfile {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val passes = args.lift(1).map(_.toInt).getOrElse(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build()
     // same session warmup as Bench
     try {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -245,6 +245,31 @@ class EngineSpec extends AnyFunSuite {
     assert(!hit4 && i4.levels > i1.levels)
   }
 
+  test("index cache: a superseded in-session index is unpersisted") {
+    import graft.engine.IndexCache
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
+    graft.cli.Cleanup.deleteOnExit(cacheDir)
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
+    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
+    val tableFile = tableDir.resolve("series.parquet")
+    series.write.mode("overwrite").parquet(tableFile.toString)
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX")
+    def get() = IndexCache.getOrBuild(
+      spark, cacheDir, tableFile.toString, "c", series, spec)
+    assert(!get()._2)
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    (1 to 4).foreach { i =>
+      java.nio.file.Files.setLastModifiedTime(tableFile,
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 60000L))
+      val (idx, hit) = get()
+      assert(!hit)
+      assert(spark.sparkContext.getPersistentRDDs.size == pinned, s"after bump $i")
+      assert(idxRows(idx).nonEmpty)
+    }
+  }
+
   test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
     val idx = SeriesOps.index(series, 16)
     import org.apache.spark.sql.functions._
@@ -409,23 +434,11 @@ class EngineSpec extends AnyFunSuite {
 object TestSpark {
   lazy val spark: SparkSession = {
     graft.tools.CodegenGuard.install()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", {
-        val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-        graft.cli.Cleanup.deleteOnExit(wh); wh
-      })
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // plan-shape pins assert the AT-SCALE shapes: disable the
-      // small-input scan fan-out (identity above its stats gate) so
-      // exchange counts/payload pins read the production plans
-      .config(graft.sources.Fanout.MaxBytesKey, "0")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = GraftSession.build(4)
+    // plan-shape pins assert the AT-SCALE shapes: disable the
+    // small-input scan fan-out (identity above its stats gate) so
+    // exchange counts/payload pins read the production plans
+    s.conf.set(graft.sources.Fanout.MaxBytesKey, "0")
     s
   }
 }

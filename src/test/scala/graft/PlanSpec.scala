@@ -16,8 +16,7 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   /** Every node of the FINAL physical plan — unwraps AQE's adaptive root
-    * and leaf query stages ([[graft.plans.PlanWalk]], shared with the
-    * ShuffleBytes evidence tool so both count the same nodes). */
+    * and leaf query stages ([[graft.plans.PlanWalk]]). */
   private def flattenPlan(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] =
     graft.plans.PlanWalk.flatten(p)
@@ -892,7 +891,7 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("SortMergeJoin"), p.take(2000))
       // the scan decodes codes; the float embedding column is read only
       // by the 3-row query side, never by the corpus scan
-      val corpusLines = p.split('\n').filter(_.contains("graft_ivfpq"))
+      val corpusLines = p.split('\n').filter(_.contains("/ivfpq_"))
       assert(corpusLines.nonEmpty, p.take(2000))
       corpusLines.foreach(l =>
         assert(!l.contains("embedding"),
@@ -1513,7 +1512,7 @@ class PlanSpec extends AnyFunSuite {
       .split("== Initial Plan ==").head
     // lineitem appears only for the range bounds + truth audit columns;
     // the BUCKET MAP comes from the <= 16-rows-per-batch parts files
-    assert(p.contains("graft_histmaint"), p.take(3000))
+    assert(p.contains("/histmaint_"), p.take(3000))
   }
 
   test("q205: KMV exchanges carry the 8-byte hash, never the word") {

@@ -92,7 +92,7 @@ class SkewSpec extends AnyFunSuite {
     // 1000 survivor rows). The explicit operator exists for the regime
     // the built-in abandons: its filter is silently clamped to
     // runtime.bloomFilter.maxNumBits (2^26), useless past ~10^7 dim
-    // keys (tools.BloomBench), while the sketch-API build sizes itself.
+    // keys (bench/bloom_bench_1e7.txt), while the sketch-API build sizes itself.
     val conf = spark.conf
     val prevB = conf.get("spark.sql.autoBroadcastJoinThreshold")
     val rfKey = "spark.sql.optimizer.runtime.bloomFilter.enabled"
