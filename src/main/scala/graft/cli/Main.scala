@@ -2,10 +2,10 @@ package graft.cli
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-import graft.engine.RefinementEngine
-import graft.model.ParseException
+import graft.engine.{IndexCache, RefinementEngine}
+import graft.model.{ParseException, QuerySpec}
 import graft.parser.QueryParser
 
 /** Named-phase timing sink — the reference's LibraryOfTime
@@ -55,6 +55,42 @@ object Main {
   private def buildSession(): SparkSession =
     graft.GraftSession.build(master = sys.env.get("SPARK_MASTER"))
 
+  /** A query the engine ran: the `(t, y)` series it ran over and the
+    * `(time_id, offset)` rows. */
+  private final case class Answer(series: DataFrame, rows: Array[Row])
+
+  /** The one query path of both CLI modes: column check, variability guard
+    * (reference: server.py:209-214), the cross-session index cache (the
+    * reference pickles its UDF map the same way, server.py:249-286 — a
+    * repeat of the same query loads the index instead of rebuilding it; the
+    * timing CSV carries an index_cache_hit / index_built marker row), then
+    * execute. Left = why the query was refused. */
+  private def answer(spark: SparkSession, table: DataFrame, tablePath: String, spec: QuerySpec,
+      tk: Timekeeper): Either[String, Answer] = {
+    if (!table.columns.contains(spec.column)) return Left(s"column '${spec.column}' not in table")
+    val series = table.selectExpr("time_id as t", s"`${spec.column}` as y")
+    val variance = tk.time("variability_guard") {
+      series.selectExpr("var_pop(y)").head().getDouble(0)
+    }
+    if (variance <= 5e-28) return Left("no variability in data")
+    val cacheDir = IndexCache.DefaultDir
+    val (idx, cacheHit) = tk.time("index_get_or_build") {
+      IndexCache.getOrBuild(spark, cacheDir, tablePath, spec.column, series, spec)
+    }
+    tk.time(if (cacheHit) "index_cache_hit" else "index_built")(())
+    println(if (cacheHit) "index: loaded from cache" else s"index: built, cached at $cacheDir")
+    val rows = tk.time("execute") {
+      RefinementEngine.execute(spark, series, spec, prebuilt = Some(idx)).collect()
+    }
+    Right(Answer(series, rows))
+  }
+
+  /** Result print, variables sorted by name desc (reference: server.py:888-898). */
+  private def printRows(rows: Array[Row]): Unit = {
+    println(s"${rows.length} result(s):")
+    rows.foreach(r => println(s"  time_id=${r.getLong(0)} offset=${r.getLong(1)}"))
+  }
+
   /** Interactive session — the reference's client loop (client.py:103-121):
     * numbered dataset pick from the directory's parquet tables, catalog
     * readout, then one query per line until quit/EOF. Parse and execution
@@ -86,8 +122,6 @@ object Main {
       table.createOrReplaceTempView(viewName)
       println(s"\n Connected to $viewName dataset.")
       print(graft.sources.Catalog.readout(spark))
-      // variability guard applied per query below (reference: server.py:209-214)
-      val columns = table.columns.toSet
       println("enter a query per line; 'quit' to exit")
       var done = false
       while (!done) {
@@ -96,18 +130,9 @@ object Main {
         if (line == null || line.trim == "quit" || line.trim == "exit") done = true
         else if (line.trim.nonEmpty) {
           try {
-            val spec = QueryParser.parse(line)
-            if (!columns.contains(spec.column))
-              println(s"column '${spec.column}' not in table")
-            else {
-              val series = table.selectExpr("time_id as t", s"`${spec.column}` as y")
-              if (series.selectExpr("var_pop(y)").head().getDouble(0) <= 5e-28)
-                println("no variability in data; query skipped")
-              else {
-                val rows = RefinementEngine.execute(spark, series, spec).collect()
-                println(s"${rows.length} result(s):")
-                rows.foreach(r => println(s"  time_id=${r.getLong(0)} offset=${r.getLong(1)}"))
-              }
+            answer(spark, table, files(pick).getPath, QueryParser.parse(line), new Timekeeper) match {
+              case Left(refusal) => println(s"$refusal; query skipped")
+              case Right(a) => printRows(a.rows)
             }
           } catch {
             case ParseException(m) => println(s"parse error: $m")
@@ -146,47 +171,21 @@ object Main {
       table.createOrReplaceTempView(viewName)
       println(s"table: $tablePath (view: $viewName)")
       print(tk.time("catalog")(graft.sources.Catalog.readout(spark)))
-      if (!table.columns.contains(spec.column)) {
-        System.err.println(s"column '${spec.column}' not in table"); throw Abort(1)
+      val ans = answer(spark, table, tablePath, spec, tk) match {
+        case Left(refusal) => System.err.println(s"$refusal; aborting"); throw Abort(1)
+        case Right(a) => a
       }
-
-      val series = table.selectExpr(s"time_id as t", s"`${spec.column}` as y")
-      // variability guard (reference: server.py:209-214)
-      val variance = tk.time("variability_guard") {
-        series.selectExpr("var_pop(y)").head().getDouble(0)
-      }
-      if (variance <= 5e-28) {
-        System.err.println("no variability in data; aborting"); throw Abort(1)
-      }
-
-      // cross-session index cache (the reference pickles its UDF map the
-      // same way, server.py:249-286): a second run of the same query loads
-      // the index parquet instead of rebuilding — the timing CSV carries an
-      // index_cache_hit / index_built marker row for which path ran
-      val cacheDir = graft.engine.IndexCache.DefaultDir
-      val (idx, cacheHit) = tk.time("index_get_or_build") {
-        graft.engine.IndexCache.getOrBuild(
-          spark, cacheDir, tablePath, spec.column, series, spec)
-      }
-      tk.time(if (cacheHit) "index_cache_hit" else "index_built")(())
-      println(if (cacheHit) "index: loaded from cache" else s"index: built, cached at $cacheDir")
-
-      val rows = tk.time("execute") {
-        RefinementEngine.execute(spark, series, spec, prebuilt = Some(idx)).collect()
-      }
-      // result print, variables sorted by name desc (reference: server.py:888-898)
-      println(s"${rows.length} result(s):")
-      rows.foreach(r => println(s"  time_id=${r.getLong(0)} offset=${r.getLong(1)}"))
+      printRows(ans.rows)
 
       // plot sink (reference: server.py:901-952), optional 4th arg; the
       // series is envelope-downsampled to a bounded point budget so the
       // driver never collects more than a few thousand rows
       if (args.length > 3) {
         val pts = tk.time("plot_downsample") {
-          PlotSink.downsample(series.selectExpr("t", "cast(y as double) as y"))
+          PlotSink.downsample(ans.series.selectExpr("t", "cast(y as double) as y"))
         }
         PlotSink.save(args(3), pts,
-          rows.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+          ans.rows.map(r => (r.getLong(0), r.getLong(1))).toSeq)
         println(s"plot written to ${args(3)}")
       }
 

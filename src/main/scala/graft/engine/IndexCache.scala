@@ -87,10 +87,8 @@ object IndexCache {
     val dir = new java.io.File(cacheDir, key)
     val dataPath = new java.io.File(dir, "data").toString
     val mt = maxMtime(table)
-    def needWin(tMin: Long, tMax: Long): Long = {
-      val b = RefinementEngine.bindDomains(spec, tMin, tMax)
-      RefinementEngine.maxWindow(spec, b) max (b.lxHi + 1)
-    }
+    def needWin(tMin: Long, tMax: Long): Long =
+      RefinementEngine.windowNeed(spec, RefinementEngine.bindDomains(spec, tMin, tMax).lxHi)
     def build(): (SeriesIndex, Boolean) = {
       val bounds = series.agg(min("t"), max("t")).head()
       val idx = SeriesOps.indexFast(series, needWin(bounds.getLong(0), bounds.getLong(1)))
@@ -105,14 +103,14 @@ object IndexCache {
     // would match the superseded cache entry
     Option(memo.get(key)) match {
       case Some((sess, cached, cachedMt)) if sess eq spark =>
-        if (cachedMt == mt && (1L << cached.levels) > needWin(cached.tMin, cached.tMax))
+        if (cachedMt == mt && SeriesOps.covers(cached.levels, needWin(cached.tMin, cached.tMax)))
           return (cached, true)
         memo.remove(key)
         cached.df.unpersist()
       case _ => ()
     }
     val result = readMeta(dir) match {
-      case Some(m) if m.srcMtime == mt && (1L << m.levels) > needWin(m.tMin, m.tMax) =>
+      case Some(m) if m.srcMtime == mt && SeriesOps.covers(m.levels, needWin(m.tMin, m.tMax)) =>
         // a reaped/torn data dir (tmp cleaners, concurrent writers) must
         // rebuild, not crash. Persist AND materialize inside the guard:
         // after count() the probes read block storage, so a file deleted

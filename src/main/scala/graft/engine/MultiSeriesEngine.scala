@@ -25,8 +25,9 @@ import graft.model._
   *
   * [[RefinementEngine]] stays the single-series fast path (its global top-k
   * compiles to TakeOrderedAndProject); this engine is the horizontal path.
-  * Formulas (VC/RD/RK/RP, clamps) are identical — see the cross-check in
-  * MultiSeriesSpec.
+  * Scoring (VC/RD/RK/RP), the rank order, the window probes and the index
+  * depth are [[RefinementEngine]]'s and [[SeriesOps]]' own, keyed by `sid`
+  * — see the cross-checks in MultiSeriesSpec.
   */
 object MultiSeriesEngine {
 
@@ -40,14 +41,14 @@ object MultiSeriesEngine {
     val tMinCol: Column = col("tMin")
     val tMaxCol: Column = col("tMax")
     protected def lookupAll(grid: DataFrame, pos: Column, prefix: String): DataFrame =
-      MultiSeriesEngine.lookupAt(grid, idx, pos, prefix, Seq("y", "s", "ms"))
+      MultiSeriesEngine.lookupAt(grid, idx, pos, prefix)
   }
 
   /** Index a multi-series frame `(sid, t, y)`; t dense ascending per sid.
     * `boundsOpt` lets a caller that already derived the per-series bounds
     * aggregate pass it in instead of re-deriving it. */
   def index(series: DataFrame, maxWin: Long, boundsOpt: Option[DataFrame] = None): MsIndex = {
-    val levels = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxWin)))
+    val levels = SeriesOps.levelsFor(maxWin)
     val w = Window.partitionBy("sid").orderBy("t")
     var df = series
       .select(col("sid"), col("t").cast("long").as("t"), col("y").cast("double").as("y"))
@@ -91,7 +92,7 @@ object MultiSeriesEngine {
     */
   def indexFast(series: DataFrame, maxWin: Long, boundsOpt: Option[DataFrame] = None,
       maxRunRows: Long = DefaultMaxRunRows): MsIndex = {
-    val levels = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxWin)))
+    val levels = SeriesOps.levelsFor(maxWin)
     val spark = series.sparkSession
     import spark.implicits._
     val sorted = series
@@ -161,48 +162,14 @@ object MultiSeriesEngine {
     }
   }
 
-  private def lookupAt(
-      grid: DataFrame, idx: MsIndex, pos: Column, prefix: String,
-      cols: Seq[String]): DataFrame = {
+  private def lookupAt(grid: DataFrame, idx: MsIndex, pos: Column, prefix: String): DataFrame = {
     val probe = idx.df.select(
-      (col("sid").as(s"${prefix}_sid") +: col("t").as(s"${prefix}_t") +:
-        cols.map(c => col(c).as(s"${prefix}_$c"))): _*)
+      (col("sid").as(s"${prefix}_sid") +: Seq("t", "y", "s", "ms").map(c =>
+        col(c).as(s"${prefix}_$c"))): _*)
     grid
       .join(probe,
         col("sid") === col(s"${prefix}_sid") && pos === col(s"${prefix}_t"), "left")
       .drop(s"${prefix}_sid", s"${prefix}_t")
-  }
-
-  /** Same probe formulas as [[SeriesOps.windowAgg]], keyed by (sid, t). */
-  def windowAgg(
-      grid: DataFrame, idx: MsIndex, a: Column, b: Column, tag: String,
-      needAvg: Boolean, needMax: Boolean): DataFrame = {
-    var g = grid.withColumn(s"${tag}_a", a.cast("long")).withColumn(s"${tag}_b", b.cast("long"))
-    val ac = col(s"${tag}_a")
-    val bc = col(s"${tag}_b")
-    if (needAvg) {
-      g = lookupAt(g, idx, ac, s"${tag}_la", Seq("s", "y"))
-      g = lookupAt(g, idx, bc, s"${tag}_lb", Seq("s"))
-      val len = (bc - ac + lit(1)).cast("double")
-      val sumc = col(s"${tag}_lb_s") - col(s"${tag}_la_s") + col(s"${tag}_la_y")
-      g = g.withColumn(s"${tag}_avg", sumc / len)
-        .drop(s"${tag}_la_s", s"${tag}_la_y", s"${tag}_lb_s")
-    }
-    if (needMax) {
-      val len = bc - ac + lit(1)
-      val j = SeriesOps.log2Floor(len)
-      val p2 = pow(lit(2.0), j.cast("double")).cast("long")
-      g = g.withColumn(s"${tag}_j", j).withColumn(s"${tag}_b2", bc - p2 + lit(1))
-      g = lookupAt(g, idx, ac, s"${tag}_ma", Seq("ms"))
-      g = lookupAt(g, idx, col(s"${tag}_b2"), s"${tag}_mb", Seq("ms"))
-      g = g.withColumn(
-          s"${tag}_max",
-          greatest(
-            element_at(col(s"${tag}_ma_ms"), col(s"${tag}_j") + lit(1)),
-            element_at(col(s"${tag}_mb_ms"), col(s"${tag}_j") + lit(1))))
-        .drop(s"${tag}_ma_ms", s"${tag}_mb_ms", s"${tag}_j", s"${tag}_b2")
-    }
-    g.drop(s"${tag}_a", s"${tag}_b")
   }
 
   /** Per-series candidate grid with per-series domain binding: None sides
@@ -235,9 +202,7 @@ object MultiSeriesEngine {
     val lxHi = spec.lxDomain.hi.getOrElse {
       stats.agg(max(col("tMax") - col("tMin") + lit(1))).head().getLong(0) - 1
     }
-    val maxWin = spec.constraints
-      .map(c => ConstraintRegistry(c.name).maxWindow(lxHi, c.args))
-      .foldLeft(lxHi + 1)(math.max)
+    val maxWin = RefinementEngine.windowNeed(spec, lxHi)
     // materialize the index ONCE (lineage truncated): every probe join
     // reads the checkpointed blocks instead of re-running the kernel build
     // inside its own broadcast; series too large for the per-partition
@@ -262,81 +227,21 @@ object MultiSeriesEngine {
     // drop the memoized probe intermediates before scoring/persisting
     g = g.select((Seq("sid", "x", "lx") ++ cs.map { case (_, i) => s"c$i" }).map(col): _*)
 
-    def satCol(c: Constraint, v: Column): Column =
-      c.lo.map(v >= lit(_)).getOrElse(lit(true)) &&
-        c.hi.map(v <= lit(_)).getOrElse(lit(true))
+    // per-series top-k: a bounded-state ranking window per sid
+    def topK(df: DataFrame, order: Seq[Column]): DataFrame =
+      spec.limit.fold(df) { k =>
+        df.withColumn("__rn", row_number().over(Window.partitionBy("sid").orderBy(order: _*)))
+          .where(col("__rn") <= k)
+      }.select(col("sid"), col("x").as("time_id"), col("lx").as("offset"))
+        .orderBy("sid", "time_id", "offset")
+    def ranked(grid: DataFrame): DataFrame =
+      topK(RefinementEngine.scored(grid, spec, Seq("sid")), RefinementEngine.rankOrder)
 
-    if (!spec.refined) {
-      val allSat = cs.map { case (c, i) => satCol(c, col(s"c$i")) }.reduce(_ && _)
-      val sat = g.where(allSat)
-      val ordered = spec.limit match {
-        case Some(k) =>
-          val w = Window.partitionBy("sid").orderBy(col("x"), col("lx"))
-          sat.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k).drop("__rn")
-        case None => sat
-      }
-      ordered.select(col("sid"), col("x").as("time_id"), col("lx").as("offset"))
-        .orderBy("sid", "time_id", "offset")
-    } else {
-      val k = spec.limit.getOrElse(Int.MaxValue)
-      // persist only when the output is bounded (k rows per series): the
-      // cached grid is released after the result materializes below. With no
-      // limit, stay lazy — the extrema aggregate recomputes the probes once.
-      val persisted = spec.limit.isDefined
-      if (persisted) g = g.persist()
-      // per-series extrema (the reference's 'mins'/'maxs', per sid)
-      val ext = g.groupBy("sid").agg(
-        cs.flatMap { case (_, i) =>
-          Seq(min(col(s"c$i")).as(s"min_c$i"), max(col(s"c$i")).as(s"max_c$i"))
-        }.head,
-        cs.flatMap { case (_, i) =>
-          Seq(min(col(s"c$i")).as(s"min_c$i"), max(col(s"c$i")).as(s"max_c$i"))
-        }.tail: _*)
-      var s = g.join(broadcast(ext), "sid")
-      cs.foreach { case (c, i) => s = s.withColumn(s"sat$i", satCol(c, col(s"c$i"))) }
-      val nSat = cs.map { case (_, i) => col(s"sat$i").cast("int") }.reduce(_ + _)
-      s = s.withColumn("sat", cs.map { case (_, i) => col(s"sat$i") }.reduce(_ && _))
-        .withColumn("vc", (lit(cs.size) - nSat).cast("double") / lit(cs.size))
-      val rds = cs.map { case (c, i) =>
-        val t = col(s"c$i")
-        val above = c.hi.map(bb => when(t > lit(bb), (t - lit(bb)) / (col(s"max_c$i") - lit(bb))))
-        val below = c.lo.map(aa => when(t < lit(aa), (lit(aa) - t) / (lit(aa) - col(s"min_c$i"))))
-        (above, below) match {
-          case (Some(ab), Some(be)) => ab.otherwise(be.otherwise(lit(0.0)))
-          case (Some(ab), None)     => ab.otherwise(lit(0.0))
-          case (None, Some(be))     => be.otherwise(lit(0.0))
-          case (None, None)         => lit(0.0)
-        }
-      }
-      val maxRd = if (rds.size == 1) rds.head else greatest(rds: _*)
-      s = s.withColumn("rp", lit(0.5) * maxRd + lit(0.5) * col("vc"))
-      val w = 1.0 / cs.size
-      val rkSum = cs.map { case (c, i) =>
-        val t = col(s"c$i")
-        val a = c.lo.map(lit(_)).getOrElse(col(s"min_c$i"))
-        val b = c.hi.map(lit(_)).getOrElse(col(s"max_c$i"))
-        val num = c.target match {
-          case Target.Max => b - t
-          case Target.Min => a - t
-        }
-        lit(w) * when(b - a =!= lit(0.0), num / (b - a)).otherwise(lit(0.0))
-      }.reduce(_ + _)
-      s = s.withColumn("rk", lit(1.0) - rkSum)
-      val rankW = Window.partitionBy("sid").orderBy(
-        col("sat").desc,
-        when(col("sat"), -col("rk")).otherwise(col("rp")).asc,
-        col("x").asc, col("lx").asc)
-      val res = s.withColumn("__rn", row_number().over(rankW))
-        .where(col("__rn") <= k)
-        .select(col("sid"), col("x").as("time_id"), col("lx").as("offset"))
-        .orderBy("sid", "time_id", "offset")
-      if (persisted) {
-        // materialize the bounded result, truncate its lineage off the cached
-        // grid, then release the cache (no block accumulation across queries)
-        val out = res.localCheckpoint(true)
-        g.unpersist()
-        out
-      } else res
-    }
+    if (!spec.refined) topK(g.where(RefinementEngine.allSatisfied(spec)), Seq(col("x"), col("lx")))
+    // the stats and index checkpoints are reachable only through the grid,
+    // so the bounded result releases them too; the other paths return them
+    // in their lineage for the caller's Checkpoints.release
+    else if (spec.limit.isDefined) RefinementEngine.bounded(g, stats, ckpt)(ranked)
+    else ranked(g)
   }
 }

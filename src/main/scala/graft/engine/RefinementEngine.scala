@@ -30,6 +30,10 @@ import graft.engine.SeriesOps.SeriesIndex
   *     Spark executes this as a single TakeOrderedAndProject — top-k with no
   *     full sort, no driver branching, no count() action.
   *
+  * The scoring, the rank order, the window-need rule and the bounded-result
+  * step defined here are the only copies: [[MultiSeriesEngine]] calls them
+  * keyed by `sid`.
+  *
   * Determinism note (SURVEY §7.3): the reference's result order/subset is
   * nondeterministic (random branching, bst_class.py:147); we fix the
   * canonical tie-break (x asc, lx asc) — a strict refinement of its contract.
@@ -88,10 +92,12 @@ object RefinementEngine {
     g.select((Seq("x", "lx") ++ spec.constraints.indices.map(i => s"c$i")).map(col): _*)
   }
 
-  /** Size the sparse table for the largest window any constraint will probe. */
-  def maxWindow(spec: QuerySpec, b: Bound): Long =
-    spec.constraints.map(c => ConstraintRegistry(c.name).maxWindow(b.lxHi, c.args))
-      .foldLeft(1L)(math.max)
+  /** The window length (rows) the sparse table must answer for `spec`
+    * when the offset domain reaches `lxHi`: the widest constraint probe,
+    * and at least the `lx + 1` rows of the longest candidate window. */
+  def windowNeed(spec: QuerySpec, lxHi: Long): Long =
+    spec.constraints.map(c => ConstraintRegistry(c.name).maxWindow(lxHi, c.args))
+      .foldLeft(lxHi + 1)(math.max)
 
   /** satisfied_i: unbounded sides auto-satisfy (reference substitutes t_
     * itself, server.py:531-532). */
@@ -101,22 +107,36 @@ object RefinementEngine {
     loOk && hiOk
   }
 
+  /** Every constraint satisfied, over the grid's value columns c0, c1, ...
+    * (the UNREFINED filter, reference: server.py:456-460). */
+  def allSatisfied(spec: QuerySpec): Column =
+    spec.constraints.zipWithIndex.map { case (c, i) => satCol(c, col(s"c$i")) }.reduce(_ && _)
+
+  /** The refinement order over a [[scored]] grid: satisfied first, then
+    * RK descending among the satisfied (tightening) and RP ascending among
+    * the rest (relaxation), ties broken by (x, lx). */
+  val rankOrder: Seq[Column] = Seq(
+    col("sat").desc,
+    when(col("sat"), -col("rk")).otherwise(col("rp")).asc,
+    col("x").asc, col("lx").asc)
+
   /** Scored grid: per-constraint sat_i plus sat, vc, rk, rp columns.
     *
-    * Grid-global constraint extrema (the reference's 'mins'/'maxs' entries,
-    * server.py:313-317, 345-349) are a 1-row aggregate broadcast-cross-joined
-    * into the scoring expressions — no driver action, one extra stage.
+    * Constraint extrema (the reference's 'mins'/'maxs' entries,
+    * server.py:313-317, 345-349) are taken per `keys` group and broadcast
+    * back into the scoring expressions: with no keys (one series) a 1-row
+    * aggregate cross-joined in — no driver action, one extra stage; with
+    * `sid` (many series) a per-series aggregate joined on `sid`.
     */
-  def scored(grid: DataFrame, spec: QuerySpec): DataFrame = {
+  def scored(grid: DataFrame, spec: QuerySpec, keys: Seq[String] = Nil): DataFrame = {
     val cs = spec.constraints.zipWithIndex
-    val extrema = grid.agg(
-      cs.flatMap { case (_, i) =>
-        Seq(min(col(s"c$i")).as(s"min_c$i"), max(col(s"c$i")).as(s"max_c$i"))
-      }.head,
-      cs.flatMap { case (_, i) =>
-        Seq(min(col(s"c$i")).as(s"min_c$i"), max(col(s"c$i")).as(s"max_c$i"))
-      }.tail: _*)
-    var g = grid.crossJoin(broadcast(extrema))
+    val aggs = cs.flatMap { case (_, i) =>
+      Seq(min(col(s"c$i")).as(s"min_c$i"), max(col(s"c$i")).as(s"max_c$i"))
+    }
+    var g =
+      if (keys.isEmpty) grid.crossJoin(broadcast(grid.agg(aggs.head, aggs.tail: _*)))
+      else grid.join(
+        broadcast(grid.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)), keys)
 
     cs.foreach { case (c, i) => g = g.withColumn(s"sat$i", satCol(c, col(s"c$i"))) }
     val nSat = cs.map { case (_, i) => col(s"sat$i").cast("int") }.reduce(_ + _)
@@ -169,6 +189,21 @@ object RefinementEngine {
     g.drop(cs.flatMap { case (_, i) => Seq(s"min_c$i", s"max_c$i") }: _*)
   }
 
+  /** A result of at most k rows (per series) over a constraint grid: the
+    * grid lineage feeds both the extrema aggregate and the final rank, so
+    * persist it and the probe joins run once; localCheckpoint the result,
+    * which truncates its lineage, then release the grid and the `inputs`
+    * checkpoints only the grid's lineage reached — a long-lived session
+    * accumulates neither grids nor their inputs. */
+  private[engine] def bounded(grid: DataFrame, inputs: DataFrame*)(
+      result: DataFrame => DataFrame): DataFrame = {
+    val g = grid.persist()
+    val out = result(g).localCheckpoint(true)
+    g.unpersist()
+    inputs.foreach(Checkpoints.release)
+    out
+  }
+
   /** Execute a full query against a series `(t, y)`. Returns
     * `(time_id, offset)` rows in canonical order.
     *
@@ -188,51 +223,33 @@ object RefinementEngine {
         (bounds.getLong(0), bounds.getLong(1))
     }
     val b = bindDomains(spec, tMin, tMax)
-    val needWin = maxWindow(spec, b) max (b.lxHi + 1)
-    // a table with L levels answers windows up to 2^L - 1 rows
+    val needWin = windowNeed(spec, b.lxHi)
     val idx = prebuilt
-      .filter(i => (1L << i.levels) > needWin)
+      .filter(i => SeriesOps.covers(i.levels, needWin))
       .getOrElse(SeriesOps.index(series, needWin))
     val grid = constraintGrid(spark, idx, spec, b)
     if (!spec.refined) {
       // UNREFINED: candidates satisfying every constraint
       // (reference: server.py:456-460)
-      val cs = spec.constraints.zipWithIndex
-      val allSat = cs.map { case (c, i) => satCol(c, col(s"c$i")) }.reduce(_ && _)
-      val sat = grid.where(allSat).orderBy("x", "lx")
+      val sat = grid.where(allSatisfied(spec)).orderBy("x", "lx")
       spec.limit.map(sat.limit).getOrElse(sat)
         .select(col("x").as("time_id"), col("lx").as("offset"))
-    } else {
-      spec.limit match {
-        case Some(k) =>
-          // the grid lineage feeds both the extrema aggregate and the final
-          // rank — persist it so the probe joins run once, then release it
-          // once the (<= k row) result has materialized: localCheckpoint
-          // truncates the lineage so the returned frame no longer depends on
-          // the cached blocks (long-lived sessions don't accumulate grids).
-          val g = grid.persist()
-          val res = refinedTopK(g, spec, Some(k)).localCheckpoint(true)
-          g.unpersist()
-          res
-        case None =>
-          // unbounded refined output: stay fully lazy (no persist to leak);
-          // the extrema aggregate recomputes the probes once more.
-          refinedTopK(grid, spec, None)
-      }
+    } else spec.limit match {
+      case Some(k) => bounded(grid)(refinedTopK(_, spec, Some(k)))
+      // unbounded refined output: stay fully lazy (no persist to leak);
+      // the extrema aggregate recomputes the probes once more.
+      case None => refinedTopK(grid, spec, None)
     }
   }
 
-  /** The refined query as a LAZY plan over a constraint grid: score, rank by
-    * `(sat desc, if(sat, -RK, RP) asc, x, lx)`, take k. With a limit Spark
-    * compiles this to TakeOrderedAndProject — a streaming top-k, no full
-    * sort (asserted in PlanSpec). [[execute]] wraps this with grid
-    * persist/release; call directly for plan inspection or when managing
+  /** The refined query as a LAZY plan over a constraint grid: [[scored]],
+    * ranked by [[rankOrder]], take k. With a limit Spark compiles this to
+    * TakeOrderedAndProject — a streaming top-k, no full sort (asserted in
+    * PlanSpec). [[execute]] wraps this with grid persist/release
+    * ([[bounded]]); call directly for plan inspection or when managing
     * caching yourself. */
   def refinedTopK(grid: DataFrame, spec: QuerySpec, k: Option[Int]): DataFrame = {
-    val ranked = scored(grid, spec)
-      .orderBy(col("sat").desc,
-        when(col("sat"), -col("rk")).otherwise(col("rp")).asc,
-        col("x").asc, col("lx").asc)
+    val ranked = scored(grid, spec).orderBy(rankOrder: _*)
     k.map(ranked.limit).getOrElse(ranked)
       .select(col("x").as("time_id"), col("lx").as("offset"))
   }

@@ -56,11 +56,20 @@ object SeriesOps {
     spark.createDataFrame(rows, out)
   }
 
+  /** Sparse-table depth for windows up to `maxWin` rows:
+    * floor(log2(maxWin)) + 1 levels, at least one. Every index build, on
+    * both engine paths, sizes its table here. */
+  private[engine] def levelsFor(maxWin: Long): Int =
+    math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxWin)))
+
+  /** A table with `levels` levels answers windows up to 2^levels - 1 rows. */
+  private[engine] def covers(levels: Int, win: Long): Boolean = (1L << levels) > win
+
   /** Build the index. `maxWin` = largest window length (in rows) any probe
     * will ask for; levels = floor(log2(maxWin)) + 1.
     */
   def index(series: DataFrame, maxWin: Long): SeriesIndex = {
-    val levels = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxWin)))
+    val levels = levelsFor(maxWin)
     val w = Window.orderBy("t")
     var df = series
       .select(col("t").cast("long").as("t"), col("y").cast("double").as("y"))
@@ -95,9 +104,6 @@ object SeriesOps {
       extends org.apache.spark.Partitioner {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
-
-  private def levelsFor(maxWin: Long): Int =
-    math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxWin)))
 
   /** Kernel halo budget: the halo exchange duplicates up to
     * `2^(levels-1)-1` rows per partition through a shuffle and each task
@@ -295,7 +301,7 @@ object SeriesOps {
   }
 
   /** Join `grid` to the index at position `pos` (an expression over grid
-    * columns), adding the requested index columns renamed with `prefix`.
+    * columns), adding `{prefix}_y`, `{prefix}_s` and `{prefix}_ms`.
     * Left join: positions outside [tMin,tMax] yield nulls (callers clamp).
     *
     * NOTE on broadcast reuse: forcing all probes onto ONE shared exchange
@@ -309,17 +315,10 @@ object SeriesOps {
     * PLANS.md. Each remaining broadcast ships only the columns its sharers
     * read.
     */
-  def lookupAt(
-      grid: DataFrame,
-      idx: SeriesIndex,
-      pos: Column,
-      prefix: String,
-      cols: Seq[String]): DataFrame = {
-    val all = Seq("t", "y", "s", "ms")
-    val probe = idx.df.select(all.map(c => col(c).as(s"${prefix}_$c")): _*)
-    grid
-      .join(probe, pos === col(s"${prefix}_t"), "left")
-      .drop((s"${prefix}_t" +: all.filterNot(cols.contains).map(c => s"${prefix}_$c")): _*)
+  private def lookupAt(
+      grid: DataFrame, idx: SeriesIndex, pos: Column, prefix: String): DataFrame = {
+    val probe = idx.df.select(Seq("t", "y", "s", "ms").map(c => col(c).as(s"${prefix}_$c")): _*)
+    grid.join(probe, pos === col(s"${prefix}_t"), "left").drop(s"${prefix}_t")
   }
 
   /** floor(log2(len)) as an int column; len >= 1, exact for len <= 2^53.
@@ -347,50 +346,6 @@ object SeriesOps {
     val tMinCol: Column = lit(idx.tMin)
     val tMaxCol: Column = lit(idx.tMax)
     protected def lookupAll(grid: DataFrame, pos: Column, prefix: String): DataFrame =
-      SeriesOps.lookupAt(grid, idx, pos, prefix, Seq("y", "s", "ms"))
-  }
-
-  /** Append `{tag}_sum`, `{tag}_cnt`, `{tag}_avg` and/or `{tag}_max` for the
-    * inclusive window [a, b] (caller guarantees tMin <= a <= b <= tMax).
-    * Costs at most 3 equi-joins; shared positions could be merged by callers
-    * that batch several windows.
-    */
-  def windowAgg(
-      grid: DataFrame,
-      idx: SeriesIndex,
-      a: Column,
-      b: Column,
-      tag: String,
-      needAvg: Boolean,
-      needMax: Boolean): DataFrame = {
-    var g = grid.withColumn(s"${tag}_a", a.cast("long")).withColumn(s"${tag}_b", b.cast("long"))
-    val ac = col(s"${tag}_a")
-    val bc = col(s"${tag}_b")
-    if (needAvg) {
-      g = lookupAt(g, idx, ac, s"${tag}_la", Seq("s", "y"))
-      g = lookupAt(g, idx, bc, s"${tag}_lb", Seq("s"))
-      val len = (bc - ac + lit(1)).cast("double")
-      val sumc = col(s"${tag}_lb_s") - col(s"${tag}_la_s") + col(s"${tag}_la_y")
-      g = g.withColumn(s"${tag}_sum", sumc)
-        .withColumn(s"${tag}_cnt", len)
-        .withColumn(s"${tag}_avg", sumc / len)
-        .drop(s"${tag}_la_s", s"${tag}_la_y", s"${tag}_lb_s")
-    }
-    if (needMax) {
-      val len = bc - ac + lit(1)
-      val j = log2Floor(len)
-      // shiftleft's numBits arg is a literal Int, so compute 2^j via pow
-      val p2 = pow(lit(2.0), j.cast("double")).cast("long")
-      g = g.withColumn(s"${tag}_j", j).withColumn(s"${tag}_b2", bc - p2 + lit(1))
-      g = lookupAt(g, idx, ac, s"${tag}_ma", Seq("ms"))
-      g = lookupAt(g, idx, col(s"${tag}_b2"), s"${tag}_mb", Seq("ms"))
-      g = g.withColumn(
-          s"${tag}_max",
-          greatest(
-            element_at(col(s"${tag}_ma_ms"), col(s"${tag}_j") + lit(1)),
-            element_at(col(s"${tag}_mb_ms"), col(s"${tag}_j") + lit(1))))
-        .drop(s"${tag}_ma_ms", s"${tag}_mb_ms", s"${tag}_j", s"${tag}_b2")
-    }
-    g.drop(s"${tag}_a", s"${tag}_b")
+      SeriesOps.lookupAt(grid, idx, pos, prefix)
   }
 }

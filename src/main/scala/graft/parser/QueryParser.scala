@@ -28,7 +28,8 @@ object QueryParser {
   private val intervalRe = s"""\\[\\s*($boundRe)\\s*,\\s*($boundRe)\\s*\\]"""
 
   private def longSide(s: String): Option[Long] =
-    if (s == "None") None else Some(s.toLong)
+    if (s == "None") None
+    else Some(s.toLongOption.getOrElse(fail(s"domain bound '$s' is out of range")))
   private def doubleSide(s: String): Option[Double] =
     if (s == "None") None else Some(s.toDouble)
 
@@ -57,7 +58,8 @@ object QueryParser {
           xDomain = Domain(longSide(xLo), longSide(xHi)),
           lxDomain = Domain(longSide(lxLo), longSide(lxHi)),
           constraints = constraints,
-          limit = Option(limit).map(_.toInt),
+          limit = Option(limit).map(l =>
+            l.toIntOption.getOrElse(fail(s"LIMIT '$l' is out of range"))),
           refined = refined != null)
       case _ =>
         fail(

@@ -82,7 +82,7 @@ object TimeSeriesQueries {
     * server.py:960-964). */
   def windowAvg(s: SparkSession, dir: String): DataFrame = {
     val (grid, idx) = indexedGrid(s, dir, 1, 1000, 10, 20, 21)
-    SeriesOps.windowAgg(grid, idx, col("x"), col("x") + col("lx"), "w",
+    SeriesOps.probe(idx).windowAgg(grid, col("x"), col("x") + col("lx"), "w",
         needAvg = true, needMax = false)
       .select(col("x"), col("lx"), round(col("w_avg"), 6).as("win_avg"))
       .orderBy("x", "lx")
@@ -109,7 +109,7 @@ object TimeSeriesQueries {
     * entries, server.py:313-317,345-349). */
   def gridExtrema(s: SparkSession, dir: String): DataFrame = {
     val (grid, idx) = indexedGrid(s, dir, 1, 2000, 5, 30, 31)
-    val g = SeriesOps.windowAgg(grid, idx, col("x"), col("x") + col("lx"), "w",
+    val g = SeriesOps.probe(idx).windowAgg(grid, col("x"), col("x") + col("lx"), "w",
       needAvg = true, needMax = false)
     g.agg(
       round(min("w_avg"), 6).as("min_c0"),

@@ -169,6 +169,11 @@ class EngineSpec extends AnyFunSuite {
       "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] FOO",
       "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp(3) in [1,2] MAX",
       "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE max_amp_excess_left() in [1,2] MAX",
+      // numeric overflow is a parse error, not a NumberFormatException
+      "SELECT time_id, offset IN_DOMAIN [1, 99999999999999999999],[1,2] FROM t.c " +
+        "WHERE avg_amp() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX " +
+        "LIMIT 3000000000",
       "")
     bad.foreach(q => assertThrows[ParseException](QueryParser.parse(q)))
   }
@@ -276,7 +281,8 @@ class EngineSpec extends AnyFunSuite {
     val pairs = for (a <- 1 to n; len <- 1 to 16; if a + len - 1 <= n)
       yield (a.toLong, (a + len - 1).toLong)
     val pairsDf = pairs.toDF("a", "b")
-    val got = SeriesOps.windowAgg(pairsDf, idx, col("a"), col("b"), "w",
+    // the probe surface every constraint and query reads windows through
+    val got = SeriesOps.probe(idx).windowAgg(pairsDf, col("a"), col("b"), "w",
         needAvg = true, needMax = true)
       .select("a", "b", "w_avg", "w_max").collect()
     got.foreach { r =>

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{MultiSeriesEngine, RefinementEngine}
@@ -45,6 +46,92 @@ class MultiSeriesSpec extends AnyFunSuite {
           .collect().map(r => (sid, r.getLong(0), r.getLong(1)))
       }.toSet
       assert(got == expect, q)
+    }
+  }
+
+  test("randomized specs: multi-series equals per-series single-series (seeded, 12 cases)") {
+    // uneven series lengths so None domain sides bind differently per sid
+    val lens = Map(0L -> n, 1L -> n, 2L -> 45)
+    val uneven = multi.where($"t" <= (when($"sid" === 2L, lit(45L)).otherwise(lit(n.toLong))))
+    lazy val singles = lens.map { case (sid, len) =>
+      sid -> (1 to len).map(i => (i.toLong, ys(sid)(i - 1))).toDF("t", "y")
+    }
+    val rnd = new scala.util.Random(11)
+    def side(v: => Long): String = if (rnd.nextInt(4) == 0) "None" else v.toString
+    val fns = Seq("avg_amp()", "max_amp_excess_right(%d)", "max_amp_excess_left(%d)")
+    val shapes = for (i <- 0 until 12) yield {
+      // cycle the modes: refined tightening (wide intervals, most cells
+      // satisfy), refined relaxation (narrow intervals), unrefined with
+      // and without LIMIT
+      val mode = i % 4
+      val xLo = 1 + rnd.nextInt(20)
+      val dom = s"[${side(xLo)}, ${side(xLo + 5 + rnd.nextInt(40))}], " +
+        s"[${side(1 + rnd.nextInt(3))}, ${side(3 + rnd.nextInt(5))}]"
+      val nCon = 1 + rnd.nextInt(3)
+      val cons = (0 until nCon).map { _ =>
+        val f = fns(rnd.nextInt(fns.size)).format(1 + rnd.nextInt(8))
+        val tgt = if (rnd.nextBoolean()) "MAX" else "MIN"
+        if (mode == 1) {
+          // a narrow interval near the top of the value range: few cells
+          val lo = (if (f.startsWith("avg")) 8 else 6) + rnd.nextInt(2)
+          s"$f in [$lo, ${lo + 1}] $tgt"
+        } else {
+          val lo = if (f.startsWith("avg")) rnd.nextInt(6) else -rnd.nextInt(6)
+          s"$f in [${side(lo)}, ${side(lo + 4 + rnd.nextInt(6))}] $tgt"
+        }
+      }
+      val k = 1 + rnd.nextInt(10)
+      val limit = mode match {
+        case 0 | 1 => s" LIMIT REFINED $k"
+        case 2 => s" LIMIT $k"
+        case _ => ""
+      }
+      s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE ${cons.mkString(" and ")}$limit"
+    }
+    // the generator reaches every shape the two engines bind differently
+    val specs = shapes.map(QueryParser.parse)
+    assert(specs.exists(s => s.refined) && specs.exists(s => !s.refined && s.limit.isEmpty))
+    assert(specs.exists(s => !s.refined && s.limit.isDefined))
+    assert(specs.exists(_.constraints.size == 1) && specs.exists(_.constraints.size == 3))
+    val targets = specs.flatMap(_.constraints.map(_.target)).toSet
+    assert(targets.size == 2)
+    assert(specs.exists(s => Seq(s.xDomain.lo, s.xDomain.hi, s.lxDomain.lo, s.lxDomain.hi)
+      .contains(None)))
+    var relaxed, tightened = 0
+    for ((q, spec) <- shapes.zip(specs)) {
+      val got = MultiSeriesEngine.execute(spark, uneven, spec)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val expect = lens.keys.toSeq.flatMap { sid =>
+        RefinementEngine.execute(spark, singles(sid), spec)
+          .collect().map(r => (sid, r.getLong(0), r.getLong(1)))
+      }.toSet
+      assert(got == expect, q)
+      if (spec.refined) {
+        // which refinement mode ran: fewer satisfying cells than k in some
+        // series means relaxation there, at least k means tightening
+        val satisfying = MultiSeriesEngine.execute(spark, uneven,
+            spec.copy(refined = false, limit = None))
+          .groupBy("sid").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        lens.keys.foreach { sid =>
+          if (satisfying.getOrElse(sid, 0L) < spec.limit.get) relaxed += 1 else tightened += 1
+        }
+      }
+    }
+    assert(relaxed > 0 && tightened > 0, s"relaxed=$relaxed tightened=$tightened")
+  }
+
+  test("refined LIMIT queries release their stats and index checkpoints") {
+    val spec = QueryParser.parse(queries(1))
+    def runOnce(): Unit = {
+      val df = MultiSeriesEngine.execute(spark, multi, spec)
+      assert(df.collect().nonEmpty)
+      graft.engine.Checkpoints.release(df)
+    }
+    runOnce()
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { i =>
+      runOnce()
+      assert(spark.sparkContext.getPersistentRDDs.size == pinned, s"after query $i")
     }
   }
 

@@ -60,7 +60,7 @@ class PlanSpec extends AnyFunSuite {
     // inspect the lazy pipeline execute() runs internally — execute() itself
     // returns a localCheckpoint'ed frame (lineage truncated, cache released)
     val b = RefinementEngine.bindDomains(spec, 1, 100)
-    val idx = SeriesOps.index(series, RefinementEngine.maxWindow(spec, b) max (b.lxHi + 1))
+    val idx = SeriesOps.index(series, RefinementEngine.windowNeed(spec, b.lxHi))
     val grid = RefinementEngine.constraintGrid(spark, idx, spec, b)
     val df = RefinementEngine.refinedTopK(grid, spec, Some(5))
     assert(df.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))

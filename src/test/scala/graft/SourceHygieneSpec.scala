@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions are built only by [[GraftSession]], scratch paths come only
   * from [[graft.engine.SessionArtifacts]] (plus the cross-session
   * [[graft.engine.IndexCache]] and [[graft.cli.Cleanup]], which sweeps
-  * both), and no query file keeps its own memo map. */
+  * both), and no query file keeps its own memo map. The CP refinement core
+  * keeps one copy: one file defines the score columns, and only the
+  * declarative reference index build orders a window over the whole
+  * series. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -44,5 +47,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(queryFiles.collect {
       case (p, text) if text.contains("ConcurrentHashMap") => p.toString
     } == Nil)
+  }
+
+  test("the rk/rp score columns are defined in exactly one file") {
+    // a row_number rank that happens to be called rk is not a score column
+    val defining = sources.collect {
+      case (p, text) if """withColumn\("r[kp]",(?!\s*row_number)""".r.findFirstIn(text).isDefined =>
+        p.getFileName.toString
+    }
+    assert(defining == Seq("RefinementEngine.scala"))
+  }
+
+  test("an un-partitioned Window.orderBy appears only in SeriesOps") {
+    assert(offenders("""Window\s*\.\s*orderBy""", Set("SeriesOps.scala")) == Nil)
   }
 }
