@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{RefinementEngine, SeriesOps}
+import graft.engine.{Checkpoints, RefinementEngine, SeriesOps}
 import graft.model.{Constraint, Domain, QuerySpec, Target}
 import graft.queries.TimeSeriesQueries
 
@@ -12,7 +12,12 @@ import graft.queries.TimeSeriesQueries
   * server.py:37).
   *
   * Usage: runMain graft.Sweep [sfDir] [outCsv] [maxIters]
-  * Emits csv: iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s
+  * Emits csv: iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s,execute_s
+  *
+  * `grid_s` + `refine_s` time the distributed plan's phases; `execute_s` is
+  * the production `RefinementEngine.execute(prebuilt)` wall (collected),
+  * which runs a grid of at most `LocalSolve.CellCap` cell-constraints as
+  * one local task — the two sides of the local executor's gate.
   */
 object Sweep {
   def main(args: Array[String]): Unit = {
@@ -30,7 +35,8 @@ object Sweep {
     // the reference's sweep query shape: 3 constraints, LIMIT REFINED 50
     // (scalability_experiment_scipt.py:13-19), domains grown alternately
     var xHi = 10L; var lxHi = 10L; var growX = true
-    val rows = new StringBuilder("iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s\n")
+    val rows = new StringBuilder(
+      "iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s,execute_s\n")
     var iter = 0
     while (iter < maxIters && xHi <= bounds._2) {
       val spec = QuerySpec("events", "value",
@@ -54,10 +60,16 @@ object Sweep {
       }
       val (nOut, tRefine) = t(RefinementEngine.refinedTopK(grid, spec, Some(50)).count())
       val tTotal = (System.nanoTime() - total0) / 1e9
-      grid.unpersist(); idx.df.unpersist()
-      rows.append(f"$iter,$cells,$tFix%.4f,$tIdx%.4f,$tGrid%.4f,$tRefine%.4f,$tTotal%.4f\n")
+      grid.unpersist()
+      val (_, tExec) = t {
+        val df = RefinementEngine.execute(spark, series, spec, Some(idx))
+        try df.collect() finally Checkpoints.release(df)
+      }
+      idx.df.unpersist()
+      rows.append(
+        f"$iter,$cells,$tFix%.4f,$tIdx%.4f,$tGrid%.4f,$tRefine%.4f,$tTotal%.4f,$tExec%.4f\n")
       println(f"[sweep] iter=$iter cells=$cells k_out=$nOut total=$tTotal%.2fs " +
-        f"(fix=$tFix%.3f idx=$tIdx%.3f grid=$tGrid%.3f refine=$tRefine%.3f)")
+        f"(fix=$tFix%.3f idx=$tIdx%.3f grid=$tGrid%.3f refine=$tRefine%.3f) execute=$tExec%.3f")
       if (growX) xHi += 20 else lxHi += 20
       growX = !growX
       iter += 1

@@ -27,6 +27,20 @@ trait WindowProbe {
       needAvg: Boolean, needMax: Boolean): DataFrame
 }
 
+/** The scalar twin of [[WindowProbe]]: one window at a time over an
+  * in-task copy of the index rows ([[LocalSolve]]). Each function's
+  * [[ConstraintFunction.value]] mirrors its Column form's arithmetic, so
+  * both executors compute the same doubles. */
+trait ScalarProbe {
+  def tMin: Long
+  def tMax: Long
+
+  /** Mean and maximum of the inclusive window `[a, b]`
+    * (tMin <= a <= b <= tMax). */
+  def avg(a: Long, b: Long): Double
+  def max(a: Long, b: Long): Double
+}
+
 /** Memoizing probe planner shared by both engine paths: ONE index join per
   * DISTINCT probe position per query, keyed by the position expression's
   * canonical text and shared across constraints AND across the avg/max
@@ -98,8 +112,9 @@ private[engine] abstract class MemoProbe extends WindowProbe {
   * constraints register via [[ConstraintRegistry.register]] and are then
   * parseable ([[graft.parser.QueryParser]] derives its whitelist from the
   * registry) and executable on BOTH engine paths — no other code to touch.
+  * Serializable: the local executor ships the functions into its task.
   */
-trait ConstraintFunction {
+trait ConstraintFunction extends Serializable {
   def name: String
   def arity: Int
 
@@ -109,6 +124,10 @@ trait ConstraintFunction {
 
   /** Append column `as` to `grid` (columns x, lx; x+lx <= tMax guaranteed). */
   def apply(grid: DataFrame, probe: WindowProbe, args: Seq[Long], as: String): DataFrame
+
+  /** The same value for one cell `(x, lx)`: the scalar form [[LocalSolve]]
+    * evaluates, probing the same windows as [[apply]]. */
+  def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double
 }
 
 /** Mean amplitude over [x, x+lx] inclusive (reference: server.py:955-964,
@@ -121,6 +140,8 @@ object AvgAmp extends ConstraintFunction {
     probe.windowAgg(grid, col("x"), col("x") + col("lx"), as + "_w",
         needAvg = true, needMax = false)
       .withColumnRenamed(as + "_w_avg", as)
+  def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
+    probe.avg(x, x + lx)
 }
 
 /** max(y[x..x+lx]) - max(y[x+lx..x+lx+n']) with n' clamped at the series end
@@ -140,6 +161,10 @@ object MaxAmpExcessRight extends ConstraintFunction {
     g2.withColumn(as, col(as + "_m_max") - col(as + "_r_max"))
       .drop(as + "_m_max", as + "_r_max")
   }
+  def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double = {
+    val xp = x + lx
+    probe.max(x, xp) - probe.max(xp, math.min(xp + args.head, probe.tMax))
+  }
 }
 
 /** max(y[x..x+lx]) - max(y[x-n'..x]) with n' clamped at the series start
@@ -157,6 +182,8 @@ object MaxAmpExcessLeft extends ConstraintFunction {
     g2.withColumn(as, col(as + "_m_max") - col(as + "_l_max"))
       .drop(as + "_m_max", as + "_l_max")
   }
+  def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
+    probe.max(x, x + lx) - probe.max(math.max(x - args.head, probe.tMin), x)
 }
 
 object ConstraintRegistry {

@@ -31,7 +31,10 @@ import graft.model._
   */
 object MultiSeriesEngine {
 
-  final case class MsIndex(df: DataFrame, bounds: DataFrame, levels: Int)
+  /** `pinned`: frames the build persisted (the [[indexRouted]] giants),
+    * for the caller to unpersist once `df` has been materialized. */
+  final case class MsIndex(df: DataFrame, bounds: DataFrame, levels: Int,
+      pinned: Seq[DataFrame] = Nil)
 
   /** The [[WindowProbe]] view of an [[MsIndex]]: same constraint formulas as
     * the single-series path, with per-series `tMin`/`tMax` grid columns and
@@ -153,12 +156,14 @@ object MultiSeriesEngine {
       val small = indexFast(
         series.where(!col("sid").isin(bigSids: _*)), maxWin, Some(bounds), maxRunRows)
       val bigDfs = bigSids.map { sid =>
-        SeriesOps.indexFast(series.where(col("sid") === sid).select("t", "y"), maxWin)
-          .df.select(lit(sid).as("sid"), col("t"), col("y"), col("s"), col("ms"))
+        SeriesOps.indexFast(series.where(col("sid") === sid).select("t", "y"), maxWin).df
       }
       MsIndex(
-        bigDfs.foldLeft(small.df.select("sid", "t", "y", "s", "ms"))(_ unionByName _),
-        bounds, small.levels)
+        bigSids.zip(bigDfs).foldLeft(small.df.select("sid", "t", "y", "s", "ms")) {
+          case (acc, (sid, df)) =>
+            acc.unionByName(df.select(lit(sid).as("sid"), col("t"), col("y"), col("s"), col("ms")))
+        },
+        bounds, small.levels, pinned = bigDfs)
     }
   }
 
@@ -209,6 +214,7 @@ object MultiSeriesEngine {
     // kernel are routed to the partitioned two-pass build
     val built = indexRouted(series, maxWin, stats, maxRunRows)
     val ckpt = built.df.localCheckpoint(true)
+    built.pinned.foreach(_.unpersist()) // materialized into ckpt
     val bounds = stats.select("sid", "tMin", "tMax")
     // bounded domains probe only [xLo - win, xHi + lxHi + win] in every
     // series: pre-filter the probe view so lookups join O(domain) rows per

@@ -30,6 +30,14 @@ import graft.engine.SeriesOps.SeriesIndex
   *     Spark executes this as a single TakeOrderedAndProject — top-k with no
   *     full sort, no driver branching, no count() action.
   *
+  * Two executors run that plan, chosen per query by grid size in
+  * [[execute]]: a grid of at most [[LocalSolve.CellCap]] cell-constraints
+  * whose probe windows all lie inside the series runs as ONE Spark task
+  * ([[LocalSolve]]: probes, extrema, scoring and top-k over the index
+  * slice); every other grid runs the distributed plan above. The two return
+  * the same rows in the same order (pinned in LocalSolveSpec); the gate is
+  * exact arithmetic on the bound domains and costs no job.
+  *
   * The scoring, the rank order, the window-need rule and the bounded-result
   * step defined here are the only copies: [[MultiSeriesEngine]] calls them
   * keyed by `sid`.
@@ -205,7 +213,8 @@ object RefinementEngine {
   }
 
   /** Execute a full query against a series `(t, y)`. Returns
-    * `(time_id, offset)` rows in canonical order.
+    * `(time_id, offset)` rows in canonical order: one local task when
+    * [[LocalSolve.admits]] the bound grid, else the distributed plan.
     *
     * `prebuilt`: reuse a (persisted) [[SeriesOps.SeriesIndex]] when the
     * caller already indexed this series — only taken when its sparse table
@@ -215,7 +224,24 @@ object RefinementEngine {
       spark: SparkSession,
       series: DataFrame,
       spec: QuerySpec,
-      prebuilt: Option[SeriesIndex] = None): DataFrame = {
+      prebuilt: Option[SeriesIndex] = None): DataFrame =
+    run(spark, series, spec, prebuilt, allowLocal = true)
+
+  /** [[execute]] on the distributed plan whatever the grid size: the
+    * reference side of the local-executor pins. */
+  private[graft] def executeDistributed(
+      spark: SparkSession,
+      series: DataFrame,
+      spec: QuerySpec,
+      prebuilt: Option[SeriesIndex] = None): DataFrame =
+    run(spark, series, spec, prebuilt, allowLocal = false)
+
+  private def run(
+      spark: SparkSession,
+      series: DataFrame,
+      spec: QuerySpec,
+      prebuilt: Option[SeriesIndex],
+      allowLocal: Boolean): DataFrame = {
     val (tMin, tMax) = prebuilt match {
       case Some(i) => (i.tMin, i.tMax)
       case None =>
@@ -227,6 +253,7 @@ object RefinementEngine {
     val idx = prebuilt
       .filter(i => SeriesOps.covers(i.levels, needWin))
       .getOrElse(SeriesOps.index(series, needWin))
+    if (allowLocal && LocalSolve.admits(spec, b, tMin, tMax)) return LocalSolve(idx, spec, b)
     val grid = constraintGrid(spark, idx, spec, b)
     if (!spec.refined) {
       // UNREFINED: candidates satisfying every constraint

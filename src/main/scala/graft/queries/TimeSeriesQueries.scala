@@ -117,8 +117,12 @@ object TimeSeriesQueries {
       count(lit(1)).as("grid_cells"))
   }
 
+  /** A CP query over the session index. The series handed to `execute` is
+    * the index's own `(t, y)` view: `execute` reads it only when the index
+    * is too shallow, which the declared queries never are, and
+    * [[series]] would run its key-assignment jobs eagerly on every call. */
   private def cp(s: SparkSession, dir: String, q: String): DataFrame =
-    RefinementEngine.execute(s, series(s, dir), QueryParser.parse(q),
+    RefinementEngine.execute(s, cachedSeries(s, dir), QueryParser.parse(q),
         prebuilt = Some(cachedIndex(s, dir)))
       .orderBy("time_id", "offset")
 

@@ -16,10 +16,7 @@ class EngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
-  // deterministic pseudo-random series, N=80, values in [0, 10)
-  val n = 80
-  val ys: Array[Double] =
-    (1 to n).map(i => ((i * 2654435761L) % 1000) / 100.0).toArray
+  import EngineSpec.{n, ys}
   lazy val series = (1 to n).map(i => (i.toLong, ys(i - 1))).toDF("t", "y")
 
   // ---- naive oracle (reference semantics, brute force) ----
@@ -128,8 +125,18 @@ class EngineSpec extends AnyFunSuite {
     }.sortBy { case ((x, lx), (s, key)) => (s, key, x, lx) }
   }
 
-  def run(q: String): Seq[(Int, Int)] =
-    RefinementEngine.execute(spark, series, QueryParser.parse(q))
+  /** The two executors of [[RefinementEngine.execute]]; every naive-oracle
+    * test below runs on each. The local one asserts its gate admits the
+    * query, so it cannot silently run distributed. */
+  val executors: Seq[(String, QuerySpec => org.apache.spark.sql.DataFrame)] = Seq(
+    "local" -> { spec =>
+      assert(LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n))
+      RefinementEngine.execute(spark, series, spec)
+    },
+    "distributed" -> (spec => RefinementEngine.executeDistributed(spark, series, spec)))
+
+  def run(q: String, exec: QuerySpec => org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
+    exec(QueryParser.parse(q))
       .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt)).toSeq
 
   // ---- parser ----
@@ -301,30 +308,35 @@ class EngineSpec extends AnyFunSuite {
     val expect = naiveGrid(spec, b)
       .filter { case (_, _, vs) => sat(spec.constraints.head, vs.head) }
       .map(g => (g._1, g._2)).sorted
-    val got = run(spec.toString match { case _ =>
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX" })
-    assert(got == expect)
+    for ((name, exec) <- executors) {
+      val got = run(spec.toString match { case _ =>
+        "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+          "WHERE avg_amp() in [4, 6] MAX" }, exec)
+      assert(got == expect, name)
+    }
   }
 
   test("refined tightening (over-production): top-k by RK desc") {
     val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
       "WHERE avg_amp() in [2, 8] MAX LIMIT REFINED 7"
-    assert(run(q) == naiveRefined(QueryParser.parse(q)))
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
   }
 
   test("refined relaxation (under-production): satisfied + RP asc extras") {
     // impossible-ish interval => few/no satisfying candidates
     val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
       "WHERE avg_amp() in [9, 10] MAX LIMIT REFINED 6"
-    assert(run(q) == naiveRefined(QueryParser.parse(q)))
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
   }
 
   test("refined multi-constraint with excess functions and MIN target") {
     val q = "SELECT time_id, offset IN_DOMAIN [5, 50], [3, 8] FROM t.c " +
       "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [-1, 1] MAX " +
       "and max_amp_excess_left(4) in [None, 2] MIN LIMIT REFINED 10"
-    assert(run(q) == naiveRefined(QueryParser.parse(q)))
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
   }
 
   test("excess functions clamp at series edges like the reference") {
@@ -332,7 +344,8 @@ class EngineSpec extends AnyFunSuite {
     val q = "SELECT time_id, offset IN_DOMAIN [1, 79], [1, 1] FROM t.c " +
       "WHERE max_amp_excess_left(10) in [0, None] MAX and " +
       "max_amp_excess_right(10) in [None, 0] MAX LIMIT REFINED 12"
-    assert(run(q) == naiveRefined(QueryParser.parse(q)))
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
   }
 
   /** Naive scored candidates sorted by the unified refinement key. */
@@ -360,10 +373,12 @@ class EngineSpec extends AnyFunSuite {
       val spec = QueryParser.parse(q)
       val declarative = RefinementEngine.execute(spark, series, spec)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val viaKernel = RefinementEngine.execute(spark, series, spec,
-          prebuilt = Some(kernelIdx))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(viaKernel == declarative, q)
+      // on both executors
+      for (exec <- Seq(RefinementEngine.execute _, RefinementEngine.executeDistributed _)) {
+        val viaKernel = exec(spark, series, spec, Some(kernelIdx))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(viaKernel == declarative, q)
+      }
     }
   }
 
@@ -408,22 +423,24 @@ class EngineSpec extends AnyFunSuite {
       val q = s"SELECT time_id, offset IN_DOMAIN [$xLo, $xHi], [$lxLo, $lxHi] " +
         s"FROM t.c WHERE avg_amp() in [$a, $b] $tgt LIMIT REFINED $k"
       val spec = QueryParser.parse(q)
-      val got = run(q).toSet
       val sortedAll = naiveScoredSorted(spec)
       val cells = sortedAll.size
-      assert(got.size == math.min(k, cells), s"cardinality for $q")
-      if (cells > k) {
-        val (kthSat, kthKey) = sortedAll(k - 1)._2
-        def strictlyBetter(e: (Int, Double)) =
-          e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
-        def noWorse(e: (Int, Double)) =
-          e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
-        val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
-        val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
-        assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q")
-        assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q")
-      } else {
-        assert(got == sortedAll.map(_._1).toSet, q)
+      for ((name, exec) <- executors) {
+        val got = run(q, exec).toSet
+        assert(got.size == math.min(k, cells), s"cardinality for $q ($name)")
+        if (cells > k) {
+          val (kthSat, kthKey) = sortedAll(k - 1)._2
+          def strictlyBetter(e: (Int, Double)) =
+            e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
+          def noWorse(e: (Int, Double)) =
+            e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
+          val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
+          val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
+          assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q ($name)")
+          assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q ($name)")
+        } else {
+          assert(got == sortedAll.map(_._1).toSet, s"$q ($name)")
+        }
       }
     }
   }
@@ -437,7 +454,20 @@ class EngineSpec extends AnyFunSuite {
   }
 }
 
+object EngineSpec {
+  // deterministic pseudo-random series, N=80, values in [0, 10)
+  val n = 80
+  val ys: Array[Double] =
+    (1 to n).map(i => ((i * 2654435761L) % 1000) / 100.0).toArray
+}
+
 object TestSpark {
+  /** Ids of the session's persisted RDDs. Lifecycle tests assert that a
+    * query leaves no id outside this set behind; a count is no such check,
+    * since Spark's ContextCleaner may unpersist other tests' unreachable
+    * RDDs at any GC and so lower it while the query under test leaks. */
+  def persistedIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   lazy val spark: SparkSession = {
     graft.tools.CodegenGuard.install()
     val s = GraftSession.build(4)

@@ -1,0 +1,179 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine._
+import graft.engine.RefinementEngine.Bound
+import graft.model._
+import graft.parser.QueryParser
+
+/** The local CP executor ([[LocalSolve]]) against the distributed plan it
+  * stands in for: the same rows in the same order under the same schema on
+  * randomized specs, and the size gate. Its one-job, nothing-pinned
+  * lifecycle on the suite's CP queries is pinned in PlanSpec. */
+class LocalSolveSpec extends AnyFunSuite {
+
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+  import EngineSpec.{n, ys}
+
+  lazy val series = (1 to n).map(i => (i.toLong, ys(i - 1))).toDF("t", "y")
+
+  private def rows(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
+
+  test("local ≡ distributed: same rows, order and schema (seeded, 60 cases)") {
+    val rnd = new scala.util.Random(23)
+    val fns = ConstraintRegistry.all.toSeq.sortBy(_.name)
+    def side(v: => Long): String = if (rnd.nextInt(4) == 0) "None" else v.toString
+    // the cycle of modes: refined tightening (wide intervals), refined
+    // relaxation (narrow intervals), refined without LIMIT, unrefined with
+    // and without LIMIT
+    val shapes = for (i <- 0 until 60) yield {
+      val mode = i % 5
+      // every third case starts at the series start, every third reaches
+      // its end, so the n' clamps of both excess functions run
+      val (xLo, xHi) = i % 3 match {
+        case 0 => (1L, 6L + rnd.nextInt(20))
+        case 1 => (n - 30L + rnd.nextInt(10), n.toLong)
+        case _ => val lo = 1L + rnd.nextInt(40); (lo, lo + 5 + rnd.nextInt(30))
+      }
+      // a None offset start binds to 1, so the end stays at 1 or more
+      val lxLo = rnd.nextInt(4).toLong
+      val lxHi = math.max(lxLo, 1L) + rnd.nextInt(8)
+      val dom = s"[${side(xLo)}, ${side(xHi)}], [${side(lxLo)}, ${side(lxHi)}]"
+      val cons = (0 until 1 + rnd.nextInt(3)).map { j =>
+        val f = fns((i + j) % fns.size)
+        val call = if (f.arity == 0) s"${f.name}()" else s"${f.name}(${rnd.nextInt(13)})"
+        val avg = f.name == "avg_amp"
+        val tgt = if (rnd.nextBoolean()) "MAX" else "MIN"
+        val interval =
+          if (rnd.nextInt(6) == 0) { // degenerate [a, a]
+            val a = if (avg) rnd.nextInt(10) else 0
+            s"[$a, $a]"
+          } else if (mode == 1) { // narrow, near the top of the value range
+            val lo = (if (avg) 8 else 6) + rnd.nextInt(2)
+            s"[$lo, ${lo + 1}]"
+          } else {
+            val lo = if (avg) rnd.nextInt(4) else -rnd.nextInt(6)
+            s"[${side(lo)}, ${side(lo + 4 + rnd.nextInt(6))}]"
+          }
+        s"$call in $interval $tgt"
+      }
+      val k = 1 + rnd.nextInt(25)
+      val limit = mode match {
+        case 0 | 1 | 2 => s" LIMIT REFINED $k"
+        case 3 => s" LIMIT $k"
+        case _ => ""
+      }
+      val q =
+        s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE ${cons.mkString(" and ")}$limit"
+      val spec = QueryParser.parse(q)
+      (q, if (mode == 2) spec.copy(limit = None) else spec)
+    }
+    val specs = shapes.map(_._2)
+    // the generator reaches every case the pin is meant to cover
+    assert(specs.exists(s => s.refined && s.limit.isEmpty))
+    assert(specs.exists(s => !s.refined && s.limit.isDefined))
+    assert(specs.exists(s => !s.refined && s.limit.isEmpty))
+    assert(specs.flatMap(_.constraints.map(_.target)).toSet.size == 2)
+    assert(specs.flatMap(_.constraints.map(_.name)).toSet == ConstraintRegistry.names)
+    assert(specs.map(_.constraints.size).toSet == Set(1, 2, 3))
+    assert(specs.exists(s => Seq(s.xDomain.lo, s.xDomain.hi, s.lxDomain.lo, s.lxDomain.hi)
+      .contains(None)))
+    assert(specs.exists(_.constraints.exists(c => c.lo.isEmpty || c.hi.isEmpty)))
+    assert(specs.exists(_.constraints.exists(c => c.lo.isDefined && c.lo == c.hi)))
+    val bounds = specs.map(RefinementEngine.bindDomains(_, 1, n))
+    assert(bounds.exists(_.xLo == 1) && bounds.exists(b => b.xHi + b.lxHi >= n))
+
+    val idx = SeriesOps.indexFast(series, 128)
+    try {
+      var relaxed, tightened, nonEmpty = 0
+      for (((q, spec), i) <- shapes.zipWithIndex) {
+        assert(LocalSolve.admits(spec, bounds(i), 1, n), q)
+        // both index builds: the declarative one and the kernel prebuilt
+        val prebuilt = if (i % 2 == 0) Some(idx) else None
+        val local = RefinementEngine.execute(spark, series, spec, prebuilt)
+        val dist = RefinementEngine.executeDistributed(spark, series, spec, prebuilt)
+        assert(isLocal(local) && !isLocal(dist), q)
+        assert(local.schema == dist.schema, q)
+        val got = rows(local)
+        assert(got == rows(dist), q)
+        Checkpoints.release(dist)
+        if (got.nonEmpty) nonEmpty += 1
+        spec.limit.filter(_ => spec.refined).foreach { k =>
+          val satisfying = RefinementEngine.execute(spark, series,
+            spec.copy(refined = false, limit = None), Some(idx)).count()
+          if (satisfying < k) relaxed += 1 else tightened += 1
+        }
+      }
+      assert(relaxed > 0 && tightened > 0, s"relaxed=$relaxed tightened=$tightened")
+      assert(nonEmpty >= 50, s"only $nonEmpty of 60 cases returned rows")
+    } finally idx.df.unpersist()
+  }
+
+  test("gate: the cell count is exact; the cap admits, cap + 1 does not") {
+    // the candidate-grid filter's count, brute-forced on random bounds
+    val rnd = new scala.util.Random(5)
+    for (_ <- 1 to 300) {
+      val b = Bound(rnd.nextInt(30) - 5L, rnd.nextInt(40) - 5L,
+        rnd.nextInt(12) - 3L, rnd.nextInt(30) - 3L)
+      val tMax = 10L + rnd.nextInt(40)
+      val brute = (for (x <- b.xLo to b.xHi; lx <- b.lxLo to b.lxHi if x + lx <= tMax)
+        yield 1L).sum
+      assert(LocalSolve.gridCells(b, tMax) == brute, s"$b tMax=$tMax")
+    }
+    val huge = Long.MaxValue / 2
+    assert(LocalSolve.gridCells(Bound(0, huge, 0, huge), Long.MaxValue - 1) == Long.MaxValue)
+
+    // x in [1, X], lx in [0, 1]: 2X cells on a long series, 2X - 1 when
+    // the series ends at X (the last x has no lx = 1 cell)
+    def gridOf(cells: Long): (Bound, Long) =
+      if (cells % 2 == 0) (Bound(1, cells / 2, 0, 1), 1L << 40)
+      else { val x = (cells + 1) / 2; (Bound(1, x, 0, 1), x) }
+    def spec(k: Int) = QuerySpec("t", "c", Domain(None, None), Domain(None, None),
+      Seq.fill(k)(Constraint("avg_amp", Nil, Some(0), Some(1), Target.Max)),
+      Some(5), refined = true)
+    for (k <- 1 to 3) {
+      val atCap = LocalSolve.CellCap / k
+      for ((cells, admitted) <- Seq(atCap -> true, (atCap + 1) -> false)) {
+        val (b, tMax) = gridOf(cells)
+        assert(LocalSolve.gridCells(b, tMax) == cells)
+        assert(LocalSolve.admits(spec(k), b, 1, tMax) == admitted, s"$k constraints, $cells cells")
+      }
+    }
+    // a narrow offset band far out: 4 cells, but its probes span more
+    // index rows than the cap
+    val far = Bound(1, 2, LocalSolve.CellCap, LocalSolve.CellCap + 1)
+    assert(LocalSolve.gridCells(far, 1L << 40) == 4)
+    assert(!LocalSolve.admits(spec(1), far, 1, 1L << 40))
+  }
+
+  test("gate: grids probing outside the series take the distributed plan") {
+    val idx = SeriesOps.indexFast(series, 128)
+    try {
+      def plan(q: String, edit: QuerySpec => QuerySpec = identity): (Boolean, Boolean) = {
+        val spec = edit(QueryParser.parse(q))
+        val admitted = LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n)
+        (admitted, isLocal(RefinementEngine.execute(spark, series, spec, Some(idx))))
+      }
+      def query(dom: String, con: String) =
+        s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE $con in [0, 5] MAX"
+      assert(plan(query("[1, 30], [2, 5]", "max_amp_excess_left(4)")) == ((true, true)))
+      val outside = Seq(
+        "x before the series start" -> plan(query("[0, 30], [2, 5]", "avg_amp()")),
+        "a negative offset" -> plan(query("[5, 30], [-2, 5]", "avg_amp()")),
+        "a reversed offset domain" -> plan(query("[5, 30], [5, 2]", "avg_amp()")),
+        "an argument past the series length" ->
+          plan(query("[5, 30], [2, 5]", "max_amp_excess_right(80)")),
+        "a negative argument" -> plan(query("[5, 30], [2, 5]", "max_amp_excess_left(3)"),
+          s => s.copy(constraints = s.constraints.map(_.copy(args = Seq(-3L))))))
+      outside.foreach { case (why, p) => assert(p == ((false, false)), why) }
+    } finally idx.df.unpersist()
+  }
+}

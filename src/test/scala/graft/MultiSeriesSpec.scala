@@ -128,10 +128,11 @@ class MultiSeriesSpec extends AnyFunSuite {
       graft.engine.Checkpoints.release(df)
     }
     runOnce()
-    val pinned = spark.sparkContext.getPersistentRDDs.size
     (1 to 3).foreach { i =>
+      val before = TestSpark.persistedIds()
       runOnce()
-      assert(spark.sparkContext.getPersistentRDDs.size == pinned, s"after query $i")
+      val left = TestSpark.persistedIds() -- before
+      assert(left.isEmpty, s"after query $i: $left")
     }
   }
 
@@ -169,13 +170,13 @@ class MultiSeriesSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan.take(1500))
   }
 
+  // sid 9 is 600 rows — over a 200-row budget; sids 0..2 stay on the
+  // per-partition kernel path
+  lazy val mixed = multi.unionByName((1 to 600)
+    .map(i => (9L, i.toLong, ((i * 2654435761L) % 1000) / 100.0))
+    .toDF("sid", "t", "y"))
+
   test("one giant + many small series: the giant routes to the partitioned build") {
-    // sid 9 is 600 rows — over a 200-row budget; sids 0..2 stay on the
-    // per-partition kernel path
-    val giant = (1 to 600)
-      .map(i => (9L, i.toLong, ((i * 2654435761L) % 1000) / 100.0))
-      .toDF("sid", "t", "y")
-    val mixed = multi.unionByName(giant)
     val spec = QueryParser.parse(queries.head)
     def run(budget: Long) =
       MultiSeriesEngine.execute(spark, mixed, spec, maxRunRows = budget)
@@ -196,6 +197,22 @@ class MultiSeriesSpec extends AnyFunSuite {
         r.getSeq[Double](4))).toSeq
     assert(rows(MultiSeriesEngine.indexRouted(mixed, 16, stats, maxRunRows = 200L))
       == rows(MultiSeriesEngine.indexFast(mixed, 16)))
+  }
+
+  test("routed giant-series indexes are released once the index checkpoint holds them") {
+    val spec = QueryParser.parse(queries.head)
+    def runOnce(): Unit = {
+      val df = MultiSeriesEngine.execute(spark, mixed, spec, maxRunRows = 200L)
+      assert(df.collect().exists(_.getLong(0) == 9L))
+      graft.engine.Checkpoints.release(df)
+    }
+    runOnce()
+    (1 to 3).foreach { i =>
+      val before = TestSpark.persistedIds()
+      runOnce()
+      val left = TestSpark.persistedIds() -- before
+      assert(left.isEmpty, s"after query $i: $left")
+    }
   }
 
   test("indexFast fails fast (not OOM) when a series exceeds the run budget") {

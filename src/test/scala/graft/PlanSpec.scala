@@ -66,6 +66,59 @@ class PlanSpec extends AnyFunSuite {
     assert(df.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
   }
 
+  private val cpQueries =
+    Seq("q21_cp_unrefined", "q22_cp_refined_tighten", "q23_cp_refined_relax")
+
+  test("q21, q22 and q23 each run exactly one Spark job on a warm session") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // warm the session series index first: a one-time per-session build
+    cpQueries.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    // the listener bus is async — wait for the count to go quiet
+    def quiet(): Unit = {
+      var (last, stable) = (-1, 0)
+      while (stable < 5) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try cpQueries.foreach { q =>
+      quiet()
+      jobs.set(0)
+      val df = SparkEntry.queries(q)(spark, sf)
+      try df.collect() finally graft.engine.Checkpoints.release(df)
+      quiet()
+      assert(jobs.get() == 1, s"$q ran ${jobs.get()} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("releasing a local CP result keeps the session index cached; nothing accumulates") {
+    import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+    import graft.queries.TimeSeriesQueries
+    val idx = TimeSeriesQueries.cachedIndex(spark, sf)
+    def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = cpQueries.map { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      // the local executor's one-task plan
+      assert(df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined, q)
+      try df.collect().toSeq finally graft.engine.Checkpoints.release(df)
+    }
+    val first = runAll()
+    (1 to 3).foreach { i =>
+      val before = TestSpark.persistedIds()
+      assert(runAll() == first, s"round $i")
+      val left = TestSpark.persistedIds() -- before
+      assert(left.isEmpty, s"round $i: $left")
+    }
+    assert(TimeSeriesQueries.cachedIndex(spark, sf) eq idx)
+    assert(idx.df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("q17: series-index hot path has no single-partition exchange") {
     // the partitioned two-pass build must leave no repartition(1)/global
     // row_number funnel anywhere in the flagship windowed-grid plan
