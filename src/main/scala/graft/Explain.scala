@@ -107,29 +107,6 @@ object Explain {
       engine.Checkpoints.release(df) // q54's labels checkpoint, else no-op
     }
 
-    // q23's execute() returns a lineage-truncated frame (the refined grid is
-    // persisted, materialized, released) so its plan above is just the
-    // checkpoint scan — dump the underlying lazy CP pipeline separately:
-    // this is where the probe joins, broadcast extrema, and the
-    // TakeOrderedAndProject top-k are visible.
-    {
-      import graft.engine.RefinementEngine
-      import graft.parser.QueryParser
-      import graft.queries.TimeSeriesQueries
-      val spec = QueryParser.parse(
-        "SELECT time_id, offset IN_DOMAIN [1, 2000], [5, 30] FROM events.value " +
-          "WHERE avg_amp() in [130, 140] MAX and " +
-          "max_amp_excess_right(10) in [0, None] MAX LIMIT REFINED 25")
-      val idx = TimeSeriesQueries.cachedIndex(spark, sfDir)
-      val b = RefinementEngine.bindDomains(spec, idx.tMin, idx.tMax)
-      val grid = RefinementEngine.constraintGrid(spark, idx, spec, b)
-      val df = RefinementEngine.refinedTopK(grid, spec, Some(25))
-      df.collect()
-      sb.append("\n## q23 underlying CP pipeline (lazy form, pre-checkpoint)\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode))
-      sb.append("```\n")
-    }
     // q54's outer plan is just the checkpointed labels scan (the loop's
     // result is lineage-free by design) — dump the two plans that carry the
     // scale story separately: (a) the one-shot edge generation (star edges,
@@ -181,21 +158,6 @@ object Explain {
       Checkpoints.release(bi)
       Checkpoints.release(labels)
     }
-    sb.append(
-      """
-## CP probe-planning measurement (q23 shape)
-
-The refined 2-constraint query issues 4 index probe joins (one per DISTINCT
-probe position, merged by `MemoProbe`) instead of 6 (one per constraint
-window leg). A/B medians at sf0.1 local[32] are wall-clock equal within run
-noise (see `bench/probe_ab_sf0.1.txt`); the merged shape is kept for the
-cluster-scale terms: 2 fewer join stages and 2 fewer broadcast relations
-per query. A single REUSED index exchange across probes is not expressible
-against Catalyst — column pruning and inferred filters rewrite each
-broadcast child differently,
-which is itself the desired behavior (each probe ships only the columns
-its sharers read).
-""")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outMd), sb.toString)
     println(s"[explain] wrote $outMd")
     spark.stop()

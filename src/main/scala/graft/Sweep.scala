@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{Checkpoints, RefinementEngine, SeriesOps}
+import graft.engine.{Checkpoints, LocalSolve, RefinementEngine, SeriesOps}
 import graft.model.{Constraint, Domain, QuerySpec, Target}
 import graft.queries.TimeSeriesQueries
 
@@ -12,12 +12,11 @@ import graft.queries.TimeSeriesQueries
   * server.py:37).
   *
   * Usage: runMain graft.Sweep [sfDir] [outCsv] [maxIters]
-  * Emits csv: iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s,execute_s
+  * Emits csv: iter,udf_size,fix_domains_s,index_s,execute_s
   *
-  * `grid_s` + `refine_s` time the distributed plan's phases; `execute_s` is
-  * the production `RefinementEngine.execute(prebuilt)` wall (collected),
-  * which runs a grid of at most `LocalSolve.CellCap` cell-constraints as
-  * one local task — the two sides of the local executor's gate.
+  * `execute_s` is the production `RefinementEngine.execute(prebuilt)` wall
+  * (collected): one task while the grid is one chunk of at most
+  * `LocalSolve.CellCap` cell-constraints, one task per chunk beyond.
   */
 object Sweep {
   def main(args: Array[String]): Unit = {
@@ -36,7 +35,7 @@ object Sweep {
     // (scalability_experiment_scipt.py:13-19), domains grown alternately
     var xHi = 10L; var lxHi = 10L; var growX = true
     val rows = new StringBuilder(
-      "iter,udf_size,fix_domains_s,index_s,grid_s,refine_s,total_s,execute_s\n")
+      "iter,udf_size,fix_domains_s,index_s,execute_s\n")
     var iter = 0
     while (iter < maxIters && xHi <= bounds._2) {
       val spec = QuerySpec("events", "value",
@@ -49,27 +48,20 @@ object Sweep {
       def t[A](body: => A): (A, Double) = {
         val t0 = System.nanoTime(); val r = body; (r, (System.nanoTime() - t0) / 1e9)
       }
-      val total0 = System.nanoTime()
       val (b, tFix) = t(RefinementEngine.bindDomains(spec, bounds._1, bounds._2))
       // the production build (the one IndexCache runs); it materializes
       // the index itself, so the phase attribution is honest
       val (idx, tIdx) = t(SeriesOps.indexFast(series, RefinementEngine.windowNeed(spec, b.lxHi)))
-      val ((grid, cells), tGrid) = t {
-        val g = RefinementEngine.constraintGrid(spark, idx, spec, b).persist()
-        (g, g.count())
-      }
-      val (nOut, tRefine) = t(RefinementEngine.refinedTopK(grid, spec, Some(50)).count())
-      val tTotal = (System.nanoTime() - total0) / 1e9
-      grid.unpersist()
-      val (_, tExec) = t {
+      val cells = LocalSolve.gridCells(b, bounds._2)
+      val (nOut, tExec) = t {
         val df = RefinementEngine.execute(spark, series, spec, Some(idx))
-        try df.collect() finally Checkpoints.release(df)
+        try df.collect().length finally Checkpoints.release(df)
       }
       idx.df.unpersist()
       rows.append(
-        f"$iter,$cells,$tFix%.4f,$tIdx%.4f,$tGrid%.4f,$tRefine%.4f,$tTotal%.4f,$tExec%.4f\n")
-      println(f"[sweep] iter=$iter cells=$cells k_out=$nOut total=$tTotal%.2fs " +
-        f"(fix=$tFix%.3f idx=$tIdx%.3f grid=$tGrid%.3f refine=$tRefine%.3f) execute=$tExec%.3f")
+        f"$iter,$cells,$tFix%.4f,$tIdx%.4f,$tExec%.4f\n")
+      println(f"[sweep] iter=$iter cells=$cells k_out=$nOut " +
+        f"fix=$tFix%.3f idx=$tIdx%.3f execute=$tExec%.3f")
       if (growX) xHi += 20 else lxHi += 20
       growX = !growX
       iter += 1

@@ -1,53 +1,79 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import java.util.Comparator
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.model._
+import graft.engine.MultiSeriesEngine.MsIndexedPoint
 import graft.engine.RefinementEngine.Bound
 import graft.engine.SeriesOps.{IndexedPoint, SeriesIndex}
 
-/** The local executor of [[RefinementEngine.execute]]: an interactive-size
-  * CP query as ONE lazy Spark task. At 10^3–10^5 cells the distributed plan
-  * is all fixed cost (about 15 jobs of planning, scheduling and broadcast
-  * per query); here the probes, the extrema, the scoring and the top-k run
-  * in one task over the index slice the probes read:
+/** The CP kernel: the only executor of a CP query, for one series
+  * ([[RefinementEngine.execute]]) or a corpus ([[MultiSeriesEngine.execute]]),
+  * and of the suite's value grids ([[values]]).
   *
-  *   `idx.df.where(t between [lo, hi]).coalesce(1).mapPartitions(kernel)`
+  * Its unit of work is a CHUNK: a contiguous run of one series' `(x, lx)`
+  * enumeration holding at most [[CellCap]] cell-constraints and at most
+  * [[CellCap]] index rows. A task places each index row it reads by position
+  * (rows arrive in no particular order), evaluates every constraint through
+  * its scalar form ([[ConstraintFunction.value]]) over the prefix sums and
+  * the sparse table, scores the cells and keeps a bounded top-k under LIMIT:
   *
-  * The kernel places each index row by `t - lo` (cached partitions arrive
-  * in no particular order), evaluates every constraint through its scalar
-  * form ([[ConstraintFunction.value]]) over the prefix sums and the sparse
-  * table, and ranks with [[RefinementEngine.rankOrder]]'s order, keeping a
-  * bounded top-k under LIMIT. Every formula mirrors the Spark expression it
-  * replaces operation for operation — same operand order, `greatest`
-  * keeping its first operand on ties, doubles compared in Spark SQL's order
-  * (`SQLOrderingUtil.compareDoubles`: -0.0 == 0.0, NaN largest), RK summed
-  * left to right — so both executors return the same rows in the same
-  * order (pinned on randomized specs in LocalSolveSpec). Nothing is
-  * persisted or checkpointed: the result holds no storage to release.
+  *   - one series whose grid is one chunk (every interactive-size query)
+  *     runs as ONE Spark task and job:
+  *     `idx.df.where(t in spans).coalesce(1).mapPartitions(kernel)`;
+  *   - larger grids, and a corpus with chunks keyed by `sid`, run one task
+  *     per chunk: index rows are shuffled to the chunks whose spans read
+  *     them. When a refined query's series
+  *     spans several chunks, a first pass over the chunks takes that series'
+  *     extrema. Each chunk ranks its own cells; the final order and limit see
+  *     at most k rows per chunk.
   *
-  * The gate ([[admits]]) is free: the cell count is exact arithmetic on the
-  * bound domains. It admits only grids whose every probe window lies inside
-  * the series; every other grid, and every grid over [[CellCap]], takes the
-  * distributed plan.
+  * Doubles compare in Spark SQL's order (`SQLOrderingUtil.compareDoubles`:
+  * -0.0 == 0.0, NaN largest), min/max keep the earlier value on ties, RK is
+  * summed left to right: the rows and their order do not depend on how the
+  * grid is chunked (pinned in LocalSolveSpec). Nothing is persisted.
+  *
+  * Determinism note (SURVEY §7.3): the reference's result order is
+  * nondeterministic (random branching, bst_class.py:147); ties here break by
+  * the enumeration order (x asc, lx asc).
   */
 object LocalSolve {
 
-  /** Largest grid, in cell-constraints (cells × constraints), run as one
-    * task; also the bound on the index rows that task holds. `graft.Sweep`
-    * times both executors per grid size: on a 4-vCPU Xeon VM, local stays
-    * faster than distributed past this cap (see CHANGES.md). Known traffic:
-    * the benchmark's interactive stream stays under 3×10^5, the suite's CP
-    * queries at 52k cells. */
+  /** Largest chunk, in cell-constraints (cells × constraints), and the
+    * bound on the index rows a chunk reads. Known traffic: the benchmark's
+    * interactive stream stays under 3×10^5, the suite's CP queries at 104k:
+    * each runs as one chunk. */
   val CellCap: Long = 1L << 21
 
   /** One result row: the field names are the result's column names. */
   final case class Cell(time_id: Long, offset: Long)
+  final case class SeriesCell(sid: Long, time_id: Long, offset: Long)
+  /** One constraint's value at one cell ([[values]]). */
+  final case class CellValue(x: Long, lx: Long, v: Double)
 
-  /** Exact number of candidate cells `(x, lx)` of `b` with `x + lx <= tMax`
-    * (the arithmetic of [[RefinementEngine.candidateGrid]]'s filter),
+  /** A query and its constraint functions, shipped with every task. */
+  private[graft] final case class Job(spec: QuerySpec, fns: Array[ConstraintFunction]) {
+    /** The window length (rows) the sparse table must answer when the
+      * offsets reach `lxHi`: the widest constraint probe, and at least the
+      * `lx + 1` rows of the longest candidate window. */
+    def windowNeed(lxHi: Long): Long =
+      spec.constraints.zip(fns).map { case (c, f) => f.maxWindow(lxHi, c.args) }
+        .foldLeft(lxHi + 1)(math.max)
+  }
+  private[graft] def job(spec: QuerySpec): Job =
+    Job(spec, spec.constraints.map(c => ConstraintRegistry(c.name)).toArray)
+
+  /** Exact number of candidate cells `(x, lx)` of `b` with `x + lx <= tMax`,
     * saturating at Long.MaxValue. For lx up to `tMax - xHi` every x fits;
     * beyond, x stops at `tMax - lx`, an arithmetic run down to one cell at
     * `lx = tMax - xLo`. */
@@ -64,127 +90,320 @@ object LocalSolve {
     (full + tail).min(BigInt(Long.MaxValue)).toLong
   }
 
-  /** What the task reads: `win` is the longest window any probe asks for,
-    * `[lo, hi]` the index positions the probes touch (every window of cell
-    * `(x, lx)` lies in `[x - win, x + lx + win]`, clamped to the series). */
-  private final case class Reach(win: Long, lo: Long, hi: Long)
+  /** One series' candidate grid: its key in the corpus (0 for a lone
+    * series), its extent and its bound domains. The cells are the `(x, lx)`
+    * whose windows lie inside the series: x from the series start on (a cell
+    * before it would probe a missing time_id, which the reference skips,
+    * server.py:526-528), offsets from 0, `x + lx <= tMax`. A reversed domain
+    * holds no cell, as the reference's `range` yields none. */
+  private[graft] final case class Grid(sid: Long, tMin: Long, tMax: Long, b: Bound) {
+    val xLo: Long = math.max(b.xLo, tMin)
+    val lxLo: Long = math.max(b.lxLo, 0L)
+    val xHi: Long = math.min(b.xHi, tMax - lxLo)
+    def lxEnd(x: Long): Long = math.min(b.lxHi, tMax - x)
+    def cells: Long = gridCells(Bound(xLo, xHi, lxLo, b.lxHi), tMax)
 
-  private def reach(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Reach = {
-    val xHi = math.min(b.xHi, tMax - b.lxLo)
-    val lxHi = math.min(b.lxHi, tMax - b.xLo)
-    val win = math.min(RefinementEngine.windowNeed(spec, math.max(lxHi, 0L)), tMax - tMin + 1)
-    Reach(win, math.max(tMin, b.xLo - win), math.min(tMax, xHi + lxHi + win))
+    /** The longest window any probe of `job` reads, at most the series:
+      * every window of cell `(x, lx)` lies in `[x - win, x + lx + win]`. */
+    def win(job: Job): Long =
+      math.min(job.windowNeed(math.max(lxEnd(xLo), 0L)), tMax - tMin + 1)
+    def hullLo(x: Long, win: Long): Long = math.max(tMin, x - win)
+    def hullHi(x: Long, lx: Long, win: Long): Long = math.min(tMax, x + lx + win)
+
+    /** The grid as one chunk over the hull of its probes, if it holds at
+      * most `cap` cell-constraints and index rows. */
+    def whole(job: Job, cap: Long): Option[Chunk] = {
+      val (total, win) = (cells, this.win(job))
+      val (lo, hi) = (hullLo(xLo, win), hullHi(xHi, lxEnd(xLo), win))
+      if (total > cap / job.spec.constraints.size || hi - lo + 1 > cap) None
+      else Some(Chunk(this, 0, xLo, lxLo, total.toInt, Array(lo, hi), SeriesOps.levelsFor(win)))
+    }
   }
 
-  /** The size gate: every probe window inside `[tMin, tMax]` (x from the
-    * series start on, non-negative offsets, arguments within the series
-    * length) and at most [[CellCap]] cell-constraints and index rows. A
-    * reversed offset domain also goes distributed: the grid's `sequence`
-    * enumerates `[lxLo, lxHi]` downward when `lxLo > lxHi`, which the local
-    * grid does not copy. */
-  def admits(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Boolean =
-    spec.constraints.nonEmpty && b.xLo >= tMin && b.lxLo >= 0 && b.lxLo <= b.lxHi &&
-      spec.constraints.forall(_.args.forall(a => a >= 0 && a <= tMax - tMin)) &&
-      gridCells(b, tMax) <= CellCap / spec.constraints.size && {
-        val r = reach(spec, b, tMin, tMax)
-        r.hi - r.lo + 1 <= CellCap
+  /** A contiguous run of a grid's enumeration: `cells` cells from
+    * `(x0, lx0)`, the `first`-th cell of its grid; `spans` are the sorted
+    * disjoint index-position intervals its probes read, as flat `lo, hi`
+    * pairs; `levels` the sparse-table depth its windows need. */
+  private[graft] final case class Chunk(grid: Grid, first: Long, x0: Long, lx0: Long,
+      cells: Int, spans: Array[Long], levels: Int) {
+    private lazy val starts = spans.grouped(2).map(_(0)).toArray
+    private lazy val offs = spans.grouped(2).map(p => p(1) - p(0) + 1).scanLeft(0L)(_ + _).toArray
+    def rows: Long = offs.last
+
+    /** The slot of index position `t` among the rows the chunk reads, -1
+      * when it reads no such row. */
+    def slot(t: Long): Int = {
+      var i = java.util.Arrays.binarySearch(starts, t)
+      if (i < 0) i = -i - 2
+      if (i < 0 || t > spans(2 * i + 1)) -1 else (offs(i) + t - starts(i)).toInt
+    }
+
+    /** The chunk's cells in enumeration order. */
+    def foreachCell(f: (Long, Long) => Unit): Unit = {
+      var (x, lx, k) = (x0, lx0, 0)
+      while (k < cells) {
+        if (lx > grid.lxEnd(x)) { x += 1; lx = grid.lxLo }
+        f(x, lx)
+        lx += 1; k += 1
       }
-
-  /** Everything the task needs, shipped with it. */
-  private final case class Task(
-      spec: QuerySpec, b: Bound, tMin: Long, tMax: Long, lo: Long, hi: Long,
-      levels: Int, fns: Array[ConstraintFunction])
-
-  /** The query over an [[admits]]-ted grid as a lazy one-task frame of
-    * `(time_id, offset)`, rows in the distributed plan's order. */
-  def apply(idx: SeriesIndex, spec: QuerySpec, b: Bound): DataFrame = {
-    val r = reach(spec, b, idx.tMin, idx.tMax)
-    val task = Task(spec, b, idx.tMin, idx.tMax, r.lo, r.hi, SeriesOps.levelsFor(r.win),
-      spec.constraints.map(c => ConstraintRegistry(c.name)).toArray)
-    idx.df.where(col("t").between(r.lo, r.hi))
-      .select("t", "y", "s", "ms").as(Encoders.product[IndexedPoint])
-      .coalesce(1)
-      .mapPartitions(rows => solve(rows, task))(Encoders.product[Cell])
-      .toDF()
+    }
   }
 
-  /** Spark's `greatest(a, b)`: the first operand unless the second is
-    * strictly greater in SQL order. */
-  private def greatest(a: Double, b: Double): Double = if (compareDoubles(b, a) > 0) b else a
+  /** The second sparse-table position of the window max over `[a, b]`. */
+  private def maxTail(a: Long, b: Long): Long =
+    b - (1L << (63 - java.lang.Long.numberOfLeadingZeros(b - a + 1))) + 1
 
-  private def solve(rows: Iterator[IndexedPoint], task: Task): Iterator[Cell] = {
-    import task._
-    val n = math.max(0L, hi - lo + 1).toInt
-    val y = new Array[Double](n)
-    val s = new Array[Double](n)
-    val ms = new Array[Double](n * levels)
-    var got = 0
-    rows.foreach { p =>
-      val k = (p.t - lo).toInt
-      y(k) = p.y; s(k) = p.s
-      System.arraycopy(p.ms, 0, ms, k * levels, levels)
+  /** A probe that reads nothing: it records the index positions a cell's
+    * windows read. */
+  private final class Recorder(val tMin: Long, val tMax: Long) extends ScalarProbe {
+    private val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def avg(a: Long, b: Long): Double = { seen += a; seen += b; 0.0 }
+    def max(a: Long, b: Long): Double = { seen += a; seen += maxTail(a, b); 0.0 }
+    def positions(job: Job, x: Long, lx: Long): Array[Long] = {
+      seen.clear()
+      job.spec.constraints.zip(job.fns).foreach { case (c, f) => f.value(this, x, lx, c.args) }
+      seen.distinct.sorted.toArray
+    }
+  }
+
+  /** A set of disjoint index-position intervals and its size in rows. */
+  private final class Spans {
+    private val m = new java.util.TreeMap[java.lang.Long, java.lang.Long]
+    var size = 0L
+
+    /** Rows of `[a, b]` not yet in the set. */
+    def fresh(a: Long, b: Long): Long = {
+      val from = Option(m.floorKey(a)).getOrElse(java.lang.Long.valueOf(a))
+      b - a + 1 - m.subMap(from, true, b, true).asScala.map { case (lo, hi) =>
+        math.max(0L, math.min(b, hi) - math.max(a, lo) + 1)
+      }.sum
+    }
+
+    def add(a: Long, b: Long): Unit = {
+      var (lo, hi) = (a, b)
+      // absorb every held interval that overlaps or touches [a, b]
+      var e = Option(m.floorEntry(a)).filter(_.getValue >= a - 1).getOrElse(m.ceilingEntry(a))
+      while (e != null && e.getKey <= hi + 1) {
+        lo = math.min(lo, e.getKey); hi = math.max(hi, e.getValue)
+        size -= e.getValue - e.getKey + 1
+        m.remove(e.getKey)
+        e = m.ceilingEntry(lo)
+      }
+      m.put(lo, hi)
+      size += hi - lo + 1
+    }
+
+    def clear(): Unit = { m.clear(); size = 0 }
+
+    def toArray: Array[Long] = m.asScala.toArray.flatMap { case (lo, hi) => Array[Long](lo, hi) }
+  }
+
+  /** Split a grid into chunks of at most `cap` cell-constraints and `cap`
+    * index rows, in enumeration order. A chunk reads the hull of each run of
+    * one `x`'s offsets; a cell whose own hull is over the cap (an offset
+    * band far out) reads its exact probe positions instead. A chunk holds at
+    * least one cell, so a cap under one cell's reads still makes progress. */
+  private[graft] def plan(g: Grid, job: Job, cap: Long): Vector[Chunk] = {
+    val spec = job.spec
+    val nc = spec.constraints.size
+    require(nc > 0, "a CP query needs a constraint")
+    val total = g.cells
+    if (total == 0) return Vector.empty
+    g.whole(job, cap).foreach(ch => return Vector(ch))
+    val win = g.win(job)
+    val levels = SeriesOps.levelsFor(win)
+
+    val maxCells = math.max(1L, cap / nc)
+    val rec = new Recorder(g.tMin, g.tMax)
+    val out = Vector.newBuilder[Chunk]
+    val spans = new Spans
+    var (first, x0, lx0, cells) = (0L, 0L, 0L, 0L)
+    def close(): Unit = if (cells > 0) {
+      out += Chunk(g, first, x0, lx0, cells.toInt, spans.toArray, levels)
+      first += cells; cells = 0; spans.clear()
+    }
+    def take(x: Long, lx: Long, n: Long): Unit = {
+      if (cells == 0) { x0 = x; lx0 = lx }
+      cells += n
+    }
+    var x = g.xLo
+    while (x <= g.xHi) {
+      val end = g.lxEnd(x)
+      val lo = g.hullLo(x, win)
+      def fits(e: Long): Boolean = spans.size + spans.fresh(lo, g.hullHi(x, e, win)) <= cap
+      var lx = g.lxLo
+      while (lx <= end) {
+        if (cells == maxCells) close()
+        if (fits(lx)) {
+          // the longest run [lx, e] whose hull keeps the chunk within the cap
+          var (a, z) = (lx, math.min(end, lx + maxCells - cells - 1))
+          while (a < z) {
+            val m = a + (z - a + 1) / 2
+            if (fits(m)) a = m else z = m - 1
+          }
+          take(x, lx, a - lx + 1)
+          spans.add(lo, g.hullHi(x, a, win))
+          lx = a + 1
+        } else if (cells > 0 && g.hullHi(x, lx, win) - lo + 1 <= cap) close()
+        else {
+          val ps = rec.positions(job, x, lx)
+          if (cells > 0 && spans.size + ps.count(p => spans.fresh(p, p) == 1) > cap) close()
+          else {
+            take(x, lx, 1)
+            ps.foreach(p => spans.add(p, p))
+            lx += 1
+          }
+        }
+      }
+      x += 1
+    }
+    close()
+    out.result()
+  }
+
+  /** A chunk's index rows, placed by position: the [[ScalarProbe]] its
+    * constraint functions read. */
+  private final class Slice(ch: Chunk) extends ScalarProbe {
+    val tMin: Long = ch.grid.tMin
+    val tMax: Long = ch.grid.tMax
+    private val levels = ch.levels
+    private val n = ch.rows.toInt
+    private val y = new Array[Double](n)
+    private val s = new Array[Double](n)
+    private val ms = new Array[Double](n * levels)
+    private var got = 0
+
+    private val (lo, oneSpan) = (ch.spans(0), ch.spans.length == 2)
+    private def slot(t: Long): Int = if (oneSpan) (t - lo).toInt else ch.slot(t)
+
+    def put(t: Long, yv: Double, sv: Double, msv: Array[Double]): Unit = {
+      val k = slot(t)
+      y(k) = yv; s(k) = sv
+      System.arraycopy(msv, 0, ms, k * levels, levels)
       got += 1
     }
-    require(got == n, s"index slice [$lo, $hi] holds $got of $n rows: the series key is not dense")
-    // MemoProbe.windowAgg's arithmetic, one window at a time
-    val probe = new ScalarProbe {
-      val tMin: Long = task.tMin
-      val tMax: Long = task.tMax
-      def avg(a: Long, b: Long): Double = {
-        val (ia, ib) = ((a - lo).toInt, (b - lo).toInt)
-        (s(ib) - s(ia) + y(ia)) / (b - a + 1).toDouble
-      }
-      def max(a: Long, b: Long): Double = {
-        val j = 63 - java.lang.Long.numberOfLeadingZeros(b - a + 1)
-        val b2 = b - (1L << j) + 1
-        greatest(ms((a - lo).toInt * levels + j), ms((b2 - lo).toInt * levels + j))
-      }
+
+    def check(): Unit = require(got == n,
+      s"index spans ${ch.spans.mkString(",")} hold $got of $n rows: the series key is not dense")
+
+    def avg(a: Long, b: Long): Double = {
+      val (ia, ib) = (slot(a), slot(b))
+      (s(ib) - s(ia) + y(ia)) / (b - a + 1).toDouble
     }
+    def max(a: Long, b: Long): Double = {
+      val j = 63 - java.lang.Long.numberOfLeadingZeros(b - a + 1)
+      greatest(ms(slot(a) * levels + j), ms(slot(maxTail(a, b)) * levels + j))
+    }
+  }
+
+  /** Spark's `greatest(a, b)` (and `least`): the first operand unless the
+    * second is strictly greater (less) in SQL order — as `max` (`min`) keeps
+    * the earlier value on ties. */
+  private def greatest(a: Double, b: Double): Double = if (compareDoubles(b, a) > 0) b else a
+  private def least(a: Double, b: Double): Double = if (compareDoubles(b, a) < 0) b else a
+
+  private def sat(c: Constraint, v: Double): Boolean =
+    c.lo.forall(a => compareDoubles(v, a) >= 0) && c.hi.forall(h => compareDoubles(v, h) <= 0)
+
+  /** Per-constraint minima and maxima of a run of cells. */
+  private final case class Extrema(mins: Array[Double], maxs: Array[Double]) {
+    /** The extrema of this run followed by `next`, as one pass over both. */
+    def andThen(next: Extrema): Extrema = Extrema(
+      mins.zip(next.mins).map { case (a, b) => least(a, b) },
+      maxs.zip(next.maxs).map { case (a, b) => greatest(a, b) })
+  }
+
+  /** One ranked cell on its way to the final order: `pos` is its index in
+    * its grid's enumeration, `key` is -RK for a satisfied cell and RP for
+    * the rest. */
+  private final case class Ranked(sid: Long, pos: Long, x: Long, lx: Long,
+      sat: Boolean, key: Double)
+
+  /** The refinement order: satisfied first, then `key` ascending (RK
+    * descending among the satisfied — tightening — and RP ascending among
+    * the rest — relaxation), ties in enumeration order. */
+  private def order(satP: Boolean, keyP: Double, posP: Long,
+      satQ: Boolean, keyQ: Double, posQ: Long): Int =
+    if (satP != satQ) (if (satP) -1 else 1)
+    else {
+      val d = compareDoubles(keyP, keyQ)
+      if (d != 0) d else java.lang.Long.compare(posP, posQ)
+    }
+
+  private val rankedOrder: Comparator[Ranked] =
+    (p: Ranked, q: Ranked) => order(p.sat, p.key, p.pos, q.sat, q.key, q.pos)
+
+  /** The best `limit` items under `ord` (all of them without a limit), best
+    * first: a bounded max-heap of the best seen so far. */
+  private def best[A <: AnyRef: ClassTag](items: Iterator[A], limit: Option[Int],
+      ord: Comparator[A]): Array[A] = {
+    val kept = limit.fold[Array[A]](items.toArray) { lim =>
+      val heap = new java.util.PriorityQueue[A](math.max(1, lim), ord.reversed())
+      items.foreach { q =>
+        if (heap.size < lim) heap.add(q)
+        else if (lim > 0 && ord.compare(q, heap.peek()) < 0) { heap.poll(); heap.add(q) }
+      }
+      heap.toArray[A](new Array[A](0))
+    }
+    java.util.Arrays.sort(kept, ord)
+    kept
+  }
+
+  /** Every constraint's value at every cell of `ch`, cell-major. */
+  private def evaluate(ch: Chunk, probe: ScalarProbe, job: Job): Array[Double] = {
+    val cons = job.spec.constraints.toArray
+    val nc = cons.length
+    val v = new Array[Double](ch.cells * nc)
+    var k = 0
+    ch.foreachCell { (x, lx) =>
+      var i = 0
+      while (i < nc) { v(k) = job.fns(i).value(probe, x, lx, cons(i).args); i += 1; k += 1 }
+    }
+    v
+  }
+
+  /** The extrema of a chunk's values (cell-major, `nc` per cell). */
+  private def extrema(v: Array[Double], nc: Int): Extrema = {
+    val (mins, maxs) = (v.take(nc), v.take(nc))
+    var k = nc
+    while (k < v.length) {
+      val i = k % nc
+      mins(i) = least(mins(i), v(k)); maxs(i) = greatest(maxs(i), v(k))
+      k += 1
+    }
+    Extrema(mins, maxs)
+  }
+
+  /** A chunk's contribution to the result, best first: under LIMIT k at
+    * most k rows. Unrefined: the cells satisfying every constraint, in
+    * order (reference: server.py:456-460). Refined: every cell scored
+    * against its series' extrema (`ext`, else the chunk's own, the
+    * reference's 'mins'/'maxs', server.py:313-317, 345-349) and ranked by
+    * [[order]]. */
+  private def rank(ch: Chunk, probe: ScalarProbe, job: Job, ext: Option[Extrema])
+      : Iterator[Ranked] = {
+    val spec = job.spec
     val cons = spec.constraints.toArray
     val nc = cons.length
-    val xHi = math.min(b.xHi, tMax - b.lxLo)
-    // the grid in (x, lx) order: the tie-break order of every result
-    def cells: Iterator[(Long, Long)] = (b.xLo to xHi).iterator.flatMap { x =>
-      (b.lxLo to math.min(b.lxHi, tMax - x)).iterator.map(lx => (x, lx))
-    }
-    def sat(c: Constraint, v: Double): Boolean =
-      c.lo.forall(a => compareDoubles(v, a) >= 0) && c.hi.forall(h => compareDoubles(v, h) <= 0)
+    val xs = new Array[Long](ch.cells)
+    val lxs = new Array[Long](ch.cells)
+    var c = 0
+    ch.foreachCell { (x, lx) => xs(c) = x; lxs(c) = lx; c += 1 }
+    def row(q: Int, isSat: Boolean, key: Double) =
+      Ranked(ch.grid.sid, ch.first + q, xs(q), lxs(q), isSat, key)
 
     if (!spec.refined) {
-      // RefinementEngine.allSatisfied, in (x, lx) order
-      val hits = cells.filter { case (x, lx) =>
+      val hits = Iterator.range(0, ch.cells).filter { q =>
         var i = 0
-        while (i < nc && sat(cons(i), fns(i).value(probe, x, lx, cons(i).args))) i += 1
+        while (i < nc && sat(cons(i), job.fns(i).value(probe, xs(q), lxs(q), cons(i).args))) i += 1
         i == nc
-      }.map { case (x, lx) => Cell(x, lx) }
+      }.map(row(_, isSat = true, 0.0))
       return spec.limit.fold(hits)(hits.take)
     }
 
-    val count = gridCells(b, tMax).toInt
-    val xs = new Array[Long](count)
-    val lxs = new Array[Long](count)
-    val v = new Array[Double](count * nc)
-    var c = 0
-    cells.foreach { case (x, lx) =>
-      xs(c) = x; lxs(c) = lx
-      var i = 0
-      while (i < nc) { v(c * nc + i) = fns(i).value(probe, x, lx, cons(i).args); i += 1 }
-      c += 1
-    }
-    // the extrema aggregate: min/max keep the running value on SQL ties
-    val mins = new Array[Double](nc)
-    val maxs = new Array[Double](nc)
-    for (i <- 0 until nc if count > 0) {
-      var mn = v(i); var mx = v(i); var k = 1
-      while (k < count) {
-        val t = v(k * nc + i)
-        if (compareDoubles(t, mn) < 0) mn = t
-        if (compareDoubles(t, mx) > 0) mx = t
-        k += 1
-      }
-      mins(i) = mn; maxs(i) = mx
-    }
-    // RefinementEngine.scored, then the rankOrder key
+    val v = evaluate(ch, probe, job)
+    val Extrema(mins, maxs) = ext.getOrElse(extrema(v, nc))
+    val count = ch.cells
     val isSat = new Array[Boolean](count)
     val key = new Array[Double](count)
     val w = 1.0 / nc
@@ -198,10 +417,17 @@ object LocalSolve {
         val con = cons(i)
         val t = v(k * nc + i)
         if (sat(con, t)) nSat += 1
+        // RD_c (reference: server.py:614-633): 0 inside [a, b]; (t-b)/(max-b)
+        // above; (a-t)/(a-min) below; a None side behaves as t
         val rd = con.hi.filter(h => compareDoubles(t, h) > 0).map(h => (t - h) / (maxs(i) - h))
           .orElse(con.lo.filter(a => compareDoubles(t, a) < 0).map(a => (a - t) / (a - mins(i))))
           .getOrElse(0.0)
         maxRd = if (i == 0) rd else greatest(maxRd, rd)
+        // RK_c = (b-t)/(b-a) for MAX, (a-t)/(b-a) for MIN (reference:
+        // server.py:779-816); an unbounded side takes the series extremum
+        // (the reference would crash, SURVEY §7.3) and a degenerate
+        // interval ranks every cell equally (RK_c = 0) where the reference
+        // raises ZeroDivisionError (server.py:789-792)
         val a = con.lo.getOrElse(mins(i))
         val h = con.hi.getOrElse(maxs(i))
         val num = con.target match {
@@ -212,36 +438,148 @@ object LocalSolve {
         rkSum = if (i == 0) w * rkc else rkSum + w * rkc
         i += 1
       }
+      // VC (server.py:544); RP = 0.5 max_c RD_c + 0.5 VC (server.py:636-664)
       val vc = (nc - nSat).toDouble / nc
       isSat(k) = nSat == nc
       key(k) = if (isSat(k)) -(1.0 - rkSum) else 0.5 * maxRd + 0.5 * vc
       k += 1
     }
-    // sat desc, key asc, then (x, lx) asc — the enumeration order
-    val order: java.util.Comparator[Integer] = (p: Integer, q: Integer) =>
-      if (isSat(p) != isSat(q)) (if (isSat(p)) -1 else 1)
-      else {
-        val d = compareDoubles(key(p), key(q))
-        if (d != 0) d else Integer.compare(p, q)
-      }
-    val ranked: Array[Integer] = spec.limit match {
-      case Some(lim) if lim < count =>
-        // bounded top-k: a max-heap of the best `lim` cells seen so far
-        val heap = new java.util.PriorityQueue[Integer](math.max(1, lim), order.reversed())
-        var q = 0
-        while (q < count && lim > 0) {
-          if (heap.size < lim) heap.add(q)
-          else if (order.compare(q, heap.peek()) < 0) { heap.poll(); heap.add(q) }
-          q += 1
-        }
-        val top = heap.toArray(new Array[Integer](0))
-        java.util.Arrays.sort(top, order)
-        top
-      case _ =>
-        val all = Array.tabulate[Integer](count)(Int.box)
-        java.util.Arrays.sort(all, order)
-        all
-    }
-    ranked.iterator.map(q => Cell(xs(q), lxs(q)))
+    val byRank: Comparator[Integer] =
+      (p: Integer, q: Integer) => order(isSat(p), key(p), p.toLong, isSat(q), key(q), q.toLong)
+    best(Iterator.range(0, count).map(Int.box), spec.limit, byRank).iterator
+      .map(q => row(q, isSat(q), key(q)))
   }
+
+  /** One chunk of one series as one task: `where` → `coalesce(1)` →
+    * `mapPartitions`, one Spark job. */
+  private def oneTask[A: Encoder](idx: SeriesIndex, ch: Chunk)(
+      f: (Chunk, ScalarProbe) => Iterator[A]): DataFrame =
+    idx.df.where(ch.spans.grouped(2).map(p => col("t").between(p(0), p(1))).reduce(_ || _))
+      .select("t", "y", "s", "ms").as(Encoders.product[IndexedPoint])
+      .coalesce(1)
+      .mapPartitions { rows =>
+        val slice = new Slice(ch)
+        rows.foreach(p => slice.put(p.t, p.y, p.s, p.ms))
+        slice.check()
+        f(ch, slice)
+      }
+      .toDF()
+
+  /** Many chunks, one task per chunk: each index row is shuffled to every
+    * chunk whose spans read it. The same shuffled rows serve every `run`. */
+  private final class Tasks(points: RDD[MsIndexedPoint], chunks: Array[Chunk]) {
+    private val shuffled: RDD[(Int, MsIndexedPoint)] = {
+      val bySid = chunks.indices.groupBy(chunks(_).grid.sid)
+      val route = points.sparkContext.broadcast((chunks, bySid))
+      points.flatMap { p =>
+        val (chunks, bySid) = route.value
+        bySid.getOrElse(p.sid, Nil).filter(chunks(_).slot(p.t) >= 0).map(i => (i, p))
+      }.partitionBy(new SeriesOps.IndexPartitioner(chunks.length))
+    }
+
+    /** `f` over every chunk: the `i`-th task runs chunk `i`. */
+    def run[A: ClassTag](f: (Int, Chunk, ScalarProbe) => Iterator[A]): RDD[A] = {
+      val chunks = this.chunks
+      shuffled.mapPartitionsWithIndex { (i, rows) =>
+        val slice = new Slice(chunks(i))
+        rows.foreach { case (_, p) => slice.put(p.t, p.y, p.s, p.ms) }
+        slice.check()
+        f(i, chunks(i), slice)
+      }
+    }
+  }
+
+  /** The query over every grid, as ranked rows: a first pass takes the
+    * extrema of each refined grid that spans several chunks, then each
+    * chunk ranks its cells and the final order keeps the best k per grid
+    * from at most k rows per chunk. */
+  private def chunked(points: RDD[MsIndexedPoint], chunks: Array[Chunk], jb: Job,
+      nGrids: Int): RDD[Ranked] = {
+    val spec = jb.spec
+    val tasks = new Tasks(points, chunks)
+    val split = chunks.groupBy(_.grid.sid).filter(_._2.length > 1).keySet
+    val ext: Map[Long, Extrema] =
+      if (!spec.refined || split.isEmpty) Map.empty
+      else tasks.run { (i, ch, probe) =>
+        if (!split(ch.grid.sid)) Iterator.empty
+        else Iterator((i, extrema(evaluate(ch, probe, jb), spec.constraints.size)))
+      }.collect().sortBy(_._1).groupBy(p => chunks(p._1).grid.sid)
+        .map { case (sid, es) => sid -> es.map(_._2).reduce(_ andThen _) }
+    val limit = spec.limit
+    tasks.run((_, ch, probe) => rank(ch, probe, jb, ext.get(ch.grid.sid)))
+      .map(r => (r.sid, r))
+      .partitionBy(new HashPartitioner(math.max(1, math.min(nGrids,
+        points.sparkContext.defaultParallelism))))
+      .mapPartitions { rows =>
+        rows.toSeq.groupBy(_._1).iterator.flatMap { case (_, rs) =>
+          best(rs.iterator.map(_._2), limit, rankedOrder)
+        }
+      }
+  }
+
+  /** `perChunk` over one series' grid of `b`: one task when the grid is one
+    * chunk, else `many` over its chunks and the index rows they read. */
+  private def overSeries[A <: Product: TypeTag](idx: SeriesIndex, jb: Job, b: Bound, cap: Long)(
+      perChunk: (Chunk, ScalarProbe) => Iterator[A])(
+      many: (RDD[MsIndexedPoint], Array[Chunk]) => RDD[A]): DataFrame = {
+    val enc = Encoders.product[A]
+    plan(Grid(0L, idx.tMin, idx.tMax, b), jb, cap) match {
+      case Vector() => idx.df.sparkSession.emptyDataset(enc).toDF()
+      case Vector(ch) => oneTask(idx, ch)(perChunk)(enc)
+      case chunks =>
+        val (lo, hi) = (chunks.map(_.spans.head).min, chunks.map(_.spans.last).max)
+        val points = idx.df.where(col("t").between(lo, hi))
+          .select(lit(0L).as("sid"), col("t"), col("y"), col("s"), col("ms"))
+          .as(Encoders.product[MsIndexedPoint]).rdd
+        idx.df.sparkSession.createDataset(many(points, chunks.toArray))(enc).toDF()
+    }
+  }
+
+  /** The query over one series' index: a lazy frame of `(time_id, offset)`
+    * in result order. */
+  private[graft] def series(idx: SeriesIndex, spec: QuerySpec, b: Bound, cap: Long): DataFrame = {
+    val jb = job(spec)
+    overSeries(idx, jb, b, cap)((ch, probe) =>
+      rank(ch, probe, jb, None).map(r => Cell(r.x, r.lx)))((points, chunks) =>
+      chunked(points, chunks, jb, 1).map(r => Cell(r.x, r.lx)))
+  }
+
+  /** The query over every grid of a corpus index `(sid, t, y, s, ms)`:
+    * `(sid, time_id, offset)` rows, each series' in result order. */
+  private[graft] def corpus(idx: DataFrame, grids: Seq[Grid], jb: Job, cap: Long): DataFrame = {
+    val spark = idx.sparkSession
+    val chunks = grids.flatMap(plan(_, jb, cap)).toArray
+    if (chunks.isEmpty) spark.emptyDataset(Encoders.product[SeriesCell]).toDF()
+    else {
+      val points = idx.select("sid", "t", "y", "s", "ms").as(Encoders.product[MsIndexedPoint]).rdd
+      spark.createDataset(chunked(points, chunks, jb, grids.size)
+        .map(r => SeriesCell(r.sid, r.x, r.lx)))(Encoders.product[SeriesCell]).toDF()
+    }
+  }
+
+  /** One function's value at every cell of `b` over one series' index, as
+    * `(x, lx, v)` in enumeration order: the reference's UDF map
+    * (server.py:291-351) for one function. */
+  def values(idx: SeriesIndex, fn: ConstraintFunction, args: Seq[Long], b: Bound): DataFrame = {
+    val c = Constraint(fn.name, args, None, None, Target.Max)
+    val spec = QuerySpec("", "", Domain(None, None), Domain(None, None), Seq(c), None,
+      refined = false)
+    val jb = Job(spec, Array(fn))
+    val cells = (ch: Chunk, probe: ScalarProbe) => {
+      val v = evaluate(ch, probe, jb)
+      val out = new Array[CellValue](ch.cells)
+      var k = 0
+      ch.foreachCell { (x, lx) => out(k) = CellValue(x, lx, v(k)); k += 1 }
+      out.iterator
+    }
+    require(SeriesOps.covers(idx.levels, Grid(0L, idx.tMin, idx.tMax, b).win(jb)),
+      s"a ${idx.levels}-level index is too shallow for ${c.name} over $b")
+    overSeries(idx, jb, b, CellCap)(cells)((points, chunks) =>
+      new Tasks(points, chunks).run((_, ch, probe) => cells(ch, probe)))
+  }
+
+  /** Whether `b` runs as one chunk over the hull of its probes: at most
+    * [[CellCap]] cell-constraints and index rows. */
+  def admits(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Boolean =
+    spec.constraints.nonEmpty && Grid(0L, tMin, tMax, b).whole(job(spec), CellCap).isDefined
 }

@@ -1,33 +1,27 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
 
 /** The 100 TB generalization of [[RefinementEngine]]: the same CP-refinement
-  * semantics over a corpus of MANY series `(sid, t, y)`, with every stage
-  * partitioned by `sid`:
+  * semantics over a corpus of MANY series `(sid, t, y)`:
   *
-  *   - index build: `Window.partitionBy(sid).orderBy(t)` — prefix sums and
-  *     sparse-table levels are computed inside each series partition, no
-  *     global sort, no single-partition bottleneck;
-  *   - domain binding: None sides resolve to PER-SERIES extents (a
-  *     broadcastable `(sid, tMin, tMax)` aggregate), reference semantics
-  *     applied independently per series (the reference's two datasets are
-  *     two sids);
-  *   - candidate grid: per-series `explode(sequence)` — partition-local;
-  *   - probes: equi-joins on `(sid, t)` — shuffle hash joins that scale out;
-  *   - extrema: `groupBy(sid)` instead of a global aggregate;
-  *   - refined top-k: `row_number over (partition by sid order by key)` —
-  *     a per-series top-k with bounded state per partition.
+  *   - index build: partitioned by `sid` — prefix sums and sparse-table
+  *     levels are computed inside each series partition, no global sort, no
+  *     single-partition bottleneck;
+  *   - domain binding: None sides resolve to PER-SERIES extents (one
+  *     `(sid, tMin, tMax)` row per series), reference semantics applied
+  *     independently per series (the reference's two datasets are two
+  *     sids);
+  *   - solve: the CP kernel ([[LocalSolve]]) with chunks keyed by `sid` —
+  *     per-series extrema, scoring and top-k, one task per chunk.
   *
-  * [[RefinementEngine]] stays the single-series fast path (its global top-k
-  * compiles to TakeOrderedAndProject); this engine is the horizontal path.
   * Scoring (VC/RD/RK/RP), the rank order, the window probes and the index
-  * depth are [[RefinementEngine]]'s and [[SeriesOps]]' own, keyed by `sid`
-  * — see the cross-checks in MultiSeriesSpec.
+  * depth are the kernel's and [[SeriesOps]]' own, the same code the
+  * single-series engine runs — see the cross-checks in MultiSeriesSpec.
   */
 object MultiSeriesEngine {
 
@@ -35,17 +29,6 @@ object MultiSeriesEngine {
     * for the caller to unpersist once `df` has been materialized. */
   final case class MsIndex(df: DataFrame, bounds: DataFrame, levels: Int,
       pinned: Seq[DataFrame] = Nil)
-
-  /** The [[WindowProbe]] view of an [[MsIndex]]: same constraint formulas as
-    * the single-series path, with per-series `tMin`/`tMax` grid columns and
-    * `(sid, t)`-keyed lookups. Position-memoizing — see [[MemoProbe]];
-    * create one instance per query. */
-  def probe(idx: MsIndex): WindowProbe = new MemoProbe {
-    val tMinCol: Column = col("tMin")
-    val tMaxCol: Column = col("tMax")
-    protected def lookupAll(grid: DataFrame, pos: Column, prefix: String): DataFrame =
-      MultiSeriesEngine.lookupAt(grid, idx, pos, prefix)
-  }
 
   /** Index a multi-series frame `(sid, t, y)`; t dense ascending per sid.
     * `boundsOpt` lets a caller that already derived the per-series bounds
@@ -167,87 +150,35 @@ object MultiSeriesEngine {
     }
   }
 
-  private def lookupAt(grid: DataFrame, idx: MsIndex, pos: Column, prefix: String): DataFrame = {
-    val probe = idx.df.select(
-      (col("sid").as(s"${prefix}_sid") +: Seq("t", "y", "s", "ms").map(c =>
-        col(c).as(s"${prefix}_$c"))): _*)
-    grid
-      .join(probe,
-        col("sid") === col(s"${prefix}_sid") && pos === col(s"${prefix}_t"), "left")
-      .drop(s"${prefix}_sid", s"${prefix}_t")
-  }
-
-  /** Per-series candidate grid with per-series domain binding: None sides
-    * resolve to (tMin, tMax) of EACH series; offset default [1, extent]. */
-  def candidateGrid(idx: MsIndex, spec: QuerySpec): DataFrame = {
-    val xLo = spec.xDomain.lo.map(lit(_)).getOrElse(col("tMin"))
-    val xHi = spec.xDomain.hi.map(lit(_)).getOrElse(col("tMax"))
-    val lxLo = spec.lxDomain.lo.map(lit(_)).getOrElse(lit(1L))
-    val lxHi = spec.lxDomain.hi.map(lit(_)).getOrElse(col("tMax") - col("tMin") + 1)
-    idx.bounds
-      .withColumn("x", explode(sequence(xLo.cast("long"), xHi.cast("long"))))
-      .withColumn("lx", explode(sequence(lxLo.cast("long"), lxHi.cast("long"))))
-      .where(col("x") + col("lx") <= col("tMax"))
-      .select("sid", "x", "lx", "tMin", "tMax")
-  }
-
   /** Execute the query independently over every series; returns
-    * `(sid, time_id, offset)` in canonical per-series order. */
+    * `(sid, time_id, offset)` in canonical per-series order, materialized:
+    * release it with [[Checkpoints.release]]. */
   def execute(spark: SparkSession, series: DataFrame, spec: QuerySpec,
-      maxRunRows: Long = DefaultMaxRunRows): DataFrame = {
-    // one per-sid stats pass (tiny checkpointed result, one row per sid):
-    // feeds domain binding, the oversized-series routing decision, AND the
-    // grid bounds — replacing the post-build bounds re-aggregation
-    val stats = series.groupBy("sid")
-      .agg(min("t").as("tMin"), max("t").as("tMax"), count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // when lx is unbounded ("whole series") the sparse-table depth needs
-    // the max extent as a driver value (levels is a structural plan
-    // parameter — the same binding step the reference does)
-    val lxHi = spec.lxDomain.hi.getOrElse {
-      stats.agg(max(col("tMax") - col("tMin") + lit(1))).head().getLong(0) - 1
+      maxRunRows: Long = DefaultMaxRunRows): DataFrame =
+    execute(spark, series, spec, maxRunRows, LocalSolve.CellCap)
+
+  /** [[execute]] with chunks of at most `cap` cell-constraints and index
+    * rows: tests force series into many chunks with a small cap. */
+  private[graft] def execute(spark: SparkSession, series: DataFrame, spec: QuerySpec,
+      maxRunRows: Long, cap: Long): DataFrame = {
+    import spark.implicits._
+    // one per-sid stats pass, collected (one row per series): it binds each
+    // series' domains, sizes the sparse table, routes the oversized series
+    // and plans the chunks
+    val perSid = series.groupBy(col("sid").cast("long").as("sid"))
+      .agg(min("t").cast("long"), max("t").cast("long"), count(lit(1)))
+      .as[(Long, Long, Long, Long)].collect()
+    val grids = perSid.toSeq.map { case (sid, tMin, tMax, _) =>
+      LocalSolve.Grid(sid, tMin, tMax, RefinementEngine.bindDomains(spec, tMin, tMax))
     }
-    val maxWin = RefinementEngine.windowNeed(spec, lxHi)
-    // materialize the index ONCE (lineage truncated): every probe join
-    // reads the checkpointed blocks instead of re-running the kernel build
-    // inside its own broadcast; series too large for the per-partition
-    // kernel are routed to the partitioned two-pass build
+    val job = LocalSolve.job(spec)
+    val maxWin = grids.map(_.win(job)).foldLeft(1L)(math.max)
+    val stats = perSid.toSeq.toDF("sid", "tMin", "tMax", "n")
     val built = indexRouted(series, maxWin, stats, maxRunRows)
-    val ckpt = built.df.localCheckpoint(true)
-    built.pinned.foreach(_.unpersist()) // materialized into ckpt
-    val bounds = stats.select("sid", "tMin", "tMax")
-    // bounded domains probe only [xLo - win, xHi + lxHi + win] in every
-    // series: pre-filter the probe view so lookups join O(domain) rows per
-    // series, not O(series) (bounds still read the full index)
-    val probeDf = (spec.xDomain.lo, spec.xDomain.hi, spec.lxDomain.hi) match {
-      case (Some(xl), Some(xh), Some(lxh)) =>
-        val slack = 1L << built.levels
-        ckpt.where(col("t").between(xl - slack, xh + lxh + slack))
-      case _ => ckpt // an unbounded side binds per series; keep the full view
-    }
-    val idx = MsIndex(probeDf, bounds, built.levels)
-    var g = candidateGrid(idx, spec)
-    val cs = spec.constraints.zipWithIndex
-    val p = probe(idx)
-    cs.foreach { case (c, i) => g = ConstraintRegistry(c.name)(g, p, c.args, s"c$i") }
-    // drop the memoized probe intermediates before scoring/persisting
-    g = g.select((Seq("sid", "x", "lx") ++ cs.map { case (_, i) => s"c$i" }).map(col): _*)
-
-    // per-series top-k: a bounded-state ranking window per sid
-    def topK(df: DataFrame, order: Seq[Column]): DataFrame =
-      spec.limit.fold(df) { k =>
-        df.withColumn("__rn", row_number().over(Window.partitionBy("sid").orderBy(order: _*)))
-          .where(col("__rn") <= k)
-      }.select(col("sid"), col("x").as("time_id"), col("lx").as("offset"))
-        .orderBy("sid", "time_id", "offset")
-    def ranked(grid: DataFrame): DataFrame =
-      topK(RefinementEngine.scored(grid, spec, Seq("sid")), RefinementEngine.rankOrder)
-
-    if (!spec.refined) topK(g.where(RefinementEngine.allSatisfied(spec)), Seq(col("x"), col("lx")))
-    // the stats and index checkpoints are reachable only through the grid,
-    // so the bounded result releases them too; the other paths return them
-    // in their lineage for the caller's Checkpoints.release
-    else if (spec.limit.isDefined) RefinementEngine.bounded(g, stats, ckpt)(ranked)
-    else ranked(g)
+    // materialized, so the routed giants' persisted indexes can be released
+    val out = Checkpoints.mark(LocalSolve.corpus(built.df, grids, job, cap)
+      .orderBy("sid", "time_id", "offset"))
+    built.pinned.foreach(_.unpersist())
+    out
   }
 }

@@ -20,10 +20,10 @@ import org.apache.spark.storage.StorageLevel
   *     window MAX becomes two O(1) lookups:
   *     `max[a,b] = greatest(ms(a)[j], ms(b-2^j+1)[j])`, j = floor(log2(len)).
   *
-  * Lookups are plain equi-joins on the integer time key, so at cluster scale
-  * they are shuffle/broadcast hash joins — no per-cell scans, no driver loop.
-  * Total cost: O(N log maxWin) build + O(cells) probes, vs the reference's
-  * O(cells x window).
+  * The CP kernel ([[LocalSolve]]) places the index rows a chunk reads by
+  * their integer time key and probes them in memory — no per-cell scans, no
+  * driver loop. Total cost: O(N log maxWin) build + O(cells) probes, vs the
+  * reference's O(cells x window).
   *
   * NOTE on partitioning: the declarative [[index]] build (the reference
   * formulation) uses `Window.orderBy(t)` — one partition, kept as the
@@ -100,7 +100,7 @@ object SeriesOps {
 
   /** Routes halo rows to the partition that consumes them (key IS the
     * target partition index). */
-  private final class IndexPartitioner(override val numPartitions: Int)
+  private[engine] final class IndexPartitioner(override val numPartitions: Int)
       extends org.apache.spark.Partitioner {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
@@ -298,54 +298,5 @@ object SeriesOps {
       j += 1
     }
     m
-  }
-
-  /** Join `grid` to the index at position `pos` (an expression over grid
-    * columns), adding `{prefix}_y`, `{prefix}_s` and `{prefix}_ms`.
-    * Left join: positions outside [tMin,tMax] yield nulls (callers clamp).
-    *
-    * NOTE on broadcast reuse: forcing all probes onto ONE shared exchange
-    * is not expressible against Catalyst — column pruning and inferred
-    * filters rewrite each probe's broadcast child differently (verified:
-    * identical full-width projections still canonicalize apart once pruned),
-    * and that pruning is the behavior we want. Probe-count reduction happens
-    * one level up instead: [[MemoProbe]] merges probes that share a position
-    * expression, so a 2-constraint refined query issues 4 index joins (one
-    * per distinct position), not 6 (one per constraint leg) — measured in
-    * PLANS.md. Each remaining broadcast ships only the columns its sharers
-    * read.
-    */
-  private def lookupAt(
-      grid: DataFrame, idx: SeriesIndex, pos: Column, prefix: String): DataFrame = {
-    val probe = idx.df.select(Seq("t", "y", "s", "ms").map(c => col(c).as(s"${prefix}_$c")): _*)
-    grid.join(probe, pos === col(s"${prefix}_t"), "left").drop(s"${prefix}_t")
-  }
-
-  /** floor(log2(len)) as an int column; len >= 1, exact for len <= 2^53.
-    *
-    * The double log is only ulp-accurate, so near powers of two a naive
-    * floor(+epsilon) can land one level off (probing a sparse-table range
-    * with b2 < a, or past the array end). Instead correct the approximate
-    * level by comparing against exact powers of two — 2^j is exactly
-    * representable as a double for every level we can hold (j < 64).
-    */
-  private[engine] def log2Floor(len: Column): Column = {
-    val d = len.cast("double")
-    val j0 = floor(log(2.0, d)).cast("int")
-    val p = pow(lit(2.0), j0.cast("double"))
-    when(p > d, j0 - lit(1))
-      .when(p * lit(2.0) <= d, j0 + lit(1))
-      .otherwise(j0)
-  }
-
-  /** The [[WindowProbe]] view of a [[SeriesIndex]]: constraint formulas are
-    * written once against this surface and run identically on the
-    * multi-series path ([[MultiSeriesEngine.probe]]). Position-memoizing —
-    * see [[MemoProbe]]; create one instance per query. */
-  def probe(idx: SeriesIndex): WindowProbe = new MemoProbe {
-    val tMinCol: Column = lit(idx.tMin)
-    val tMaxCol: Column = lit(idx.tMax)
-    protected def lookupAll(grid: DataFrame, pos: Column, prefix: String): DataFrame =
-      SeriesOps.lookupAt(grid, idx, pos, prefix)
   }
 }

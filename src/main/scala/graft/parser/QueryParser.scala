@@ -30,6 +30,12 @@ object QueryParser {
   private def longSide(s: String): Option[Long] =
     if (s == "None") None
     else Some(s.toLongOption.getOrElse(fail(s"domain bound '$s' is out of range")))
+  /** An offset side is a window length: a negative one describes a window
+    * that ends before it starts. */
+  private def offsetSide(s: String): Option[Long] = longSide(s).map { v =>
+    if (v < 0) fail(s"offset bound '$s' is negative")
+    v
+  }
   private def doubleSide(s: String): Option[Double] =
     if (s == "None") None else Some(s.toDouble)
 
@@ -56,7 +62,7 @@ object QueryParser {
           table = table,
           column = column,
           xDomain = Domain(longSide(xLo), longSide(xHi)),
-          lxDomain = Domain(longSide(lxLo), longSide(lxHi)),
+          lxDomain = Domain(offsetSide(lxLo), offsetSide(lxHi)),
           constraints = constraints,
           limit = Option(limit).map(l =>
             l.toIntOption.getOrElse(fail(s"LIMIT '$l' is out of range"))),
@@ -83,11 +89,11 @@ object QueryParser {
         val argList =
           if (args.trim.isEmpty) Seq.empty[Long]
           else args.split(",").toIndexedSeq.map { a =>
-            try a.trim.toLong
-            catch {
-              case _: NumberFormatException =>
-                fail(s"non-integer argument '$a' for '$name'")
-            }
+            // an argument is a lookahead or lookbehind length
+            val v = a.trim.toLongOption.getOrElse(
+              fail(s"non-integer argument '$a' for '$name'"))
+            if (v < 0) fail(s"negative argument '$a' for '$name'")
+            v
           }
         if (argList.size != arity)
           fail(s"'$name' takes $arity argument(s); got ${argList.size}")

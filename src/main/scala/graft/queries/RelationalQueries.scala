@@ -657,9 +657,9 @@ object RelationalQueries {
       .orderBy("o_orderpriority")
 
   /** The horizontal (100 TB) CP path, oracle-gated: the same reference
-    * semantics run independently over a corpus of series (sid = user_id % 4),
-    * every stage partitioned by sid — per-series grid, per-series probes,
-    * per-series LIMIT via a bounded-state ranking window. */
+    * semantics run independently over a corpus of series (sid = user_id % 4)
+    * — per-series binding, index and LIMIT, the CP kernel's chunks keyed by
+    * sid. */
   def cpMultiSeries(s: SparkSession, d: String): DataFrame = {
     val series = TimeSeriesQueries.events(s, d)
       .select((col("user_id") % 4).as("sid"), col("event_id"), col("value"))

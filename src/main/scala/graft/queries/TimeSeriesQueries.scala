@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{RefinementEngine, SeriesOps}
+import graft.engine.{AvgAmp, ConstraintFunction, LocalSolve, MaxAmpExcessLeft,
+  MaxAmpExcessRight, RefinementEngine, SeriesOps}
 import graft.parser.QueryParser
 
 /** Time-series / CP-refinement queries over the driver testdata, used by
@@ -66,56 +67,42 @@ object TimeSeriesQueries {
   def cachedSeries(s: SparkSession, dir: String): DataFrame =
     cachedIndex(s, dir).df.select(col("t"), col("y"))
 
-  /** Candidate grid with avg/max window columns via the sparse-table index.
-    * Returns grid with columns x, lx plus requested per-window aggregates. */
-  private def indexedGrid(
-      s: SparkSession, dir: String,
-      xLo: Long, xHi: Long, lxLo: Long, lxHi: Long,
-      maxWin: Long): (DataFrame, SeriesOps.SeriesIndex) = {
-    require(maxWin <= 64, "cachedIndex is sized for windows up to 64 rows")
-    val idx = cachedIndex(s, dir)
-    val b = RefinementEngine.Bound(xLo, xHi, lxLo, lxHi)
-    (RefinementEngine.candidateGrid(s, b, idx.tMax), idx)
-  }
+  /** One constraint's value grid over the session index: `(x, lx, v)` for
+    * every cell of `[xLo, xHi] x [lxLo, lxHi]` with `x + lx <= tMax`,
+    * computed by the CP kernel ([[graft.engine.LocalSolve.values]]). */
+  private def valueGrid(
+      s: SparkSession, dir: String, fn: ConstraintFunction, args: Seq[Long],
+      xLo: Long, xHi: Long, lxLo: Long, lxHi: Long): DataFrame =
+    LocalSolve.values(cachedIndex(s, dir), fn, args,
+      RefinementEngine.Bound(xLo, xHi, lxLo, lxHi))
 
   /** A3 — windowed average over the candidate grid (reference:
     * server.py:960-964). */
-  def windowAvg(s: SparkSession, dir: String): DataFrame = {
-    val (grid, idx) = indexedGrid(s, dir, 1, 1000, 10, 20, 21)
-    SeriesOps.probe(idx).windowAgg(grid, col("x"), col("x") + col("lx"), "w",
-        needAvg = true, needMax = false)
-      .select(col("x"), col("lx"), round(col("w_avg"), 6).as("win_avg"))
+  def windowAvg(s: SparkSession, dir: String): DataFrame =
+    valueGrid(s, dir, AvgAmp, Nil, 1, 1000, 10, 20)
+      .select(col("x"), col("lx"), round(col("v"), 6).as("win_avg"))
       .orderBy("x", "lx")
-  }
 
   /** A4 — max_amp_excess_right(10) values over the grid
     * (reference: server.py:967-992). */
-  def excessRight(s: SparkSession, dir: String): DataFrame = {
-    val (grid, idx) = indexedGrid(s, dir, 1, 1000, 10, 20, 21)
-    graft.engine.MaxAmpExcessRight(grid, SeriesOps.probe(idx), Seq(10), "v")
+  def excessRight(s: SparkSession, dir: String): DataFrame =
+    valueGrid(s, dir, MaxAmpExcessRight, Seq(10), 1, 1000, 10, 20)
       .select(col("x"), col("lx"), round(col("v"), 6).as("excess_right"))
       .orderBy("x", "lx")
-  }
 
   /** A5 — max_amp_excess_left(10) values (reference: server.py:995-1016). */
-  def excessLeft(s: SparkSession, dir: String): DataFrame = {
-    val (grid, idx) = indexedGrid(s, dir, 1, 1000, 10, 20, 21)
-    graft.engine.MaxAmpExcessLeft(grid, SeriesOps.probe(idx), Seq(10), "v")
+  def excessLeft(s: SparkSession, dir: String): DataFrame =
+    valueGrid(s, dir, MaxAmpExcessLeft, Seq(10), 1, 1000, 10, 20)
       .select(col("x"), col("lx"), round(col("v"), 6).as("excess_left"))
       .orderBy("x", "lx")
-  }
 
   /** A6 — grid-global constraint extrema (the reference's 'mins'/'maxs'
     * entries, server.py:313-317,345-349). */
-  def gridExtrema(s: SparkSession, dir: String): DataFrame = {
-    val (grid, idx) = indexedGrid(s, dir, 1, 2000, 5, 30, 31)
-    val g = SeriesOps.probe(idx).windowAgg(grid, col("x"), col("x") + col("lx"), "w",
-      needAvg = true, needMax = false)
-    g.agg(
-      round(min("w_avg"), 6).as("min_c0"),
-      round(max("w_avg"), 6).as("max_c0"),
+  def gridExtrema(s: SparkSession, dir: String): DataFrame =
+    valueGrid(s, dir, AvgAmp, Nil, 1, 2000, 5, 30).agg(
+      round(min("v"), 6).as("min_c0"),
+      round(max("v"), 6).as("max_c0"),
       count(lit(1)).as("grid_cells"))
-  }
 
   /** A CP query over the session index. The series handed to `execute` is
     * the index's own `(t, y)` view: `execute` reads it only when the index

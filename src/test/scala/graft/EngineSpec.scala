@@ -35,7 +35,9 @@ class EngineSpec extends AnyFunSuite {
 
   def naiveGrid(spec: QuerySpec, b: RefinementEngine.Bound): Seq[(Int, Int, Seq[Double])] =
     for {
-      x <- (b.xLo.toInt to b.xHi.toInt)
+      // cells whose windows lie in the series: a cell before its start
+      // would probe a missing time_id, which the reference skips
+      x <- (math.max(b.xLo.toInt, 1) to b.xHi.toInt)
       lx <- (b.lxLo.toInt to b.lxHi.toInt)
       if x + lx <= n
     } yield (x, lx, spec.constraints.map(c => naiveValue(c, x, lx)))
@@ -125,15 +127,23 @@ class EngineSpec extends AnyFunSuite {
     }.sortBy { case ((x, lx), (s, key)) => (s, key, x, lx) }
   }
 
-  /** The two executors of [[RefinementEngine.execute]]; every naive-oracle
-    * test below runs on each. The local one asserts its gate admits the
-    * query, so it cannot silently run distributed. */
+  /** A cap that splits the grid of `spec` into at least three chunks (the
+    * default when it holds fewer than three cells). */
+  def splitCap(spec: QuerySpec): Long = {
+    val b = RefinementEngine.bindDomains(spec, 1, n)
+    if (LocalSolve.Grid(0L, 1, n, b).cells < 3) LocalSolve.CellCap
+    else LocalSolveSpec.splitCap(spec, b, 1, n)
+  }
+
+  /** The kernel run as one chunk and as at least three; every naive-oracle
+    * test below runs on each. The one-chunk run asserts the gate admits the
+    * query, so it cannot silently run chunked. */
   val executors: Seq[(String, QuerySpec => org.apache.spark.sql.DataFrame)] = Seq(
-    "local" -> { spec =>
+    "one chunk" -> { spec =>
       assert(LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n))
       RefinementEngine.execute(spark, series, spec)
     },
-    "distributed" -> (spec => RefinementEngine.executeDistributed(spark, series, spec)))
+    "chunked" -> (spec => RefinementEngine.execute(spark, series, spec, None, splitCap(spec))))
 
   def run(q: String, exec: QuerySpec => org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
     exec(QueryParser.parse(q))
@@ -181,6 +191,10 @@ class EngineSpec extends AnyFunSuite {
         "WHERE avg_amp() in [1,2] MAX",
       "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX " +
         "LIMIT 3000000000",
+      // an argument is a lookahead or lookbehind, an offset a window length
+      "SELECT time_id, offset IN_DOMAIN [5,30],[2,5] FROM t.c " +
+        "WHERE max_amp_excess_left(-3) in [0,5] MAX",
+      "SELECT time_id, offset IN_DOMAIN [5, 30], [-2, 5] FROM t.c WHERE avg_amp() in [0,5] MAX",
       "")
     bad.foreach(q => assertThrows[ParseException](QueryParser.parse(q)))
   }
@@ -284,18 +298,19 @@ class EngineSpec extends AnyFunSuite {
 
   test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
     val idx = SeriesOps.index(series, 16)
-    import org.apache.spark.sql.functions._
-    val pairs = for (a <- 1 to n; len <- 1 to 16; if a + len - 1 <= n)
-      yield (a.toLong, (a + len - 1).toLong)
-    val pairsDf = pairs.toDF("a", "b")
-    // the probe surface every constraint and query reads windows through
-    val got = SeriesOps.probe(idx).windowAgg(pairsDf, col("a"), col("b"), "w",
-        needAvg = true, needMax = true)
-      .select("a", "b", "w_avg", "w_max").collect()
-    got.foreach { r =>
-      val (a, b) = (r.getLong(0).toInt, r.getLong(1).toInt)
-      assert(math.abs(r.getDouble(2) - winAvg(a, b)) < 1e-9, s"avg($a,$b)")
-      assert(r.getDouble(3) == winMax(a, b), s"max($a,$b)")
+    // the probe surface every constraint and query reads windows through,
+    // read through the kernel's value grid: x = a, lx = b - a
+    import EngineSpec.WindowMax
+    def grid(fn: ConstraintFunction): Map[(Int, Int), Double] =
+      LocalSolve.values(idx, fn, Nil, RefinementEngine.Bound(1, n, 0, 15)).collect()
+        .map(r => (r.getLong(0).toInt, r.getLong(0).toInt + r.getLong(1).toInt) -> r.getDouble(2))
+        .toMap
+    val (avgs, maxs) = (grid(AvgAmp), grid(WindowMax))
+    val pairs = for (a <- 1 to n; len <- 1 to 16; if a + len - 1 <= n) yield (a, a + len - 1)
+    assert(avgs.keySet == pairs.toSet && maxs.keySet == pairs.toSet)
+    pairs.foreach { case (a, b) =>
+      assert(math.abs(avgs((a, b)) - winAvg(a, b)) < 1e-9, s"avg($a,$b)")
+      assert(maxs((a, b)) == winMax(a, b), s"max($a,$b)")
     }
   }
 
@@ -358,8 +373,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("kernel-index prebuilt path returns exactly the declarative-index results") {
     // the production path (cachedIndex -> execute(prebuilt)) runs the
-    // partitioned kernel build + MemoProbe; the declarative path builds via
-    // window functions. Same queries, byte-equal (t, offset) output.
+    // partitioned kernel build; the declarative path builds via window
+    // functions. Same queries, byte-equal (t, offset) output.
     lazy val kernelIdx = SeriesOps.indexFast(series, 64)
     val qs = Seq(
       "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
@@ -373,9 +388,9 @@ class EngineSpec extends AnyFunSuite {
       val spec = QueryParser.parse(q)
       val declarative = RefinementEngine.execute(spark, series, spec)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      // on both executors
-      for (exec <- Seq(RefinementEngine.execute _, RefinementEngine.executeDistributed _)) {
-        val viaKernel = exec(spark, series, spec, Some(kernelIdx))
+      // as one chunk and as at least three
+      for (cap <- Seq(LocalSolve.CellCap, splitCap(spec))) {
+        val viaKernel = RefinementEngine.execute(spark, series, spec, Some(kernelIdx), cap)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         assert(viaKernel == declarative, q)
       }
@@ -445,6 +460,38 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("bind: x before the series, reversed domains, long arguments follow the reference") {
+    def expected(spec: QuerySpec): Seq[(Int, Int)] = {
+      val grid = naiveGrid(spec, RefinementEngine.bindDomains(spec, 1, n))
+      if (grid.isEmpty) Nil
+      else if (spec.refined) naiveRefined(spec)
+      else grid.filter { case (_, _, vs) =>
+        spec.constraints.zip(vs).forall { case (c, v) => sat(c, v) }
+      }.map(g => (g._1, g._2)).sorted
+    }
+    def query(dom: String, con: String, tail: String = "") =
+      s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE $con MAX$tail"
+    val cases = Seq(
+      // the x side clips to the series start: cells before it are skipped
+      "x before the series start" -> query("[0, 30], [2, 5]", "avg_amp() in [0, 5]"),
+      "x before the series start, refined" ->
+        query("[-5, 30], [2, 5]", "max_amp_excess_left(4) in [0, 5]", " LIMIT REFINED 6"),
+      // the reference's range(lo, hi + 1) yields nothing
+      "a reversed offset domain" -> query("[5, 30], [5, 2]", "avg_amp() in [0, 5]"),
+      "a reversed x domain" ->
+        query("[30, 5], [2, 5]", "avg_amp() in [0, 5]", " LIMIT REFINED 4"),
+      // the functions clamp the window at the series end
+      "an argument past the series length" ->
+        query("[5, 30], [2, 5]", "max_amp_excess_right(80) in [-3, 0]"),
+      "an argument past the series length, refined" ->
+        query("[40, 75], [2, 5]", "max_amp_excess_right(80) in [0, 5]", " LIMIT REFINED 5"))
+    for ((why, q) <- cases; (name, exec) <- executors) {
+      val expect = expected(QueryParser.parse(q))
+      assert(run(q, exec) == expect, s"$why ($name)")
+      if (!why.startsWith("a reversed")) assert(expect.nonEmpty, why)
+    }
+  }
+
   test("None domain sides bind from series extent; offset default domain") {
     val spec = QueryParser.parse(
       "SELECT time_id, offset IN_DOMAIN [None, None], [None, None] FROM t.c " +
@@ -455,6 +502,16 @@ class EngineSpec extends AnyFunSuite {
 }
 
 object EngineSpec {
+  /** The window maximum as a constraint function, unregistered. */
+  object WindowMax extends ConstraintFunction {
+    val name = "window_max"
+    val arity = 0
+    def maxWindow(lxHi: Long, args: Seq[Long]): Long = lxHi + 1
+    def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
+      probe.max(x, x + lx)
+  }
+
+
   // deterministic pseudo-random series, N=80, values in [0, 10)
   val n = 80
   val ys: Array[Double] =

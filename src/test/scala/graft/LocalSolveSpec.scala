@@ -9,10 +9,11 @@ import graft.engine.RefinementEngine.Bound
 import graft.model._
 import graft.parser.QueryParser
 
-/** The local CP executor ([[LocalSolve]]) against the distributed plan it
-  * stands in for: the same rows in the same order under the same schema on
-  * randomized specs, and the size gate. Its one-job, nothing-pinned
-  * lifecycle on the suite's CP queries is pinned in PlanSpec. */
+/** The CP kernel ([[LocalSolve]]): the same rows in the same order under the
+  * same schema whether a grid runs as one chunk or many, on randomized
+  * specs; the one-chunk gate; and the cap on what a chunk holds. Its
+  * one-job, nothing-pinned lifecycle on the suite's CP queries is pinned in
+  * PlanSpec. */
 class LocalSolveSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -24,10 +25,10 @@ class LocalSolveSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  private def isLocal(df: DataFrame): Boolean =
+  private def isOneTask(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
 
-  test("local ≡ distributed: same rows, order and schema (seeded, 60 cases)") {
+  test("one chunk ≡ chunked: same rows, order and schema (seeded, 60 cases)") {
     val rnd = new scala.util.Random(23)
     val fns = ConstraintRegistry.all.toSeq.sortBy(_.name)
     def side(v: => Long): String = if (rnd.nextInt(4) == 0) "None" else v.toString
@@ -96,15 +97,16 @@ class LocalSolveSpec extends AnyFunSuite {
       var relaxed, tightened, nonEmpty = 0
       for (((q, spec), i) <- shapes.zipWithIndex) {
         assert(LocalSolve.admits(spec, bounds(i), 1, n), q)
+        val cap = LocalSolveSpec.splitCap(spec, bounds(i), 1, n)
+        assert(LocalSolveSpec.chunks(spec, bounds(i), 1, n, cap).size >= 3, q)
         // both index builds: the declarative one and the kernel prebuilt
         val prebuilt = if (i % 2 == 0) Some(idx) else None
-        val local = RefinementEngine.execute(spark, series, spec, prebuilt)
-        val dist = RefinementEngine.executeDistributed(spark, series, spec, prebuilt)
-        assert(isLocal(local) && !isLocal(dist), q)
-        assert(local.schema == dist.schema, q)
-        val got = rows(local)
-        assert(got == rows(dist), q)
-        Checkpoints.release(dist)
+        val one = RefinementEngine.execute(spark, series, spec, prebuilt)
+        val chunked = RefinementEngine.execute(spark, series, spec, prebuilt, cap)
+        assert(isOneTask(one) && !isOneTask(chunked), q)
+        assert(one.schema == chunked.schema, q)
+        val got = rows(one)
+        assert(got == rows(chunked), q)
         if (got.nonEmpty) nonEmpty += 1
         spec.limit.filter(_ => spec.refined).foreach { k =>
           val satisfying = RefinementEngine.execute(spark, series,
@@ -154,26 +156,80 @@ class LocalSolveSpec extends AnyFunSuite {
     assert(!LocalSolve.admits(spec(1), far, 1, 1L << 40))
   }
 
-  test("gate: grids probing outside the series take the distributed plan") {
+  /** The shuffle records each task read while `body` ran, for the tasks
+    * that read any. */
+  private def taskReads(body: => Unit): Seq[Long] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).map(_.shuffleReadMetrics.recordsRead).filter(_ > 0)
+          .foreach(r => reads.add(r))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1000) // the listener bus is asynchronous
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    reads.asScala.toSeq
+  }
+
+  test("chunks hold at most cap cells and index rows: one x over the cap, a far band") {
     val idx = SeriesOps.indexFast(series, 128)
     try {
-      def plan(q: String, edit: QuerySpec => QuerySpec = identity): (Boolean, Boolean) = {
-        val spec = edit(QueryParser.parse(q))
-        val admitted = LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n)
-        (admitted, isLocal(RefinementEngine.execute(spark, series, spec, Some(idx))))
+      def check(q: String, cap: Long, minChunks: Int): Unit = {
+        val spec = QueryParser.parse(q)
+        val b = RefinementEngine.bindDomains(spec, 1, n)
+        val chunks = LocalSolveSpec.chunks(spec, b, 1, n, cap)
+        assert(chunks.size >= minChunks, q)
+        chunks.foreach { ch =>
+          assert(ch.cells * spec.constraints.size <= cap && ch.rows <= cap, s"$q: $ch")
+        }
+        val expect = rows(RefinementEngine.execute(spark, series, spec, Some(idx)))
+        assert(expect.nonEmpty, q)
+        var got = Seq.empty[(Long, Long)]
+        val reads = taskReads {
+          got = rows(RefinementEngine.execute(spark, series, spec, Some(idx), cap))
+        }
+        assert(got == expect, q)
+        // a one-task plan reads exactly its chunk's rows (the kernel checks
+        // the count); over many chunks, every task that reads index rows
+        // holds at most `cap` of them, and the final order reads at most k
+        // rows per chunk
+        if (chunks.size > 1) assert(reads.nonEmpty && reads.forall(_ <= cap), s"$q: $reads")
       }
-      def query(dom: String, con: String) =
-        s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE $con in [0, 5] MAX"
-      assert(plan(query("[1, 30], [2, 5]", "max_amp_excess_left(4)")) == ((true, true)))
-      val outside = Seq(
-        "x before the series start" -> plan(query("[0, 30], [2, 5]", "avg_amp()")),
-        "a negative offset" -> plan(query("[5, 30], [-2, 5]", "avg_amp()")),
-        "a reversed offset domain" -> plan(query("[5, 30], [5, 2]", "avg_amp()")),
-        "an argument past the series length" ->
-          plan(query("[5, 30], [2, 5]", "max_amp_excess_right(80)")),
-        "a negative argument" -> plan(query("[5, 30], [2, 5]", "max_amp_excess_left(3)"),
-          s => s.copy(constraints = s.constraints.map(_.copy(args = Seq(-3L))))))
-      outside.foreach { case (why, p) => assert(p == ((false, false)), why) }
+      // one x whose offsets alone run over a 48 cell-constraint cap (24
+      // cells): the split falls inside that x
+      check("SELECT time_id, offset IN_DOMAIN [3, 3], [0, 70] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX and max_amp_excess_left(2) in [None, 1] MIN " +
+        "LIMIT REFINED 5", 48, 3)
+      // four cells at a far offset: every cell's hull is over the cap, so a
+      // chunk reads only the positions its probes touch
+      val c = 32L
+      val far = s"SELECT time_id, offset IN_DOMAIN [1, 2], [$c, ${c + 1}] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX and max_amp_excess_right(3) in [0, None] MAX " +
+        "LIMIT REFINED 3"
+      val spec = QueryParser.parse(far)
+      val b = RefinementEngine.bindDomains(spec, 1, n)
+      assert(!LocalSolve.Grid(0, 1, n, b).whole(LocalSolve.job(spec), c).isDefined)
+      val chunks = LocalSolveSpec.chunks(spec, b, 1, n, c)
+      assert(chunks.size == 1 && chunks.head.spans.length > 2, chunks)
+      check(far, c, 1)
     } finally idx.df.unpersist()
+  }
+}
+
+object LocalSolveSpec {
+  /** The kernel's chunks of `b` over a series `[tMin, tMax]` at `cap`. */
+  def chunks(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long, cap: Long)
+      : Vector[LocalSolve.Chunk] =
+    LocalSolve.plan(LocalSolve.Grid(0L, tMin, tMax, b), LocalSolve.job(spec), cap)
+
+  /** A cap that splits the grid of `b` into at least three chunks. */
+  def splitCap(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Long = {
+    val cells = LocalSolve.Grid(0L, tMin, tMax, b).cells
+    assert(cells >= 3, s"$b holds $cells cells")
+    math.max(1L, cells / 3 * spec.constraints.size)
   }
 }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions.{lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{MultiSeriesEngine, RefinementEngine}
+import graft.engine.{LocalSolve, MultiSeriesEngine, RefinementEngine}
 import graft.parser.QueryParser
 
-/** Cross-checks the partitioned multi-series engine against the single-series
-  * engine run independently per series: same formulas, same clamps, same
-  * per-series top-k.
+/** Cross-checks the multi-series engine against the single-series engine
+  * run independently per series: same formulas, same clamps, same
+  * per-series top-k, also when a series spans several chunks.
   */
 class MultiSeriesSpec extends AnyFunSuite {
 
@@ -97,9 +97,18 @@ class MultiSeriesSpec extends AnyFunSuite {
     assert(targets.size == 2)
     assert(specs.exists(s => Seq(s.xDomain.lo, s.xDomain.hi, s.lxDomain.lo, s.lxDomain.hi)
       .contains(None)))
-    var relaxed, tightened = 0
+    var relaxed, tightened, chunkedRefined = 0
     for ((q, spec) <- shapes.zip(specs)) {
-      val got = MultiSeriesEngine.execute(spark, uneven, spec)
+      // a cap that splits the largest series into at least two chunks
+      val grids = lens.toSeq.map { case (sid, len) =>
+        LocalSolve.Grid(sid, 1, len, RefinementEngine.bindDomains(spec, 1, len))
+      }
+      val cap = math.max(1L, grids.map(_.cells).max / 2 * spec.constraints.size)
+      val job = LocalSolve.job(spec)
+      assert(grids.exists(g => LocalSolve.plan(g, job, cap).size > 1), q)
+      if (spec.refined) chunkedRefined += 1
+      val got = MultiSeriesEngine.execute(spark, uneven, spec,
+          MultiSeriesEngine.DefaultMaxRunRows, cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val expect = lens.keys.toSeq.flatMap { sid =>
         RefinementEngine.execute(spark, singles(sid), spec)
@@ -118,6 +127,7 @@ class MultiSeriesSpec extends AnyFunSuite {
       }
     }
     assert(relaxed > 0 && tightened > 0, s"relaxed=$relaxed tightened=$tightened")
+    assert(chunkedRefined > 0)
   }
 
   test("refined LIMIT queries release their stats and index checkpoints") {

@@ -50,20 +50,38 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("CP refined top-k also avoids a full sort") {
-    import graft.engine.{RefinementEngine, SeriesOps}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import graft.engine.{LocalSolve, RefinementEngine, SeriesOps}
     import graft.parser.QueryParser
     import spark.implicits._
     val series = (1 to 100).map(i => (i.toLong, i * 0.5)).toDF("t", "y")
     val spec = QueryParser.parse(
       "SELECT time_id, offset IN_DOMAIN [1, 50], [2, 5] FROM t.c " +
         "WHERE avg_amp() in [10, 20] MAX LIMIT REFINED 5")
-    // inspect the lazy pipeline execute() runs internally — execute() itself
-    // returns a localCheckpoint'ed frame (lineage truncated, cache released)
+    // the grid's 200 cells in chunks of at most 40
+    val (cap, k) = (40L, 5)
     val b = RefinementEngine.bindDomains(spec, 1, 100)
+    val chunks = LocalSolve.plan(LocalSolve.Grid(0L, 1, 100, b), LocalSolve.job(spec), cap).size
+    assert(chunks >= 3)
     val idx = SeriesOps.index(series, RefinementEngine.windowNeed(spec, b.lxHi))
-    val grid = RefinementEngine.constraintGrid(spark, idx, spec, b)
-    val df = RefinementEngine.refinedTopK(grid, spec, Some(5))
-    assert(df.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
+    val df = RefinementEngine.execute(spark, series, spec, Some(idx), cap)
+    val finalReads = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.taskMetrics != null) {
+          finalReads.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(df.collect().length == k)
+      Thread.sleep(1000) // the listener bus is asynchronous
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // no Sort over the grid: each chunk keeps its best k, and the final
+    // order reads at most k rows per chunk
+    val plan = df.queryExecution.executedPlan.toString + df.rdd.toDebugString
+    assert(!plan.contains("Sort") && !plan.contains("TakeOrderedAndProject"), plan)
+    assert(finalReads.get > 0 && finalReads.get <= k * chunks, s"${finalReads.get} rows")
   }
 
   private val cpQueries =
@@ -104,7 +122,7 @@ class PlanSpec extends AnyFunSuite {
     val idx = TimeSeriesQueries.cachedIndex(spark, sf)
     def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = cpQueries.map { q =>
       val df = SparkEntry.queries(q)(spark, sf)
-      // the local executor's one-task plan
+      // the kernel's one-task plan
       assert(df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined, q)
       try df.collect().toSeq finally graft.engine.Checkpoints.release(df)
     }

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * from [[graft.engine.SessionArtifacts]] (plus the cross-session
   * [[graft.engine.IndexCache]] and [[graft.cli.Cleanup]], which sweeps
   * both), and no query file keeps its own memo map. The CP refinement core
-  * keeps one copy: one file defines the score columns, and only the
-  * declarative reference index build orders a window over the whole
-  * series. */
+  * keeps one copy: the kernel scores cells in one file and no file defines
+  * a score column, and only the declarative reference index build orders a
+  * window over the whole series. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -49,13 +49,28 @@ class SourceHygieneSpec extends AnyFunSuite {
     } == Nil)
   }
 
-  test("the rk/rp score columns are defined in exactly one file") {
+  test("no file defines an rk/rp score column") {
     // a row_number rank that happens to be called rk is not a score column
-    val defining = sources.collect {
+    assert(sources.collect {
       case (p, text) if """withColumn\("r[kp]",(?!\s*row_number)""".r.findFirstIn(text).isDefined =>
-        p.getFileName.toString
+        p.toString
+    } == Nil)
+  }
+
+  test("SQLOrderingUtil.compareDoubles (the CP kernel's double order) appears only in LocalSolve") {
+    assert(offenders("""SQLOrderingUtil\s*\.\s*compareDoubles|import\s+[\w.]*SQLOrderingUtil""",
+      Set("LocalSolve.scala")) == Nil)
+  }
+
+  test("constraint functions have one, scalar, form: no Column plan in Constraints.scala") {
+    val constraints = sources.collectFirst {
+      case (p, text) if p.endsWith(Paths.get("engine", "Constraints.scala")) => text
     }
-    assert(defining == Seq("RefinementEngine.scala"))
+    assert(constraints.isDefined)
+    Seq("""\bWindowProbe\b""", """\bMemoProbe\b""", """org\.apache\.spark\.sql\.Column\b""",
+      """import\s+org\.apache\.spark\.sql\.\{[^}]*\bColumn\b""").foreach { re =>
+      assert(re.r.findFirstIn(constraints.get).isEmpty, re)
+    }
   }
 
   test("an un-partitioned Window.orderBy appears only in SeriesOps") {
