@@ -55,10 +55,10 @@ object Bench {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       li.groupBy("l_returnflag").count().collect()
       li.limit(10).collect()
-      // the per-directory series index is a session-level artifact shared by
-      // every time-series query (the reference persists its UDF map to disk
-      // the same way, server.py:249-286) — build it here so TS timings
-      // measure probe work, not the one-time build
+      // the per-directory persisted series is a session-level artifact
+      // shared by every time-series query (the reference persists its UDF
+      // map to disk the same way, server.py:249-286) — build it here so TS
+      // timings measure probe work, not the one-time build
       graft.queries.TimeSeriesQueries.cachedIndex(spark, sfDir).df.count()
     } catch { case e: Throwable =>
       System.err.println(s"[graft] session warm-up failed: ${e.getMessage}")

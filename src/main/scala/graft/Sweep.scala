@@ -12,11 +12,13 @@ import graft.queries.TimeSeriesQueries
   * server.py:37).
   *
   * Usage: runMain graft.Sweep [sfDir] [outCsv] [maxIters]
-  * Emits csv: iter,udf_size,fix_domains_s,index_s,execute_s
+  * Emits csv: iter,udf_size,fix_domains_s,execute_s
   *
   * `execute_s` is the production `RefinementEngine.execute(prebuilt)` wall
-  * (collected): one task while the grid is one chunk of at most
-  * `LocalSolve.CellCap` cell-constraints, one task per chunk beyond.
+  * over the persisted series (collected): one task while the grid is one
+  * chunk of at most `LocalSolve.CellCap` cell-constraints, one task per
+  * chunk beyond. Nothing is built per iteration: the kernel reads the raw
+  * rows.
   */
 object Sweep {
   def main(args: Array[String]): Unit = {
@@ -25,17 +27,13 @@ object Sweep {
     val maxIters = args.lift(2).map(_.toInt).getOrElse(20)
     val spark = GraftSession.build()
 
-    val series = TimeSeriesQueries.series(spark, sfDir).persist()
-    val bounds = {
-      val r = series.agg(org.apache.spark.sql.functions.min("t"),
-        org.apache.spark.sql.functions.max("t")).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    val idx = SeriesOps.persisted(TimeSeriesQueries.series(spark, sfDir))
+    val bounds = (idx.tMin, idx.tMax)
     // the reference's sweep query shape: 3 constraints, LIMIT REFINED 50
     // (scalability_experiment_scipt.py:13-19), domains grown alternately
     var xHi = 10L; var lxHi = 10L; var growX = true
     val rows = new StringBuilder(
-      "iter,udf_size,fix_domains_s,index_s,execute_s\n")
+      "iter,udf_size,fix_domains_s,execute_s\n")
     var iter = 0
     while (iter < maxIters && xHi <= bounds._2) {
       val spec = QuerySpec("events", "value",
@@ -49,19 +47,13 @@ object Sweep {
         val t0 = System.nanoTime(); val r = body; (r, (System.nanoTime() - t0) / 1e9)
       }
       val (b, tFix) = t(RefinementEngine.bindDomains(spec, bounds._1, bounds._2))
-      // the production build (the one IndexCache runs); it materializes
-      // the index itself, so the phase attribution is honest
-      val (idx, tIdx) = t(SeriesOps.indexFast(series, RefinementEngine.windowNeed(spec, b.lxHi)))
       val cells = LocalSolve.gridCells(b, bounds._2)
       val (nOut, tExec) = t {
-        val df = RefinementEngine.execute(spark, series, spec, Some(idx))
+        val df = RefinementEngine.execute(spark, idx.df, spec, Some(idx))
         try df.collect().length finally Checkpoints.release(df)
       }
-      idx.df.unpersist()
-      rows.append(
-        f"$iter,$cells,$tFix%.4f,$tIdx%.4f,$tExec%.4f\n")
-      println(f"[sweep] iter=$iter cells=$cells k_out=$nOut " +
-        f"fix=$tFix%.3f idx=$tIdx%.3f execute=$tExec%.3f")
+      rows.append(f"$iter,$cells,$tFix%.4f,$tExec%.4f\n")
+      println(f"[sweep] iter=$iter cells=$cells k_out=$nOut fix=$tFix%.3f execute=$tExec%.3f")
       if (growX) xHi += 20 else lxHi += 20
       growX = !growX
       iter += 1

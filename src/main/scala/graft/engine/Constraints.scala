@@ -1,9 +1,10 @@
 package graft.engine
 
 /** The window-aggregate probe surface a [[ConstraintFunction]] is written
-  * against: one window at a time over a chunk's index rows
-  * ([[LocalSolve]]), the prefix sums answering a mean and the sparse table a
-  * maximum, each in O(1). */
+  * against: one window at a time over a chunk's raw series rows
+  * ([[LocalSolve]]). A mean is a left-to-right sum from the window's start,
+  * extended as the window's end grows; a maximum reads the chunk's own
+  * sparse table in O(1). */
 trait ScalarProbe {
   def tMin: Long
   def tMax: Long
@@ -30,21 +31,22 @@ trait ConstraintFunction extends Serializable {
   def name: String
   def arity: Int
 
-  /** Largest window length (rows) this function probes for a given grid cell;
-    * used to size the sparse table. */
-  def maxWindow(lxHi: Long, args: Seq[Long]): Long
+  /** How far past its cell this function reads, given its arguments alone:
+    * every window it probes for cell `(x, lx)` lies in
+    * `[x - reach, x + lx + reach]`. */
+  def reach(args: Seq[Long]): Long
 
-  /** The value at cell `(x, lx)` (`x + lx <= tMax`). Every window it
-    * probes lies in `[x - w, x + lx + w]`, `w` = [[maxWindow]]. */
+  /** The value at cell `(x, lx)` (`x + lx <= tMax`), probing only windows
+    * within [[reach]] of the cell. */
   def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double
 }
 
 /** Mean amplitude over [x, x+lx] inclusive (reference: server.py:955-964,
-  * call site 330-335). Prefix-sum formulation: two lookups per cell. */
+  * call site 330-335). */
 object AvgAmp extends ConstraintFunction {
   val name = "avg_amp"
   val arity = 0
-  def maxWindow(lxHi: Long, args: Seq[Long]): Long = lxHi + 1
+  def reach(args: Seq[Long]): Long = 0L
   def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
     probe.avg(x, x + lx)
 }
@@ -54,7 +56,7 @@ object AvgAmp extends ConstraintFunction {
 object MaxAmpExcessRight extends ConstraintFunction {
   val name = "max_amp_excess_right"
   val arity = 1
-  def maxWindow(lxHi: Long, args: Seq[Long]): Long = math.max(lxHi + 1, args.head + 1)
+  def reach(args: Seq[Long]): Long = args.head
   def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double = {
     val xp = x + lx
     probe.max(x, xp) - probe.max(xp, math.min(xp + args.head, probe.tMax))
@@ -66,7 +68,7 @@ object MaxAmpExcessRight extends ConstraintFunction {
 object MaxAmpExcessLeft extends ConstraintFunction {
   val name = "max_amp_excess_left"
   val arity = 1
-  def maxWindow(lxHi: Long, args: Seq[Long]): Long = math.max(lxHi + 1, args.head + 1)
+  def reach(args: Seq[Long]): Long = args.head
   def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
     probe.max(x, x + lx) - probe.max(math.max(x - args.head, probe.tMin), x)
 }

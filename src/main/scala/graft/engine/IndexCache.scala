@@ -1,23 +1,19 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{max, min}
 
 import graft.model.QuerySpec
 
-/** Cross-session disk cache for built series indexes — the faithful
-  * analogue of the reference's pickle cache of its UDF map
-  * (reference: server.py:249-286), minus the manual filename editing: the
-  * key derives from (table identity, column), staleness is checked against
-  * the source's modification time, and depth sufficiency against the
-  * query's window need. The index parquet round-trips the exact
-  * `(t, y, s, ms)` rows, so a cached load probes identically to the build
-  * that produced it.
+/** Cross-session disk cache for persisted series — the faithful analogue
+  * of the reference's pickle cache of its UDF map (reference:
+  * server.py:249-286), minus the manual filename editing: the key derives
+  * from (table identity, column) and staleness is checked against the
+  * source's modification time. The cache holds the raw `(t, y)` rows the CP
+  * kernel reads, nothing derived, so one entry serves every query on the
+  * series, whatever its windows.
   */
 object IndexCache {
   import SeriesOps.SeriesIndex
-
-  final case class Meta(tMin: Long, tMax: Long, levels: Int, srcMtime: Long)
 
   /** Cache directory when the caller names none: `GRAFT_INDEX_CACHE`,
     * else `$TMPDIR/graft_index_cache`. */
@@ -38,7 +34,7 @@ object IndexCache {
   private def dirKey(table: String, column: String): String =
     s"${sanitize(table)}__${sanitize(column)}__${md5Key(table + "\u0000" + column, 6)}"
 
-  /** Session-level memo of loaded/built indexes keyed by cache dir: a
+  /** Session-level memo of loaded/built series keyed by cache dir: a
     * long-lived session querying the same (table, column) repeatedly
     * reuses ONE persisted copy instead of pinning a fresh one per call.
     * Entries carry the source mtime they were built against, so staleness
@@ -55,26 +51,17 @@ object IndexCache {
 
   private def metaFile(dir: java.io.File) = new java.io.File(dir, "meta.txt")
 
-  private def readMeta(dir: java.io.File): Option[Meta] =
+  /** The source mtime the cached entry was written against. */
+  private def readMtime(dir: java.io.File): Option[Long] =
     if (!metaFile(dir).isFile) None
-    else {
-      val kv = java.nio.file.Files.readString(metaFile(dir).toPath)
-        .linesIterator.flatMap { l =>
-          l.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-        }.toMap
-      try Some(Meta(kv("tMin").toLong, kv("tMax").toLong,
-        kv("levels").toInt, kv("srcMtime").toLong))
-      catch { case _: Exception => None }
-    }
+    else java.nio.file.Files.readString(metaFile(dir).toPath).linesIterator
+      .collectFirst { case l if l.startsWith("srcMtime=") => l.stripPrefix("srcMtime=") }
+      .flatMap(_.toLongOption)
 
-  private def writeMeta(dir: java.io.File, m: Meta): Unit =
-    java.nio.file.Files.writeString(metaFile(dir).toPath,
-      s"tMin=${m.tMin}\ntMax=${m.tMax}\nlevels=${m.levels}\nsrcMtime=${m.srcMtime}\n")
-
-  /** Load the cached index for `(table, column)` when present, not stale,
-    * and deep enough for `spec`'s windows; otherwise build from `series`
-    * (the partitioned two-pass kernel) and write through. Returns
-    * `(index, cacheHit)`.
+  /** Load the cached series for `(table, column)` when present and not
+    * stale; otherwise write `series` through and load that. Returns
+    * `(series, cacheHit)`. `spec` does not affect the result: the entry
+    * holds the raw rows, which answer any query's windows.
     */
   def getOrBuild(
       spark: SparkSession,
@@ -87,42 +74,31 @@ object IndexCache {
     val dir = new java.io.File(cacheDir, key)
     val dataPath = new java.io.File(dir, "data").toString
     val mt = maxMtime(table)
-    def needWin(tMin: Long, tMax: Long): Long =
-      RefinementEngine.windowNeed(spec, RefinementEngine.bindDomains(spec, tMin, tMax).lxHi)
+    // persisted and materialized: after the bounds job the probes read
+    // block storage, so a file deleted mid-query cannot fail it lazily
+    def load(): SeriesIndex = SeriesOps.persisted(spark.read.parquet(dataPath))
     def build(): (SeriesIndex, Boolean) = {
-      val bounds = series.agg(min("t"), max("t")).head()
-      val idx = SeriesOps.indexFast(series, needWin(bounds.getLong(0), bounds.getLong(1)))
-      dir.mkdirs()
-      idx.df.write.mode("overwrite").parquet(dataPath)
-      writeMeta(dir, Meta(idx.tMin, idx.tMax, idx.levels, mt))
-      (idx, false)
+      SeriesOps.raw(series).write.mode("overwrite").parquet(dataPath)
+      java.nio.file.Files.writeString(metaFile(dir).toPath, s"srcMtime=$mt\n")
+      (load(), false)
     }
-    // same-session repeats reuse the one persisted copy; a stale or too
-    // shallow one is unpersisted before its successor loads — else every
-    // source change pins another copy, and a re-read of the same data path
-    // would match the superseded cache entry
+    // same-session repeats reuse the one persisted copy; a stale one is
+    // unpersisted before its successor loads — else every source change
+    // pins another copy, and a re-read of the same data path would match
+    // the superseded cache entry
     Option(memo.get(key)) match {
       case Some((sess, cached, cachedMt)) if sess eq spark =>
-        if (cachedMt == mt && SeriesOps.covers(cached.levels, needWin(cached.tMin, cached.tMax)))
-          return (cached, true)
+        if (cachedMt == mt) return (cached, true)
         memo.remove(key)
         cached.df.unpersist()
       case _ => ()
     }
-    val result = readMeta(dir) match {
-      case Some(m) if m.srcMtime == mt && SeriesOps.covers(m.levels, needWin(m.tMin, m.tMax)) =>
+    val result =
+      if (readMtime(dir).contains(mt))
         // a reaped/torn data dir (tmp cleaners, concurrent writers) must
-        // rebuild, not crash. Persist AND materialize inside the guard:
-        // after count() the probes read block storage, so a file deleted
-        // mid-query can no longer fail the query lazily.
-        try {
-          val df = spark.read.parquet(dataPath)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          (SeriesIndex(df, m.tMin, m.tMax, m.levels), true)
-        } catch { case _: Exception => build() }
-      case _ => build()
-    }
+        // rebuild, not crash
+        try (load(), true) catch { case _: Exception => build() }
+      else build()
     memo.put(key, (spark, result._1, mt))
     result
   }

@@ -2,7 +2,6 @@ package graft.engine
 
 import java.util.Comparator
 
-import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
@@ -13,35 +12,41 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.model._
-import graft.engine.MultiSeriesEngine.MsIndexedPoint
 import graft.engine.RefinementEngine.Bound
-import graft.engine.SeriesOps.{IndexedPoint, SeriesIndex}
+import graft.engine.SeriesOps.SeriesIndex
 
 /** The CP kernel: the only executor of a CP query, for one series
   * ([[RefinementEngine.execute]]) or a corpus ([[MultiSeriesEngine.execute]]),
   * and of the suite's value grids ([[values]]).
   *
   * Its unit of work is a CHUNK: a contiguous run of one series' `(x, lx)`
-  * enumeration holding at most [[CellCap]] cell-constraints and at most
-  * [[CellCap]] index rows. A task places each index row it reads by position
-  * (rows arrive in no particular order), evaluates every constraint through
-  * its scalar form ([[ConstraintFunction.value]]) over the prefix sums and
-  * the sparse table, scores the cells and keeps a bounded top-k under LIMIT:
+  * enumeration holding at most [[CellCap]] cell-constraints, together with
+  * the one series row range `[lo, hi]` its windows read, at most [[CellCap]]
+  * rows. A task places each raw `(t, y)` row it reads by position (rows
+  * arrive in no particular order), derives every window mean and maximum
+  * in memory, evaluates every constraint through its scalar form
+  * ([[ConstraintFunction.value]]), scores the cells and keeps a bounded
+  * top-k under LIMIT, as the reference aggregates one sliced array per
+  * query (server.py:190-206, 332-333):
   *
   *   - one series whose grid is one chunk (every interactive-size query)
   *     runs as ONE Spark task and job:
-  *     `idx.df.where(t in spans).coalesce(1).mapPartitions(kernel)`;
+  *     `series.where(t between lo and hi).coalesce(1).mapPartitions(kernel)`;
   *   - larger grids, and a corpus with chunks keyed by `sid`, run one task
-  *     per chunk: index rows are shuffled to the chunks whose spans read
+  *     per chunk: series rows are shuffled to the chunks whose ranges hold
   *     them. When a refined query's series
   *     spans several chunks, a first pass over the chunks takes that series'
   *     extrema. Each chunk ranks its own cells; the final order and limit see
   *     at most k rows per chunk.
   *
-  * Doubles compare in Spark SQL's order (`SQLOrderingUtil.compareDoubles`:
-  * -0.0 == 0.0, NaN largest), min/max keep the earlier value on ties, RK is
-  * summed left to right: the rows and their order do not depend on how the
-  * grid is chunked (pinned in LocalSolveSpec). Nothing is persisted.
+  * A window mean is a left-to-right sum anchored at the window's start and a
+  * window maximum combines two levels of a sparse table whose cells cover
+  * the same absolute rows in every chunk, so neither depends on where a
+  * chunk starts. Doubles compare in Spark SQL's order
+  * (`SQLOrderingUtil.compareDoubles`: -0.0 == 0.0, NaN largest), min/max
+  * keep the earlier value on ties, RK is summed left to right: the rows and
+  * their order do not depend on how the grid is chunked (pinned in
+  * LocalSolveSpec). Nothing is persisted.
   *
   * Determinism note (SURVEY §7.3): the reference's result order is
   * nondeterministic (random branching, bst_class.py:147); ties here break by
@@ -50,9 +55,10 @@ import graft.engine.SeriesOps.{IndexedPoint, SeriesIndex}
 object LocalSolve {
 
   /** Largest chunk, in cell-constraints (cells × constraints), and the
-    * bound on the index rows a chunk reads. Known traffic: the benchmark's
+    * bound on the series rows a chunk reads. Known traffic: the benchmark's
     * interactive stream stays under 3×10^5, the suite's CP queries at 104k:
-    * each runs as one chunk. */
+    * each runs as one chunk. A cell whose own windows span more rows fails
+    * at plan time. */
   val CellCap: Long = 1L << 21
 
   /** One result row: the field names are the result's column names. */
@@ -60,15 +66,14 @@ object LocalSolve {
   final case class SeriesCell(sid: Long, time_id: Long, offset: Long)
   /** One constraint's value at one cell ([[values]]). */
   final case class CellValue(x: Long, lx: Long, v: Double)
+  /** One raw series row of a corpus. */
+  final case class Point(sid: Long, t: Long, y: Double)
 
   /** A query and its constraint functions, shipped with every task. */
   private[graft] final case class Job(spec: QuerySpec, fns: Array[ConstraintFunction]) {
-    /** The window length (rows) the sparse table must answer when the
-      * offsets reach `lxHi`: the widest constraint probe, and at least the
-      * `lx + 1` rows of the longest candidate window. */
-    def windowNeed(lxHi: Long): Long =
-      spec.constraints.zip(fns).map { case (c, f) => f.maxWindow(lxHi, c.args) }
-        .foldLeft(lxHi + 1)(math.max)
+    /** How far past its cell any constraint reads ([[ConstraintFunction.reach]]). */
+    val reach: Long =
+      spec.constraints.zip(fns).map { case (c, f) => f.reach(c.args) }.foldLeft(0L)(math.max)
   }
   private[graft] def job(spec: QuerySpec): Job =
     Job(spec, spec.constraints.map(c => ConstraintRegistry(c.name)).toArray)
@@ -103,40 +108,28 @@ object LocalSolve {
     def lxEnd(x: Long): Long = math.min(b.lxHi, tMax - x)
     def cells: Long = gridCells(Bound(xLo, xHi, lxLo, b.lxHi), tMax)
 
-    /** The longest window any probe of `job` reads, at most the series:
-      * every window of cell `(x, lx)` lies in `[x - win, x + lx + win]`. */
-    def win(job: Job): Long =
-      math.min(job.windowNeed(math.max(lxEnd(xLo), 0L)), tMax - tMin + 1)
-    def hullLo(x: Long, win: Long): Long = math.max(tMin, x - win)
-    def hullHi(x: Long, lx: Long, win: Long): Long = math.min(tMax, x + lx + win)
+    /** `job`'s reach over this series: no window extends past either end. */
+    def reach(job: Job): Long = math.min(job.reach, tMax - tMin)
+    /** The series rows `[hullLo, hullHi]` cell `(x, lx)` reads. */
+    def hullLo(x: Long, reach: Long): Long = math.max(tMin, x - reach)
+    def hullHi(x: Long, lx: Long, reach: Long): Long = math.min(tMax, x + lx + reach)
 
-    /** The grid as one chunk over the hull of its probes, if it holds at
-      * most `cap` cell-constraints and index rows. */
+    /** The grid as one chunk, if it holds at most `cap` cell-constraints and
+      * reads at most `cap` rows. */
     def whole(job: Job, cap: Long): Option[Chunk] = {
-      val (total, win) = (cells, this.win(job))
-      val (lo, hi) = (hullLo(xLo, win), hullHi(xHi, lxEnd(xLo), win))
+      val r = reach(job)
+      val (total, lo, hi) = (cells, hullLo(xLo, r), hullHi(xHi, lxEnd(xLo), r))
       if (total > cap / job.spec.constraints.size || hi - lo + 1 > cap) None
-      else Some(Chunk(this, 0, xLo, lxLo, total.toInt, Array(lo, hi), SeriesOps.levelsFor(win)))
+      else Some(Chunk(this, 0, xLo, lxLo, total.toInt, lo, hi))
     }
   }
 
   /** A contiguous run of a grid's enumeration: `cells` cells from
-    * `(x0, lx0)`, the `first`-th cell of its grid; `spans` are the sorted
-    * disjoint index-position intervals its probes read, as flat `lo, hi`
-    * pairs; `levels` the sparse-table depth its windows need. */
+    * `(x0, lx0)`, the `first`-th cell of its grid, whose windows read the
+    * series rows `[lo, hi]`. */
   private[graft] final case class Chunk(grid: Grid, first: Long, x0: Long, lx0: Long,
-      cells: Int, spans: Array[Long], levels: Int) {
-    private lazy val starts = spans.grouped(2).map(_(0)).toArray
-    private lazy val offs = spans.grouped(2).map(p => p(1) - p(0) + 1).scanLeft(0L)(_ + _).toArray
-    def rows: Long = offs.last
-
-    /** The slot of index position `t` among the rows the chunk reads, -1
-      * when it reads no such row. */
-    def slot(t: Long): Int = {
-      var i = java.util.Arrays.binarySearch(starts, t)
-      if (i < 0) i = -i - 2
-      if (i < 0 || t > spans(2 * i + 1)) -1 else (offs(i) + t - starts(i)).toInt
-    }
+      cells: Int, lo: Long, hi: Long) {
+    def rows: Long = hi - lo + 1
 
     /** The chunk's cells in enumeration order. */
     def foreachCell(f: (Long, Long) => Unit): Unit = {
@@ -149,111 +142,41 @@ object LocalSolve {
     }
   }
 
-  /** The second sparse-table position of the window max over `[a, b]`. */
-  private def maxTail(a: Long, b: Long): Long =
-    b - (1L << (63 - java.lang.Long.numberOfLeadingZeros(b - a + 1))) + 1
-
-  /** A probe that reads nothing: it records the index positions a cell's
-    * windows read. */
-  private final class Recorder(val tMin: Long, val tMax: Long) extends ScalarProbe {
-    private val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def avg(a: Long, b: Long): Double = { seen += a; seen += b; 0.0 }
-    def max(a: Long, b: Long): Double = { seen += a; seen += maxTail(a, b); 0.0 }
-    def positions(job: Job, x: Long, lx: Long): Array[Long] = {
-      seen.clear()
-      job.spec.constraints.zip(job.fns).foreach { case (c, f) => f.value(this, x, lx, c.args) }
-      seen.distinct.sorted.toArray
-    }
-  }
-
-  /** A set of disjoint index-position intervals and its size in rows. */
-  private final class Spans {
-    private val m = new java.util.TreeMap[java.lang.Long, java.lang.Long]
-    var size = 0L
-
-    /** Rows of `[a, b]` not yet in the set. */
-    def fresh(a: Long, b: Long): Long = {
-      val from = Option(m.floorKey(a)).getOrElse(java.lang.Long.valueOf(a))
-      b - a + 1 - m.subMap(from, true, b, true).asScala.map { case (lo, hi) =>
-        math.max(0L, math.min(b, hi) - math.max(a, lo) + 1)
-      }.sum
-    }
-
-    def add(a: Long, b: Long): Unit = {
-      var (lo, hi) = (a, b)
-      // absorb every held interval that overlaps or touches [a, b]
-      var e = Option(m.floorEntry(a)).filter(_.getValue >= a - 1).getOrElse(m.ceilingEntry(a))
-      while (e != null && e.getKey <= hi + 1) {
-        lo = math.min(lo, e.getKey); hi = math.max(hi, e.getValue)
-        size -= e.getValue - e.getKey + 1
-        m.remove(e.getKey)
-        e = m.ceilingEntry(lo)
-      }
-      m.put(lo, hi)
-      size += hi - lo + 1
-    }
-
-    def clear(): Unit = { m.clear(); size = 0 }
-
-    def toArray: Array[Long] = m.asScala.toArray.flatMap { case (lo, hi) => Array[Long](lo, hi) }
-  }
-
   /** Split a grid into chunks of at most `cap` cell-constraints and `cap`
-    * index rows, in enumeration order. A chunk reads the hull of each run of
-    * one `x`'s offsets; a cell whose own hull is over the cap (an offset
-    * band far out) reads its exact probe positions instead. A chunk holds at
-    * least one cell, so a cap under one cell's reads still makes progress. */
+    * rows, in enumeration order, each taking the longest runs of one x's
+    * offsets that keep it within both. A cell whose own windows span more
+    * than `cap` rows fails: no chunk can hold it. */
   private[graft] def plan(g: Grid, job: Job, cap: Long): Vector[Chunk] = {
-    val spec = job.spec
-    val nc = spec.constraints.size
+    val nc = job.spec.constraints.size
     require(nc > 0, "a CP query needs a constraint")
-    val total = g.cells
-    if (total == 0) return Vector.empty
+    if (g.cells == 0) return Vector.empty
     g.whole(job, cap).foreach(ch => return Vector(ch))
-    val win = g.win(job)
-    val levels = SeriesOps.levelsFor(win)
-
+    val r = g.reach(job)
     val maxCells = math.max(1L, cap / nc)
-    val rec = new Recorder(g.tMin, g.tMax)
     val out = Vector.newBuilder[Chunk]
-    val spans = new Spans
-    var (first, x0, lx0, cells) = (0L, 0L, 0L, 0L)
+    var (first, x0, lx0, cells, lo, hi) = (0L, 0L, 0L, 0L, 0L, 0L)
     def close(): Unit = if (cells > 0) {
-      out += Chunk(g, first, x0, lx0, cells.toInt, spans.toArray, levels)
-      first += cells; cells = 0; spans.clear()
-    }
-    def take(x: Long, lx: Long, n: Long): Unit = {
-      if (cells == 0) { x0 = x; lx0 = lx }
-      cells += n
+      out += Chunk(g, first, x0, lx0, cells.toInt, lo, hi)
+      first += cells; cells = 0
     }
     var x = g.xLo
     while (x <= g.xHi) {
       val end = g.lxEnd(x)
-      val lo = g.hullLo(x, win)
-      def fits(e: Long): Boolean = spans.size + spans.fresh(lo, g.hullHi(x, e, win)) <= cap
       var lx = g.lxLo
       while (lx <= end) {
-        if (cells == maxCells) close()
-        if (fits(lx)) {
-          // the longest run [lx, e] whose hull keeps the chunk within the cap
-          var (a, z) = (lx, math.min(end, lx + maxCells - cells - 1))
-          while (a < z) {
-            val m = a + (z - a + 1) / 2
-            if (fits(m)) a = m else z = m - 1
-          }
-          take(x, lx, a - lx + 1)
-          spans.add(lo, g.hullHi(x, a, win))
-          lx = a + 1
-        } else if (cells > 0 && g.hullHi(x, lx, win) - lo + 1 <= cap) close()
-        else {
-          val ps = rec.positions(job, x, lx)
-          if (cells > 0 && spans.size + ps.count(p => spans.fresh(p, p) == 1) > cap) close()
-          else {
-            take(x, lx, 1)
-            ps.foreach(p => spans.add(p, p))
-            lx += 1
-          }
+        if (cells == maxCells || (cells > 0 && g.hullHi(x, lx, r) - lo + 1 > cap)) close()
+        if (cells == 0) {
+          val (a, b) = (g.hullLo(x, r), g.hullHi(x, lx, r))
+          require(b - a + 1 <= cap, s"cell (time_id $x, offset $lx) reads the ${b - a + 1} " +
+            s"series rows [$a, $b], over the chunk cap of $cap rows")
+          x0 = x; lx0 = lx; lo = a; hi = b
         }
+        // the last offset of this x whose windows end within the cap
+        val fit = if (g.tMax - lo < cap) end else lo + cap - 1 - x - r
+        val e = math.min(math.min(end, fit), lx + maxCells - cells - 1)
+        cells += e - lx + 1
+        hi = math.max(hi, g.hullHi(x, e, r))
+        lx = e + 1
       }
       x += 1
     }
@@ -261,38 +184,48 @@ object LocalSolve {
     out.result()
   }
 
-  /** A chunk's index rows, placed by position: the [[ScalarProbe]] its
-    * constraint functions read. */
+  /** A chunk's raw series rows, placed by position: the [[ScalarProbe]]
+    * its constraint functions read. */
   private final class Slice(ch: Chunk) extends ScalarProbe {
     val tMin: Long = ch.grid.tMin
     val tMax: Long = ch.grid.tMax
-    private val levels = ch.levels
-    private val n = ch.rows.toInt
-    private val y = new Array[Double](n)
-    private val s = new Array[Double](n)
-    private val ms = new Array[Double](n * levels)
+    private val lo = ch.lo
+    private val y = new Array[Double](ch.rows.toInt)
     private var got = 0
 
-    private val (lo, oneSpan) = (ch.spans(0), ch.spans.length == 2)
-    private def slot(t: Long): Int = if (oneSpan) (t - lo).toInt else ch.slot(t)
+    def put(t: Long, v: Double): Unit = { y((t - lo).toInt) = v; got += 1 }
 
-    def put(t: Long, yv: Double, sv: Double, msv: Array[Double]): Unit = {
-      val k = slot(t)
-      y(k) = yv; s(k) = sv
-      System.arraycopy(msv, 0, ms, k * levels, levels)
-      got += 1
-    }
+    def check(): Unit = require(got == y.length,
+      s"series rows [${ch.lo}, ${ch.hi}] hold $got of ${y.length} rows: " +
+        "the series key is not dense")
 
-    def check(): Unit = require(got == n,
-      s"index spans ${ch.spans.mkString(",")} hold $got of $n rows: the series key is not dense")
+    // the left-to-right sum of y[sa..sb], extended while the window start
+    // stays and its end grows
+    private var sa = Long.MinValue
+    private var sb = 0L
+    private var sum = 0.0
 
     def avg(a: Long, b: Long): Double = {
-      val (ia, ib) = (slot(a), slot(b))
-      (s(ib) - s(ia) + y(ia)) / (b - a + 1).toDouble
+      if (a != sa || b < sb) { sa = a; sb = a; sum = y((a - lo).toInt) }
+      while (sb < b) { sb += 1; sum += y((sb - lo).toInt) }
+      sum / (b - a + 1).toDouble
     }
+
+    // level j: the maxima of the 2^j-row windows starting at each row,
+    // built up to the deepest level a probe has asked for
+    private var levels = Array(y)
+
     def max(a: Long, b: Long): Double = {
       val j = 63 - java.lang.Long.numberOfLeadingZeros(b - a + 1)
-      greatest(ms(slot(a) * levels + j), ms(slot(maxTail(a, b)) * levels + j))
+      while (levels.length <= j) {
+        val (prev, half) = (levels.last, 1 << (levels.length - 1))
+        val next = new Array[Double](prev.length - half)
+        var i = 0
+        while (i < next.length) { next(i) = math.max(prev(i), prev(i + half)); i += 1 }
+        levels :+= next
+      }
+      val m = levels(j)
+      greatest(m((a - lo).toInt), m((b - (1L << j) + 1 - lo).toInt))
     }
   }
 
@@ -450,31 +383,32 @@ object LocalSolve {
       .map(q => row(q, isSat(q), key(q)))
   }
 
-  /** One chunk of one series as one task: `where` → `coalesce(1)` →
-    * `mapPartitions`, one Spark job. */
-  private def oneTask[A: Encoder](idx: SeriesIndex, ch: Chunk)(
+  /** One chunk of one series `(t, y)` as one task: `where` → `coalesce(1)`
+    * → `mapPartitions`, one Spark job. */
+  private def oneTask[A: Encoder](series: DataFrame, ch: Chunk)(
       f: (Chunk, ScalarProbe) => Iterator[A]): DataFrame =
-    idx.df.where(ch.spans.grouped(2).map(p => col("t").between(p(0), p(1))).reduce(_ || _))
-      .select("t", "y", "s", "ms").as(Encoders.product[IndexedPoint])
+    series.where(col("t").between(ch.lo, ch.hi))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
       .coalesce(1)
       .mapPartitions { rows =>
         val slice = new Slice(ch)
-        rows.foreach(p => slice.put(p.t, p.y, p.s, p.ms))
+        rows.foreach { case (t, y) => slice.put(t, y) }
         slice.check()
         f(ch, slice)
       }
       .toDF()
 
-  /** Many chunks, one task per chunk: each index row is shuffled to every
-    * chunk whose spans read it. The same shuffled rows serve every `run`. */
-  private final class Tasks(points: RDD[MsIndexedPoint], chunks: Array[Chunk]) {
-    private val shuffled: RDD[(Int, MsIndexedPoint)] = {
+  /** Many chunks, one task per chunk: each series row is shuffled to every
+    * chunk whose range holds it. The same shuffled rows serve every `run`. */
+  private final class Tasks(points: RDD[Point], chunks: Array[Chunk]) {
+    private val shuffled: RDD[(Int, Point)] = {
       val bySid = chunks.indices.groupBy(chunks(_).grid.sid)
       val route = points.sparkContext.broadcast((chunks, bySid))
       points.flatMap { p =>
         val (chunks, bySid) = route.value
-        bySid.getOrElse(p.sid, Nil).filter(chunks(_).slot(p.t) >= 0).map(i => (i, p))
-      }.partitionBy(new SeriesOps.IndexPartitioner(chunks.length))
+        bySid.getOrElse(p.sid, Nil).filter(i => chunks(i).lo <= p.t && p.t <= chunks(i).hi)
+          .map(i => (i, p))
+      }.partitionBy(new HashPartitioner(chunks.length))
     }
 
     /** `f` over every chunk: the `i`-th task runs chunk `i`. */
@@ -482,7 +416,7 @@ object LocalSolve {
       val chunks = this.chunks
       shuffled.mapPartitionsWithIndex { (i, rows) =>
         val slice = new Slice(chunks(i))
-        rows.foreach { case (_, p) => slice.put(p.t, p.y, p.s, p.ms) }
+        rows.foreach { case (_, p) => slice.put(p.t, p.y) }
         slice.check()
         f(i, chunks(i), slice)
       }
@@ -493,7 +427,7 @@ object LocalSolve {
     * extrema of each refined grid that spans several chunks, then each
     * chunk ranks its cells and the final order keeps the best k per grid
     * from at most k rows per chunk. */
-  private def chunked(points: RDD[MsIndexedPoint], chunks: Array[Chunk], jb: Job,
+  private def chunked(points: RDD[Point], chunks: Array[Chunk], jb: Job,
       nGrids: Int): RDD[Ranked] = {
     val spec = jb.spec
     val tasks = new Tasks(points, chunks)
@@ -518,24 +452,23 @@ object LocalSolve {
   }
 
   /** `perChunk` over one series' grid of `b`: one task when the grid is one
-    * chunk, else `many` over its chunks and the index rows they read. */
+    * chunk, else `many` over its chunks and the series rows they read. */
   private def overSeries[A <: Product: TypeTag](idx: SeriesIndex, jb: Job, b: Bound, cap: Long)(
       perChunk: (Chunk, ScalarProbe) => Iterator[A])(
-      many: (RDD[MsIndexedPoint], Array[Chunk]) => RDD[A]): DataFrame = {
+      many: (RDD[Point], Array[Chunk]) => RDD[A]): DataFrame = {
     val enc = Encoders.product[A]
+    val series = SeriesOps.raw(idx.df)
     plan(Grid(0L, idx.tMin, idx.tMax, b), jb, cap) match {
-      case Vector() => idx.df.sparkSession.emptyDataset(enc).toDF()
-      case Vector(ch) => oneTask(idx, ch)(perChunk)(enc)
+      case Vector() => series.sparkSession.emptyDataset(enc).toDF()
+      case Vector(ch) => oneTask(series, ch)(perChunk)(enc)
       case chunks =>
-        val (lo, hi) = (chunks.map(_.spans.head).min, chunks.map(_.spans.last).max)
-        val points = idx.df.where(col("t").between(lo, hi))
-          .select(lit(0L).as("sid"), col("t"), col("y"), col("s"), col("ms"))
-          .as(Encoders.product[MsIndexedPoint]).rdd
-        idx.df.sparkSession.createDataset(many(points, chunks.toArray))(enc).toDF()
+        val points = series.where(col("t").between(chunks.map(_.lo).min, chunks.map(_.hi).max))
+          .select(lit(0L).as("sid"), col("t"), col("y")).as(Encoders.product[Point]).rdd
+        series.sparkSession.createDataset(many(points, chunks.toArray))(enc).toDF()
     }
   }
 
-  /** The query over one series' index: a lazy frame of `(time_id, offset)`
+  /** The query over one series `(t, y)`: a lazy frame of `(time_id, offset)`
     * in result order. */
   private[graft] def series(idx: SeriesIndex, spec: QuerySpec, b: Bound, cap: Long): DataFrame = {
     val jb = job(spec)
@@ -544,20 +477,21 @@ object LocalSolve {
       chunked(points, chunks, jb, 1).map(r => Cell(r.x, r.lx)))
   }
 
-  /** The query over every grid of a corpus index `(sid, t, y, s, ms)`:
-    * `(sid, time_id, offset)` rows, each series' in result order. */
-  private[graft] def corpus(idx: DataFrame, grids: Seq[Grid], jb: Job, cap: Long): DataFrame = {
-    val spark = idx.sparkSession
+  /** The query over every grid of a corpus `(sid, t, y)`: `(sid, time_id,
+    * offset)` rows, each series' in result order. */
+  private[graft] def corpus(series: DataFrame, grids: Seq[Grid], jb: Job, cap: Long): DataFrame = {
+    val spark = series.sparkSession
     val chunks = grids.flatMap(plan(_, jb, cap)).toArray
     if (chunks.isEmpty) spark.emptyDataset(Encoders.product[SeriesCell]).toDF()
     else {
-      val points = idx.select("sid", "t", "y", "s", "ms").as(Encoders.product[MsIndexedPoint]).rdd
+      val points = series.select(col("sid").cast("long").as("sid"), col("t").cast("long").as("t"),
+        col("y").cast("double").as("y")).as(Encoders.product[Point]).rdd
       spark.createDataset(chunked(points, chunks, jb, grids.size)
         .map(r => SeriesCell(r.sid, r.x, r.lx)))(Encoders.product[SeriesCell]).toDF()
     }
   }
 
-  /** One function's value at every cell of `b` over one series' index, as
+  /** One function's value at every cell of `b` over one series, as
     * `(x, lx, v)` in enumeration order: the reference's UDF map
     * (server.py:291-351) for one function. */
   def values(idx: SeriesIndex, fn: ConstraintFunction, args: Seq[Long], b: Bound): DataFrame = {
@@ -572,14 +506,12 @@ object LocalSolve {
       ch.foreachCell { (x, lx) => out(k) = CellValue(x, lx, v(k)); k += 1 }
       out.iterator
     }
-    require(SeriesOps.covers(idx.levels, Grid(0L, idx.tMin, idx.tMax, b).win(jb)),
-      s"a ${idx.levels}-level index is too shallow for ${c.name} over $b")
     overSeries(idx, jb, b, CellCap)(cells)((points, chunks) =>
       new Tasks(points, chunks).run((_, ch, probe) => cells(ch, probe)))
   }
 
-  /** Whether `b` runs as one chunk over the hull of its probes: at most
-    * [[CellCap]] cell-constraints and index rows. */
+  /** Whether `b` runs as one chunk: at most [[CellCap]] cell-constraints
+    * and series rows. */
   def admits(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Boolean =
     spec.constraints.nonEmpty && Grid(0L, tMin, tMax, b).whole(job(spec), CellCap).isDefined
 }

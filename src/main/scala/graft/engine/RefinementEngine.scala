@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{max, min}
 
 import graft.model._
 import graft.engine.SeriesOps.SeriesIndex
@@ -36,17 +35,13 @@ object RefinementEngine {
     lxLo = spec.lxDomain.lo.getOrElse(1L),
     lxHi = spec.lxDomain.hi.getOrElse(tMax - tMin + 1))
 
-  /** The window length (rows) the sparse table must answer for `spec`
-    * when the offset domain reaches `lxHi` ([[LocalSolve.Job.windowNeed]]). */
-  def windowNeed(spec: QuerySpec, lxHi: Long): Long = LocalSolve.job(spec).windowNeed(lxHi)
-
   /** Execute a full query against a series `(t, y)`. Returns
     * `(time_id, offset)` rows in canonical order, computed by the CP kernel
     * ([[LocalSolve]]).
     *
-    * `prebuilt`: reuse a (persisted) [[SeriesOps.SeriesIndex]] when the
-    * caller already indexed this series — only taken when its sparse table
-    * is deep enough for this query's windows.
+    * `prebuilt`: the caller's persisted copy of this series with its bounds
+    * ([[SeriesOps.persisted]], [[IndexCache]]); the kernel then reads it
+    * instead of `series`, and no bounds job runs.
     */
   def execute(
       spark: SparkSession,
@@ -55,7 +50,7 @@ object RefinementEngine {
       prebuilt: Option[SeriesIndex] = None): DataFrame =
     execute(spark, series, spec, prebuilt, LocalSolve.CellCap)
 
-  /** [[execute]] with chunks of at most `cap` cell-constraints and index
+  /** [[execute]] with chunks of at most `cap` cell-constraints and series
     * rows: tests force a grid into many chunks with a small cap. */
   private[graft] def execute(
       spark: SparkSession,
@@ -63,17 +58,10 @@ object RefinementEngine {
       spec: QuerySpec,
       prebuilt: Option[SeriesIndex],
       cap: Long): DataFrame = {
-    val (tMin, tMax) = prebuilt match {
-      case Some(i) => (i.tMin, i.tMax)
-      case None =>
-        val bounds = series.agg(min("t"), max("t")).head()
-        (bounds.getLong(0), bounds.getLong(1))
+    val idx = prebuilt.getOrElse {
+      val (tMin, tMax) = SeriesOps.bounds(series)
+      SeriesIndex(series, tMin, tMax)
     }
-    val b = bindDomains(spec, tMin, tMax)
-    val needWin = LocalSolve.Grid(0L, tMin, tMax, b).win(LocalSolve.job(spec))
-    val idx = prebuilt
-      .filter(i => SeriesOps.covers(i.levels, needWin))
-      .getOrElse(SeriesOps.index(series, needWin))
-    LocalSolve.series(idx, spec, b, cap)
+    LocalSolve.series(idx, spec, bindDomains(spec, idx.tMin, idx.tMax), cap)
   }
 }

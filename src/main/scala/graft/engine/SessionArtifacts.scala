@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** The one registry of session artifacts: the per-(kind, dataset dir)
   * values a query builds once and every later query reuses — IVF and code
   * indexes, band/winnow/dHash indexes, maintained sketches and statistics,
-  * trained models, compacted layouts, the series index. The reference keeps
-  * the same kind of cache for its per-(table, column) UDF map
+  * trained models, compacted layouts, the persisted series. The reference
+  * keeps the same kind of cache for its per-(table, column) UDF map
   * (server.py:249-286).
   *
   * Rules:
@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *    holder, and a build holds only that key's lock.
   *
   * [[IndexCache]] is deliberately separate: it is the cross-session disk
-  * cache, checked by source mtime and window depth.
+  * cache, checked by source mtime.
   */
 object SessionArtifacts {
 

@@ -46,28 +46,22 @@ object TimeSeriesQueries {
     "WITH series AS (SELECT row_number() OVER (ORDER BY event_id) AS t, " +
       "value AS y FROM events)"
 
-  /** The persisted series index of `dir`, built once per session (the
-    * grid queries and all three CP modes probe the same series; building
-    * the sparse table once per session instead of once per query is a ~7x
-    * cut in window passes). maxWin=64 (7 levels) covers every declared
-    * query. */
+  /** The persisted series of `dir` with its bounds, built once per session
+    * (the grid queries, all three CP modes and the variability guard read
+    * the same series; the key assignment runs once per session instead of
+    * once per query). The CP kernel derives every window from these raw
+    * rows, so one copy serves any query. */
   def cachedIndex(s: SparkSession, dir: String): SeriesOps.SeriesIndex =
     graft.engine.SessionArtifacts.getOrBuild(s, "seriesidx", dir) { _ =>
-      // single-pass kernel build fused with ordinal-key assignment (equal
-      // to the declarative build, see EngineSpec) — one sorted pass instead
-      // of row_number window + log2(maxWin) window stages
-      val idx = SeriesOps.indexFastFromOrdered(
-        events(s, dir), "event_id", "value", 64)
-      idx.copy(df = idx.df.persist())
+      SeriesOps.persisted(series(s, dir))
     }
 
-  /** The (t, y) series view of the cached persisted index — callers that
-    * only need the raw series (no probes) read the in-memory index blocks
-    * instead of re-paying the distributed ordinal-key assignment per run. */
-  def cachedSeries(s: SparkSession, dir: String): DataFrame =
-    cachedIndex(s, dir).df.select(col("t"), col("y"))
+  /** The (t, y) view of the cached persisted series: callers read the
+    * in-memory blocks instead of re-paying the distributed ordinal-key
+    * assignment per run. */
+  def cachedSeries(s: SparkSession, dir: String): DataFrame = cachedIndex(s, dir).df
 
-  /** One constraint's value grid over the session index: `(x, lx, v)` for
+  /** One constraint's value grid over the session series: `(x, lx, v)` for
     * every cell of `[xLo, xHi] x [lxLo, lxHi]` with `x + lx <= tMax`,
     * computed by the CP kernel ([[graft.engine.LocalSolve.values]]). */
   private def valueGrid(
@@ -104,14 +98,14 @@ object TimeSeriesQueries {
       round(max("v"), 6).as("max_c0"),
       count(lit(1)).as("grid_cells"))
 
-  /** A CP query over the session index. The series handed to `execute` is
-    * the index's own `(t, y)` view: `execute` reads it only when the index
-    * is too shallow, which the declared queries never are, and
-    * [[series]] would run its key-assignment jobs eagerly on every call. */
-  private def cp(s: SparkSession, dir: String, q: String): DataFrame =
-    RefinementEngine.execute(s, cachedSeries(s, dir), QueryParser.parse(q),
-        prebuilt = Some(cachedIndex(s, dir)))
+  /** A CP query over the session series: the kernel reads the persisted
+    * rows and their bounds, so the query runs no key-assignment or bounds
+    * job. */
+  private def cp(s: SparkSession, dir: String, q: String): DataFrame = {
+    val idx = cachedIndex(s, dir)
+    RefinementEngine.execute(s, idx.df, QueryParser.parse(q), prebuilt = Some(idx))
       .orderBy("time_id", "offset")
+  }
 
   /** §2.6 UNREFINED — all candidates satisfying every constraint. */
   def cpUnrefined(s: SparkSession, dir: String): DataFrame =
@@ -137,7 +131,7 @@ object TimeSeriesQueries {
   /** P5 — variability guard generalized: per-chunk population variance with
     * the reference's "no variability" predicate (server.py:209-214). */
   def variabilityGuard(s: SparkSession, dir: String): DataFrame =
-    series(s, dir)
+    cachedSeries(s, dir)
       .groupBy((((col("t") - 1) / 1000).cast("long")).as("chunk"))
       .agg(round(var_pop("y"), 4).as("variance"),
         (var_pop("y") <= lit(5e-28)).as("no_variability"))

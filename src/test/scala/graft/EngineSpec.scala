@@ -16,9 +16,351 @@ class EngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
-  import EngineSpec.{n, ys}
+  import EngineSpec._
   lazy val series = (1 to n).map(i => (i.toLong, ys(i - 1))).toDF("t", "y")
 
+  /** A cap that splits the grid of `spec` into at least three chunks (the
+    * default when it holds fewer than three cells). */
+  def splitCap(spec: QuerySpec): Long = {
+    val b = RefinementEngine.bindDomains(spec, 1, n)
+    if (LocalSolve.Grid(0L, 1, n, b).cells < 3) LocalSolve.CellCap
+    else LocalSolveSpec.splitCap(spec, b, 1, n)
+  }
+
+  /** The kernel run as one chunk and as at least three; every naive-oracle
+    * test below runs on each. The one-chunk run asserts the gate admits the
+    * query, so it cannot silently run chunked. */
+  val executors: Seq[(String, QuerySpec => org.apache.spark.sql.DataFrame)] = Seq(
+    "one chunk" -> { spec =>
+      assert(LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n))
+      RefinementEngine.execute(spark, series, spec)
+    },
+    "chunked" -> (spec => RefinementEngine.execute(spark, series, spec, None, splitCap(spec))))
+
+  def run(q: String, exec: QuerySpec => org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
+    exec(QueryParser.parse(q))
+      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt)).toSeq
+
+  // ---- parser ----
+  test("parser: smoke query") {
+    val s = QueryParser.parse(
+      """SELECT time_id, offset IN_DOMAIN [300, 500], [10, 50]
+        |FROM emg_data.emg1
+        |WHERE avg_amp() in [1, 2] MAX
+        |LIMIT REFINED 5""".stripMargin)
+    assert(s == QuerySpec("emg_data", "emg1", Domain(Some(300), Some(500)),
+      Domain(Some(10), Some(50)),
+      Seq(Constraint("avg_amp", Nil, Some(1), Some(2), Target.Max)),
+      Some(5), refined = true))
+  }
+
+  test("parser: multi-constraint, None sides, unrefined limit, no limit") {
+    val s = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [None, 10], [5, None] " +
+        "FROM gas_data.flow_rate " +
+        "WHERE avg_amp() in [50, 200] MAX and max_amp_excess_left(4) in [-2, 0] MIN " +
+        "LIMIT 50")
+    assert(s.xDomain == Domain(None, Some(10)) && s.lxDomain == Domain(Some(5), None))
+    assert(s.constraints.size == 2 && !s.refined && s.limit.contains(50))
+    assert(s.constraints(1) ==
+      Constraint("max_amp_excess_left", Seq(4), Some(-2), Some(0), Target.Min))
+    val noLimit = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1,5],[1,2] FROM t.c WHERE avg_amp() in [None, 3] MAX")
+    assert(noLimit.limit.isEmpty && !noLimit.refined)
+  }
+
+  test("parser: rejections (reference client.py:204-288)") {
+    val bad = Seq(
+      "SELECT a, b IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2] FROM t.c WHERE avg_amp() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t WHERE avg_amp() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE nope() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] FOO",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp(3) in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE max_amp_excess_left() in [1,2] MAX",
+      // numeric overflow is a parse error, not a NumberFormatException
+      "SELECT time_id, offset IN_DOMAIN [1, 99999999999999999999],[1,2] FROM t.c " +
+        "WHERE avg_amp() in [1,2] MAX",
+      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX " +
+        "LIMIT 3000000000",
+      // an argument is a lookahead or lookbehind, an offset a window length
+      "SELECT time_id, offset IN_DOMAIN [5,30],[2,5] FROM t.c " +
+        "WHERE max_amp_excess_left(-3) in [0,5] MAX",
+      "SELECT time_id, offset IN_DOMAIN [5, 30], [-2, 5] FROM t.c WHERE avg_amp() in [0,5] MAX",
+      "")
+    bad.foreach(q => assertThrows[ParseException](QueryParser.parse(q)))
+  }
+
+  // ---- the persisted series and its cache ----
+  def seriesRows(i: SeriesOps.SeriesIndex): Seq[(Long, Double)] =
+    i.df.orderBy("t").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** The Spark jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1000) // the listener bus is asynchronous
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("cross-session index cache: write-through, hit, staleness rebuild") {
+    import graft.engine.IndexCache
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
+    graft.cli.Cleanup.deleteOnExit(cacheDir)
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
+    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
+    val tableFile = tableDir.resolve("series.parquet")
+    series.write.mode("overwrite").parquet(tableFile.toString)
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX")
+    val (i1, hit1) = IndexCache.getOrBuild(
+      spark, cacheDir, tableFile.toString, "c", series, spec)
+    assert(!hit1)
+    val (i2, hit2) = IndexCache.getOrBuild(
+      spark, cacheDir, tableFile.toString, "c", series, spec)
+    assert(hit2 && i2.tMin == 1 && i2.tMax == n && i2.tMin == i1.tMin && i2.tMax == i1.tMax)
+    assert(seriesRows(i2) == seriesRows(i1)) // parquet round-trip is exact
+    assert(seriesRows(i1) == (1 to n).map(i => (i.toLong, ys(i - 1))))
+    // touching the source invalidates the cache
+    java.nio.file.Files.setLastModifiedTime(tableFile,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
+    val (i3, hit3) = IndexCache.getOrBuild(
+      spark, cacheDir, tableFile.toString, "c", series, spec)
+    assert(!hit3)
+    // a deeper-window query on a warm cache is a hit and runs no Spark job:
+    // the cache holds the raw rows, which answer any window
+    val wide = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 70] FROM t.c " +
+        "WHERE max_amp_excess_right(70) in [0, None] MAX")
+    var hit4 = false
+    assert(jobsOf {
+      val (i4, hit) = IndexCache.getOrBuild(spark, cacheDir, tableFile.toString, "c", series, wide)
+      hit4 = hit && (i4 eq i3)
+    } == 0)
+    assert(hit4)
+  }
+
+  test("index cache: a superseded in-session index is unpersisted") {
+    import graft.engine.IndexCache
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
+    graft.cli.Cleanup.deleteOnExit(cacheDir)
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
+    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
+    val tableFile = tableDir.resolve("series.parquet")
+    series.write.mode("overwrite").parquet(tableFile.toString)
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX")
+    def get() = IndexCache.getOrBuild(
+      spark, cacheDir, tableFile.toString, "c", series, spec)
+    assert(!get()._2)
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    (1 to 4).foreach { i =>
+      java.nio.file.Files.setLastModifiedTime(tableFile,
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 60000L))
+      val (idx, hit) = get()
+      assert(!hit)
+      assert(spark.sparkContext.getPersistentRDDs.size == pinned, s"after bump $i")
+      assert(seriesRows(idx).nonEmpty)
+    }
+  }
+
+  test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
+    val idx = SeriesOps.SeriesIndex(series, 1, n)
+    // the probe surface every constraint and query reads windows through,
+    // read through the kernel's value grid: x = a, lx = b - a
+    import EngineSpec.WindowMax
+    def grid(fn: ConstraintFunction): Map[(Int, Int), Double] =
+      LocalSolve.values(idx, fn, Nil, RefinementEngine.Bound(1, n, 0, 15)).collect()
+        .map(r => (r.getLong(0).toInt, r.getLong(0).toInt + r.getLong(1).toInt) -> r.getDouble(2))
+        .toMap
+    val (avgs, maxs) = (grid(AvgAmp), grid(WindowMax))
+    val pairs = for (a <- 1 to n; len <- 1 to 16; if a + len - 1 <= n) yield (a, a + len - 1)
+    assert(avgs.keySet == pairs.toSet && maxs.keySet == pairs.toSet)
+    pairs.foreach { case (a, b) =>
+      assert(math.abs(avgs((a, b)) - winAvg(a, b)) < 1e-9, s"avg($a,$b)")
+      assert(maxs((a, b)) == winMax(a, b), s"max($a,$b)")
+    }
+  }
+
+  // ---- full queries vs naive oracle ----
+  test("unrefined query returns exactly the satisfying cells") {
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+        "WHERE avg_amp() in [4, 6] MAX")
+    val b = RefinementEngine.bindDomains(spec, 1, n)
+    val expect = naiveGrid(spec, b)
+      .filter { case (_, _, vs) => sat(spec.constraints.head, vs.head) }
+      .map(g => (g._1, g._2)).sorted
+    for ((name, exec) <- executors) {
+      val got = run(spec.toString match { case _ =>
+        "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+          "WHERE avg_amp() in [4, 6] MAX" }, exec)
+      assert(got == expect, name)
+    }
+  }
+
+  test("refined tightening (over-production): top-k by RK desc") {
+    val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+      "WHERE avg_amp() in [2, 8] MAX LIMIT REFINED 7"
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
+  }
+
+  test("refined relaxation (under-production): satisfied + RP asc extras") {
+    // impossible-ish interval => few/no satisfying candidates
+    val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+      "WHERE avg_amp() in [9, 10] MAX LIMIT REFINED 6"
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
+  }
+
+  test("refined multi-constraint with excess functions and MIN target") {
+    val q = "SELECT time_id, offset IN_DOMAIN [5, 50], [3, 8] FROM t.c " +
+      "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [-1, 1] MAX " +
+      "and max_amp_excess_left(4) in [None, 2] MIN LIMIT REFINED 10"
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
+  }
+
+  test("excess functions clamp at series edges like the reference") {
+    // windows touching t=1 and t=n exercise the n' clamps
+    val q = "SELECT time_id, offset IN_DOMAIN [1, 79], [1, 1] FROM t.c " +
+      "WHERE max_amp_excess_left(10) in [0, None] MAX and " +
+      "max_amp_excess_right(10) in [None, 0] MAX LIMIT REFINED 12"
+    for ((name, exec) <- executors)
+      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
+  }
+
+  /** Naive scored candidates sorted by the unified refinement key. */
+  def naiveScoredSorted(spec: QuerySpec): Seq[((Int, Int), (Int, Double))] = {
+    val b = RefinementEngine.bindDomains(spec, 1, n)
+    val grid = naiveGrid(spec, b)
+    val full = naiveRefinedFull(spec, grid)
+    full
+  }
+
+  test("a prebuilt persisted series returns exactly the raw-series results") {
+    // the production path (cachedIndex / IndexCache -> execute(prebuilt))
+    // reads the persisted copy with its stored bounds; without it the
+    // kernel reads the raw series and takes its bounds. Same queries,
+    // byte-equal (t, offset) output, as one chunk and as at least three.
+    val prebuilt = SeriesOps.persisted(series)
+    try {
+      val qs = Seq(
+        "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
+          "WHERE avg_amp() in [4, 6] MAX",
+        "SELECT time_id, offset IN_DOMAIN [5, 70], [2, 8] FROM t.c " +
+          "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(5) in [0, None] MAX " +
+          "LIMIT REFINED 12",
+        "SELECT time_id, offset IN_DOMAIN [1, 70], [2, 6] FROM t.c " +
+          "WHERE max_amp_excess_left(6) in [None, 2] MIN LIMIT REFINED 9")
+      for (q <- qs) {
+        val spec = QueryParser.parse(q)
+        for (cap <- Seq(LocalSolve.CellCap, splitCap(spec))) {
+          val b = RefinementEngine.bindDomains(spec, 1, n)
+          val chunks = LocalSolveSpec.chunks(spec, b, 1, n, cap).size
+          assert(chunks == 1 || chunks >= 3, q)
+          def rows(p: Option[SeriesOps.SeriesIndex]) =
+            RefinementEngine.execute(spark, series, spec, p, cap)
+              .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+          val raw = rows(None)
+          assert(raw.nonEmpty, q)
+          assert(rows(Some(prebuilt)) == raw, s"$q at cap $cap")
+        }
+      }
+    } finally prebuilt.df.unpersist()
+  }
+
+  test("randomized specs match the naive oracle up to score ties (seeded, 8 cases)") {
+    // Engine and naive oracle compute the scores with different expressions
+    // and may order exact score ties differently; the contract is set-level
+    // with a deterministic tie-break WITHIN one arithmetic. So: everything strictly
+    // better than the k-th score must be present; ties at the cut may go
+    // either way; cardinality is exact.
+    val rnd = new scala.util.Random(7)
+    val eps = 1e-9
+    for (_ <- 1 to 8) {
+      val xLo = 1 + rnd.nextInt(20); val xHi = xLo + 10 + rnd.nextInt(40)
+      val lxLo = 1 + rnd.nextInt(4); val lxHi = lxLo + rnd.nextInt(6)
+      val a = rnd.nextInt(8); val b = a + rnd.nextInt(4)
+      val k = 1 + rnd.nextInt(12)
+      val tgt = if (rnd.nextBoolean()) "MAX" else "MIN"
+      val q = s"SELECT time_id, offset IN_DOMAIN [$xLo, $xHi], [$lxLo, $lxHi] " +
+        s"FROM t.c WHERE avg_amp() in [$a, $b] $tgt LIMIT REFINED $k"
+      val spec = QueryParser.parse(q)
+      val sortedAll = naiveScoredSorted(spec)
+      val cells = sortedAll.size
+      for ((name, exec) <- executors) {
+        val got = run(q, exec).toSet
+        assert(got.size == math.min(k, cells), s"cardinality for $q ($name)")
+        if (cells > k) {
+          val (kthSat, kthKey) = sortedAll(k - 1)._2
+          def strictlyBetter(e: (Int, Double)) =
+            e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
+          def noWorse(e: (Int, Double)) =
+            e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
+          val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
+          val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
+          assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q ($name)")
+          assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q ($name)")
+        } else {
+          assert(got == sortedAll.map(_._1).toSet, s"$q ($name)")
+        }
+      }
+    }
+  }
+
+  test("bind: x before the series, reversed domains, long arguments follow the reference") {
+    def expected(spec: QuerySpec): Seq[(Int, Int)] = {
+      val grid = naiveGrid(spec, RefinementEngine.bindDomains(spec, 1, n))
+      if (grid.isEmpty) Nil
+      else if (spec.refined) naiveRefined(spec)
+      else grid.filter { case (_, _, vs) =>
+        spec.constraints.zip(vs).forall { case (c, v) => sat(c, v) }
+      }.map(g => (g._1, g._2)).sorted
+    }
+    def query(dom: String, con: String, tail: String = "") =
+      s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE $con MAX$tail"
+    val cases = Seq(
+      // the x side clips to the series start: cells before it are skipped
+      "x before the series start" -> query("[0, 30], [2, 5]", "avg_amp() in [0, 5]"),
+      "x before the series start, refined" ->
+        query("[-5, 30], [2, 5]", "max_amp_excess_left(4) in [0, 5]", " LIMIT REFINED 6"),
+      // the reference's range(lo, hi + 1) yields nothing
+      "a reversed offset domain" -> query("[5, 30], [5, 2]", "avg_amp() in [0, 5]"),
+      "a reversed x domain" ->
+        query("[30, 5], [2, 5]", "avg_amp() in [0, 5]", " LIMIT REFINED 4"),
+      // the functions clamp the window at the series end
+      "an argument past the series length" ->
+        query("[5, 30], [2, 5]", "max_amp_excess_right(80) in [-3, 0]"),
+      "an argument past the series length, refined" ->
+        query("[40, 75], [2, 5]", "max_amp_excess_right(80) in [0, 5]", " LIMIT REFINED 5"))
+    for ((why, q) <- cases; (name, exec) <- executors) {
+      val expect = expected(QueryParser.parse(q))
+      assert(run(q, exec) == expect, s"$why ($name)")
+      if (!why.startsWith("a reversed")) assert(expect.nonEmpty, why)
+    }
+  }
+
+  test("None domain sides bind from series extent; offset default domain") {
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [None, None], [None, None] FROM t.c " +
+        "WHERE avg_amp() in [0, 10] MAX")
+    val b = RefinementEngine.bindDomains(spec, 1, n)
+    assert(b == RefinementEngine.Bound(1, n, 1, n))
+  }
+}
+
+object EngineSpec {
   // ---- naive oracle (reference semantics, brute force) ----
   def winAvg(a: Int, b: Int): Double = ys.slice(a - 1, b).sum / (b - a + 1)
   def winMax(a: Int, b: Int): Double = ys.slice(a - 1, b).max
@@ -127,386 +469,11 @@ class EngineSpec extends AnyFunSuite {
     }.sortBy { case ((x, lx), (s, key)) => (s, key, x, lx) }
   }
 
-  /** A cap that splits the grid of `spec` into at least three chunks (the
-    * default when it holds fewer than three cells). */
-  def splitCap(spec: QuerySpec): Long = {
-    val b = RefinementEngine.bindDomains(spec, 1, n)
-    if (LocalSolve.Grid(0L, 1, n, b).cells < 3) LocalSolve.CellCap
-    else LocalSolveSpec.splitCap(spec, b, 1, n)
-  }
-
-  /** The kernel run as one chunk and as at least three; every naive-oracle
-    * test below runs on each. The one-chunk run asserts the gate admits the
-    * query, so it cannot silently run chunked. */
-  val executors: Seq[(String, QuerySpec => org.apache.spark.sql.DataFrame)] = Seq(
-    "one chunk" -> { spec =>
-      assert(LocalSolve.admits(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n))
-      RefinementEngine.execute(spark, series, spec)
-    },
-    "chunked" -> (spec => RefinementEngine.execute(spark, series, spec, None, splitCap(spec))))
-
-  def run(q: String, exec: QuerySpec => org.apache.spark.sql.DataFrame): Seq[(Int, Int)] =
-    exec(QueryParser.parse(q))
-      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt)).toSeq
-
-  // ---- parser ----
-  test("parser: smoke query") {
-    val s = QueryParser.parse(
-      """SELECT time_id, offset IN_DOMAIN [300, 500], [10, 50]
-        |FROM emg_data.emg1
-        |WHERE avg_amp() in [1, 2] MAX
-        |LIMIT REFINED 5""".stripMargin)
-    assert(s == QuerySpec("emg_data", "emg1", Domain(Some(300), Some(500)),
-      Domain(Some(10), Some(50)),
-      Seq(Constraint("avg_amp", Nil, Some(1), Some(2), Target.Max)),
-      Some(5), refined = true))
-  }
-
-  test("parser: multi-constraint, None sides, unrefined limit, no limit") {
-    val s = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [None, 10], [5, None] " +
-        "FROM gas_data.flow_rate " +
-        "WHERE avg_amp() in [50, 200] MAX and max_amp_excess_left(4) in [-2, 0] MIN " +
-        "LIMIT 50")
-    assert(s.xDomain == Domain(None, Some(10)) && s.lxDomain == Domain(Some(5), None))
-    assert(s.constraints.size == 2 && !s.refined && s.limit.contains(50))
-    assert(s.constraints(1) ==
-      Constraint("max_amp_excess_left", Seq(4), Some(-2), Some(0), Target.Min))
-    val noLimit = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1,5],[1,2] FROM t.c WHERE avg_amp() in [None, 3] MAX")
-    assert(noLimit.limit.isEmpty && !noLimit.refined)
-  }
-
-  test("parser: rejections (reference client.py:204-288)") {
-    val bad = Seq(
-      "SELECT a, b IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2] FROM t.c WHERE avg_amp() in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t WHERE avg_amp() in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE nope() in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] FOO",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp(3) in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE max_amp_excess_left() in [1,2] MAX",
-      // numeric overflow is a parse error, not a NumberFormatException
-      "SELECT time_id, offset IN_DOMAIN [1, 99999999999999999999],[1,2] FROM t.c " +
-        "WHERE avg_amp() in [1,2] MAX",
-      "SELECT time_id, offset IN_DOMAIN [1,2],[1,2] FROM t.c WHERE avg_amp() in [1,2] MAX " +
-        "LIMIT 3000000000",
-      // an argument is a lookahead or lookbehind, an offset a window length
-      "SELECT time_id, offset IN_DOMAIN [5,30],[2,5] FROM t.c " +
-        "WHERE max_amp_excess_left(-3) in [0,5] MAX",
-      "SELECT time_id, offset IN_DOMAIN [5, 30], [-2, 5] FROM t.c WHERE avg_amp() in [0,5] MAX",
-      "")
-    bad.foreach(q => assertThrows[ParseException](QueryParser.parse(q)))
-  }
-
-  // ---- series index vs naive windows ----
-  def idxRows(i: SeriesOps.SeriesIndex): Seq[(Long, Double, Double, Seq[Double])] =
-    i.df.orderBy("t").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getSeq[Double](3)))
-      .toSeq
-
-  test("indexFast (partitioned two-pass kernel) equals the declarative index build") {
-    val a = SeriesOps.index(series, 16)
-    val b = SeriesOps.indexFast(series, 16)
-    assert(a.levels == b.levels && a.tMin == b.tMin && a.tMax == b.tMax)
-    val (ra, rb) = (idxRows(a), idxRows(b))
-    // t, y and every sparse-table level are bit-equal (max is associative);
-    // prefix sums associate differently across partitions, so on inexact
-    // doubles (multiples of 0.01) they match to ~ulp, not bitwise
-    assert(ra.map(r => (r._1, r._2, r._4)) == rb.map(r => (r._1, r._2, r._4)))
-    ra.zip(rb).foreach { case (x, y) =>
-      assert(math.abs(x._3 - y._3) <= 1e-9 * math.max(1.0, math.abs(x._3)), s"s at t=${x._1}")
-    }
-    // fused variant: same result from an unkeyed frame ordered by a column
-    val raw = (1 to n).map(i => (i * 10L, ys(i - 1))).toDF("ord", "y")
-    val c = SeriesOps.indexFastFromOrdered(raw, "ord", "y", 16)
-    assert(c.tMin == 1 && c.tMax == n)
-    assert(idxRows(c).map(r => (r._1, r._2, r._4)) == ra.map(r => (r._1, r._2, r._4)))
-  }
-
-  test("partitioned kernel build is bit-equal to declarative on FP-exact data") {
-    // integer-valued ys: every partial sum is exactly representable, so the
-    // carry-in association cannot differ -> full bit-equality, including s
-    val intYs = (1 to n).map(i => ((i * 2654435761L) % 1000).toDouble)
-    val s2 = (1 to n).map(i => (i.toLong, intYs(i - 1))).toDF("t", "y")
-    // maxWin=64 -> 63-row lookahead halo, longer than a ~20-row partition:
-    // the halo must chain across several downstream partitions
-    val a = SeriesOps.index(s2, 64)
-    val b = SeriesOps.indexFast(s2, 64)
-    assert(idxRows(a) == idxRows(b))
-    // the kernel input really is multi-partition (halo/carry logic exercised)
-    assert(b.df.rdd.getNumPartitions > 1)
-  }
-
-  test("cross-session index cache: write-through, hit, staleness rebuild") {
-    import graft.engine.IndexCache
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
-    graft.cli.Cleanup.deleteOnExit(cacheDir)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
-    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
-    val tableFile = tableDir.resolve("series.parquet")
-    series.write.mode("overwrite").parquet(tableFile.toString)
-    val spec = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX")
-    val (i1, hit1) = IndexCache.getOrBuild(
-      spark, cacheDir, tableFile.toString, "c", series, spec)
-    assert(!hit1)
-    val (i2, hit2) = IndexCache.getOrBuild(
-      spark, cacheDir, tableFile.toString, "c", series, spec)
-    assert(hit2 && i2.tMin == i1.tMin && i2.tMax == i1.tMax && i2.levels == i1.levels)
-    assert(idxRows(i2) == idxRows(i1)) // parquet round-trip is exact
-    // touching the source invalidates the cache
-    java.nio.file.Files.setLastModifiedTime(tableFile,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    val (_, hit3) = IndexCache.getOrBuild(
-      spark, cacheDir, tableFile.toString, "c", series, spec)
-    assert(!hit3)
-    // a query needing deeper windows than cached also rebuilds
-    val wide = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 70] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX")
-    val (i4, hit4) = IndexCache.getOrBuild(
-      spark, cacheDir, tableFile.toString, "c", series, wide)
-    assert(!hit4 && i4.levels > i1.levels)
-  }
-
-  test("index cache: a superseded in-session index is unpersisted") {
-    import graft.engine.IndexCache
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
-    graft.cli.Cleanup.deleteOnExit(cacheDir)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
-    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
-    val tableFile = tableDir.resolve("series.parquet")
-    series.write.mode("overwrite").parquet(tableFile.toString)
-    val spec = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX")
-    def get() = IndexCache.getOrBuild(
-      spark, cacheDir, tableFile.toString, "c", series, spec)
-    assert(!get()._2)
-    val pinned = spark.sparkContext.getPersistentRDDs.size
-    (1 to 4).foreach { i =>
-      java.nio.file.Files.setLastModifiedTime(tableFile,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + i * 60000L))
-      val (idx, hit) = get()
-      assert(!hit)
-      assert(spark.sparkContext.getPersistentRDDs.size == pinned, s"after bump $i")
-      assert(idxRows(idx).nonEmpty)
-    }
-  }
-
-  test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
-    val idx = SeriesOps.index(series, 16)
-    // the probe surface every constraint and query reads windows through,
-    // read through the kernel's value grid: x = a, lx = b - a
-    import EngineSpec.WindowMax
-    def grid(fn: ConstraintFunction): Map[(Int, Int), Double] =
-      LocalSolve.values(idx, fn, Nil, RefinementEngine.Bound(1, n, 0, 15)).collect()
-        .map(r => (r.getLong(0).toInt, r.getLong(0).toInt + r.getLong(1).toInt) -> r.getDouble(2))
-        .toMap
-    val (avgs, maxs) = (grid(AvgAmp), grid(WindowMax))
-    val pairs = for (a <- 1 to n; len <- 1 to 16; if a + len - 1 <= n) yield (a, a + len - 1)
-    assert(avgs.keySet == pairs.toSet && maxs.keySet == pairs.toSet)
-    pairs.foreach { case (a, b) =>
-      assert(math.abs(avgs((a, b)) - winAvg(a, b)) < 1e-9, s"avg($a,$b)")
-      assert(maxs((a, b)) == winMax(a, b), s"max($a,$b)")
-    }
-  }
-
-  // ---- full queries vs naive oracle ----
-  test("unrefined query returns exactly the satisfying cells") {
-    val spec = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX")
-    val b = RefinementEngine.bindDomains(spec, 1, n)
-    val expect = naiveGrid(spec, b)
-      .filter { case (_, _, vs) => sat(spec.constraints.head, vs.head) }
-      .map(g => (g._1, g._2)).sorted
-    for ((name, exec) <- executors) {
-      val got = run(spec.toString match { case _ =>
-        "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-          "WHERE avg_amp() in [4, 6] MAX" }, exec)
-      assert(got == expect, name)
-    }
-  }
-
-  test("refined tightening (over-production): top-k by RK desc") {
-    val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-      "WHERE avg_amp() in [2, 8] MAX LIMIT REFINED 7"
-    for ((name, exec) <- executors)
-      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
-  }
-
-  test("refined relaxation (under-production): satisfied + RP asc extras") {
-    // impossible-ish interval => few/no satisfying candidates
-    val q = "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-      "WHERE avg_amp() in [9, 10] MAX LIMIT REFINED 6"
-    for ((name, exec) <- executors)
-      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
-  }
-
-  test("refined multi-constraint with excess functions and MIN target") {
-    val q = "SELECT time_id, offset IN_DOMAIN [5, 50], [3, 8] FROM t.c " +
-      "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [-1, 1] MAX " +
-      "and max_amp_excess_left(4) in [None, 2] MIN LIMIT REFINED 10"
-    for ((name, exec) <- executors)
-      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
-  }
-
-  test("excess functions clamp at series edges like the reference") {
-    // windows touching t=1 and t=n exercise the n' clamps
-    val q = "SELECT time_id, offset IN_DOMAIN [1, 79], [1, 1] FROM t.c " +
-      "WHERE max_amp_excess_left(10) in [0, None] MAX and " +
-      "max_amp_excess_right(10) in [None, 0] MAX LIMIT REFINED 12"
-    for ((name, exec) <- executors)
-      assert(run(q, exec) == naiveRefined(QueryParser.parse(q)), name)
-  }
-
-  /** Naive scored candidates sorted by the unified refinement key. */
-  def naiveScoredSorted(spec: QuerySpec): Seq[((Int, Int), (Int, Double))] = {
-    val b = RefinementEngine.bindDomains(spec, 1, n)
-    val grid = naiveGrid(spec, b)
-    val full = naiveRefinedFull(spec, grid)
-    full
-  }
-
-  test("kernel-index prebuilt path returns exactly the declarative-index results") {
-    // the production path (cachedIndex -> execute(prebuilt)) runs the
-    // partitioned kernel build; the declarative path builds via window
-    // functions. Same queries, byte-equal (t, offset) output.
-    lazy val kernelIdx = SeriesOps.indexFast(series, 64)
-    val qs = Seq(
-      "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c " +
-        "WHERE avg_amp() in [4, 6] MAX",
-      "SELECT time_id, offset IN_DOMAIN [5, 70], [2, 8] FROM t.c " +
-        "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(5) in [0, None] MAX " +
-        "LIMIT REFINED 12",
-      "SELECT time_id, offset IN_DOMAIN [1, 70], [2, 6] FROM t.c " +
-        "WHERE max_amp_excess_left(6) in [None, 2] MIN LIMIT REFINED 9")
-    for (q <- qs) {
-      val spec = QueryParser.parse(q)
-      val declarative = RefinementEngine.execute(spark, series, spec)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      // as one chunk and as at least three
-      for (cap <- Seq(LocalSolve.CellCap, splitCap(spec))) {
-        val viaKernel = RefinementEngine.execute(spark, series, spec, Some(kernelIdx), cap)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        assert(viaKernel == declarative, q)
-      }
-    }
-  }
-
-  test("kernel build handles a series far smaller than the halo window") {
-    // n=3 over up to 4 range partitions with a 63-row lookahead need:
-    // halos chain across near-empty partitions and clamp at the true end
-    val tiny = Seq((1L, 2.0), (2L, 9.0), (3L, 4.0)).toDF("t", "y")
-    val a = SeriesOps.index(tiny, 64)
-    val b = SeriesOps.indexFast(tiny, 64)
-    assert(a.levels == b.levels && b.tMin == 1L && b.tMax == 3L)
-    assert(idxRows(a) == idxRows(b))
-  }
-
-  test("kernel builds fall back to declarative beyond the halo depth budget") {
-    // levels > 24 would make the lookahead digests rival the partitions;
-    // the builds must still answer correctly (via the declarative path)
-    val big = 1L << 26
-    val a = SeriesOps.index(series, big)
-    val b = SeriesOps.indexFast(series, big)
-    assert(a.levels == b.levels && b.levels == 27)
-    assert(idxRows(a).map(r => (r._1, r._2, r._4)) ==
-      idxRows(b).map(r => (r._1, r._2, r._4)))
-    val raw = (1 to n).map(i => (i * 10L, ys(i - 1))).toDF("ord", "y")
-    val c = SeriesOps.indexFastFromOrdered(raw, "ord", "y", big)
-    assert(c.tMin == 1 && c.tMax == n && c.levels == 27)
-  }
-
-  test("randomized specs match the naive oracle up to score ties (seeded, 8 cases)") {
-    // Engine (prefix-sum arithmetic) and the naive oracle (direct sums) may
-    // order exact score ties differently; the contract is set-level with a
-    // deterministic tie-break WITHIN one arithmetic. So: everything strictly
-    // better than the k-th score must be present; ties at the cut may go
-    // either way; cardinality is exact.
-    val rnd = new scala.util.Random(7)
-    val eps = 1e-9
-    for (_ <- 1 to 8) {
-      val xLo = 1 + rnd.nextInt(20); val xHi = xLo + 10 + rnd.nextInt(40)
-      val lxLo = 1 + rnd.nextInt(4); val lxHi = lxLo + rnd.nextInt(6)
-      val a = rnd.nextInt(8); val b = a + rnd.nextInt(4)
-      val k = 1 + rnd.nextInt(12)
-      val tgt = if (rnd.nextBoolean()) "MAX" else "MIN"
-      val q = s"SELECT time_id, offset IN_DOMAIN [$xLo, $xHi], [$lxLo, $lxHi] " +
-        s"FROM t.c WHERE avg_amp() in [$a, $b] $tgt LIMIT REFINED $k"
-      val spec = QueryParser.parse(q)
-      val sortedAll = naiveScoredSorted(spec)
-      val cells = sortedAll.size
-      for ((name, exec) <- executors) {
-        val got = run(q, exec).toSet
-        assert(got.size == math.min(k, cells), s"cardinality for $q ($name)")
-        if (cells > k) {
-          val (kthSat, kthKey) = sortedAll(k - 1)._2
-          def strictlyBetter(e: (Int, Double)) =
-            e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
-          def noWorse(e: (Int, Double)) =
-            e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
-          val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
-          val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
-          assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q ($name)")
-          assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q ($name)")
-        } else {
-          assert(got == sortedAll.map(_._1).toSet, s"$q ($name)")
-        }
-      }
-    }
-  }
-
-  test("bind: x before the series, reversed domains, long arguments follow the reference") {
-    def expected(spec: QuerySpec): Seq[(Int, Int)] = {
-      val grid = naiveGrid(spec, RefinementEngine.bindDomains(spec, 1, n))
-      if (grid.isEmpty) Nil
-      else if (spec.refined) naiveRefined(spec)
-      else grid.filter { case (_, _, vs) =>
-        spec.constraints.zip(vs).forall { case (c, v) => sat(c, v) }
-      }.map(g => (g._1, g._2)).sorted
-    }
-    def query(dom: String, con: String, tail: String = "") =
-      s"SELECT time_id, offset IN_DOMAIN $dom FROM t.c WHERE $con MAX$tail"
-    val cases = Seq(
-      // the x side clips to the series start: cells before it are skipped
-      "x before the series start" -> query("[0, 30], [2, 5]", "avg_amp() in [0, 5]"),
-      "x before the series start, refined" ->
-        query("[-5, 30], [2, 5]", "max_amp_excess_left(4) in [0, 5]", " LIMIT REFINED 6"),
-      // the reference's range(lo, hi + 1) yields nothing
-      "a reversed offset domain" -> query("[5, 30], [5, 2]", "avg_amp() in [0, 5]"),
-      "a reversed x domain" ->
-        query("[30, 5], [2, 5]", "avg_amp() in [0, 5]", " LIMIT REFINED 4"),
-      // the functions clamp the window at the series end
-      "an argument past the series length" ->
-        query("[5, 30], [2, 5]", "max_amp_excess_right(80) in [-3, 0]"),
-      "an argument past the series length, refined" ->
-        query("[40, 75], [2, 5]", "max_amp_excess_right(80) in [0, 5]", " LIMIT REFINED 5"))
-    for ((why, q) <- cases; (name, exec) <- executors) {
-      val expect = expected(QueryParser.parse(q))
-      assert(run(q, exec) == expect, s"$why ($name)")
-      if (!why.startsWith("a reversed")) assert(expect.nonEmpty, why)
-    }
-  }
-
-  test("None domain sides bind from series extent; offset default domain") {
-    val spec = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [None, None], [None, None] FROM t.c " +
-        "WHERE avg_amp() in [0, 10] MAX")
-    val b = RefinementEngine.bindDomains(spec, 1, n)
-    assert(b == RefinementEngine.Bound(1, n, 1, n))
-  }
-}
-
-object EngineSpec {
   /** The window maximum as a constraint function, unregistered. */
   object WindowMax extends ConstraintFunction {
     val name = "window_max"
     val arity = 0
-    def maxWindow(lxHi: Long, args: Seq[Long]): Long = lxHi + 1
+    def reach(args: Seq[Long]): Long = 0L
     def value(probe: ScalarProbe, x: Long, lx: Long, args: Seq[Long]): Double =
       probe.max(x, x + lx)
   }

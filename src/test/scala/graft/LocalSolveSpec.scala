@@ -92,14 +92,14 @@ class LocalSolveSpec extends AnyFunSuite {
     val bounds = specs.map(RefinementEngine.bindDomains(_, 1, n))
     assert(bounds.exists(_.xLo == 1) && bounds.exists(b => b.xHi + b.lxHi >= n))
 
-    val idx = SeriesOps.indexFast(series, 128)
+    val idx = SeriesOps.persisted(series)
     try {
       var relaxed, tightened, nonEmpty = 0
       for (((q, spec), i) <- shapes.zipWithIndex) {
         assert(LocalSolve.admits(spec, bounds(i), 1, n), q)
         val cap = LocalSolveSpec.splitCap(spec, bounds(i), 1, n)
         assert(LocalSolveSpec.chunks(spec, bounds(i), 1, n, cap).size >= 3, q)
-        // both index builds: the declarative one and the kernel prebuilt
+        // both sources: the raw series and its persisted copy
         val prebuilt = if (i % 2 == 0) Some(idx) else None
         val one = RefinementEngine.execute(spark, series, spec, prebuilt)
         val chunked = RefinementEngine.execute(spark, series, spec, prebuilt, cap)
@@ -176,7 +176,7 @@ class LocalSolveSpec extends AnyFunSuite {
   }
 
   test("chunks hold at most cap cells and index rows: one x over the cap, a far band") {
-    val idx = SeriesOps.indexFast(series, 128)
+    val idx = SeriesOps.persisted(series)
     try {
       def check(q: String, cap: Long, minChunks: Int): Unit = {
         val spec = QueryParser.parse(q)
@@ -194,18 +194,20 @@ class LocalSolveSpec extends AnyFunSuite {
         }
         assert(got == expect, q)
         // a one-task plan reads exactly its chunk's rows (the kernel checks
-        // the count); over many chunks, every task that reads index rows
+        // the count); over many chunks, every task that reads series rows
         // holds at most `cap` of them, and the final order reads at most k
         // rows per chunk
         if (chunks.size > 1) assert(reads.nonEmpty && reads.forall(_ <= cap), s"$q: $reads")
       }
-      // one x whose offsets alone run over a 48 cell-constraint cap (24
-      // cells): the split falls inside that x
-      check("SELECT time_id, offset IN_DOMAIN [3, 3], [0, 70] FROM t.c " +
+      // one x whose offsets alone run over a 48 cell-constraint cap (16
+      // cells of three constraints): the split falls inside that x, and each
+      // cell's windows, [1, 45] at most, fit the cap
+      check("SELECT time_id, offset IN_DOMAIN [3, 3], [0, 40] FROM t.c " +
         "WHERE avg_amp() in [4, 6] MAX and max_amp_excess_left(2) in [None, 1] MIN " +
-        "LIMIT REFINED 5", 48, 3)
-      // four cells at a far offset: every cell's hull is over the cap, so a
-      // chunk reads only the positions its probes touch
+        "and max_amp_excess_right(2) in [None, 1] MIN LIMIT REFINED 5", 48, 3)
+      // four cells at a far offset: every cell's windows span more rows than
+      // a cap of 32, so no chunk can hold one and the plan fails, naming the
+      // cap; at the default cap the band is one chunk and matches the oracle
       val c = 32L
       val far = s"SELECT time_id, offset IN_DOMAIN [1, 2], [$c, ${c + 1}] FROM t.c " +
         "WHERE avg_amp() in [4, 6] MAX and max_amp_excess_right(3) in [0, None] MAX " +
@@ -213,9 +215,13 @@ class LocalSolveSpec extends AnyFunSuite {
       val spec = QueryParser.parse(far)
       val b = RefinementEngine.bindDomains(spec, 1, n)
       assert(!LocalSolve.Grid(0, 1, n, b).whole(LocalSolve.job(spec), c).isDefined)
-      val chunks = LocalSolveSpec.chunks(spec, b, 1, n, c)
-      assert(chunks.size == 1 && chunks.head.spans.length > 2, chunks)
-      check(far, c, 1)
+      val e = intercept[IllegalArgumentException](LocalSolveSpec.chunks(spec, b, 1, n, c))
+      assert(e.getMessage.contains(s"over the chunk cap of $c rows"), e.getMessage)
+      intercept[IllegalArgumentException](
+        RefinementEngine.execute(spark, series, spec, Some(idx), c))
+      assert(LocalSolve.admits(spec, b, 1, n))
+      assert(rows(RefinementEngine.execute(spark, series, spec, Some(idx))) ==
+        EngineSpec.naiveRefined(spec).map { case (x, lx) => (x.toLong, lx.toLong) })
     } finally idx.df.unpersist()
   }
 }
@@ -226,10 +232,20 @@ object LocalSolveSpec {
       : Vector[LocalSolve.Chunk] =
     LocalSolve.plan(LocalSolve.Grid(0L, tMin, tMax, b), LocalSolve.job(spec), cap)
 
-  /** A cap that splits the grid of `b` into at least three chunks. */
+  /** The most rows one cell's windows span: the smallest cap a chunk
+    * plan of `b` accepts. */
+  def widestCell(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Long = {
+    val g = LocalSolve.Grid(0L, tMin, tMax, b)
+    val r = g.reach(LocalSolve.job(spec))
+    (g.xLo to g.xHi).map(x => g.hullHi(x, g.lxEnd(x), r) - g.hullLo(x, r) + 1)
+      .foldLeft(1L)(math.max)
+  }
+
+  /** A cap that splits the grid of `b` into at least three chunks: a third
+    * of its cell-constraints, but no less than its widest cell. */
   def splitCap(spec: QuerySpec, b: Bound, tMin: Long, tMax: Long): Long = {
     val cells = LocalSolve.Grid(0L, tMin, tMax, b).cells
     assert(cells >= 3, s"$b holds $cells cells")
-    math.max(1L, cells / 3 * spec.constraints.size)
+    math.max(widestCell(spec, b, tMin, tMax), cells / 3 * spec.constraints.size)
   }
 }

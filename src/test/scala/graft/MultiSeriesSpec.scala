@@ -99,16 +99,17 @@ class MultiSeriesSpec extends AnyFunSuite {
       .contains(None)))
     var relaxed, tightened, chunkedRefined = 0
     for ((q, spec) <- shapes.zip(specs)) {
-      // a cap that splits the largest series into at least two chunks
+      // a cap that splits the largest series into at least two chunks, no
+      // less than the widest cell of any series
       val grids = lens.toSeq.map { case (sid, len) =>
         LocalSolve.Grid(sid, 1, len, RefinementEngine.bindDomains(spec, 1, len))
       }
-      val cap = math.max(1L, grids.map(_.cells).max / 2 * spec.constraints.size)
+      val cap = (grids.map(_.cells).max / 2 * spec.constraints.size +:
+        grids.map(g => LocalSolveSpec.widestCell(spec, g.b, g.tMin, g.tMax))).max
       val job = LocalSolve.job(spec)
       assert(grids.exists(g => LocalSolve.plan(g, job, cap).size > 1), q)
       if (spec.refined) chunkedRefined += 1
-      val got = MultiSeriesEngine.execute(spark, uneven, spec,
-          MultiSeriesEngine.DefaultMaxRunRows, cap)
+      val got = MultiSeriesEngine.execute(spark, uneven, spec, cap)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val expect = lens.keys.toSeq.flatMap { sid =>
         RefinementEngine.execute(spark, singles(sid), spec)
@@ -131,6 +132,8 @@ class MultiSeriesSpec extends AnyFunSuite {
   }
 
   test("refined LIMIT queries release their stats and index checkpoints") {
+    // nothing is persisted or checkpointed: releasing the lazy result is a
+    // no-op, and repeated queries leave no block behind
     val spec = QueryParser.parse(queries(1))
     def runOnce(): Unit = {
       val df = MultiSeriesEngine.execute(spark, multi, spec)
@@ -159,78 +162,39 @@ class MultiSeriesSpec extends AnyFunSuite {
     assert(got(0L) == 66 && got(1L) == 66 && got(2L) == 36)
   }
 
-  test("index build carries no single-partition window (partitioned by sid)") {
-    val idx = MultiSeriesEngine.index(multi, 16)
-    val plan = idx.df.queryExecution.executedPlan.toString
-    assert(plan.contains("Window") && plan.contains("sid"), plan.take(1500))
-  }
-
-  test("per-sid kernel index build equals the declarative windowed build") {
-    val a = MultiSeriesEngine.index(multi, 16)
-    val b = MultiSeriesEngine.indexFast(multi, 16)
-    assert(a.levels == b.levels)
-    def rows(i: MultiSeriesEngine.MsIndex) = i.df.orderBy("sid", "t").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-        r.getSeq[Double](4)))
-      .toSeq
-    // bit-equal including prefix sums: both accumulate sequentially per sid
-    assert(rows(a) == rows(b))
-    // and no Window / per-level lead stages in the kernel plan
-    val plan = b.df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan.take(1500))
-  }
-
-  // sid 9 is 600 rows — over a 200-row budget; sids 0..2 stay on the
-  // per-partition kernel path
+  // sid 9 is 600 rows among three 70-row series
   lazy val mixed = multi.unionByName((1 to 600)
     .map(i => (9L, i.toLong, ((i * 2654435761L) % 1000) / 100.0))
     .toDF("sid", "t", "y"))
 
-  test("one giant + many small series: the giant routes to the partitioned build") {
-    val spec = QueryParser.parse(queries.head)
-    def run(budget: Long) =
-      MultiSeriesEngine.execute(spark, mixed, spec, maxRunRows = budget)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // routing is semantics-preserving: tiny budget (giant routed) equals
-    // the default budget (nothing routed)
-    val routed = run(200L)
-    assert(routed == run(MultiSeriesEngine.DefaultMaxRunRows))
-    assert(routed.exists(_._1 == 9L), "giant series must produce results")
-    // the routed index itself is row-equal to the unrouted kernel build
-    val stats = mixed.groupBy("sid").agg(
-      org.apache.spark.sql.functions.min("t").as("tMin"),
-      org.apache.spark.sql.functions.max("t").as("tMax"),
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-    def rows(i: MultiSeriesEngine.MsIndex) = i.df.orderBy("sid", "t").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-        r.getSeq[Double](4))).toSeq
-    assert(rows(MultiSeriesEngine.indexRouted(mixed, 16, stats, maxRunRows = 200L))
-      == rows(MultiSeriesEngine.indexFast(mixed, 16)))
-  }
-
-  test("routed giant-series indexes are released once the index checkpoint holds them") {
-    val spec = QueryParser.parse(queries.head)
-    def runOnce(): Unit = {
-      val df = MultiSeriesEngine.execute(spark, mixed, spec, maxRunRows = 200L)
-      assert(df.collect().exists(_.getLong(0) == 9L))
-      graft.engine.Checkpoints.release(df)
+  test("a 600-row series split by a small cap: per-series results, nothing persisted") {
+    val spec = QueryParser.parse(
+      "SELECT time_id, offset IN_DOMAIN [1, None], [3, 8] FROM t.c " +
+        "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [None, 1] MIN " +
+        "LIMIT REFINED 9")
+    val cap = 96L
+    val long = LocalSolve.Grid(9L, 1, 600, RefinementEngine.bindDomains(spec, 1, 600))
+    val chunks = LocalSolve.plan(long, LocalSolve.job(spec), cap)
+    assert(chunks.size >= 3 && chunks.forall(ch => ch.cells * 2 <= cap && ch.rows <= cap))
+    def runOnce(): Set[(Long, Long, Long)] = {
+      val df = MultiSeriesEngine.execute(spark, mixed, spec, cap)
+      try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      finally graft.engine.Checkpoints.release(df)
     }
-    runOnce()
+    val expect = (Seq(0L, 1L, 2L).map(sid => sid -> ys(sid)) :+
+      (9L -> (1 to 600).map(i => ((i * 2654435761L) % 1000) / 100.0))).flatMap {
+      case (sid, vs) =>
+        val single = vs.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("t", "y")
+        RefinementEngine.execute(spark, single, spec)
+          .collect().map(r => (sid, r.getLong(0), r.getLong(1)))
+    }.toSet
+    assert(runOnce() == expect)
+    assert(expect.count(_._1 == 9L) == 9)
     (1 to 3).foreach { i =>
       val before = TestSpark.persistedIds()
-      runOnce()
+      assert(runOnce() == expect)
       val left = TestSpark.persistedIds() -- before
       assert(left.isEmpty, s"after query $i: $left")
     }
-  }
-
-  test("indexFast fails fast (not OOM) when a series exceeds the run budget") {
-    val ex = intercept[Throwable] {
-      MultiSeriesEngine.indexFast(multi, 16, maxRunRows = 50L).df.count()
-    }
-    def chain(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => e.toString +: chain(e.getCause))
-    assert(chain(ex).exists(_.contains("maxRunRows")), chain(ex).mkString(" | "))
   }
 }

@@ -51,7 +51,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("CP refined top-k also avoids a full sort") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    import graft.engine.{LocalSolve, RefinementEngine, SeriesOps}
+    import graft.engine.{LocalSolve, RefinementEngine}
     import graft.parser.QueryParser
     import spark.implicits._
     val series = (1 to 100).map(i => (i.toLong, i * 0.5)).toDF("t", "y")
@@ -63,8 +63,7 @@ class PlanSpec extends AnyFunSuite {
     val b = RefinementEngine.bindDomains(spec, 1, 100)
     val chunks = LocalSolve.plan(LocalSolve.Grid(0L, 1, 100, b), LocalSolve.job(spec), cap).size
     assert(chunks >= 3)
-    val idx = SeriesOps.index(series, RefinementEngine.windowNeed(spec, b.lxHi))
-    val df = RefinementEngine.execute(spark, series, spec, Some(idx), cap)
+    val df = RefinementEngine.execute(spark, series, spec, None, cap)
     val finalReads = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -113,6 +112,25 @@ class PlanSpec extends AnyFunSuite {
       try df.collect() finally graft.engine.Checkpoints.release(df)
       quiet()
       assert(jobs.get() == 1, s"$q ran ${jobs.get()} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("q24 builds on a warm session without starting a Spark job") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // warm the session series first: a one-time per-session build
+    graft.queries.TimeSeriesQueries.cachedIndex(spark, sf)
+    Thread.sleep(1000) // the listener bus is asynchronous
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = SparkEntry.queries("q24_ts_variability")(spark, sf)
+      Thread.sleep(1000)
+      assert(jobs.get() == 0, s"building q24 ran ${jobs.get()} jobs")
+      assert(df.collect().nonEmpty)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

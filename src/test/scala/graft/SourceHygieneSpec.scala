@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.engine.IndexCache]] and [[graft.cli.Cleanup]], which sweeps
   * both), and no query file keeps its own memo map. The CP refinement core
   * keeps one copy: the kernel scores cells in one file and no file defines
-  * a score column, and only the declarative reference index build orders a
-  * window over the whole series. */
+  * a score column; no main file orders a window over a whole frame, and
+  * the CP kernel builds no series index. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -73,7 +73,14 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
   }
 
-  test("an un-partitioned Window.orderBy appears only in SeriesOps") {
-    assert(offenders("""Window\s*\.\s*orderBy""", Set("SeriesOps.scala")) == Nil)
+  test("an un-partitioned Window.orderBy appears in no main file") {
+    assert(offenders("""Window\s*\.\s*orderBy""", Set.empty) == Nil)
+  }
+
+  test("no series-index build or run budget remains in src/main") {
+    // each name carries a character class, so a grep of the sources for
+    // the deleted names does not match this rule itself
+    assert(offenders("""levels[F]or|build[L]evels|twoPass[B]uild|Index[P]artitioner|maxRun[R]ows""",
+      Set.empty) == Nil)
   }
 }
