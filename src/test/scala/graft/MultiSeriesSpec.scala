@@ -167,32 +167,40 @@ class MultiSeriesSpec extends AnyFunSuite {
     .map(i => (9L, i.toLong, ((i * 2654435761L) % 1000) / 100.0))
     .toDF("sid", "t", "y"))
 
-  test("a 600-row series split by a small cap: per-series results, nothing persisted") {
-    val spec = QueryParser.parse(
-      "SELECT time_id, offset IN_DOMAIN [1, None], [3, 8] FROM t.c " +
-        "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [None, 1] MIN " +
-        "LIMIT REFINED 9")
-    val cap = 96L
-    val long = LocalSolve.Grid(9L, 1, 600, RefinementEngine.bindDomains(spec, 1, 600))
-    val chunks = LocalSolve.plan(long, LocalSolve.job(spec), cap)
-    assert(chunks.size >= 3 && chunks.forall(ch => ch.cells * 2 <= cap && ch.rows <= cap))
-    def runOnce(): Set[(Long, Long, Long)] = {
-      val df = MultiSeriesEngine.execute(spark, mixed, spec, cap)
-      try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      finally graft.engine.Checkpoints.release(df)
-    }
-    val expect = (Seq(0L, 1L, 2L).map(sid => sid -> ys(sid)) :+
-      (9L -> (1 to 600).map(i => ((i * 2654435761L) % 1000) / 100.0))).flatMap {
-      case (sid, vs) =>
-        val single = vs.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("t", "y")
-        RefinementEngine.execute(spark, single, spec)
-          .collect().map(r => (sid, r.getLong(0), r.getLong(1)))
-    }.toSet
-    assert(runOnce() == expect)
-    assert(expect.count(_._1 == 9L) == 9)
+  private val mixedSpec = QueryParser.parse(
+    "SELECT time_id, offset IN_DOMAIN [1, None], [3, 8] FROM t.c " +
+      "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(4) in [None, 1] MIN " +
+      "LIMIT REFINED 9")
+  private val mixedCap = 96L
+
+  private def runMixed(): Set[(Long, Long, Long)] = {
+    val df = MultiSeriesEngine.execute(spark, mixed, mixedSpec, mixedCap)
+    try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    finally graft.engine.Checkpoints.release(df)
+  }
+
+  lazy val mixedExpect = (Seq(0L, 1L, 2L).map(sid => sid -> ys(sid)) :+
+    (9L -> (1 to 600).map(i => ((i * 2654435761L) % 1000) / 100.0))).flatMap {
+    case (sid, vs) =>
+      val single = vs.zipWithIndex.map { case (v, i) => (i + 1L, v) }.toDF("t", "y")
+      RefinementEngine.execute(spark, single, mixedSpec)
+        .collect().map(r => (sid, r.getLong(0), r.getLong(1)))
+  }.toSet
+
+  test("a 600-row series split by a small cap: per-series results") {
+    val long = LocalSolve.Grid(9L, 1, 600, RefinementEngine.bindDomains(mixedSpec, 1, 600))
+    val chunks = LocalSolve.plan(long, LocalSolve.job(mixedSpec), mixedCap)
+    assert(chunks.size >= 3 &&
+      chunks.forall(ch => ch.cells * 2 <= mixedCap && ch.rows <= mixedCap))
+    assert(runMixed() == mixedExpect)
+    assert(mixedExpect.count(_._1 == 9L) == 9)
+  }
+
+  test("a series split into chunks leaves nothing persisted") {
+    val expect = mixedExpect
     (1 to 3).foreach { i =>
       val before = TestSpark.persistedIds()
-      assert(runOnce() == expect)
+      assert(runMixed() == expect)
       val left = TestSpark.persistedIds() -- before
       assert(left.isEmpty, s"after query $i: $left")
     }
