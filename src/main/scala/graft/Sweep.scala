@@ -15,10 +15,10 @@ import graft.queries.TimeSeriesQueries
   * Emits csv: iter,udf_size,fix_domains_s,execute_s
   *
   * `execute_s` is the production `RefinementEngine.execute(prebuilt)` wall
-  * over the persisted series (collected): one task while the grid is one
-  * chunk of at most `LocalSolve.CellCap` cell-constraints, one task per
-  * chunk beyond. Nothing is built per iteration: the kernel reads the raw
-  * rows.
+  * over the persisted series (collected): solved on the driver while the
+  * grid is one chunk of at most `LocalSolve.CellCap` cell-constraints, one
+  * task per chunk beyond. Nothing is built per iteration: the kernel reads
+  * the raw rows.
   */
 object Sweep {
   def main(args: Array[String]): Unit = {

@@ -59,26 +59,25 @@ object Main {
     * `(time_id, offset)` rows. */
   private final case class Answer(series: DataFrame, rows: Array[Row])
 
-  /** The one query path of both CLI modes: column check, variability guard
-    * (reference: server.py:209-214), the cross-session index cache (the
-    * reference pickles its UDF map the same way, server.py:249-286 — a
-    * repeat of the same query loads the index instead of rebuilding it; the
-    * timing CSV carries an index_cache_hit / index_built marker row), then
-    * execute. Left = why the query was refused. */
+  /** The one query path of both CLI modes: column check, the
+    * cross-session index cache (the reference pickles its UDF map the same
+    * way, server.py:249-286 — a repeat of the same query loads the index
+    * instead of rebuilding it; the timing CSV carries an index_cache_hit /
+    * index_built marker row), variability guard (reference:
+    * server.py:209-214) on the variance the index carries, then execute.
+    * On a warm cache a query runs no Spark job. A refused series is cached
+    * before it is refused. Left = why the query was refused. */
   private def answer(spark: SparkSession, table: DataFrame, tablePath: String, spec: QuerySpec,
       tk: Timekeeper): Either[String, Answer] = {
     if (!table.columns.contains(spec.column)) return Left(s"column '${spec.column}' not in table")
     val series = table.selectExpr("time_id as t", s"`${spec.column}` as y")
-    val variance = tk.time("variability_guard") {
-      series.selectExpr("var_pop(y)").head().getDouble(0)
-    }
-    if (variance <= 5e-28) return Left("no variability in data")
     val cacheDir = IndexCache.DefaultDir
     val (idx, cacheHit) = tk.time("index_get_or_build") {
       IndexCache.getOrBuild(spark, cacheDir, tablePath, spec.column, series, spec)
     }
     tk.time(if (cacheHit) "index_cache_hit" else "index_built")(())
     println(if (cacheHit) "index: loaded from cache" else s"index: built, cached at $cacheDir")
+    if (tk.time("variability_guard")(idx.variance <= 5e-28)) return Left("no variability in data")
     val rows = tk.time("execute") {
       RefinementEngine.execute(spark, series, spec, prebuilt = Some(idx)).collect()
     }

@@ -36,7 +36,9 @@ object IndexCache {
 
   /** Session-level memo of loaded/built series keyed by cache dir: a
     * long-lived session querying the same (table, column) repeatedly
-    * reuses ONE persisted copy instead of pinning a fresh one per call.
+    * reuses ONE persisted copy, and the driver-resident array it carries
+    * ([[SeriesOps.SeriesIndex.resident]]), instead of pinning a fresh one
+    * per call.
     * Entries carry the source mtime they were built against, so staleness
     * invalidates the memo exactly like it invalidates the disk cache. */
   private val memo = new java.util.concurrent.ConcurrentHashMap[

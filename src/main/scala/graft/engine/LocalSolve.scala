@@ -3,7 +3,6 @@ package graft.engine
 import java.util.Comparator
 
 import scala.reflect.ClassTag
-import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions.{col, lit}
 
 import graft.model._
 import graft.engine.RefinementEngine.Bound
-import graft.engine.SeriesOps.SeriesIndex
+import graft.engine.SeriesOps.{Placed, SeriesIndex}
 
 /** The CP kernel: the only executor of a CP query, for one series
   * ([[RefinementEngine.execute]]) or a corpus ([[MultiSeriesEngine.execute]]),
@@ -22,7 +21,7 @@ import graft.engine.SeriesOps.SeriesIndex
   * Its unit of work is a CHUNK: a contiguous run of one series' `(x, lx)`
   * enumeration holding at most [[CellCap]] cell-constraints, together with
   * the one series row range `[lo, hi]` its windows read, at most [[CellCap]]
-  * rows. A task places each raw `(t, y)` row it reads by position (rows
+  * rows. The kernel places each raw `(t, y)` row it reads by position (rows
   * arrive in no particular order), derives every window mean and maximum
   * in memory, evaluates every constraint through its scalar form
   * ([[ConstraintFunction.value]]), scores the cells and keeps a bounded
@@ -30,11 +29,14 @@ import graft.engine.SeriesOps.SeriesIndex
   * query (server.py:190-206, 332-333):
   *
   *   - one series whose grid is one chunk (every interactive-size query)
-  *     runs as ONE Spark task and job:
-  *     `series.where(t between lo and hi).coalesce(1).mapPartitions(kernel)`;
-  *   - larger grids, and a corpus with chunks keyed by `sid`, run one task
-  *     per chunk: series rows are shuffled to the chunks whose ranges hold
-  *     them. When a refined query's series
+  *     is solved on the driver when the query is built, and the result is a
+  *     local relation, which collects with no Spark job. The chunk's rows
+  *     are sliced from the series' resident array
+  *     ([[SeriesOps.SeriesIndex.resident]]) with no job, else read by one
+  *     collect of `series.where(t between lo and hi)`;
+  *   - larger grids, and a corpus with chunks keyed by `sid`, run lazily,
+  *     one task per chunk: series rows are shuffled to the chunks whose
+  *     ranges hold them. When a refined query's series
   *     spans several chunks, a first pass over the chunks takes that series'
   *     extrema. Each chunk ranks its own cells; the final order and limit see
   *     at most k rows per chunk.
@@ -68,6 +70,11 @@ object LocalSolve {
   final case class CellValue(x: Long, lx: Long, v: Double)
   /** One raw series row of a corpus. */
   final case class Point(sid: Long, t: Long, y: Double)
+
+  private lazy val cellEnc: Encoder[Cell] = Encoders.product[Cell]
+  private lazy val seriesCellEnc: Encoder[SeriesCell] = Encoders.product[SeriesCell]
+  private lazy val cellValueEnc: Encoder[CellValue] = Encoders.product[CellValue]
+  private lazy val pointEnc: Encoder[Point] = Encoders.product[Point]
 
   /** A query and its constraint functions, shipped with every task. */
   private[graft] final case class Job(spec: QuerySpec, fns: Array[ConstraintFunction]) {
@@ -144,15 +151,24 @@ object LocalSolve {
 
   /** Split a grid into chunks of at most `cap` cell-constraints and `cap`
     * rows, in enumeration order, each taking the longest runs of one x's
-    * offsets that keep it within both. A cell whose own windows span more
+    * offsets that keep it within both. The enumeration is cut into the
+    * fewest even shares that fit the cell bound, `ceil(cells / (cap /
+    * constraints))` of them, whose sizes differ by at most one cell: a grid
+    * just over the cap splits in halves, not into a full chunk and a small
+    * rest. A chunk that reaches the row bound first ends early and the next
+    * one fills the rest of its share. A cell whose own windows span more
     * than `cap` rows fails: no chunk can hold it. */
   private[graft] def plan(g: Grid, job: Job, cap: Long): Vector[Chunk] = {
     val nc = job.spec.constraints.size
     require(nc > 0, "a CP query needs a constraint")
-    if (g.cells == 0) return Vector.empty
+    val total = g.cells
+    if (total == 0) return Vector.empty
     g.whole(job, cap).foreach(ch => return Vector(ch))
     val r = g.reach(job)
-    val maxCells = math.max(1L, cap / nc)
+    val shares = (total - 1) / math.max(1L, cap / nc) + 1
+    // where the j-th share ends: floor(j * total / shares)
+    def shareEnd(j: Long): Long = total / shares * j + total % shares * j / shares
+    var (share, upTo) = (1L, shareEnd(1))
     val out = Vector.newBuilder[Chunk]
     var (first, x0, lx0, cells, lo, hi) = (0L, 0L, 0L, 0L, 0L, 0L)
     def close(): Unit = if (cells > 0) {
@@ -164,7 +180,8 @@ object LocalSolve {
       val end = g.lxEnd(x)
       var lx = g.lxLo
       while (lx <= end) {
-        if (cells == maxCells || (cells > 0 && g.hullHi(x, lx, r) - lo + 1 > cap)) close()
+        if (first + cells == upTo) { close(); share += 1; upTo = shareEnd(share) }
+        else if (cells > 0 && g.hullHi(x, lx, r) - lo + 1 > cap) close()
         if (cells == 0) {
           val (a, b) = (g.hullLo(x, r), g.hullHi(x, lx, r))
           require(b - a + 1 <= cap, s"cell (time_id $x, offset $lx) reads the ${b - a + 1} " +
@@ -173,7 +190,7 @@ object LocalSolve {
         }
         // the last offset of this x whose windows end within the cap
         val fit = if (g.tMax - lo < cap) end else lo + cap - 1 - x - r
-        val e = math.min(math.min(end, fit), lx + maxCells - cells - 1)
+        val e = math.min(math.min(end, fit), lx + (upTo - first - cells) - 1)
         cells += e - lx + 1
         hi = math.max(hi, g.hullHi(x, e, r))
         lx = e + 1
@@ -184,20 +201,12 @@ object LocalSolve {
     out.result()
   }
 
-  /** A chunk's raw series rows, placed by position: the [[ScalarProbe]]
-    * its constraint functions read. */
-  private final class Slice(ch: Chunk) extends ScalarProbe {
+  /** A chunk's raw series rows `y`, placed by position: the
+    * [[ScalarProbe]] its constraint functions read. */
+  private final class Slice(ch: Chunk, y: Array[Double]) extends ScalarProbe {
     val tMin: Long = ch.grid.tMin
     val tMax: Long = ch.grid.tMax
     private val lo = ch.lo
-    private val y = new Array[Double](ch.rows.toInt)
-    private var got = 0
-
-    def put(t: Long, v: Double): Unit = { y((t - lo).toInt) = v; got += 1 }
-
-    def check(): Unit = require(got == y.length,
-      s"series rows [${ch.lo}, ${ch.hi}] hold $got of ${y.length} rows: " +
-        "the series key is not dense")
 
     // the left-to-right sum of y[sa..sb], extended while the window start
     // stays and its end grows
@@ -383,21 +392,6 @@ object LocalSolve {
       .map(q => row(q, isSat(q), key(q)))
   }
 
-  /** One chunk of one series `(t, y)` as one task: `where` → `coalesce(1)`
-    * → `mapPartitions`, one Spark job. */
-  private def oneTask[A: Encoder](series: DataFrame, ch: Chunk)(
-      f: (Chunk, ScalarProbe) => Iterator[A]): DataFrame =
-    series.where(col("t").between(ch.lo, ch.hi))
-      .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-      .coalesce(1)
-      .mapPartitions { rows =>
-        val slice = new Slice(ch)
-        rows.foreach { case (t, y) => slice.put(t, y) }
-        slice.check()
-        f(ch, slice)
-      }
-      .toDF()
-
   /** Many chunks, one task per chunk: each series row is shuffled to every
     * chunk whose range holds it. The same shuffled rows serve every `run`. */
   private final class Tasks(points: RDD[Point], chunks: Array[Chunk]) {
@@ -415,10 +409,9 @@ object LocalSolve {
     def run[A: ClassTag](f: (Int, Chunk, ScalarProbe) => Iterator[A]): RDD[A] = {
       val chunks = this.chunks
       shuffled.mapPartitionsWithIndex { (i, rows) =>
-        val slice = new Slice(chunks(i))
-        rows.foreach { case (_, p) => slice.put(p.t, p.y) }
-        slice.check()
-        f(i, chunks(i), slice)
+        val placed = new Placed(chunks(i).lo, chunks(i).rows.toInt)
+        rows.foreach { case (_, p) => placed.put(p.t, p.y) }
+        f(i, chunks(i), sliceOf(chunks(i), placed))
       }
     }
   }
@@ -451,28 +444,52 @@ object LocalSolve {
       }
   }
 
-  /** `perChunk` over one series' grid of `b`: one task when the grid is one
-    * chunk, else `many` over its chunks and the series rows they read. */
-  private def overSeries[A <: Product: TypeTag](idx: SeriesIndex, jb: Job, b: Bound, cap: Long)(
+  /** The slice of `ch` from its rows, which must be every key of its range
+    * once. */
+  private def sliceOf(ch: Chunk, placed: Placed): Slice = {
+    require(placed.dense, s"series rows [${ch.lo}, ${ch.hi}] hold ${placed.rows} rows of " +
+      s"${placed.keys} keys, not ${ch.rows}: the series key is not dense")
+    new Slice(ch, placed.y)
+  }
+
+  /** Chunk `ch` of a series: a copy of its range of the resident array,
+    * else one collect of its rows from `series`. */
+  private def slice(idx: SeriesIndex, series: DataFrame, ch: Chunk): Slice =
+    idx.resident match {
+      case Some(y) => new Slice(ch,
+        java.util.Arrays.copyOfRange(y, (ch.lo - idx.tMin).toInt, (ch.hi - idx.tMin).toInt + 1))
+      case None =>
+        val parts = SeriesOps.collectRows(series.where(col("t").between(ch.lo, ch.hi)))
+          .getOrElse(throw new IllegalArgumentException(
+            s"series rows [${ch.lo}, ${ch.hi}] hold a null"))
+        val placed = new Placed(ch.lo, ch.rows.toInt)
+        for ((ts, ys) <- parts; i <- ts.indices) placed.put(ts(i), ys(i))
+        sliceOf(ch, placed)
+    }
+
+  /** `perChunk` over one series' grid of `b`: a grid of one chunk is solved
+    * here, on the driver, into a local relation; a larger one runs `many`
+    * over its chunks and the series rows they read. */
+  private def overSeries[A](idx: SeriesIndex, jb: Job, b: Bound, cap: Long, enc: Encoder[A])(
       perChunk: (Chunk, ScalarProbe) => Iterator[A])(
       many: (RDD[Point], Array[Chunk]) => RDD[A]): DataFrame = {
-    val enc = Encoders.product[A]
     val series = SeriesOps.raw(idx.df)
+    val spark = series.sparkSession
     plan(Grid(0L, idx.tMin, idx.tMax, b), jb, cap) match {
-      case Vector() => series.sparkSession.emptyDataset(enc).toDF()
-      case Vector(ch) => oneTask(series, ch)(perChunk)(enc)
+      case Vector() => spark.emptyDataset(enc).toDF()
+      case Vector(ch) => spark.createDataset(perChunk(ch, slice(idx, series, ch)).toSeq)(enc).toDF()
       case chunks =>
         val points = series.where(col("t").between(chunks.map(_.lo).min, chunks.map(_.hi).max))
-          .select(lit(0L).as("sid"), col("t"), col("y")).as(Encoders.product[Point]).rdd
-        series.sparkSession.createDataset(many(points, chunks.toArray))(enc).toDF()
+          .select(lit(0L).as("sid"), col("t"), col("y")).as(pointEnc).rdd
+        spark.createDataset(many(points, chunks.toArray))(enc).toDF()
     }
   }
 
-  /** The query over one series `(t, y)`: a lazy frame of `(time_id, offset)`
-    * in result order. */
+  /** The query over one series `(t, y)`: a frame of `(time_id, offset)` in
+    * result order, solved now when the grid is one chunk. */
   private[graft] def series(idx: SeriesIndex, spec: QuerySpec, b: Bound, cap: Long): DataFrame = {
     val jb = job(spec)
-    overSeries(idx, jb, b, cap)((ch, probe) =>
+    overSeries(idx, jb, b, cap, cellEnc)((ch, probe) =>
       rank(ch, probe, jb, None).map(r => Cell(r.x, r.lx)))((points, chunks) =>
       chunked(points, chunks, jb, 1).map(r => Cell(r.x, r.lx)))
   }
@@ -482,18 +499,19 @@ object LocalSolve {
   private[graft] def corpus(series: DataFrame, grids: Seq[Grid], jb: Job, cap: Long): DataFrame = {
     val spark = series.sparkSession
     val chunks = grids.flatMap(plan(_, jb, cap)).toArray
-    if (chunks.isEmpty) spark.emptyDataset(Encoders.product[SeriesCell]).toDF()
+    if (chunks.isEmpty) spark.emptyDataset(seriesCellEnc).toDF()
     else {
       val points = series.select(col("sid").cast("long").as("sid"), col("t").cast("long").as("t"),
-        col("y").cast("double").as("y")).as(Encoders.product[Point]).rdd
+        col("y").cast("double").as("y")).as(pointEnc).rdd
       spark.createDataset(chunked(points, chunks, jb, grids.size)
-        .map(r => SeriesCell(r.sid, r.x, r.lx)))(Encoders.product[SeriesCell]).toDF()
+        .map(r => SeriesCell(r.sid, r.x, r.lx)))(seriesCellEnc).toDF()
     }
   }
 
   /** One function's value at every cell of `b` over one series, as
     * `(x, lx, v)` in enumeration order: the reference's UDF map
-    * (server.py:291-351) for one function. */
+    * (server.py:291-351) for one function. A grid of one chunk is solved
+    * now, on the driver. */
   def values(idx: SeriesIndex, fn: ConstraintFunction, args: Seq[Long], b: Bound): DataFrame = {
     val c = Constraint(fn.name, args, None, None, Target.Max)
     val spec = QuerySpec("", "", Domain(None, None), Domain(None, None), Seq(c), None,
@@ -506,7 +524,7 @@ object LocalSolve {
       ch.foreachCell { (x, lx) => out(k) = CellValue(x, lx, v(k)); k += 1 }
       out.iterator
     }
-    overSeries(idx, jb, b, CellCap)(cells)((points, chunks) =>
+    overSeries(idx, jb, b, CellCap, cellValueEnc)(cells)((points, chunks) =>
       new Tasks(points, chunks).run((_, ch, probe) => cells(ch, probe)))
   }
 

@@ -98,13 +98,17 @@ object TimeSeriesQueries {
       round(max("v"), 6).as("max_c0"),
       count(lit(1)).as("grid_cells"))
 
-  /** A CP query over the session series: the kernel reads the persisted
-    * rows and their bounds, so the query runs no key-assignment or bounds
-    * job. */
+  /** A CP query over the session series, in `(time_id, offset)` order: the
+    * kernel reads the persisted rows and their bounds, so the query runs no
+    * key-assignment or bounds job. The suite's CP grids are one chunk,
+    * solved on the driver from the resident series, and their rows are
+    * ordered there too: a sort over the local result would start a range
+    * shuffle's jobs. */
   private def cp(s: SparkSession, dir: String, q: String): DataFrame = {
     val idx = cachedIndex(s, dir)
-    RefinementEngine.execute(s, idx.df, QueryParser.parse(q), prebuilt = Some(idx))
-      .orderBy("time_id", "offset")
+    val df = RefinementEngine.execute(s, idx.df, QueryParser.parse(q), prebuilt = Some(idx))
+    val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** §2.6 UNREFINED — all candidates satisfying every constraint. */

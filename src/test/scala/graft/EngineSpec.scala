@@ -173,6 +173,66 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  private val refinedQuery =
+    "SELECT time_id, offset IN_DOMAIN [5, 70], [2, 8] FROM t.c " +
+      "WHERE avg_amp() in [3, 7] MAX and max_amp_excess_right(5) in [0, None] MAX " +
+      "LIMIT REFINED 12"
+
+  test("a warm index cache answers a query with no Spark job from the resident series") {
+    import graft.engine.IndexCache
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft_idx_cache").toString
+    graft.cli.Cleanup.deleteOnExit(cacheDir)
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_idx_src")
+    graft.cli.Cleanup.deleteOnExit(tableDir.toString)
+    val tableFile = tableDir.resolve("series.parquet")
+    series.write.mode("overwrite").parquet(tableFile.toString)
+    val spec = QueryParser.parse(refinedQuery)
+    def get() = IndexCache.getOrBuild(spark, cacheDir, tableFile.toString, "c", series, spec)
+    val (cold, _) = get()
+    // the driver holds every y by position: the series rows, in key order
+    assert(cold.resident.map(_.toSeq) == Some(seriesRows(cold).map(_._2)))
+    assert(seriesRows(cold).map(_._1) == (1L to n))
+    var got = Seq.empty[(Long, Long)]
+    assert(jobsOf {
+      val (idx, hit) = get()
+      assert(hit && (idx eq cold))
+      got = RefinementEngine.execute(spark, series, spec, Some(idx)).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    } == 0)
+    assert(got == naiveRefined(spec).map { case (x, lx) => (x.toLong, lx.toLong) })
+  }
+
+  test("a non-dense series is not resident and fails as not dense") {
+    val spec = QueryParser.parse(refinedQuery)
+    // a missing key, and a repeated key with another missing: the row count
+    // matches the key span, but not every key is there
+    val gap = series.where("t != 40")
+    val repeat = series.where("t != 40").union(series.where("t = 41"))
+    for (s <- Seq(gap, repeat)) {
+      val idx = SeriesOps.persisted(s)
+      try {
+        assert(idx.resident.isEmpty && idx.tMin == 1 && idx.tMax == n)
+        val e = intercept[IllegalArgumentException](
+          RefinementEngine.execute(spark, s, spec, Some(idx)).collect())
+        assert(e.getMessage.contains("the series key is not dense"), e.getMessage)
+      } finally idx.df.unpersist()
+    }
+  }
+
+  test("a series over the resident cap answers through one collect of its chunk") {
+    val spec = QueryParser.parse(refinedQuery)
+    val idx = SeriesOps.persisted(series, n - 1L)
+    try {
+      assert(idx.resident.isEmpty && idx.tMin == 1 && idx.tMax == n)
+      var got = Seq.empty[(Long, Long)]
+      assert(jobsOf {
+        got = RefinementEngine.execute(spark, series, spec, Some(idx)).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      } == 1)
+      assert(got == naiveRefined(spec).map { case (x, lx) => (x.toLong, lx.toLong) })
+    } finally idx.df.unpersist()
+  }
+
   test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
     val idx = SeriesOps.SeriesIndex(series, 1, n)
     // the probe surface every constraint and query reads windows through,

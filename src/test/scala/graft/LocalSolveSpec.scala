@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine._
@@ -11,9 +11,11 @@ import graft.parser.QueryParser
 
 /** The CP kernel ([[LocalSolve]]): the same rows in the same order under the
   * same schema whether a grid runs as one chunk or many, on randomized
-  * specs; the one-chunk gate; and the cap on what a chunk holds. Its
-  * one-job, nothing-pinned lifecycle on the suite's CP queries is pinned in
-  * PlanSpec. */
+  * specs, with the one chunk solved on the driver from either source (the
+  * resident series or one collect of its rows); the one-chunk gate; and the
+  * cap on what a chunk holds and how evenly chunks share a grid. Its
+  * zero-job, nothing-pinned lifecycle on the suite's CP queries is pinned
+  * in PlanSpec. */
 class LocalSolveSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -25,8 +27,30 @@ class LocalSolveSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  private def isOneTask(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
+  /** Whether `df` was solved on the driver: a local relation. */
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  /** The Spark jobs started under each job group while `body` ran; `body`
+    * sets the groups. */
+  private def jobsByGroup(body: => Unit): Map[String, Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1000) // the listener bus is asynchronous
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+  }
 
   test("one chunk ≡ chunked: same rows, order and schema (seeded, 60 cases)") {
     val rnd = new scala.util.Random(23)
@@ -93,27 +117,36 @@ class LocalSolveSpec extends AnyFunSuite {
     assert(bounds.exists(_.xLo == 1) && bounds.exists(b => b.xHi + b.lxHi >= n))
 
     val idx = SeriesOps.persisted(series)
+    assert(idx.resident.isDefined)
     try {
       var relaxed, tightened, nonEmpty = 0
-      for (((q, spec), i) <- shapes.zipWithIndex) {
-        assert(LocalSolve.admits(spec, bounds(i), 1, n), q)
-        val cap = LocalSolveSpec.splitCap(spec, bounds(i), 1, n)
-        assert(LocalSolveSpec.chunks(spec, bounds(i), 1, n, cap).size >= 3, q)
-        // both sources: the raw series and its persisted copy
-        val prebuilt = if (i % 2 == 0) Some(idx) else None
-        val one = RefinementEngine.execute(spark, series, spec, prebuilt)
-        val chunked = RefinementEngine.execute(spark, series, spec, prebuilt, cap)
-        assert(isOneTask(one) && !isOneTask(chunked), q)
-        assert(one.schema == chunked.schema, q)
-        val got = rows(one)
-        assert(got == rows(chunked), q)
-        if (got.nonEmpty) nonEmpty += 1
-        spec.limit.filter(_ => spec.refined).foreach { k =>
-          val satisfying = RefinementEngine.execute(spark, series,
-            spec.copy(refined = false, limit = None), Some(idx)).count()
-          if (satisfying < k) relaxed += 1 else tightened += 1
+      val jobs = jobsByGroup {
+        for (((q, spec), i) <- shapes.zipWithIndex) {
+          assert(LocalSolve.admits(spec, bounds(i), 1, n), q)
+          val cap = LocalSolveSpec.splitCap(spec, bounds(i), 1, n)
+          assert(LocalSolveSpec.chunks(spec, bounds(i), 1, n, cap).size >= 3, q)
+          // both sources of the one chunk: the persisted copy's resident
+          // array, and one collect from the raw series
+          val prebuilt = if (i % 2 == 0) Some(idx) else None
+          spark.sparkContext.setJobGroup(if (i % 2 == 0) "resident" else "collected", q)
+          val one = RefinementEngine.execute(spark, series, spec, prebuilt)
+          val oneRows = rows(one)
+          spark.sparkContext.clearJobGroup()
+          val chunked = RefinementEngine.execute(spark, series, spec, prebuilt, cap)
+          assert(onDriver(one) && !onDriver(chunked), q)
+          assert(one.schema == chunked.schema, q)
+          assert(oneRows == rows(chunked), q)
+          if (oneRows.nonEmpty) nonEmpty += 1
+          spec.limit.filter(_ => spec.refined).foreach { k =>
+            val satisfying = RefinementEngine.execute(spark, series,
+              spec.copy(refined = false, limit = None), Some(idx)).count()
+            if (satisfying < k) relaxed += 1 else tightened += 1
+          }
         }
       }
+      // the resident source ran no job; the raw source ran, for each of its
+      // 30 queries, its bounds aggregate and the collect of its chunk's rows
+      assert(!jobs.contains("resident") && jobs.getOrElse("collected", 0) >= 60, jobs)
       assert(relaxed > 0 && tightened > 0, s"relaxed=$relaxed tightened=$tightened")
       assert(nonEmpty >= 50, s"only $nonEmpty of 60 cases returned rows")
     } finally idx.df.unpersist()
@@ -223,6 +256,39 @@ class LocalSolveSpec extends AnyFunSuite {
       assert(rows(RefinementEngine.execute(spark, series, spec, Some(idx))) ==
         EngineSpec.naiveRefined(spec).map { case (x, lx) => (x.toLong, lx.toLong) })
     } finally idx.df.unpersist()
+  }
+
+  test("over-cap grids split evenly: chunk sizes differ by at most one cell") {
+    // the Sweep's query at x and offsets up to 900 on a 10,000-row series:
+    // 806,400 cells of three constraints, just over the cap, in halves
+    val sweep = QuerySpec("events", "value", Domain(Some(1L), Some(900L)),
+      Domain(Some(5L), Some(900L)), Seq(
+        Constraint("avg_amp", Nil, Some(50), Some(200), Target.Max),
+        Constraint("max_amp_excess_left", Seq(4), Some(-2), Some(0), Target.Max),
+        Constraint("max_amp_excess_right", Seq(4), Some(-2), Some(0), Target.Max)),
+      limit = Some(50), refined = true)
+    val b = RefinementEngine.bindDomains(sweep, 1, 10000)
+    assert(LocalSolve.gridCells(b, 10000) == 806400)
+    assert(LocalSolveSpec.chunks(sweep, b, 1, 10000, LocalSolve.CellCap).map(_.cells) ==
+      Vector(403200, 403200))
+    // seeded: offsets [0, l] over a long series, caps where only the cell
+    // bound splits (a chunk's rows stay under the cap): the fewest chunks,
+    // at most one cell apart in size, so at most one x's offsets apart
+    val rnd = new scala.util.Random(31)
+    val one = QueryParser.parse("SELECT time_id, offset IN_DOMAIN [1, 1], [0, 1] FROM t.c " +
+      "WHERE avg_amp() in [0, 1] MAX")
+    for (_ <- 1 to 200) {
+      val (l, xs) = (1 + rnd.nextInt(20), 1 + rnd.nextInt(200))
+      val cells = xs.toLong * (l + 1)
+      val lo = math.max(8L, 4L * (l + 1))
+      if (cells > lo) {
+        val cap = lo + rnd.nextInt((cells - lo).toInt)
+        val sizes = LocalSolveSpec.chunks(one, Bound(1, xs, 0, l), 1, 1L << 40, cap).map(_.cells)
+        val what = s"$xs x [0, $l] at cap $cap: $sizes"
+        assert(sizes.sum == cells && sizes.size == (cells - 1) / cap + 1, what)
+        assert(sizes.max <= cap && sizes.max - sizes.min <= 1, what)
+      }
+    }
   }
 }
 
