@@ -6,9 +6,10 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.model._
 import graft.engine.RefinementEngine.Bound
@@ -29,11 +30,11 @@ import graft.engine.SeriesOps.{Placed, SeriesIndex}
   * query (server.py:190-206, 332-333):
   *
   *   - one series whose grid is one chunk (every interactive-size query)
-  *     is solved on the driver when the query is built, and the result is a
-  *     local relation, which collects with no Spark job. The chunk's rows
-  *     are sliced from the series' resident array
-  *     ([[SeriesOps.SeriesIndex.resident]]) with no job, else read by one
-  *     collect of `series.where(t between lo and hi)`;
+  *     is solved on the driver when the query is built. The only Spark
+  *     object it builds is its result, a local relation of rows that
+  *     collects with no job. Its rows are sliced from the series' resident
+  *     array ([[SeriesOps.SeriesIndex.resident]]); the series frame is read,
+  *     by one collect of the chunk's rows, only when it is not resident;
   *   - larger grids, and a corpus with chunks keyed by `sid`, run lazily,
   *     one task per chunk: series rows are shuffled to the chunks whose
   *     ranges hold them. When a refined query's series
@@ -63,17 +64,14 @@ object LocalSolve {
     * at plan time. */
   val CellCap: Long = 1L << 21
 
-  /** One result row: the field names are the result's column names. */
-  final case class Cell(time_id: Long, offset: Long)
-  final case class SeriesCell(sid: Long, time_id: Long, offset: Long)
-  /** One constraint's value at one cell ([[values]]). */
-  final case class CellValue(x: Long, lx: Long, v: Double)
+  /** The result schemas, no column nullable: a series' `(time_id, offset)`
+    * rows, a corpus' `(sid, time_id, offset)` and a value grid's `(x, lx, v)`. */
+  private def field(name: String, t: DataType = LongType) = StructField(name, t, nullable = false)
+  private val cellSchema = StructType(Seq(field("time_id"), field("offset")))
+  private val seriesCellSchema = StructType(field("sid") +: cellSchema.fields)
+  private val valueSchema = StructType(Seq(field("x"), field("lx"), field("v", DoubleType)))
   /** One raw series row of a corpus. */
   final case class Point(sid: Long, t: Long, y: Double)
-
-  private lazy val cellEnc: Encoder[Cell] = Encoders.product[Cell]
-  private lazy val seriesCellEnc: Encoder[SeriesCell] = Encoders.product[SeriesCell]
-  private lazy val cellValueEnc: Encoder[CellValue] = Encoders.product[CellValue]
   private lazy val pointEnc: Encoder[Point] = Encoders.product[Point]
 
   /** A query and its constraint functions, shipped with every task. */
@@ -241,11 +239,8 @@ object LocalSolve {
   /** Spark's `greatest(a, b)` (and `least`): the first operand unless the
     * second is strictly greater (less) in SQL order — as `max` (`min`) keeps
     * the earlier value on ties. */
-  private def greatest(a: Double, b: Double): Double = if (compareDoubles(b, a) > 0) b else a
-  private def least(a: Double, b: Double): Double = if (compareDoubles(b, a) < 0) b else a
-
-  private def sat(c: Constraint, v: Double): Boolean =
-    c.lo.forall(a => compareDoubles(v, a) >= 0) && c.hi.forall(h => compareDoubles(v, h) <= 0)
+  private[graft] def greatest(a: Double, b: Double): Double = if (compareDoubles(b, a) > 0) b else a
+  private[graft] def least(a: Double, b: Double): Double = if (compareDoubles(b, a) < 0) b else a
 
   /** Per-constraint minima and maxima of a run of cells. */
   private final case class Extrema(mins: Array[Double], maxs: Array[Double]) {
@@ -324,23 +319,30 @@ object LocalSolve {
     * [[order]]. */
   private def rank(ch: Chunk, probe: ScalarProbe, job: Job, ext: Option[Extrema])
       : Iterator[Ranked] = {
-    val spec = job.spec
-    val cons = spec.constraints.toArray
+    val (spec, cons) = (job.spec, job.spec.constraints.toArray)
     val nc = cons.length
-    val xs = new Array[Long](ch.cells)
-    val lxs = new Array[Long](ch.cells)
+    // each constraint's interval and target, read per cell with no allocation
+    val (hasLo, lo) = (cons.map(_.lo.isDefined), cons.map(_.lo.getOrElse(0.0)))
+    val (hasHi, hi) = (cons.map(_.hi.isDefined), cons.map(_.hi.getOrElse(0.0)))
+    val isMax = cons.map(_.target == Target.Max)
+    def sat(i: Int, v: Double): Boolean =
+      (!hasLo(i) || compareDoubles(v, lo(i)) >= 0) && (!hasHi(i) || compareDoubles(v, hi(i)) <= 0)
+    val (xs, lxs) = (new Array[Long](ch.cells), new Array[Long](ch.cells))
     var c = 0
     ch.foreachCell { (x, lx) => xs(c) = x; lxs(c) = lx; c += 1 }
     def row(q: Int, isSat: Boolean, key: Double) =
       Ranked(ch.grid.sid, ch.first + q, xs(q), lxs(q), isSat, key)
 
     if (!spec.refined) {
-      val hits = Iterator.range(0, ch.cells).filter { q =>
+      val (hits, lim) = (Array.newBuilder[Ranked], spec.limit.getOrElse(Int.MaxValue))
+      var q = 0
+      while (q < ch.cells && hits.length < lim) {
         var i = 0
-        while (i < nc && sat(cons(i), job.fns(i).value(probe, xs(q), lxs(q), cons(i).args))) i += 1
-        i == nc
-      }.map(row(_, isSat = true, 0.0))
-      return spec.limit.fold(hits)(hits.take)
+        while (i < nc && sat(i, job.fns(i).value(probe, xs(q), lxs(q), cons(i).args))) i += 1
+        if (i == nc) hits += row(q, isSat = true, 0.0)
+        q += 1
+      }
+      return hits.result().iterator
     }
 
     val v = evaluate(ch, probe, job)
@@ -356,26 +358,23 @@ object LocalSolve {
       var rkSum = 0.0
       var i = 0
       while (i < nc) {
-        val con = cons(i)
         val t = v(k * nc + i)
-        if (sat(con, t)) nSat += 1
+        if (sat(i, t)) nSat += 1
         // RD_c (reference: server.py:614-633): 0 inside [a, b]; (t-b)/(max-b)
         // above; (a-t)/(a-min) below; a None side behaves as t
-        val rd = con.hi.filter(h => compareDoubles(t, h) > 0).map(h => (t - h) / (maxs(i) - h))
-          .orElse(con.lo.filter(a => compareDoubles(t, a) < 0).map(a => (a - t) / (a - mins(i))))
-          .getOrElse(0.0)
+        val rd =
+          if (hasHi(i) && compareDoubles(t, hi(i)) > 0) (t - hi(i)) / (maxs(i) - hi(i))
+          else if (hasLo(i) && compareDoubles(t, lo(i)) < 0) (lo(i) - t) / (lo(i) - mins(i))
+          else 0.0
         maxRd = if (i == 0) rd else greatest(maxRd, rd)
         // RK_c = (b-t)/(b-a) for MAX, (a-t)/(b-a) for MIN (reference:
         // server.py:779-816); an unbounded side takes the series extremum
         // (the reference would crash, SURVEY §7.3) and a degenerate
         // interval ranks every cell equally (RK_c = 0) where the reference
         // raises ZeroDivisionError (server.py:789-792)
-        val a = con.lo.getOrElse(mins(i))
-        val h = con.hi.getOrElse(maxs(i))
-        val num = con.target match {
-          case Target.Max => h - t
-          case Target.Min => a - t
-        }
+        val a = if (hasLo(i)) lo(i) else mins(i)
+        val h = if (hasHi(i)) hi(i) else maxs(i)
+        val num = if (isMax(i)) h - t else a - t
         val rkc = if (compareDoubles(h - a, 0.0) != 0) num / (h - a) else 0.0
         rkSum = if (i == 0) w * rkc else rkSum + w * rkc
         i += 1
@@ -453,45 +452,47 @@ object LocalSolve {
   }
 
   /** Chunk `ch` of a series: a copy of its range of the resident array,
-    * else one collect of its rows from `series`. */
-  private def slice(idx: SeriesIndex, series: DataFrame, ch: Chunk): Slice =
+    * else one collect of its rows; only then is the series read. */
+  private def slice(idx: SeriesIndex, ch: Chunk): Slice =
     idx.resident match {
       case Some(y) => new Slice(ch,
         java.util.Arrays.copyOfRange(y, (ch.lo - idx.tMin).toInt, (ch.hi - idx.tMin).toInt + 1))
       case None =>
-        val parts = SeriesOps.collectRows(series.where(col("t").between(ch.lo, ch.hi)))
-          .getOrElse(throw new IllegalArgumentException(
-            s"series rows [${ch.lo}, ${ch.hi}] hold a null"))
+        val rows = SeriesOps.raw(idx.df).where(col("t").between(ch.lo, ch.hi))
+        val parts = SeriesOps.collectRows(rows).getOrElse(throw new IllegalArgumentException(
+          s"series rows [${ch.lo}, ${ch.hi}] hold a null"))
         val placed = new Placed(ch.lo, ch.rows.toInt)
         for ((ts, ys) <- parts; i <- ts.indices) placed.put(ts(i), ys(i))
         sliceOf(ch, placed)
     }
 
+  /** `rows` as a local relation in `of`'s session: its collect starts no job. */
+  private def local(of: DataFrame, rows: Array[Row], schema: StructType): DataFrame =
+    of.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
   /** `perChunk` over one series' grid of `b`: a grid of one chunk is solved
     * here, on the driver, into a local relation; a larger one runs `many`
     * over its chunks and the series rows they read. */
-  private def overSeries[A](idx: SeriesIndex, jb: Job, b: Bound, cap: Long, enc: Encoder[A])(
-      perChunk: (Chunk, ScalarProbe) => Iterator[A])(
-      many: (RDD[Point], Array[Chunk]) => RDD[A]): DataFrame = {
-    val series = SeriesOps.raw(idx.df)
-    val spark = series.sparkSession
+  private def overSeries(idx: SeriesIndex, jb: Job, b: Bound, cap: Long, schema: StructType)(
+      perChunk: (Chunk, ScalarProbe) => Iterator[Row])(
+      many: (RDD[Point], Array[Chunk]) => RDD[Row]): DataFrame =
     plan(Grid(0L, idx.tMin, idx.tMax, b), jb, cap) match {
-      case Vector() => spark.emptyDataset(enc).toDF()
-      case Vector(ch) => spark.createDataset(perChunk(ch, slice(idx, series, ch)).toSeq)(enc).toDF()
+      case Vector() => local(idx.df, Array.empty, schema)
+      case Vector(ch) => local(idx.df, perChunk(ch, slice(idx, ch)).toArray, schema)
       case chunks =>
-        val points = series.where(col("t").between(chunks.map(_.lo).min, chunks.map(_.hi).max))
+        val points = SeriesOps.raw(idx.df)
+          .where(col("t").between(chunks.map(_.lo).min, chunks.map(_.hi).max))
           .select(lit(0L).as("sid"), col("t"), col("y")).as(pointEnc).rdd
-        spark.createDataset(many(points, chunks.toArray))(enc).toDF()
+        idx.df.sparkSession.createDataFrame(many(points, chunks.toArray), schema)
     }
-  }
 
   /** The query over one series `(t, y)`: a frame of `(time_id, offset)` in
     * result order, solved now when the grid is one chunk. */
   private[graft] def series(idx: SeriesIndex, spec: QuerySpec, b: Bound, cap: Long): DataFrame = {
     val jb = job(spec)
-    overSeries(idx, jb, b, cap, cellEnc)((ch, probe) =>
-      rank(ch, probe, jb, None).map(r => Cell(r.x, r.lx)))((points, chunks) =>
-      chunked(points, chunks, jb, 1).map(r => Cell(r.x, r.lx)))
+    overSeries(idx, jb, b, cap, cellSchema)((ch, probe) =>
+      rank(ch, probe, jb, None).map(r => Row(r.x, r.lx)))((points, chunks) =>
+      chunked(points, chunks, jb, 1).map(r => Row(r.x, r.lx)))
   }
 
   /** The query over every grid of a corpus `(sid, t, y)`: `(sid, time_id,
@@ -499,12 +500,12 @@ object LocalSolve {
   private[graft] def corpus(series: DataFrame, grids: Seq[Grid], jb: Job, cap: Long): DataFrame = {
     val spark = series.sparkSession
     val chunks = grids.flatMap(plan(_, jb, cap)).toArray
-    if (chunks.isEmpty) spark.emptyDataset(seriesCellEnc).toDF()
+    if (chunks.isEmpty) local(series, Array.empty, seriesCellSchema)
     else {
       val points = series.select(col("sid").cast("long").as("sid"), col("t").cast("long").as("t"),
         col("y").cast("double").as("y")).as(pointEnc).rdd
-      spark.createDataset(chunked(points, chunks, jb, grids.size)
-        .map(r => SeriesCell(r.sid, r.x, r.lx)))(seriesCellEnc).toDF()
+      spark.createDataFrame(chunked(points, chunks, jb, grids.size)
+        .map(r => Row(r.sid, r.x, r.lx)), seriesCellSchema)
     }
   }
 
@@ -513,18 +514,17 @@ object LocalSolve {
     * (server.py:291-351) for one function. A grid of one chunk is solved
     * now, on the driver. */
   def values(idx: SeriesIndex, fn: ConstraintFunction, args: Seq[Long], b: Bound): DataFrame = {
-    val c = Constraint(fn.name, args, None, None, Target.Max)
-    val spec = QuerySpec("", "", Domain(None, None), Domain(None, None), Seq(c), None,
-      refined = false)
+    val spec = QuerySpec("", "", Domain(None, None), Domain(None, None),
+      Seq(Constraint(fn.name, args, None, None, Target.Max)), None, refined = false)
     val jb = Job(spec, Array(fn))
     val cells = (ch: Chunk, probe: ScalarProbe) => {
       val v = evaluate(ch, probe, jb)
-      val out = new Array[CellValue](ch.cells)
+      val out = new Array[Row](ch.cells)
       var k = 0
-      ch.foreachCell { (x, lx) => out(k) = CellValue(x, lx, v(k)); k += 1 }
+      ch.foreachCell { (x, lx) => out(k) = Row(x, lx, v(k)); k += 1 }
       out.iterator
     }
-    overSeries(idx, jb, b, CellCap, cellValueEnc)(cells)((points, chunks) =>
+    overSeries(idx, jb, b, CellCap, valueSchema)(cells)((points, chunks) =>
       new Tasks(points, chunks).run((_, ch, probe) => cells(ch, probe)))
   }
 

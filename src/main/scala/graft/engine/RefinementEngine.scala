@@ -39,15 +39,15 @@ object RefinementEngine {
     * `(time_id, offset)` rows in canonical order, computed by the CP kernel
     * ([[LocalSolve]]). A grid of one chunk (every interactive-size query) is
     * solved eagerly, on the driver, before this returns; the frame is a
-    * local relation and collecting it starts no Spark job. A larger grid
-    * returns a lazy frame.
+    * local relation of rows, the only Spark object the query builds, and
+    * collecting it starts no Spark job. A larger grid returns a lazy frame.
     *
     * `prebuilt`: the caller's persisted copy of this series with its bounds
     * ([[SeriesOps.persisted]], [[IndexCache]]); the kernel then reads it
     * instead of `series`, and no bounds job runs. When it holds the series
     * resident on the driver ([[SeriesOps.SeriesIndex.resident]]), a
-    * one-chunk query runs no Spark job at all; otherwise one collect reads
-    * the chunk's rows.
+    * one-chunk query reads neither frame and runs no Spark job at all;
+    * otherwise one collect reads the chunk's rows.
     */
   def execute(
       spark: SparkSession,

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.engine.{AvgAmp, ConstraintFunction, LocalSolve, MaxAmpExcessLeft,
   MaxAmpExcessRight, RefinementEngine, SeriesOps}
@@ -63,7 +64,10 @@ object TimeSeriesQueries {
 
   /** One constraint's value grid over the session series: `(x, lx, v)` for
     * every cell of `[xLo, xHi] x [lxLo, lxHi]` with `x + lx <= tMax`,
-    * computed by the CP kernel ([[graft.engine.LocalSolve.values]]). */
+    * computed by the CP kernel ([[graft.engine.LocalSolve.values]]). The
+    * suite's grids are one chunk, solved on the driver into a local
+    * relation; the queries below order or aggregate it there too, since a
+    * sort or an aggregate over it would start Spark jobs. */
   private def valueGrid(
       s: SparkSession, dir: String, fn: ConstraintFunction, args: Seq[Long],
       xLo: Long, xHi: Long, lxLo: Long, lxHi: Long): DataFrame =
@@ -73,42 +77,50 @@ object TimeSeriesQueries {
   /** A3 — windowed average over the candidate grid (reference:
     * server.py:960-964). */
   def windowAvg(s: SparkSession, dir: String): DataFrame =
-    valueGrid(s, dir, AvgAmp, Nil, 1, 1000, 10, 20)
-      .select(col("x"), col("lx"), round(col("v"), 6).as("win_avg"))
-      .orderBy("x", "lx")
+    ordered(s, valueGrid(s, dir, AvgAmp, Nil, 1, 1000, 10, 20)
+      .select(col("x"), col("lx"), round(col("v"), 6).as("win_avg")))
 
   /** A4 — max_amp_excess_right(10) values over the grid
     * (reference: server.py:967-992). */
   def excessRight(s: SparkSession, dir: String): DataFrame =
-    valueGrid(s, dir, MaxAmpExcessRight, Seq(10), 1, 1000, 10, 20)
-      .select(col("x"), col("lx"), round(col("v"), 6).as("excess_right"))
-      .orderBy("x", "lx")
+    ordered(s, valueGrid(s, dir, MaxAmpExcessRight, Seq(10), 1, 1000, 10, 20)
+      .select(col("x"), col("lx"), round(col("v"), 6).as("excess_right")))
 
   /** A5 — max_amp_excess_left(10) values (reference: server.py:995-1016). */
   def excessLeft(s: SparkSession, dir: String): DataFrame =
-    valueGrid(s, dir, MaxAmpExcessLeft, Seq(10), 1, 1000, 10, 20)
-      .select(col("x"), col("lx"), round(col("v"), 6).as("excess_left"))
-      .orderBy("x", "lx")
+    ordered(s, valueGrid(s, dir, MaxAmpExcessLeft, Seq(10), 1, 1000, 10, 20)
+      .select(col("x"), col("lx"), round(col("v"), 6).as("excess_left")))
 
   /** A6 — grid-global constraint extrema (the reference's 'mins'/'maxs'
-    * entries, server.py:313-317,345-349). */
-  def gridExtrema(s: SparkSession, dir: String): DataFrame =
-    valueGrid(s, dir, AvgAmp, Nil, 1, 2000, 5, 30).agg(
-      round(min("v"), 6).as("min_c0"),
-      round(max("v"), 6).as("max_c0"),
-      count(lit(1)).as("grid_cells"))
+    * entries, server.py:313-317,345-349): min and max in Spark SQL's double
+    * order and the cell count, taken on the driver and rounded over a
+    * one-row local relation. */
+  def gridExtrema(s: SparkSession, dir: String): DataFrame = {
+    val v = valueGrid(s, dir, AvgAmp, Nil, 1, 2000, 5, 30).collect().map(_.getDouble(2))
+    val ext = if (v.isEmpty) Seq(null, null)
+      else Seq(v.reduce(LocalSolve.least), v.reduce(LocalSolve.greatest))
+    val schema = StructType(Seq(StructField("min_c0", DoubleType),
+      StructField("max_c0", DoubleType), StructField("grid_cells", LongType, nullable = false)))
+    s.createDataFrame(java.util.Arrays.asList(Row.fromSeq(ext :+ v.length.toLong)), schema)
+      .select(round(col("min_c0"), 6).as("min_c0"), round(col("max_c0"), 6).as("max_c0"),
+        col("grid_cells"))
+  }
+
+  /** `df`'s rows ordered on the driver by their first two (Long) columns,
+    * as a local relation: over a driver-solved result this runs no Spark
+    * job, where a sort would start a range shuffle's. */
+  private def ordered(s: SparkSession, df: DataFrame): DataFrame = {
+    val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
 
   /** A CP query over the session series, in `(time_id, offset)` order: the
     * kernel reads the persisted rows and their bounds, so the query runs no
     * key-assignment or bounds job. The suite's CP grids are one chunk,
-    * solved on the driver from the resident series, and their rows are
-    * ordered there too: a sort over the local result would start a range
-    * shuffle's jobs. */
+    * solved on the driver from the resident series, and [[ordered]] there. */
   private def cp(s: SparkSession, dir: String, q: String): DataFrame = {
     val idx = cachedIndex(s, dir)
-    val df = RefinementEngine.execute(s, idx.df, QueryParser.parse(q), prebuilt = Some(idx))
-    val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    ordered(s, RefinementEngine.execute(s, idx.df, QueryParser.parse(q), prebuilt = Some(idx)))
   }
 
   /** §2.6 UNREFINED — all candidates satisfying every constraint. */

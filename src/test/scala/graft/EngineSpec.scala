@@ -233,6 +233,28 @@ class EngineSpec extends AnyFunSuite {
     } finally idx.df.unpersist()
   }
 
+  test("a resident series answers without reading its frame: no t or y column needed") {
+    // the one-chunk solve slices the resident array and builds no plan over
+    // the series frame, so a frame without the series columns serves
+    val idx = SeriesOps.persisted(series)
+    try {
+      val bare = idx.copy(df = spark.range(1).toDF("z"))
+      assert(idx.resident.isDefined && !bare.df.columns.contains("t"))
+      val qs = Seq(refinedQuery,
+        "SELECT time_id, offset IN_DOMAIN [1, 60], [3, 10] FROM t.c WHERE avg_amp() in [4, 6] MAX")
+      for (q <- qs) {
+        val spec = QueryParser.parse(q)
+        def rows(i: SeriesOps.SeriesIndex) = RefinementEngine.execute(spark, i.df, spec, Some(i))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        val expect = rows(idx)
+        assert(expect.nonEmpty && rows(bare) == expect, q)
+      }
+      def grid(i: SeriesOps.SeriesIndex) =
+        LocalSolve.values(i, AvgAmp, Nil, RefinementEngine.Bound(1, n, 2, 6)).collect().toSeq
+      assert(grid(bare) == grid(idx))
+    } finally idx.df.unpersist()
+  }
+
   test("windowAgg avg/max match naive on all (a,b) pairs up to len 16") {
     val idx = SeriesOps.SeriesIndex(series, 1, n)
     // the probe surface every constraint and query reads windows through,
@@ -340,43 +362,77 @@ class EngineSpec extends AnyFunSuite {
     } finally prebuilt.df.unpersist()
   }
 
-  test("randomized specs match the naive oracle up to score ties (seeded, 8 cases)") {
+  test("randomized specs match the naive oracle up to score ties (seeded, 48 cases)") {
     // Engine and naive oracle compute the scores with different expressions
     // and may order exact score ties differently; the contract is set-level
     // with a deterministic tie-break WITHIN one arithmetic. So: everything strictly
     // better than the k-th score must be present; ties at the cut may go
-    // either way; cardinality is exact.
+    // either way; cardinality is exact. Every function, one to three
+    // constraints, None sides, degenerate [a, a] intervals and both
+    // targets; every fourth case is unrefined, checked row for row.
     val rnd = new scala.util.Random(7)
     val eps = 1e-9
-    for (_ <- 1 to 8) {
+    val fns = ConstraintRegistry.all.toSeq.sortBy(_.name)
+    def side(v: Int): String = if (rnd.nextInt(4) == 0) "None" else v.toString
+    val cases = (0 until 48).map { c =>
       val xLo = 1 + rnd.nextInt(20); val xHi = xLo + 10 + rnd.nextInt(40)
       val lxLo = 1 + rnd.nextInt(4); val lxHi = lxLo + rnd.nextInt(6)
-      val a = rnd.nextInt(8); val b = a + rnd.nextInt(4)
+      val cons = (0 until 1 + rnd.nextInt(3)).map { j =>
+        val f = fns((c + j) % fns.size)
+        val call = if (f.arity == 0) s"${f.name}()" else s"${f.name}(${1 + rnd.nextInt(8)})"
+        val a = if (f.name == "avg_amp") rnd.nextInt(8) else rnd.nextInt(8) - 4
+        val interval =
+          if (rnd.nextInt(5) == 0) s"[$a, $a]" else s"[${side(a)}, ${side(a + rnd.nextInt(5))}]"
+        s"$call in $interval ${if (rnd.nextBoolean()) "MAX" else "MIN"}"
+      }
       val k = 1 + rnd.nextInt(12)
-      val tgt = if (rnd.nextBoolean()) "MAX" else "MIN"
-      val q = s"SELECT time_id, offset IN_DOMAIN [$xLo, $xHi], [$lxLo, $lxHi] " +
-        s"FROM t.c WHERE avg_amp() in [$a, $b] $tgt LIMIT REFINED $k"
-      val spec = QueryParser.parse(q)
+      val limit = if (c % 4 == 3) (if (rnd.nextBoolean()) s" LIMIT $k" else "")
+        else s" LIMIT REFINED $k"
+      s"SELECT time_id, offset IN_DOMAIN [$xLo, $xHi], [$lxLo, $lxHi] " +
+        s"FROM t.c WHERE ${cons.mkString(" and ")}$limit"
+    }
+    val specs = cases.map(QueryParser.parse)
+    // the generator reaches every case the check is meant to cover
+    assert(specs.flatMap(_.constraints.map(_.name)).toSet == ConstraintRegistry.names)
+    assert(specs.map(_.constraints.size).toSet == Set(1, 2, 3))
+    assert(specs.flatMap(_.constraints.map(_.target)).toSet == Set(Target.Max, Target.Min))
+    assert(specs.exists(_.constraints.exists(c => c.lo.isEmpty || c.hi.isEmpty)))
+    assert(specs.exists(_.constraints.exists(c => c.lo.isDefined && c.lo == c.hi)))
+    assert(specs.exists(s => !s.refined && s.limit.isDefined) &&
+      specs.exists(s => !s.refined && s.limit.isEmpty))
+    var nonEmpty = 0
+    for ((q, spec) <- cases.zip(specs)) {
       val sortedAll = naiveScoredSorted(spec)
       val cells = sortedAll.size
+      lazy val satisfying = naiveGrid(spec, RefinementEngine.bindDomains(spec, 1, n)).filter {
+        case (_, _, vs) => spec.constraints.zip(vs).forall { case (c, v) => sat(c, v) }
+      }.map(g => (g._1, g._2)).sorted
       for ((name, exec) <- executors) {
-        val got = run(q, exec).toSet
-        assert(got.size == math.min(k, cells), s"cardinality for $q ($name)")
-        if (cells > k) {
-          val (kthSat, kthKey) = sortedAll(k - 1)._2
-          def strictlyBetter(e: (Int, Double)) =
-            e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
-          def noWorse(e: (Int, Double)) =
-            e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
-          val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
-          val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
-          assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q ($name)")
-          assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q ($name)")
+        val rows = run(q, exec)
+        if (rows.nonEmpty) nonEmpty += 1
+        if (!spec.refined) {
+          assert(rows == spec.limit.fold(satisfying)(satisfying.take), s"$q ($name)")
         } else {
-          assert(got == sortedAll.map(_._1).toSet, s"$q ($name)")
+          val k = spec.limit.get
+          val got = rows.toSet
+          assert(got.size == math.min(k, cells), s"cardinality for $q ($name)")
+          if (cells > k) {
+            val (kthSat, kthKey) = sortedAll(k - 1)._2
+            def strictlyBetter(e: (Int, Double)) =
+              e._1 < kthSat || (e._1 == kthSat && e._2 < kthKey - eps)
+            def noWorse(e: (Int, Double)) =
+              e._1 < kthSat || (e._1 == kthSat && e._2 <= kthKey + eps)
+            val mustHave = sortedAll.filter(e => strictlyBetter(e._2)).map(_._1).toSet
+            val mayHave = sortedAll.filter(e => noWorse(e._2)).map(_._1).toSet
+            assert(mustHave.subsetOf(got), s"missing strictly-better candidates for $q ($name)")
+            assert(got.subsetOf(mayHave), s"included worse-than-cut candidates for $q ($name)")
+          } else {
+            assert(got == sortedAll.map(_._1).toSet, s"$q ($name)")
+          }
         }
       }
     }
+    assert(nonEmpty >= 80, s"only $nonEmpty of 96 runs returned rows")
   }
 
   test("bind: x before the series, reversed domains, long arguments follow the reference") {

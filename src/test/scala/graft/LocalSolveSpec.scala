@@ -152,6 +152,33 @@ class LocalSolveSpec extends AnyFunSuite {
     } finally idx.df.unpersist()
   }
 
+  test("result schemas: non-null Long (and Double) columns on every path, empty grids too") {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    def longs(names: String*) = names.map(StructField(_, LongType, nullable = false))
+    val (cells, sidCells) = (StructType(longs("time_id", "offset")),
+      StructType(longs("sid", "time_id", "offset")))
+    val valueCells = StructType(longs("x", "lx") :+ StructField("v", DoubleType, nullable = false))
+    val spec = QueryParser.parse("SELECT time_id, offset IN_DOMAIN [1, 60], [2, 8] FROM t.c " +
+      "WHERE avg_amp() in [3, 7] MAX LIMIT REFINED 10")
+    val empty = spec.copy(xDomain = Domain(Some(30), Some(5))) // a reversed domain: no cell
+    val cap = LocalSolveSpec.splitCap(spec, RefinementEngine.bindDomains(spec, 1, n), 1, n)
+    val one = RefinementEngine.execute(spark, series, spec)
+    val chunked = RefinementEngine.execute(spark, series, spec, None, cap)
+    val none = RefinementEngine.execute(spark, series, empty)
+    assert(onDriver(one) && !onDriver(chunked) && onDriver(none))
+    for ((path, df) <- Seq("one chunk" -> one, "chunked" -> chunked, "empty grid" -> none)) {
+      assert(df.schema == cells, path)
+      assert(df.collect().isEmpty == (path == "empty grid"), path)
+    }
+    val corpus = (0L to 1L).flatMap(sid => (1 to n).map(i => (sid, i.toLong, ys(i - 1))))
+      .toDF("sid", "t", "y")
+    for (s <- Seq(spec, empty))
+      assert(MultiSeriesEngine.execute(spark, corpus, s).schema == sidCells)
+    val idx = SeriesOps.SeriesIndex(series, 1, n)
+    for (b <- Seq(Bound(1, n, 2, 6), Bound(30, 5, 2, 6)))
+      assert(LocalSolve.values(idx, AvgAmp, Nil, b).schema == valueCells, b)
+  }
+
   test("gate: the cell count is exact; the cap admits, cap + 1 does not") {
     // the candidate-grid filter's count, brute-forced on random bounds
     val rnd = new scala.util.Random(5)

@@ -77,6 +77,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders("""Window\s*\.\s*orderBy""", Set.empty) == Nil)
   }
 
+  test("the CP engine builds no typed Dataset: no createDataset or emptyDataset in engine/") {
+    // a result frame is built from rows and a fixed schema; a per-query
+    // typed encoder costs more than the one-chunk solve it wraps
+    val engine = sources.filter(_._1.toString.contains("/graft/engine/"))
+    assert(engine.exists(_._1.endsWith(Paths.get("engine", "LocalSolve.scala"))))
+    assert(engine.collect {
+      case (p, text) if """\b(createDataset|emptyDataset)\b""".r.findFirstIn(text).isDefined =>
+        p.toString
+    } == Nil)
+  }
+
   test("no series-index build or run budget remains in src/main") {
     // each name carries a character class, so a grep of the sources for
     // the deleted names does not match this rule itself
