@@ -35,6 +35,14 @@ object Bench {
     if (tools.CodegenGuard.failureCount > 0) sys.exit(3)
   }
 
+  /** One timed run of one query: its seconds, its profile counters and its
+    * plan shape ([[tools.Profile]]). */
+  private final case class Sample(seconds: Double, layers: Map[String, Double], plan: Map[String, Int])
+
+  /** A counter as a JSON number: whole values without a fraction. */
+  private def compact(v: Double): String =
+    if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
+
   /** The queries to bench, sorted: all of `all`, or — for targeted perf
     * iteration, e.g. `SPARK_GRAFT_BENCH_ONLY=q203_x,q217_y` — exactly the
     * comma-separated names in `only` (canonical runs leave it unset, so
@@ -55,24 +63,18 @@ object Bench {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       li.groupBy("l_returnflag").count().collect()
       li.limit(10).collect()
-      // the per-directory persisted series is a session-level artifact
-      // shared by every time-series query (the reference persists its UDF
-      // map to disk the same way, server.py:249-286) — build it here so TS
-      // timings measure probe work, not the one-time build
+      // the persisted series is a session artifact shared by every
+      // time-series query: build it here so they time probes, not the build
       graft.queries.TimeSeriesQueries.cachedIndex(spark, sfDir).df.count()
     } catch { case e: Throwable =>
       System.err.println(s"[graft] session warm-up failed: ${e.getMessage}")
     }
-    // pinned sorted order + one full untimed warmup pass: without these the
-    // hash-map iteration order moves first-touch costs (codegen, file
-    // listing, cache fill) onto a different query each run, making
-    // round-over-round per-query deltas unattributable
-    // each invocation builds a fresh frame (fresh checkpoints), and no
-    // query result shares a checkpointed leaf with a session cache (the
-    // IVF/series indexes are parquet-backed), so releasing after the count
-    // is safe — without it a checkpoint-returning query (q54's labels)
-    // pins blocks for the rest of the run, the leak class that regressed
-    // q50-q53 in round 5
+    // pinned sorted order + one untimed warm-up pass keep first-touch costs
+    // (codegen, file listing, cache fill) on the same query every run.
+    // Each invocation builds a fresh frame and no result shares a
+    // checkpointed leaf with a session cache, so releasing after the count
+    // is safe; without it a checkpoint-returning query (q54's labels) pins
+    // blocks for the rest of the run
     def runOnce(name: String): Unit = {
       val df = queries(name)(spark, sfDir)
       try df.count() finally engine.Checkpoints.release(df)
@@ -87,44 +89,41 @@ object Bench {
       }
     names.foreach(attempt)
     val timed = names.filterNot(failures.contains)
-    // median of `passes` timed runs per query: single-run timings carry
-    // one-off environment spikes (GC, a co-scheduled process) that land on
-    // an arbitrary query and read as a 3x regression of code that didn't
-    // change; the median discards the spike while staying an honest
-    // steady-state number. Passes are whole-suite sweeps (pinned order),
-    // so cross-query interference is identical in every pass.
-    // machine-health snapshots: a degraded co-tenant window should be
-    // self-labeling in the artifact (round 10 burned three re-runs proving
-    // what one loadavg field would have shown). load captured before and
-    // after the timed passes; per-pass WALL totals expose drift across the
-    // run (an idle machine runs the passes within a few percent of each
-    // other); max heap catches the 8g-default-vs-32g driver-memory mistake
-    // that uniformly inflates every query ~1.4x.
+    // the median of `passes` whole-suite sweeps per query discards one-off
+    // spikes (GC, a co-scheduled process). The artifact labels its own
+    // window: load before and after, per-pass walls (an idle machine runs
+    // the passes within a few percent of each other) and max heap.
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     // one timed window = `passes` whole-suite sweeps; returns
-    // (per-pass query timings, pass walls, load before/after)
-    def timedWindow(): (Seq[Map[String, Double]], Seq[Double], Double, Double) = {
+    // (per-pass query samples, pass walls, load before/after). The profile
+    // waits for each query's listener events outside its timed interval
+    // (and outside the pass wall), so the seconds keep their meaning.
+    def timedWindow(): (Seq[Map[String, Sample]], Seq[Double], Double, Double) = {
       val l0 = os.getSystemLoadAverage
       val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
       val s = (1 to passes).map { _ =>
-        val p0 = System.nanoTime()
+        var wall = 0L
         val m = timed.map { name =>
-          val t0 = System.nanoTime()
-          attempt(name)
-          name -> (System.nanoTime() - t0) / 1e9
+          var ns = 0L
+          val profile = tools.Profile.record(spark) {
+            val t0 = System.nanoTime()
+            attempt(name)
+            ns = System.nanoTime() - t0
+          }
+          wall += ns
+          val layers = profile.layers
+          // perfbench's driver gap: the query's wall time no task ran
+          val gap = (ns / 1e6 - layers("spark.busy_ms")).max(0.0)
+          name -> Sample(ns / 1e9, layers + ("spark.driver_gap_ms" -> gap), profile.plan)
         }.toMap
-        walls += (System.nanoTime() - p0) / 1e9
+        walls += wall / 1e9
         m
       }
       (s, walls.toSeq, l0, os.getSystemLoadAverage)
     }
-    // Window-quality promotion policy (round-13 verdict ask 1): a window is
-    // DEGRADED when its own health data says the machine was contended —
-    // pass-wall spread >10% (an idle machine runs the sweeps within a few
-    // percent of each other) or elevated load BEFORE the first timed pass
-    // (anything this JVM caused is already drained by the warmup). Round 13
-    // committed a self-labeled degraded window (0.762 vs clean 0.650 s/q)
-    // because the health data existed but no policy acted on it.
+    // a window is DEGRADED when its health data says the machine was
+    // contended: pass-wall spread >10% or elevated load before the first
+    // timed pass (this JVM's own load has drained by then)
     def wallSpread(walls: Seq[Double]): Double =
       if (walls.isEmpty || walls.min <= 0) 0.0 else (walls.max - walls.min) / walls.min
     def isDegraded(walls: Seq[Double], l0: Double): Boolean =
@@ -144,19 +143,15 @@ object Bench {
       }
     }
     val degraded = isDegraded(passWallsSeq, loadStart)
-    val passWalls = passWallsSeq
     val healthJson = {
       // locale-independent rounding: an f-interpolator uses the default
       // locale's decimal separator, and a comma there is invalid JSON
       def r2(x: Double): Double = math.round(x * 100) / 100.0
-      val walls = passWalls.map(w => r2(w).toString).mkString("[", ",", "]")
+      val walls = passWallsSeq.map(w => r2(w).toString).mkString("[", ",", "]")
       val heapGb =
         math.round(Runtime.getRuntime.maxMemory / (1024.0 * 1024 * 1024) * 10) / 10.0
-      // `ncpu` is the OS view (always the machine's core count); `cpus` is
-      // the CONFIGURED $SPARK_GRAFT_CPUS and `default_parallelism` the
-      // value the scheduler actually runs with — the round-16 verdict's
-      // scaling-contract ask: without these the driver cannot verify that
-      // its low-core run took effect (suspect_cpus_ignored)
+      // `ncpu` is the machine's core count; `cpus` the configured
+      // $SPARK_GRAFT_CPUS and `default_parallelism` what the scheduler runs
       s""""health":{"load_start":$loadStart,"load_end":$loadEnd,""" +
         s""""ncpu":${os.getAvailableProcessors},""" +
         s""""cpus":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
@@ -167,24 +162,30 @@ object Bench {
     val ok = timed.filterNot(failures.contains)
     val failed = failures.toSeq.sorted
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val results = ok.map { name =>
-      val ts = samples.map(_(name)).sorted
-      name -> ts(ts.size / 2)
-    }
+    def median[A: Ordering](xs: Seq[A]): A = xs.sorted.apply(xs.size / 2)
+    val results = ok.map(name => name -> median(samples.map(_(name).seconds)))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    // Self-evidencing artifact: the full per-query min/median/max spread,
-    // written to a FILE (env SPARK_GRAFT_BENCH_JSON, default
-    // bench/bench_latest.json under the cwd). The driver captures only the
-    // stdout tail — which truncates mid-JSON every round — and a
-    // contended-window run is indistinguishable from a regression in a
-    // median alone: a wide min–max spread says "contention" on its face
-    // (an idle machine runs the three passes within a few percent).
+    // the file artifact (SPARK_GRAFT_BENCH_JSON, default
+    // bench/bench_latest.json) keeps each query's min/median/max: a wide
+    // spread says "contention" where a median alone reads as a regression
     val spreads = ok.map { name =>
-      val ts = samples.map(_(name)).sorted
+      val ts = samples.map(_(name).seconds).sorted
       s""""$name":{"min":${ts.head},"med":${ts(ts.size / 2)},"max":${ts.last}}"""
     }.mkString("{", ",", "}")
+    // per query, where its time went: the median over the timed passes of
+    // each profile counter, and the plan shape of its actions
+    def obj[A](m: Map[String, A]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    def perQuery(f: Seq[Sample] => String): String =
+      ok.map(name => s""""$name":${f(samples.map(_(name)))}""").mkString("{", ",", "}")
+    val layers = perQuery { ss =>
+      obj(ss.head.layers.keys.map(k => k -> compact(median(ss.map(_.layers(k))))).toMap)
+    }
+    val plans = perQuery { ss =>
+      obj(tools.Profile.ShapeKeys.map(k => k -> median(ss.map(_.plan(k)))).toMap)
+    }
     // session-artifact builds, build time and hits per kind
     val artifacts = engine.SessionArtifacts.stats.toSeq.sortBy(_._1).map { case (k, st) =>
       s""""$k":{"builds":${st.builds},"build_ms":${st.buildMs},"hits":${st.hits}}"""
@@ -192,7 +193,7 @@ object Bench {
     val fileJson =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
         s""""passes":$passes,$healthJson,"failed":$failedJson,"queries":$qs,""" +
-        s""""spread":$spreads,"artifacts":$artifacts}"""
+        s""""spread":$spreads,"layers":$layers,"plan":$plans,"artifacts":$artifacts}"""
     // refuse to promote a degraded window: if BOTH windows failed the health
     // gate, the artifact goes to `<path>.degraded.json` (data kept, canonical
     // promotion path untouched) unless SPARK_GRAFT_BENCH_FORCE=1 explicitly
@@ -211,19 +212,12 @@ object Bench {
     } catch { case e: java.io.IOException =>
       System.err.println(s"[graft] bench artifact not written ($outPath): $e")
     }
-    // the stdout line (the driver contract) carries the health verdict too:
-    // when the gate diverts a degraded window to `.degraded.json`, the
-    // driver's artifact must still parse AND self-label — round 14's driver
-    // run ended `parsed: null` with only a raw tail because the canonical
-    // numbers lived solely in the diverted file
+    // the stdout line carries the health verdict too, so it self-labels
+    // when the artifact was diverted to `.degraded.json`
     println(s"""{"metric":"total","value":$total,"unit":"sec",$healthJson,""" +
       s""""failed":$failedJson,"queries":$qs,"sf":"$sfDir"}""")
-    // COMPACT trailing summary (round-15 verdict ask 1): the canonical
-    // line above is ~12 KB at 245 queries and the driver's fixed-size
-    // stdout-tail capture truncates its FRONT, so `parsed` came back
-    // null two rounds running. The LAST line a tail capture sees must
-    // be complete on its own: same totals + health, no per-query map
-    // (those live in the canonical line and the bench/ file artifact).
+    // a compact last line: a fixed-size tail capture truncates the ~12 KB
+    // canonical line's front, so the totals and health stand alone here
     val perQ = if (ok.isEmpty) 0.0 else total / ok.size
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_queries":${ok.size},"n_failed":${failed.size},"sec_per_query":$perQ,""" +

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session shape every entry point runs (Bench, Verify, Explain,
-  * Sweep, the CLI, the profiling mains and the test session): profiling
-  * tools measure the same session the bench times.
+/** The one session shape every entry point runs (Bench, Verify, Sweep, the
+  * CLI and the test session): Bench's profile ([[tools.Profile]]) and the
+  * tests measure the same session the bench times.
   *
   *  - `local[cpus]` with as many shuffle partitions as cores;
   *  - session time zone UTC, so `events.ts` converts to one epoch

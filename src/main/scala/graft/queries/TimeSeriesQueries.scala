@@ -20,7 +20,7 @@ object TimeSeriesQueries {
     * Spark 4 rejects by default) reads as a nanos Long under the legacy
     * conf; TIMESTAMP(MICROS) data reads as a timestamp and is converted
     * (`unix_micros * 1000`). The NTZ cast interprets wall time in the
-    * session zone — every entry point (Verify/Bench/Explain/CLI) pins
+    * session zone — every entry point (Verify/Bench/Sweep/CLI) pins
     * `spark.sql.session.timeZone=UTC`, so the epoch is unambiguous and
     * matches DuckDB's `epoch_ns(ts)` on the same file. The conf is
     * runtime-settable so this works in any session (driver's too). */

@@ -49,4 +49,10 @@ object GraftShims {
     }
     classic.Dataset.ofRows(session, plan)
   }
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (`waitUntilEmpty` is private[spark]); action callbacks of a
+    * `QueryExecutionListener` ride the same bus. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

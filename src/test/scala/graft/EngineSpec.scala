@@ -96,19 +96,7 @@ class EngineSpec extends AnyFunSuite {
     i.df.orderBy("t").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   /** The Spark jobs `body` starts. */
-  def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(1000) // the listener bus is asynchronous
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
+  def jobsOf(body: => Unit): Int = graft.tools.Profile.record(spark)(body).jobs.size
 
   test("cross-session index cache: write-through, hit, staleness rebuild") {
     import graft.engine.IndexCache

@@ -49,6 +49,53 @@ class HarnessSpec extends AnyFunSuite {
     assert(!json.contains(""""boom_q":""") && !json.contains(""""flaky_q":"""), json)
   }
 
+  test("Bench: the artifact carries each timed query's layers and plan; stdout keeps its two lines") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import scala.jdk.CollectionConverters._
+    val local: Q = (s, _) =>
+      s.createDataFrame(Seq((1L, "a"), (2L, "b"))).toDF("k", "v")
+    val agg: Q = (s, _) =>
+      s.range(0, 1000, 1, 4).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("g")).count()
+    val path = s"${tmpDir("graft_bench_spec")}/bench.json"
+    val out = new java.io.ByteArrayOutputStream
+    val failed = Console.withOut(out) {
+      Bench.run(spark, tmpDir("graft_bench_sf"), Map("local_q" -> local, "agg_q" -> agg),
+        Seq("agg_q", "local_q"), passes = 3, path, force = true)
+    }
+    assert(failed.isEmpty)
+    val json = new ObjectMapper
+    val file = json.readTree(Files.readString(Paths.get(path)))
+    def fields(n: com.fasterxml.jackson.databind.JsonNode): Set[String] =
+      n.fieldNames.asScala.toSet
+    for (name <- Seq("agg_q", "local_q")) {
+      assert(fields(file.get("layers").get(name)) ==
+        Set("spark.jobs", "spark.stages", "spark.tasks", "spark.busy_ms", "spark.empty_tasks",
+          "spark.executor_run_ms", "spark.executor_cpu_ms", "spark.gc_ms", "spark.input_bytes",
+          "spark.output_bytes", "spark.shuffle_read_bytes", "spark.shuffle_write_bytes",
+          "spark.planning_ms", "spark.aqe_replans", "spark.driver_gap_ms"), name)
+      assert(fields(file.get("plan").get(name)) == graft.tools.Profile.ShapeKeys.toSet, name)
+    }
+    def layer(q: String, k: String): Double = file.get("layers").get(q).get(k).asDouble
+    // each query's layers hold exactly the jobs of its own count: Spark
+    // counts even a local relation through an aggregate and an exchange
+    for ((name, q) <- Seq("local_q" -> local, "agg_q" -> agg)) {
+      val direct = graft.tools.Profile.record(spark)(q(spark, "").count()).jobs.size
+      assert(layer(name, "spark.jobs") == direct, name)
+    }
+    assert(layer("agg_q", "spark.jobs") >= 1 && layer("agg_q", "spark.tasks") >= 1)
+    assert(file.get("plan").get("agg_q").get("exchanges").asInt >= 1)
+    assert(file.get("plan").get("local_q").get("file_scans").asInt == 0)
+    val lines = out.toString("UTF-8").linesIterator.filter(_.startsWith("{")).toSeq
+    assert(lines.size == 2, lines)
+    val (canonical, summary) = (json.readTree(lines(0)), json.readTree(lines(1)))
+    assert(fields(canonical) ==
+      Set("metric", "value", "unit", "health", "failed", "queries", "sf"), lines(0))
+    assert(fields(canonical.get("queries")) == Set("agg_q", "local_q"), lines(0))
+    assert(fields(summary) == Set("metric", "value", "unit", "n_queries", "n_failed",
+      "sec_per_query", "health", "sf", "detail"), lines(1))
+    assert(summary.get("n_queries").asInt == 2 && summary.get("n_failed").asInt == 0, lines(1))
+  }
+
   test("Bench: SPARK_GRAFT_BENCH_ONLY selects exact names, not prefixes") {
     val all = Seq("q170_x", "q17_ts", "q171_y", "q01_a")
     assert(Bench.select(all, None) == all.sorted)

@@ -34,22 +34,10 @@ class LocalSolveSpec extends AnyFunSuite {
   /** The Spark jobs started under each job group while `body` ran; `body`
     * sets the groups. */
   private def jobsByGroup(body: => Unit): Map[String, Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    val p = graft.tools.Profile.record(spark) {
+      try body finally spark.sparkContext.clearJobGroup()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(1000) // the listener bus is asynchronous
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+    p.jobs.flatMap(_.group).groupBy(identity).map { case (g, js) => g -> js.size }
   }
 
   test("one chunk ≡ chunked: same rows, order and schema (seeded, 60 cases)") {
@@ -218,22 +206,8 @@ class LocalSolveSpec extends AnyFunSuite {
 
   /** The shuffle records each task read while `body` ran, for the tasks
     * that read any. */
-  private def taskReads(body: => Unit): Seq[Long] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).map(_.shuffleReadMetrics.recordsRead).filter(_ > 0)
-          .foreach(r => reads.add(r))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(1000) // the listener bus is asynchronous
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    reads.asScala.toSeq
-  }
+  private def taskReads(body: => Unit): Seq[Long] =
+    graft.tools.Profile.record(spark)(body).tasks.map(_.shReadRecs).filter(_ > 0)
 
   test("chunks hold at most cap cells and index rows: one x over the cap, a far band") {
     val idx = SeriesOps.persisted(series)

@@ -50,7 +50,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("CP refined top-k also avoids a full sort") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import graft.engine.{LocalSolve, RefinementEngine}
     import graft.parser.QueryParser
     import spark.implicits._
@@ -64,23 +63,13 @@ class PlanSpec extends AnyFunSuite {
     val chunks = LocalSolve.plan(LocalSolve.Grid(0L, 1, 100, b), LocalSolve.job(spec), cap).size
     assert(chunks >= 3)
     val df = RefinementEngine.execute(spark, series, spec, None, cap)
-    val finalReads = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskType == "ResultTask" && e.taskMetrics != null) {
-          finalReads.addAndGet(e.taskMetrics.shuffleReadMetrics.recordsRead); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(df.collect().length == k)
-      Thread.sleep(1000) // the listener bus is asynchronous
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val finalReads = graft.tools.Profile.record(spark)(assert(df.collect().length == k))
+      .tasks.filter(_.taskType == "ResultTask").map(_.shReadRecs).sum
     // no Sort over the grid: each chunk keeps its best k, and the final
     // order reads at most k rows per chunk
     val plan = df.queryExecution.executedPlan.toString + df.rdd.toDebugString
     assert(!plan.contains("Sort") && !plan.contains("TakeOrderedAndProject"), plan)
-    assert(finalReads.get > 0 && finalReads.get <= k * chunks, s"${finalReads.get} rows")
+    assert(finalReads > 0 && finalReads <= k * chunks, s"$finalReads rows")
   }
 
   private val cpQueries =
@@ -91,51 +80,26 @@ class PlanSpec extends AnyFunSuite {
     "q19_ts_excess_left", "q20_ts_grid_extrema") ++ cpQueries
 
   test("q17 to q23 each run no Spark job on a warm session") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // warm the session series index first: a one-time per-session build
     localQueries.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    localQueries.foreach { q =>
+      val jobs = graft.tools.Profile.record(spark) {
+        val df = SparkEntry.queries(q)(spark, sf)
+        try df.collect() finally graft.engine.Checkpoints.release(df)
+      }.jobs.size
+      assert(jobs == 0, s"$q ran $jobs jobs")
     }
-    // the listener bus is async — wait for the count to go quiet
-    def quiet(): Unit = {
-      var (last, stable) = (-1, 0)
-      while (stable < 5) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try localQueries.foreach { q =>
-      quiet()
-      jobs.set(0)
-      val df = SparkEntry.queries(q)(spark, sf)
-      try df.collect() finally graft.engine.Checkpoints.release(df)
-      quiet()
-      assert(jobs.get() == 0, s"$q ran ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("q24 builds on a warm session without starting a Spark job") {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // warm the session series first: a one-time per-session build
     graft.queries.TimeSeriesQueries.cachedIndex(spark, sf)
-    Thread.sleep(1000) // the listener bus is asynchronous
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = SparkEntry.queries("q24_ts_variability")(spark, sf)
-      Thread.sleep(1000)
-      assert(jobs.get() == 0, s"building q24 ran ${jobs.get()} jobs")
-      assert(df.collect().nonEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = graft.tools.Profile.record(spark) {
+      df = SparkEntry.queries("q24_ts_variability")(spark, sf)
+    }.jobs.size
+    assert(jobs == 0, s"building q24 ran $jobs jobs")
+    assert(df.collect().nonEmpty)
   }
 
   test("releasing a local CP result keeps the session index cached; nothing accumulates") {
@@ -1262,43 +1226,22 @@ class PlanSpec extends AnyFunSuite {
 
   test("q110: the whole dedup scans the embeddings corpus exactly once (wide checkpoint feeds narrow + both edge legs)") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
     // warm the session IVF memo first: index build/training scans are a
     // one-time per-session cost, not part of the dedup under test
     graft.engine.Checkpoints.release {
       val warm = SparkEntry.queries("q110_semdedup")(spark, sf)
       warm.collect(); warm
     }
-    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      private def count(qe: QueryExecution): Unit =
-        scans.addAndGet(flattenPlan(qe.executedPlan).count {
-          case f: FileSourceScanExec =>
-            f.relation.location.rootPaths.exists(_.toString.contains("embeddings"))
-          case _ => false
-        })
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = count(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val actions = graft.tools.Profile.record(spark) {
       val df = SparkEntry.queries("q110_semdedup")(spark, sf)
       try df.collect() finally graft.engine.Checkpoints.release(df)
-      // the listener bus is async — wait for the count to go quiet
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 5 && waited < 100) {
-        Thread.sleep(200); waited += 1
-        val now = scans.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      assert(scans.get() == 1,
-        s"semDedup must scan the embeddings corpus exactly once, saw ${scans.get()}")
-    } finally spark.listenerManager.unregister(listener)
+    }.actions.filterNot(_.failed)
+    val scans = actions.flatMap(_.plan).map(p => flattenPlan(p).count {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("embeddings"))
+      case _ => false
+    }).sum
+    assert(scans == 1, s"semDedup must scan the embeddings corpus exactly once, saw $scans")
   }
 
   /** Drive `name` to completion and hand every shuffle exchange of the

@@ -16,14 +16,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * the CP kernel builds no series index. */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val root = Paths.get("src/main")
+  private def scalaFiles(dir: String): Seq[(Path, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
     val walk = Files.walk(root)
     try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       .map(p => p -> Files.readString(p))
     finally walk.close()
   }
+
+  private lazy val sources: Seq[(Path, String)] = scalaFiles("src/main")
+  private lazy val tests: Seq[(Path, String)] = scalaFiles("src/test")
 
   private def offenders(pattern: String, allowed: Set[String]): Seq[String] =
     sources.collect {
@@ -86,6 +89,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       case (p, text) if """\b(createDataset|emptyDataset)\b""".r.findFirstIn(text).isDefined =>
         p.toString
     } == Nil)
+  }
+
+  test("one profiling instrument: graft.tools.Profile is the only listener, and nothing sleeps on the bus") {
+    val all = sources ++ tests
+    val listener = """\b(extends|with|new)\s+(SparkListener|SparkListenerInterface|QueryExecutionListener)\b"""
+    assert(all.collect {
+      case (p, text) => listener.r.findAllIn(text).size -> p.getFileName.toString
+    }.filter(_._1 > 0) == Seq(2 -> "Profile.scala"))
+    // a listener count is read after Profile drains the bus; the only
+    // sleeps left hold a concurrent build open and delay the listener the
+    // drain must wait out
+    val sleep = """Thread\.sleep""".r
+    val sleeps = all.collect {
+      case (p, text) if sleep.findFirstIn(text).isDefined =>
+        p.getFileName.toString -> sleep.findAllIn(text).size
+    }.toMap
+    assert(sleeps == Map("SessionArtifactsSpec.scala" -> 1, "ProfileSpec.scala" -> 1), sleeps)
+    val tools = sources.filter(_._1.toString.contains("/graft/tools/"))
+    assert(tools.map(_._1.getFileName.toString).toSet == Set("CodegenGuard.scala", "Profile.scala"))
+    assert(tools.collect { case (p, text) if """\bdef\s+main\b""".r.findFirstIn(text).isDefined =>
+      p.toString } == Nil)
   }
 
   test("no series-index build or run budget remains in src/main") {
