@@ -60,7 +60,7 @@ object Bench {
     // warm the session (first parquet read, codegen, shuffle machinery) so
     // per-query timings measure steady state, not JVM/session startup
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
       li.groupBy("l_returnflag").count().collect()
       li.limit(10).collect()
       // the persisted series is a session artifact shared by every

@@ -16,7 +16,7 @@ import graft.queries.TimeSeriesQueries.seriesCte
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Tables.read(s, dir, name)
 
   /** Flagship: the full CP-refinement pipeline (relaxation branch) on the
     * smoke scale factor. Driver smoke-checks rows > 0. */

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** The one registry of session artifacts: the per-(kind, dataset dir)
   * values a query builds once and every later query reuses — IVF and code
   * indexes, band/winnow/dHash indexes, maintained sketches and statistics,
-  * trained models, compacted layouts, the persisted series. The reference
+  * trained models, compacted layouts, the persisted series, the suite
+  * tables' inferred schemas ([[graft.sources.Tables]]). The reference
   * keeps the same kind of cache for its per-(table, column) UDF map
   * (server.py:249-286).
   *

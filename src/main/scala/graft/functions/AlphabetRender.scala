@@ -21,19 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * INTERPRETED per token (higher-order functions are CodegenFallback),
   * which at one md5 per word made the render the hottest stage of q173
   * and q226 and allocation-heavy enough to wobble under co-tenant GC.
-  * Tokenization mirrors `TextOps.tokens` = `split(trim(lower(c)),
-  * "\\s+")` via the [[SimHashKernel]] convention (UTF8String
-  * toLowerCase, trim, java-regex split, limit -1 — same operator, same
-  * empty-string behavior); the alphabet is BMP-only by construction
-  * (CJK unified / Cyrillic slices), so `charAt` is the `substr`
-  * codepoint. Equality with the HOF formulation is asserted in
+  * Tokenization is `TextOps.tokens` itself ([[TextKernel.words]]); the
+  * alphabet is BMP-only by construction (CJK unified / Cyrillic slices),
+  * so `charAt` is the `substr` codepoint. Equality with the HOF formulation is asserted in
   * FunctionsSpec. */
 object AlphabetRenderKernel extends Serializable {
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
-
   def apply(s: UTF8String, alphabet: String, seed: Int,
-      sep: String): UTF8String = {
-    val toks = Ws.split(s.toLowerCase.trim.toString, -1)
+      sep: String, icu: Boolean): UTF8String = {
+    val toks = TextKernel.words(s, icu)
     val n = alphabet.length
     val sb = new java.lang.StringBuilder(toks.length * (1 + sep.length))
     var i = 0
@@ -52,7 +47,7 @@ object AlphabetRenderKernel extends Serializable {
 /** Native Catalyst expression over [[AlphabetRenderKernel]]; alphabet,
   * seed and separator ride the plan as literals (plant parameters). */
 case class AlphabetRender(child: Expression, alphabet: String, seed: Int,
-    sep: String) extends UnaryExpression {
+    sep: String) extends UnaryExpression with CaseMapping {
 
   require(alphabet.nonEmpty, "empty alphabet")
 
@@ -64,7 +59,7 @@ case class AlphabetRender(child: Expression, alphabet: String, seed: Int,
       s"alphabet_render expects STRING, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(input: Any): Any =
-    AlphabetRenderKernel(input.asInstanceOf[UTF8String], alphabet, seed, sep)
+    AlphabetRenderKernel(input.asInstanceOf[UTF8String], alphabet, seed, sep, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
@@ -72,7 +67,7 @@ case class AlphabetRender(child: Expression, alphabet: String, seed: Int,
         AlphabetRenderKernel, "graft.functions.AlphabetRenderKernel$")
       val alpha = ctx.addReferenceObj("alphabet", alphabet, "java.lang.String")
       val sp = ctx.addReferenceObj("sep", sep, "java.lang.String")
-      s"${ev.value} = $kernel.apply($c, $alpha, $seed, $sp);"
+      s"${ev.value} = $kernel.apply($c, $alpha, $seed, $sp, $icu);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): AlphabetRender =

@@ -22,9 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * plus length and bias terms — the [[PocketWeights]] layout
   * unchanged. */
 object CharGramLogitKernel extends Serializable {
-  def compute(s: UTF8String, m: PocketWeights): Long = {
+  def compute(s: UTF8String, m: PocketWeights, icu: Boolean): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val t = " " + s.toLowerCase.trim.toString + " "
+    val t = " " + TextKernel.lower(s, icu).trim.toString + " "
     val cps = t.codePoints().toArray
     val n = (cps.length - 1).toLong // padded: always >= 1 gram
     val cnt = new Array[Long](m.dims)
@@ -49,7 +49,7 @@ object CharGramLogitKernel extends Serializable {
   * in OperatorSpec) evaluates interpreted — the [[PocketLogit]]
   * kernel/spec twin discipline. */
 case class CharGramLogit(child: Expression, model: PocketWeights)
-    extends UnaryExpression {
+    extends UnaryExpression with CaseMapping {
 
   override def dataType: DataType = LongType
 
@@ -62,14 +62,14 @@ case class CharGramLogit(child: Expression, model: PocketWeights)
   }
 
   override def nullSafeEval(input: Any): Any =
-    CharGramLogitKernel.compute(input.asInstanceOf[UTF8String], model)
+    CharGramLogitKernel.compute(input.asInstanceOf[UTF8String], model, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("charGramWeights", model,
       classOf[PocketWeights].getName)
     nullSafeCodeGen(ctx, ev, in => {
       s"""
-         |${ev.value} = graft.functions.CharGramLogitKernel.compute($in, $m);
+         |${ev.value} = graft.functions.CharGramLogitKernel.compute($in, $m, $icu);
        """.stripMargin
     })
   }

@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    "($CjkCodepointClass)", " $1 ")` on the RAW text;
   *  - `normalize`: `TextOps.normalizeForMatch` = lower → strip
   *    non-[a-z0-9\s] to space → collapse \s+ → trim;
-  *  - tokens: `split(trim(lower(c)), "\s+")` with UTF8String
-  *    lower/trim semantics (the [[SimHashKernel]] convention);
+  *  - tokens: `TextOps.tokens` = `split(trim(lower(c)), "\s+")`
+  *    ([[TextKernel.words]]);
   *  - grams: n consecutive tokens joined by one space; docs with fewer
   *    than n tokens emit the empty set (the `size(toks) >= n` guard);
   *    n = 1 is the raw token list (no guard — `shingles` explodes
@@ -47,18 +47,18 @@ object HashedShinglesKernel extends Serializable {
     java.util.regex.Pattern.compile("[^a-z0-9\\s]")
 
   def apply(s: UTF8String, n: Int, seed: Int, dedup: Boolean,
-      normalize: Boolean, segment: Boolean):
+      normalize: Boolean, segment: Boolean, icu: Boolean):
       org.apache.spark.sql.catalyst.util.ArrayData = {
     val src =
       if (normalize) {
-        val l = s.toLowerCase.toString
+        val l = TextKernel.lower(s, icu).toString
         val stripped = NonAlnum.matcher(l).replaceAll(" ")
         val collapsed = Ws.matcher(stripped).replaceAll(" ")
         UTF8String.fromString(collapsed).trim
       } else if (segment) {
         UTF8String.fromString(CjkPat.matcher(s.toString).replaceAll(" $1 "))
       } else s
-    val toks = Ws.split(src.toLowerCase.trim.toString, -1)
+    val toks = TextKernel.words(src, icu)
     val prefix = seed + ":"
     val out = new scala.collection.mutable.ArrayBuffer[Long](
       math.max(0, toks.length - (n - 1)))
@@ -91,7 +91,7 @@ object HashedShinglesKernel extends Serializable {
   * and the mode flags ride the plan as literals. */
 case class HashedShingles(child: Expression, n: Int, seed: Int,
     dedup: Boolean, normalize: Boolean, segment: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with CaseMapping {
 
   require(n >= 1, s"gram size must be >= 1, got $n")
   require(!(normalize && segment),
@@ -106,13 +106,13 @@ case class HashedShingles(child: Expression, n: Int, seed: Int,
 
   override def nullSafeEval(input: Any): Any =
     HashedShinglesKernel(input.asInstanceOf[UTF8String], n, seed, dedup,
-      normalize, segment)
+      normalize, segment, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val kernel = ctx.addReferenceObj("hashedShinglesKernel",
         HashedShinglesKernel, "graft.functions.HashedShinglesKernel$")
-      s"${ev.value} = $kernel.apply($c, $n, $seed, $dedup, $normalize, $segment);"
+      s"${ev.value} = $kernel.apply($c, $n, $seed, $dedup, $normalize, $segment, $icu);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): HashedShingles =

@@ -22,16 +22,14 @@ final class PocketWeights(val w: Array[Long], val dims: Int, val seed: Int)
 /** Per-row kernel of [[PocketLogit]] — one object shared by the
   * interpreted and codegen paths. Mirrors the executable-spec HOF form
   * (`TextOps.pocketLogitHof`) bit for bit: whitespace tokens of
-  * `lower(trim(text))` (the [[SimHashKernel]] split discipline), each
+  * `TextOps.tokens(text)` ([[TextKernel.words]]), each
   * token's 60-bit portable hash bucketed mod `dims`, milli-fraction
   * floor features `(1000·c_j) div n`, the exact BIGINT dot plus length
   * and bias terms. */
 object PocketLogitKernel extends Serializable {
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
-
-  def compute(s: UTF8String, m: PocketWeights): Long = {
+  def compute(s: UTF8String, m: PocketWeights, icu: Boolean): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val toks = Ws.split(s.toLowerCase.trim.toString, -1)
+    val toks = TextKernel.words(s, icu)
     val n = toks.length.toLong // split yields >= 1 element, n > 0 always
     val cnt = new Array[Long](m.dims)
     var i = 0
@@ -56,7 +54,7 @@ object PocketLogitKernel extends Serializable {
   * HOFs don't participate in whole-stage codegen, and apply is the one
   * path that scans the full corpus. */
 case class PocketLogit(child: Expression, model: PocketWeights)
-    extends UnaryExpression {
+    extends UnaryExpression with CaseMapping {
 
   override def dataType: DataType = LongType
 
@@ -69,14 +67,14 @@ case class PocketLogit(child: Expression, model: PocketWeights)
   }
 
   override def nullSafeEval(input: Any): Any =
-    PocketLogitKernel.compute(input.asInstanceOf[UTF8String], model)
+    PocketLogitKernel.compute(input.asInstanceOf[UTF8String], model, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("pocketWeights", model,
       classOf[PocketWeights].getName)
     nullSafeCodeGen(ctx, ev, in => {
       s"""
-         |${ev.value} = graft.functions.PocketLogitKernel.compute($in, $m);
+         |${ev.value} = graft.functions.PocketLogitKernel.compute($in, $m, $icu);
        """.stripMargin
     })
   }

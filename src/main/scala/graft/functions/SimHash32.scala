@@ -15,8 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Serializable: the codegen path ships it to executors inside the
   * generated projection's reference array. */
 object SimHashKernel extends Serializable {
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
-
   /** 60-bit portable hash: first 15 hex chars of md5(s) as a Long —
     * identical to `TextOps.portableHash` for `s = "<seed>:<token>"`. */
   def hash60(md: java.security.MessageDigest, s: String): Long = {
@@ -28,10 +26,10 @@ object SimHashKernel extends Serializable {
     (h << 4) | ((d(7) & 0xf0L) >> 4)
   }
 
-  /** Lowercased, trimmed, whitespace-split DISTINCT tokens — the kernel
+  /** DISTINCT `TextOps.tokens` ([[TextKernel.words]]) — the kernel
     * mirror of `TextOps.tokens` + `Dedup.shingles(n=1)`'s distinct. */
-  def distinctTokens(s: UTF8String): java.util.LinkedHashSet[String] = {
-    val toks = Ws.split(s.toLowerCase.trim.toString, -1)
+  def distinctTokens(s: UTF8String, icu: Boolean): java.util.LinkedHashSet[String] = {
+    val toks = TextKernel.words(s, icu)
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
     while (i < toks.length) { seen.add(toks(i)); i += 1 }
@@ -43,10 +41,10 @@ object SimHashKernel extends Serializable {
     * integer sums, so the result is identical regardless of token order —
     * which is exactly why this is computable per row with no explode and
     * no shuffle. Mirrors `Dedup.simHash(shingles(n=1))` bit for bit. */
-  def compute(s: UTF8String): Long = {
+  def compute(s: UTF8String, icu: Boolean): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val votes = new Array[Int](32)
-    val it = distinctTokens(s).iterator()
+    val it = distinctTokens(s, icu).iterator()
     while (it.hasNext) {
       val h = hash60(md, "3:" + it.next())
       var b = 0
@@ -65,10 +63,10 @@ object SimHashKernel extends Serializable {
     * seed-i portable hash — identical to
     * `Dedup.minHash(shingles(n=1), k)`'s grouped mins (min is
     * order-independent, hence per-row computable). */
-  def minhash(s: UTF8String, k: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def minhash(s: UTF8String, k: Int, icu: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val mins = Array.fill(k)(Long.MaxValue)
-    val it = distinctTokens(s).iterator()
+    val it = distinctTokens(s, icu).iterator()
     while (it.hasNext) {
       val t = it.next()
       var i = 0
@@ -88,9 +86,10 @@ object SimHashKernel extends Serializable {
     * than `n` tokens before banding (the grouped form emits no signature
     * row for them; an all-MaxValue signature would band every short doc
     * into one bogus mega-bucket). */
-  def minhashN(s: UTF8String, k: Int, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (n <= 1) return minhash(s, k)
-    val toks = Ws.split(s.toLowerCase.trim.toString, -1)
+  def minhashN(s: UTF8String, k: Int, n: Int,
+      icu: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
+    if (n <= 1) return minhash(s, k, icu)
+    val toks = TextKernel.words(s, icu)
     val md = java.security.MessageDigest.getInstance("MD5")
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -114,8 +113,8 @@ object SimHashKernel extends Serializable {
     * distinct) of `portableHash(token, 7) mod 1000003`, mod 1000003 — an
     * order-independent integer sum, identical to
     * [[graft.operators.TextOps.fingerprint]]'s grouped formulation. */
-  def fingerprint(s: UTF8String): Long = {
-    val toks = Ws.split(s.toLowerCase.trim.toString, -1)
+  def fingerprint(s: UTF8String, icu: Boolean): Long = {
+    val toks = TextKernel.words(s, icu)
     val md = java.security.MessageDigest.getInstance("MD5")
     var acc = 0L
     var i = 0
@@ -137,7 +136,7 @@ object SimHashKernel extends Serializable {
   * form remains the executable spec and the general path for n-gram
   * shingle frames.
   */
-case class SimHash32(child: Expression) extends UnaryExpression {
+case class SimHash32(child: Expression) extends UnaryExpression with CaseMapping {
 
   override def dataType: DataType = LongType
 
@@ -147,13 +146,13 @@ case class SimHash32(child: Expression) extends UnaryExpression {
       s"simhash32 expects STRING, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(input: Any): Any =
-    SimHashKernel.compute(input.asInstanceOf[UTF8String])
+    SimHashKernel.compute(input.asInstanceOf[UTF8String], icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val kernel = ctx.addReferenceObj("simhashKernel", SimHashKernel,
         "graft.functions.SimHashKernel$")
-      s"${ev.value} = $kernel.compute($c);"
+      s"${ev.value} = $kernel.compute($c, $icu);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): SimHash32 =
@@ -176,7 +175,7 @@ object SimHash32 {
   * than `ngram` tokens first — the grouped spec emits no row for them
   * (see [[SimHashKernel.minhashN]]). */
 case class MinHashSig(child: Expression, numHashes: Int, ngram: Int = 1)
-    extends UnaryExpression {
+    extends UnaryExpression with CaseMapping {
 
   require(ngram >= 1, s"ngram must be >= 1, got $ngram")
 
@@ -189,13 +188,13 @@ case class MinHashSig(child: Expression, numHashes: Int, ngram: Int = 1)
       s"minhash_sig expects STRING, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(input: Any): Any =
-    SimHashKernel.minhashN(input.asInstanceOf[UTF8String], numHashes, ngram)
+    SimHashKernel.minhashN(input.asInstanceOf[UTF8String], numHashes, ngram, icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val kernel = ctx.addReferenceObj("minhashKernel", SimHashKernel,
         "graft.functions.SimHashKernel$")
-      s"${ev.value} = $kernel.minhashN($c, $numHashes, $ngram);"
+      s"${ev.value} = $kernel.minhashN($c, $numHashes, $ngram, $icu);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
@@ -213,7 +212,7 @@ object MinHashSig {
   * the order-independent-sum folding of
   * [[graft.operators.TextOps.fingerprint]] (which stays as the grouped
   * executable spec; equality asserted in OperatorSpec). */
-case class Fingerprint(child: Expression) extends UnaryExpression {
+case class Fingerprint(child: Expression) extends UnaryExpression with CaseMapping {
 
   override def dataType: DataType = LongType
 
@@ -223,13 +222,13 @@ case class Fingerprint(child: Expression) extends UnaryExpression {
       s"fingerprint64 expects STRING, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(input: Any): Any =
-    SimHashKernel.fingerprint(input.asInstanceOf[UTF8String])
+    SimHashKernel.fingerprint(input.asInstanceOf[UTF8String], icu)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val kernel = ctx.addReferenceObj("fpKernel", SimHashKernel,
         "graft.functions.SimHashKernel$")
-      s"${ev.value} = $kernel.fingerprint($c);"
+      s"${ev.value} = $kernel.fingerprint($c, $icu);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Fingerprint =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{lower, trim}
+import org.apache.spark.sql.functions.trim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,7 +88,7 @@ final class SubwordMatcher(vocab: Array[String]) extends Serializable {
 
 object SubwordTokenizeRuntime {
   // precompiled: String.split(regex) recompiles the pattern per call,
-  // a per-row tax on this hot path (the SimHashKernel.Ws discipline)
+  // a per-row tax on this hot path
   private val Ws = java.util.regex.Pattern.compile("\\s+")
 
   /** Greedy longest-match walk over one pre-normalized text: whitespace
@@ -172,7 +172,7 @@ object SubwordTokenize {
     * sees exactly what [[graft.operators.TextOps.tokens]] splits. */
   def subword_tokens(c: Column, vocab: Seq[String]): Column =
     GraftShims.column(SubwordTokenize(
-      GraftShims.expression(lower(trim(c))), vocab.toArray))
+      GraftShims.expression(LowerText.lower_text(trim(c))), vocab.toArray))
 
   /** Column API for the MERGE-ORDER apply ([[BpeMergeApply]]): same
     * normalization and word split, tokens produced by replaying the
@@ -180,7 +180,7 @@ object SubwordTokenize {
   def subword_tokens_merge_order(c: Column,
       merges: Seq[(String, String)]): Column =
     GraftShims.column(BpeMergeApply(
-      GraftShims.expression(lower(trim(c))),
+      GraftShims.expression(LowerText.lower_text(trim(c))),
       merges.map(p => Array(p._1, p._2)).toArray))
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{lower, trim}
+import org.apache.spark.sql.functions.trim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -176,5 +176,5 @@ object UnigramTokenize {
     * splits. */
   def unigram_tokens(c: Column, vocab: UnigramVocab): Column =
     GraftShims.column(UnigramTokenize(
-      GraftShims.expression(lower(trim(c))), vocab))
+      GraftShims.expression(LowerText.lower_text(trim(c))), vocab))
 }

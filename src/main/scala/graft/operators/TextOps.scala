@@ -22,8 +22,17 @@ object TextOps {
     * use [[tokensScriptAware]] (or the `segment` option threaded
     * through [[graft.operators.Dedup.shingles]] / [[oovRate]] /
     * [[unigramDrift]] / [[unigramDriftAgainst]]), which splits those
-    * scripts at codepoints while keeping whitespace for Latin. */
-  def tokens(c: Column): Column = split(trim(lower(c)), "\\s+")
+    * scripts at codepoints while keeping whitespace for Latin.
+    *
+    * `split(trim(lower(c)), "\\s+")` as one native kernel
+    * ([[graft.functions.WordTokens]]): no regex compiled per row. */
+  def tokens(c: Column): Column = graft.functions.LowerText.word_tokens(c)
+
+  /** Spark's `lower(c)`, value for value, through the engine's one
+    * lowercase ([[graft.functions.TextKernel]]), which skips the ICU
+    * title-case table Spark builds on a JVM's first `lower`. Every
+    * lowercase in the engine goes through here. */
+  def lower(c: Column): Column = graft.functions.LowerText.lower_text(c)
 
   /** Codepoint class of the major unsegmented scripts — Hiragana,
     * Katakana, CJK ext-A, CJK Unified, Hangul syllables, CJK compat,
@@ -78,7 +87,7 @@ object TextOps {
     * definition, so it is an explicit opt-in, never the default. */
   def normalizeForMatch(c: Column): Column =
     trim(regexp_replace(
-      regexp_replace(lower(c), "[^a-z0-9\\s]", " "), "\\s+", " "))
+      regexp_replace(TextOps.lower(c), "[^a-z0-9\\s]", " "), "\\s+", " "))
 
   /** Guard for the append-form operators (withColumn replaces by name, so
     * a pre-existing column of the same name would be SILENTLY clobbered —
@@ -95,7 +104,7 @@ object TextOps {
 
   /** BPE-ish token count via the subword pattern. */
   def tokenCountBpeish(text: Column): Column =
-    size(regexp_extract_all(lower(text), lit(BpeishPattern), lit(0)))
+    size(regexp_extract_all(TextOps.lower(text), lit(BpeishPattern), lit(0)))
 
   /** The REAL subword tokens of a text column under a FROZEN vocabulary
     * ([[graft.functions.SubwordTokenize]]): greedy longest-match per
@@ -690,7 +699,7 @@ object TextOps {
   /** Language-ID: per-language marker-hit counts normalized by token count,
     * argmax wins ('und' = undetermined when no marker hits). */
   def languageId(df: DataFrame, text: String, id: String): DataFrame = {
-    val t = lower(col(text))
+    val t = TextOps.lower(col(text))
     val scored = langMarkers.foldLeft(df) { case (d, (lang, re)) =>
       d.withColumn(s"score_$lang",
         size(regexp_extract_all(t, lit(re), lit(0))).cast("double") /
@@ -1291,9 +1300,9 @@ object TextOps {
   def canonicalUrl(u: Column): Column = {
     val s = trim(u)
     val schemeRe = "^([A-Za-z][A-Za-z0-9+.\\-]*)://"
-    val scheme = lower(regexp_extract(s, schemeRe, 1))
+    val scheme = TextOps.lower(regexp_extract(s, schemeRe, 1))
     val noFrag = regexp_replace(regexp_replace(s, schemeRe, ""), "#.*$", "")
-    val hostport0 = lower(regexp_extract(noFrag, "^([^/?]*)", 1))
+    val hostport0 = TextOps.lower(regexp_extract(noFrag, "^([^/?]*)", 1))
     val hostport = when(scheme === "http",
         regexp_replace(hostport0, ":80$", ""))
       .when(scheme === "https", regexp_replace(hostport0, ":443$", ""))
@@ -2202,7 +2211,7 @@ object TextOps {
     * CODEPOINTS, so the oracle replay is exact beyond the BMP. */
   private def charGramFeats(df: DataFrame, text: String, id: String,
       dims: Int, seed: Int): DataFrame = {
-    val t = concat(lit(" "), lower(trim(col(text))), lit(" "))
+    val t = concat(lit(" "), TextOps.lower(trim(col(text))), lit(" "))
     val base = df.where(col(text).isNotNull)
       .select(col(id).as("__id"), t.as("__t"),
         (length(t) - 1).cast(LongType).as("__n"))
@@ -2263,7 +2272,7 @@ object TextOps {
       langLabel: String, dims: Int = 512, seed: Int = 59): LangIdModel = {
     require(dims >= 1, s"dims must be >= 1, got $dims")
     val base = df.where(col(text).isNotNull)
-    val t = concat(lit(" "), lower(trim(col(text))), lit(" "))
+    val t = concat(lit(" "), TextOps.lower(trim(col(text))), lit(" "))
     val grams = base.select(col(langLabel).as("__lang"), t.as("__t"))
       .select(col("__lang"),
         explode(transform(
@@ -2321,7 +2330,7 @@ object TextOps {
   def charGramLogitHof(tc: Column, weights: Seq[Long], dims: Int,
       seed: Int): Column = {
     val wLit = array(weights.map(lit): _*)
-    val t = concat(lit(" "), lower(trim(tc)), lit(" "))
+    val t = concat(lit(" "), TextOps.lower(trim(tc)), lit(" "))
     val n = (length(t) - 1).cast(LongType)
     val buckets = transform(sequence(lit(1), (length(t) - 1)),
       i => pmod(portableHash(substr(t, i, lit(2)), seed),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.SessionArtifacts
 import graft.operators.{Dedup, Multimodal, Similarity, Sketch, TextOps}
+import graft.sources.Tables
 
 /** Training-data pipeline queries (dedup / similarity / text analysis /
   * multimodal) over the `documents` and `embeddings` testdata tables, with
@@ -13,10 +14,8 @@ import graft.operators.{Dedup, Multimodal, Similarity, Sketch, TextOps}
   */
 object LlmQueries {
 
-  private def docs(s: SparkSession, d: String) =
-    s.read.parquet(s"$d/documents.parquet")
-  private def embs(s: SparkSession, d: String) =
-    s.read.parquet(s"$d/embeddings.parquet")
+  private def docs(s: SparkSession, d: String) = Tables.read(s, d, "documents")
+  private def embs(s: SparkSession, d: String) = Tables.read(s, d, "embeddings")
 
   // --- shared SQL fragments (DuckDB) ---
   private val tokCte =
@@ -5068,7 +5067,9 @@ object LlmQueries {
     val urls = docs(s, d).select(col("doc_id"), col("text"),
       when(v === 0, concat(lit("http://"), col("source"),
           lit(".example.com/p/"), page.cast("string"), lit("?a=1&b=2")))
-        .otherwise(concat(lit("HTTP://"), upper(col("source")),
+        // source names are ASCII (`srcN`): an ASCII uppercase is exact
+        .otherwise(concat(lit("HTTP://"),
+          translate(col("source"), "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"),
           lit(".EXAMPLE.COM:80/p/"), page.cast("string"), lit("/?b=2&a=1")))
         .as("url"))
     TextOps.hostReport(urls, "url", "text", maxDupMilli = 500L)
@@ -10310,15 +10311,15 @@ object LlmQueries {
     "q69_token_budget" -> tokenBudget _,
     "q70_pack_text" -> packText _,
     "q38_part_agg" -> ((s, d) =>
-      s.read.parquet(s"$d/part.parquet")
+      Tables.read(s, d, "part")
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n"),
           round(avg("p_retailprice"), 4).as("avg_price"),
           sum("p_size").as("sum_size"))
         .orderBy("p_brand")),
     "q39_supplier_agg" -> ((s, d) =>
-      s.read.parquet(s"$d/supplier.parquet")
-        .join(s.read.parquet(s"$d/nation.parquet"),
+      Tables.read(s, d, "supplier")
+        .join(Tables.read(s, d, "nation"),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_supp"), round(sum("s_acctbal"), 2).as("acctbal"))

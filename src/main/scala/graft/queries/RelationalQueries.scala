@@ -18,7 +18,7 @@ import graft.parser.QueryParser
 object RelationalQueries {
 
   private def t(s: SparkSession, d: String, name: String): DataFrame =
-    s.read.parquet(s"$d/$name.parquet")
+    graft.sources.Tables.read(s, d, name)
 
   /** 3-day gap (ns) — events average ~5.5 days apart per user at sf0.01, so
     * this yields a mix of merged and singleton sessions. */

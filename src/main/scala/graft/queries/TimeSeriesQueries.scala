@@ -26,7 +26,7 @@ object TimeSeriesQueries {
     * runtime-settable so this works in any session (driver's too). */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = graft.sources.Tables.read(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw
       case _ => raw.withColumn("ts",

@@ -270,6 +270,59 @@ class FunctionsSpec extends AnyFunSuite {
       s"kernel must match the spec on degenerate vectors: $native vs $spec")
   }
 
+  test("TextOps.lower and TextOps.tokens equal Spark's lower and split(trim(lower)) row for row") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.operators.TextOps
+    // code points where the ICU and java.lang.String case tables, ASCII
+    // fast paths, final-sigma context or surrogate pairs could diverge
+    val pool = Seq("a", "Z", "q", "0", " ", " ", "\t", "\n", "\r", "\f", "\u000B",
+      "À", "ß", "ÿ", "É", "Σ", "σ", "ς", "Ω", "İ", "ı", "I", "ǅ", "ẞ",
+      "漢", "字", "\uD835\uDD38", "\uD83D\uDE42", "\u0301", "Ꭰ", "\u00A0", "\u2028",
+      // capitals newer than the JDK's Unicode tables (Unicode 14 and 16)
+      "\u2C2F", "\uA7C0", "\uD801\uDD70", "\u1C89")
+    val word = Gen.listOf(Gen.oneOf(pool)).map(_.mkString)
+    val generated = Gen.listOfN(300, word).pureApply(Gen.Parameters.default, Seed(20261020L))
+    val fixed = Seq("", "ASCII Only Words", "Latin-1: ÀÉÎÕÜ ÿ", "ΟΔΟΣ ΣΑΣ Σ σΣ ΣΑΣ.",
+      "İstanbul ıIiİ", "漢字 テキスト \uD835\uDD38\uD835\uDD39", "\tleading tab",
+      "trailing   ", "trailing\n\n", "  both  \r\n", "x\u000By\fz")
+      .map(_.getBytes("UTF-8"))
+    // invalid UTF-8: a lone continuation byte, a truncated sequence, an
+    // overlong encoding, a surrogate half, and invalid bytes beside ASCII
+    val invalid = Seq(Array(0x80), Array(0x41, 0xC3), Array(0xC0, 0xAF, 0x20, 0x42),
+      Array(0xED, 0xA0, 0x80), Array(0x48, 0xFF, 0x20, 0x20, 0x49, 0xFE))
+      .map(_.map(_.toByte))
+    val bytes: Seq[Option[Array[Byte]]] =
+      (generated.map(_.getBytes("UTF-8")) ++ fixed ++ invalid).map(Some(_)) :+ None
+    val base = bytes.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "b")
+      .select(col("id"), col("b").cast("string").as("s"))
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (icu <- Seq("true", "false"); codegen <- Seq(false, true)) {
+        spark.conf.set(key, icu)
+        // a projection over a local relation is folded on the driver
+        // (interpreted); above an exchange it is compiled
+        val src = if (codegen) base.repartition(2) else base
+        val rows = src.select(col("id"), col("s"),
+            (lower(col("s")) <=> TextOps.lower(col("s"))).as("lower_eq"),
+            (split(trim(lower(col("s"))), "\\s+") <=> TextOps.tokens(col("s"))).as("tokens_eq"))
+          .collect()
+        assert(rows.length == bytes.size)
+        val bad = rows.filterNot(r => r.getBoolean(2) && r.getBoolean(3))
+          .map(r => s"id ${r.getLong(0)}: ${Option(r.getString(1)).map(_.map(_.toInt.toHexString))}")
+        assert(bad.isEmpty, s"icu=$icu codegen=$codegen: ${bad.mkString("; ")}")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    // the two settings really reach two case tables
+    val newer = org.apache.spark.unsafe.types.UTF8String.fromString("\u2C2F\uA7C0")
+    val kernel = graft.functions.TextKernel
+    assert(kernel.lower(newer, icu = true) != kernel.lower(newer, icu = false))
+  }
+
   private def withAutoBroadcastOff[A](body: => A): A = {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

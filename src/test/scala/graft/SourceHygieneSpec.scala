@@ -112,6 +112,47 @@ class SourceHygieneSpec extends AnyFunSuite {
       p.toString } == Nil)
   }
 
+  /** Comments and string and char literals, leftmost first, so a quote in
+    * a comment or a comment marker in a string is skipped with its host. */
+  private val literalOrComment =
+    "(?s)\"\"\".*?\"\"\"|/\\*.*?\\*/|//[^\n]*|\"(?:[^\"\\\\\n]|\\\\.)*\"|'(?:[^'\\\\\n]|\\\\.)'".r
+
+  /** `text` without comments, its string literals emptied: what the
+    * compiler calls. */
+  private def code(text: String): String =
+    literalOrComment.replaceAllIn(text, m =>
+      if (m.matched.startsWith("\"")) "\"\"" else "")
+
+  test("one lowercase: src/main calls Spark's lower, upper and initcap nowhere") {
+    // the engine lowercases through TextOps.lower and, inside the native
+    // kernels, TextKernel.lower: Spark's case mappings load an ICU title-case
+    // table of every code point on a JVM's first call
+    val call = """(?<!TextOps\.)(?<!TextKernel\.)(?<!def )\b(lower|upper|initcap)\s*\("""
+    assert(code("lower(x) // upper(y)\n\"initcap(z)\" TextOps.lower(w)") == "lower(x) \n\"\" TextOps.lower(w)")
+    assert(sources.collect {
+      case (p, text) if p.getFileName.toString != "LowerText.scala" &&
+          call.r.findFirstIn(code(text)).isDefined => p.toString
+    } == Nil)
+    // the native kernels lowercase through TextKernel, not a case table of
+    // their own
+    val kernels = sources.filter(_._1.toString.contains("/graft/functions/"))
+    assert(kernels.nonEmpty)
+    assert(kernels.collect {
+      case (p, text) if """\.toLowerCase\b""".r.findFirstIn(code(text)).isDefined =>
+        p.getFileName.toString
+    } == Seq("LowerText.scala"))
+  }
+
+  test("suite tables are read only through Tables.read") {
+    // a direct read infers the schema in a job of its own on every call and
+    // skips the small-input partition; Bucketed reads its two tables once,
+    // to write their bucketed copies
+    val direct = """read\s*\.\s*parquet\(\s*s"\$\{?\w+\}?/\w+\.parquet"\s*\)"""
+    assert(sources.collect {
+      case (p, text) if direct.r.findFirstIn(text).isDefined => p.getFileName.toString
+    } == Seq("Bucketed.scala"))
+  }
+
   test("no series-index build or run budget remains in src/main") {
     // each name carries a character class, so a grep of the sources for
     // the deleted names does not match this rule itself
