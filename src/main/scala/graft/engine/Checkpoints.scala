@@ -28,10 +28,15 @@ object Checkpoints {
     * upstream DAG. The checkpoint's origin constraints are dropped —
     * they carry stale expression ids through self-join deduplication and
     * break Union constraint rewriting (see
-    * [[org.apache.spark.sql.GraftShims.dropCheckpointConstraints]]). */
+    * [[org.apache.spark.sql.GraftShims.dropCheckpointConstraints]]).
+    * Under the small-input gate ([[graft.sources.Fanout.enabled]]) a
+    * one-partition checkpoint is declared `SinglePartition`, so a query
+    * over it plans no shuffle exchange, as over a one-partition scan
+    * ([[graft.sources.Tables]]). */
   def mark(df: DataFrame): DataFrame =
     org.apache.spark.sql.GraftShims.dropCheckpointConstraints(
-      df.localCheckpoint(eager = true))
+      df.localCheckpoint(eager = true),
+      onePartition = graft.sources.Fanout.enabled(df.sparkSession))
 
   /** [[mark]] several INDEPENDENT frames concurrently (guide §2.6 —
     * actions are only sequential because the driver calls them

@@ -711,20 +711,19 @@ object Dedup {
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** n-gram Jaccard similarity for given candidate pairs (a, b): computed by
-    * equi-joining exploded distinct shingle sets — |A ∩ B| / |A ∪ B|.
-    * Pairs come from LSH buckets (never all-pairs), so the join stays
+  /** n-gram Jaccard similarity for given candidate pairs (a, b):
+    * |A ∩ B| / |A ∪ B| over each document's distinct shingle set. Pairs
+    * come from LSH buckets (never all-pairs), so the work stays
     * candidate-bounded at scale.
     *
-    * The intersection joins run on the 60-bit portable HASH of each
-    * shingle, not the n-gram text: the join key is the shuffle key, so
-    * keying on text would ship every shingle's bytes through two
-    * exchanges — the same payload class as grouping [[exact]] by raw
-    * text. 8 B/shingle instead; a same-doc hash collision inflating one
-    * intersection count has odds ~2⁻⁶⁰ per shingle pair — immaterial
-    * against corpus-scale shuffle bytes. */
+    * The sets hold the 60-bit portable HASH of each shingle, not the
+    * n-gram text ([[jaccardSetPairs]]), so no exchange ships shingle
+    * bytes — the same payload class as grouping [[exact]] by raw text.
+    * 8 B/shingle instead; a same-doc hash collision shrinking one set has
+    * odds ~2⁻⁶⁰ per shingle pair — immaterial against corpus-scale
+    * shuffle bytes. */
   def jaccardPairs(sh: DataFrame, pairs: DataFrame, id: String): DataFrame =
-    jaccardPairsHashed(hashShingles(sh, id), pairs, id)
+    jaccardSetPairs(shingleSets(hashShingles(sh, id), id), pairs, id)
 
   /** The `(id, sh_h)` form of a distinct shingle set — the join-ready
     * 16 B/row representation the Jaccard operators shuffle. */
@@ -747,24 +746,28 @@ object Dedup {
       graft.functions.HashedShingles.hashed_shingles(col(text), n, seed,
         dedup, normalize, segment)).as("sh_h"))
 
-  /** [[jaccardPairs]] over pre-hashed DISTINCT `(id, sh_h)` rows
-    * ([[hashShingles]]) — for pipelines that materialize the shingle set
-    * once (q57): the checkpoint then holds 16 B/row instead of n-gram
-    * text, and every downstream exchange is already compact. */
-  def jaccardPairsHashed(h: DataFrame, pairs: DataFrame, id: String): DataFrame = {
-    val sizes = h.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(h.select(col(id).as("a"), col("sh_h")), "a")
-      .join(h.select(col(id).as("b"), col("sh_h")), Seq("b", "sh_h"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_inter"))
+  /** `(id, sh_h)` rows ([[hashShingles]], [[hashedShingles]]) as one
+    * distinct hash set per id: `(id, hs)`; duplicate rows count once. A
+    * pipeline that reuses the sets materializes THIS (q57): one row per
+    * document instead of one per shingle. */
+  def shingleSets(h: DataFrame, id: String): DataFrame =
+    h.groupBy(col(id)).agg(collect_set(col("sh_h")).as("hs"))
+
+  /** [[jaccardPairs]] over [[shingleSets]] rows: each pair joins its two
+    * sets by id, and the intersection is counted inside the row, so no
+    * per-shingle join or per-pair aggregate runs. Ids without a set (no
+    * shingles) drop their pairs, as an empty union has no Jaccard. */
+  def jaccardSetPairs(sets: DataFrame, pairs: DataFrame, id: String): DataFrame =
     pairs
-      .join(sizes.select(col(id).as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col(id).as("b"), col("n").as("nb")), "b")
-      .join(inter, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        round(coalesce(col("n_inter"), lit(0)).cast("double") /
-          (col("na") + col("nb") - coalesce(col("n_inter"), lit(0))), 6)
-          .as("jaccard"))
+      .join(sets.select(col(id).as("a"), col("hs").as("ha")), "a")
+      .join(sets.select(col(id).as("b"), col("hs").as("hb")), "b")
+      .select(col("a"), col("b"), setJaccard.as("jaccard"))
+
+  /** |ha ∩ hb| / |ha ∪ hb| of two distinct hash sets, rounded to 6
+    * places as the oracle rounds. */
+  private def setJaccard: Column = {
+    val inter = size(array_intersect(col("ha"), col("hb")))
+    round(inter.cast("double") / (size(col("ha")) + size(col("hb")) - inter), 6)
   }
 
   /** EDIT-DISTANCE verification of candidate pairs: Levenshtein similarity
@@ -1508,30 +1511,19 @@ object Dedup {
   /** Jaccard over consecutive-id pairs — the deterministic demo/benchmark
     * shape: pair (id, id+1), similarity on distinct token sets. */
   def jaccardAdjacent(df: DataFrame, text: String, id: String): DataFrame = {
-    // the shingle set feeds four plan branches (two size lookups, two
-    // intersection sides); materialized once so the tokenize isn't
-    // re-derived per branch (was 6 corpus scans in one plan). OWNERSHIP:
-    // the checkpoint stays a leaf of the returned frame — consumers
-    // release the result after the final evaluation (Bench/Verify do).
-    // hash-first: the raw occurrence rows are map-only (dedup = false),
-    // the hash projection makes rows 16 B, and only THEN the distinct
-    // shuffles — so neither the dedup exchange nor the intersection
-    // joins ever carry token text (the q29 shuffle-payload fix applied
-    // to every shingle exchange; same-doc collision odds ~2^-60)
-    val sh = graft.engine.Checkpoints.mark(
-      hashedShingles(df, text, id, 1, dedup = false).distinct())
-    val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    val a = sh.select(col(id).as("a"), col("sh_h"))
-    val b = sh.select((col(id) - 1).as("a"), col("sh_h"))
-    val inter = a.join(b, Seq("a", "sh_h")).groupBy("a")
-      .agg(count(lit(1)).as("n_inter"))
-    sizes.select(col(id).as("a"), col("n").as("na"))
-      .join(sizes.select((col(id) - 1).as("a"), col("n").as("nb")), "a")
-      .join(inter, Seq("a"), "left")
-      .select(col("a"), col("a") + 1 as "b",
-        round(coalesce(col("n_inter"), lit(0)).cast("double") /
-          (col("na") + col("nb") - coalesce(col("n_inter"), lit(0))), 6)
-          .as("jaccard"))
+    // the per-document hash sets feed both sides of the id-shifted join;
+    // materialized once so the tokenize isn't re-derived per side.
+    // OWNERSHIP: the checkpoint stays a leaf of the returned frame —
+    // consumers release the result after the final evaluation
+    // (Bench/Verify do). hash-first: the raw occurrence rows are map-only
+    // (dedup = false) and 16 B, so the set-building exchange never
+    // carries token text (the q29 shuffle-payload fix; same-doc collision
+    // odds ~2^-60), and the join moves one row per document
+    val sets = graft.engine.Checkpoints.mark(
+      shingleSets(hashedShingles(df, text, id, 1, dedup = false), id))
+    sets.select(col(id).as("a"), col("hs").as("ha"))
+      .join(sets.select((col(id) - 1).as("a"), col("hs").as("hb")), "a")
+      .select(col("a"), col("a") + 1 as "b", setJaccard.as("jaccard"))
   }
   /** Snapshot DIFF — corpus version accounting between two ingests of a
     * continuously refreshed crawl: which documents were ADDED, REMOVED,

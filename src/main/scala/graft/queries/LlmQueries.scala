@@ -449,32 +449,32 @@ object LlmQueries {
   def dedupCappedVerified(s: SparkSession, d: String): DataFrame = {
     import graft.engine.Checkpoints
     // Materialize the three shared intermediates ONCE. The capped self-join
-    // references the banded signature table four times and jaccardPairs
-    // references the pair list three times and the shingle set four times;
-    // left lazy, ONE q57 plan re-derived the corpus scan 16 times (only 5
-    // exchanges reused) — at corpus scale that is 16 scans for one query.
+    // references the banded signature table four times and the Jaccard
+    // join references the shingle sets twice; left lazy, ONE q57 plan
+    // re-derived the corpus scan 16 times (only 5 exchanges reused) — at
+    // corpus scale that is 16 scans for one query.
     // `banded` is transient (pairs' checkpoint truncates it out of the
-    // result plan, so it must be released here); `pairs`/`sh` stay leaves
+    // result plan, so it must be released here); `pairs`/`sets` stay leaves
     // of the returned frame, owned by it, and freed when the consumer
     // releases the result (Bench/Verify do, after materializing).
     // NOT fanned: A/B-measured net negative here (the r16 blanket-fanout
     // lesson) — the extra exchange + 32-partition checkpoints cost more
     // across this pipeline's ~22 small jobs than the 1-task sig stage saves.
-    // banded and sh are INDEPENDENT, so their materializations overlap
+    // banded and sets are INDEPENDENT, so their materializations overlap
     // (Checkpoints.markAll, guide §2.6) instead of running back to back.
-    // hash-first shingle set: the sh checkpoint holds 16 B/row (id, sh_h)
-    // instead of n-gram text, the distinct and both intersection joins
-    // shuffle hashes — no exchange in this pipeline carries token text
-    val Seq(banded, sh) = Checkpoints.markAll(
+    // hash-first shingle sets: the sets checkpoint holds one row of 8 B
+    // hashes per document instead of n-gram text, so no exchange in this
+    // pipeline carries token text
+    val Seq(banded, sets) = Checkpoints.markAll(
       Dedup.lshBands(minhashSig(s, d), "doc_id", NumHashes, Bands),
-      Dedup.hashedShingles(docs(s, d).where(col("text").isNotNull),
-        "text", "doc_id", 1, dedup = false).distinct())
+      Dedup.shingleSets(Dedup.hashedShingles(docs(s, d).where(col("text").isNotNull),
+        "text", "doc_id", 1, dedup = false), "doc_id"))
     val pairs =
       try Checkpoints.mark(
         Dedup.lshCandidatePairsCapped(banded, "doc_id", Bands,
           maxBucket = 100)._1)
       finally Checkpoints.release(banded)
-    Dedup.jaccardPairsHashed(sh, pairs, "doc_id")
+    Dedup.jaccardSetPairs(sets, pairs, "doc_id")
       .where(col("jaccard") >= 0.5)
       .orderBy("a", "b")
   }
@@ -6265,7 +6265,9 @@ object LlmQueries {
 
   // ---- DuckDB oracles ----
 
-  val sql: Map[String, String] = Map(
+  // lazy: only the oracle side reads it; built at object init, every SQL
+  // string cost the first query of a JVM about 0.1 s
+  lazy val sql: Map[String, String] = Map(
     "q25_text_tokens" ->
       """SELECT doc_id,
         |  len(string_split_regex(trim(lower(text)), '\s+')) AS n_tokens,

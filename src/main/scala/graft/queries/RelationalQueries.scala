@@ -1072,7 +1072,8 @@ object RelationalQueries {
         |  (e.est_count - t.true_count)::BIGINT AS err
         |FROM r CROSS JOIN e CROSS JOIN t""".stripMargin
 
-  val sql: Map[String, String] = Map(
+  // lazy: only the oracle side reads it (see LlmQueries.sql)
+  lazy val sql: Map[String, String] = Map(
     // sim3 at vec_id = 0 IS the query-to-trained-centroid cosine table, so
     // the probe plan and the corpus assignment both come from the shared
     // k-means replay

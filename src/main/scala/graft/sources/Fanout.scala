@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-adaptive scan fan-out — the guide §2.5 "input skew" remedy
   * (one small/unsplittable input ⇒ repartition immediately after the
@@ -37,14 +37,19 @@ object Fanout {
     * tiny exchange AQE would coalesce to one task) without inventing a
     * second, differently-calibrated gate. */
   def isSmall(df: DataFrame): Boolean = {
-    val gate =
-      try df.sparkSession.conf.get(MaxBytesKey, MaxBytesDefault.toString).toLong
-      catch { case _: NumberFormatException => MaxBytesDefault }
+    val gate = maxBytes(df.sparkSession)
     val bytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Throwable => BigInt(Long.MaxValue) }
     gate > 0 && bytes <= BigInt(gate)
   }
+
+  /** The small-input plan class is on (the conf'd maximum above 0). */
+  def enabled(spark: SparkSession): Boolean = maxBytes(spark) > 0
+
+  private def maxBytes(spark: SparkSession): Long =
+    try spark.conf.get(MaxBytesKey, MaxBytesDefault.toString).toLong
+    catch { case _: NumberFormatException => MaxBytesDefault }
 
   def small(df: DataFrame): DataFrame =
     if (isSmall(df))

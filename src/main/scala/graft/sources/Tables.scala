@@ -1,7 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** The one reader of the suite's tables: `<dir>/<name>.parquet`.
@@ -12,7 +17,9 @@ import org.apache.spark.sql.types.StructType
   *    ([[graft.engine.SessionArtifacts]], kind `schema`) and passes it to
   *    later reads through `read.schema(…)`, which start no job. The key is
   *    the path plus the size and modification time of every file under
-  *    it, so a rewritten table is inferred again.
+  *    it, so a rewritten table is inferred again. A table that is one file
+  *    is inferred on the driver from its footer, so not even its first
+  *    read starts a job.
   *  - **One partition under the small-input gate.** When [[Fanout.isSmall]]
   *    says the scan is small, the reader returns it coalesced to one
   *    partition. `SinglePartition` satisfies every required distribution,
@@ -29,11 +36,35 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val schema = graft.engine.SessionArtifacts.getOrBuild[StructType](
-      spark, "schema", s"$path|${fingerprint(spark, path)}") { _ =>
-      spark.read.parquet(path).schema
-    }
+      spark, "schema", s"$path|${fingerprint(spark, path)}") { _ => infer(spark, path) }
     val df = spark.read.schema(schema).parquet(path)
     if (Fanout.isSmall(df)) df.coalesce(1) else df
+  }
+
+  /** The schema `spark.read.parquet(path)` infers. A single file's footer
+    * is read here on the driver and converted by Spark's own footer-schema
+    * reader under the session's conf, so the inference starts no job; a
+    * directory goes through Spark's inference (partition discovery,
+    * summary files). */
+  private def infer(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (!status.isFile) spark.read.parquet(path).schema
+    else {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      // the converter Spark's inference task builds: these five settings
+      // from the session, the others at their defaults
+      val c = spark.sessionState.conf
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = c.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+          nanosAsLong = c.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation))
+    }
   }
 
   /** Size and modification time of every file under `path`, in name order. */

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Checkpoints, SessionArtifacts}
@@ -87,5 +88,54 @@ class SmallInputSpec extends AnyFunSuite {
       assert(Tables.read(spark, dir.toString, "t").orderBy("k").collect().map(_.getString(1))
         .toSeq == Seq("a", "b"))
     } finally graft.cli.Cleanup.deleteRecursively(dir.toFile)
+  }
+
+  test("a one-file table's schema is read from its footer: no job, and Spark's own schema") {
+    import spark.implicits._
+    val dir: Path = Files.createTempDirectory("small-input-footer")
+    try {
+      // pyarrow-written suite tables, and one file written by Spark, whose
+      // footer carries Spark's schema string
+      val names = Seq("lineitem", "documents", "embeddings", "events")
+      names.foreach(n => Files.copy(Paths.get(s"$sf/$n.parquet"), dir.resolve(s"$n.parquet")))
+      Seq((1L, java.sql.Timestamp.valueOf("2020-01-01 00:00:00"), BigDecimal("1.50"), Seq(1, 2)))
+        .toDF("k", "ts", "d", "xs").coalesce(1).write.parquet(s"$dir/spark_out")
+      Files.copy(Files.list(dir.resolve("spark_out")).filter(_.toString.endsWith(".parquet"))
+        .findFirst().get, dir.resolve("spark.parquet"))
+      (names :+ "spark").foreach { n =>
+        val p = Profile.record(spark)(Tables.read(spark, dir.toString, n))
+        assert(p.jobs.isEmpty, s"$n: ${p.jobs}")
+        assert(Tables.read(spark, dir.toString, n).schema ==
+          spark.read.parquet(s"$dir/$n.parquet").schema, n)
+      }
+    } finally graft.cli.Cleanup.deleteRecursively(dir.toFile)
+  }
+
+  test("under the gate a one-partition checkpoint plans no exchange above it") {
+    // one partition through an adaptive plan, whose partitioning the
+    // checkpoint cannot see
+    val df = spark.range(0, 1000, 1, 1).selectExpr("id % 7 as k", "id as v").distinct()
+    def shape(q: org.apache.spark.sql.DataFrame) = Profile.shape(q.queryExecution.executedPlan)
+    def agg(cp: org.apache.spark.sql.DataFrame) = cp.groupBy("k").count()
+    def join(cp: org.apache.spark.sql.DataFrame) =
+      cp.join(cp.select(col("k"), col("v").as("w")), "k")
+    val atScale = Checkpoints.mark(df)
+    val small = gated(Checkpoints.mark(df))
+    try {
+      assert(shape(agg(atScale))("exchanges") == 1)
+      assert(shape(agg(small))("exchanges") == 0)
+      // the checkpoint's stored size lets the join broadcast at planning
+      assert(shape(join(atScale))("exchanges") == 2)
+      assert(shape(join(small))("exchanges") == 0 && shape(join(small))("bhj") == 1)
+      assert(agg(small).collect().toSet == agg(atScale).collect().toSet)
+      assert(join(small).collect().toSet == join(atScale).collect().toSet)
+      // more than one partition: the planner still places its exchanges
+      val wide = gated(Checkpoints.mark(df.repartition(3)))
+      try assert(shape(agg(wide))("exchanges") == 1)
+      finally Checkpoints.release(wide)
+    } finally {
+      Checkpoints.release(atScale)
+      Checkpoints.release(small)
+    }
   }
 }
